@@ -10,6 +10,7 @@ files are exactly Spark's natural many-part-files-per-table output).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -300,11 +301,35 @@ class Warehouse:
         return self._cache[name]
 
     def register_all(self) -> None:
-        for name in self.table_names():
-            # Dots in class-table names (java.lang.String) need backticks;
-            # views use a sanitized name.
-            view = name.replace(".", "_").replace("[", "_").replace("]", "_")
+        for name, view in view_names(self.table_names()).items():
             self.table(name).createOrReplaceTempView(view)
+
+
+def view_names(tables, prefix: str = "") -> dict[str, str]:
+    """One distinct SQL view identifier per table name.
+
+    Every character of ``prefix + table`` outside ``[A-Za-z0-9_]``
+    becomes ``_`` (``java.lang.String`` → ``java_lang_String``,
+    ``Outer$Inner`` → ``Outer_Inner``). Of tables that then collide
+    (``a.b_c`` and ``a_b.c``), one keeps the identifier: a table already
+    named so, else the first in sorted order. The others get ``_2``,
+    ``_3``, ..., skipping identifiers in use. A name that is unique after
+    sanitizing comes out the same whatever other tables exist."""
+    groups: dict[str, list[str]] = {}
+    for t in sorted(set(tables)):
+        groups.setdefault(re.sub(r"[^A-Za-z0-9_]", "_", prefix + t), []).append(t)
+    taken = set(groups)
+    out = {}
+    for ident, members in groups.items():
+        members.sort(key=lambda t: prefix + t != ident)
+        out[members[0]] = ident
+        n = 2
+        for t in members[1:]:
+            while f"{ident}_{n}" in taken:
+                n += 1
+            taken.add(f"{ident}_{n}")
+            out[t] = f"{ident}_{n}"
+    return out
 
 
 def compact_table(

@@ -26,7 +26,6 @@ from collections import defaultdict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import struct
 
 from pyspark.sql import SparkSession
 
@@ -211,26 +210,13 @@ def _process_split(args, hprof_path: str, out_dir: str, registry: dict,
     roots = {"root_type": [], "obj_id": [], "thread_serial": [], "frame_index": []}
     cls_oindex: tuple[list, list] = ([], [])
 
-    def add_root(kind, oid, ts=None, fi=None):
-        roots["root_type"].append(H.ROOT_NAMES[kind])
-        roots["obj_id"].append(_s64(oid))
-        roots["thread_serial"].append(ts)
-        roots["frame_index"].append(fi)
-
-    unpack_I = struct.Struct(">I").unpack_from
-    unpack_id = (
-        struct.Struct(">Q").unpack_from if id_size == 8 else struct.Struct(">I").unpack_from
-    )
-    # merged per-kind header unpacks — one struct call per record instead
-    # of three (the walk is the Python-side bottleneck; see bench_ingest)
-    idc = "Q" if id_size == 8 else "I"
-    u_inst = struct.Struct(f">{idc}I{idc}I").unpack_from  # oid, stack, cid, nbytes
-    u_parr = struct.Struct(f">{idc}IIB").unpack_from      # oid, stack, n, elem type
-    u_oarr = struct.Struct(f">{idc}II{idc}").unpack_from  # oid, stack, n, array cls
-    h_inst = 1 + 2 * id_size + 8   # tag → instance body
-    h_parr = 1 + id_size + 9       # tag → first element
-    h_oarr = 1 + 2 * id_size + 8   # tag → first element
-    prim_sizes = H.PRIM_SIZES
+    g = H.SUB_RECORDS[id_size]
+    u_inst = g.header[H.SUB_INSTANCE_DUMP].unpack_from  # oid, stack, cid, nbytes
+    u_parr = g.header[H.SUB_PRIMITIVE_ARRAY_DUMP].unpack_from  # oid, stack, n, type
+    u_oarr = g.header[H.SUB_OBJECT_ARRAY_DUMP].unpack_from  # oid, stack, n, class
+    h_inst = g.payload[H.SUB_INSTANCE_DUMP]
+    h_parr = g.payload[H.SUB_PRIMITIVE_ARRAY_DUMP]
+    h_oarr = g.payload[H.SUB_OBJECT_ARRAY_DUMP]
     INST, PARR, OARR, CLS = (
         H.SUB_INSTANCE_DUMP,
         H.SUB_PRIMITIVE_ARRAY_DUMP,
@@ -238,46 +224,10 @@ def _process_split(args, hprof_path: str, out_dir: str, registry: dict,
         H.SUB_CLASS_DUMP,
     )
 
-    # -- vectorized run scanning --------------------------------------------
-    # Heap segments are dominated by RUNS of constant-stride records
-    # (consecutive instances of equal nbytes — JVM writers emit objects
-    # in allocation clusters — and fixed-size arrays). A run's record
-    # starts are an arithmetic sequence, so headers can be validated and
-    # decoded with a handful of numpy strided gathers instead of one
-    # Python iteration per record. The scalar walk below remains the
-    # fallback for mixed regions; results are byte-identical.
-    RUN_PROBE = 4096  # records probed per numpy pass
-    nb_off = 1 + 2 * id_size + 4       # INSTANCE: nbytes field
-    pn_off = 1 + id_size + 4           # PARR/OARR: element count field
-    pt_off = 1 + id_size + 8           # PARR: element type tag
-    ac_off = 1 + id_size + 8           # OARR: array class id
-
-    def gather_be(bnp, base, off, width):
-        """Big-endian ints of *width* bytes at base+off (strided gather)."""
-        v = bnp[base + off].astype(np.uint64)
-        for j in range(1, width):
-            v = (v << np.uint64(8)) | bnp[base + off + j]
-        return v
-
-    def probe_run(bnp, pos, n_buf, stride, checks):
-        """Length of the run of records at *pos* with constant *stride*:
-        consecutive positions whose header fields pass *checks*
-        [(offset, width, expected_value), ...]. First record is already
-        validated by the scalar walk."""
-        count = (n_buf - pos) // stride
-        if count > RUN_PROBE:
-            count = RUN_PROBE
-        if count <= 1:
-            return 1, None
-        base = pos + stride * np.arange(count, dtype=np.int64)
-        ok = np.ones(count, dtype=bool)
-        for off, width, want in checks:
-            ok &= gather_be(bnp, base, off, width) == want
-        run = int(np.argmin(ok)) if not ok.all() else count
-        return (run if run > 0 else 1), base
-
-    id_w = id_size
-
+    # The Python walk visits one record, or one run of equal-length
+    # records found by the grammar's prober. A run's record starts are
+    # an arithmetic sequence, so its ids are read through numpy strided
+    # views instead of one Python iteration per record.
     with open(hprof_path, "rb") as f:
         for start, end in ranges:
             f.seek(start)
@@ -295,96 +245,65 @@ def _process_split(args, hprof_path: str, out_dir: str, registry: dict,
 
             while pos < n_buf:
                 tag = buf[pos]
-                p = pos + 1
-                if tag == INST:
-                    oid, _, cid, nbytes = u_inst(buf, p)
-                    stride = h_inst + nbytes
-                    run, base = probe_run(
-                        bnp, pos, n_buf, stride,
-                        [(0, 1, INST), (nb_off, 4, nbytes)],
-                    )
-                    if run > 1:
-                        oids = gather_be(bnp, base[:run], 1, id_w)
-                        cids = gather_be(bnp, base[:run], 1 + id_w + 4, id_w)
-                        bodies = base[:run] + h_inst
-                        if cid in registry and bool((cids == cids[0]).all()):
-                            # homogeneous run (the common case): one piece
-                            flush_inst(cid)
-                            inst_pieces.setdefault(cid, []).append(
-                                (bnp, oids, bodies)
-                            )
-                        else:
-                            for c in np.unique(cids):
-                                ci = int(c)
-                                if ci in registry:
-                                    m = cids == c
-                                    flush_inst(ci)
-                                    inst_pieces.setdefault(ci, []).append(
-                                        (bnp, oids[m], bodies[m])
-                                    )
-                        pos += run * stride
-                        continue
-                    body = pos + h_inst
-                    if cid in registry:
-                        acc = r_inst.get(cid)
-                        if acc is None:
-                            acc = r_inst[cid] = ([], [])
-                        acc[0].append(oid)
-                        acc[1].append(body)
-                    pos = body + nbytes
-                elif tag == PARR:
-                    oid, _, n, t = u_parr(buf, p)
-                    stride = h_parr + n * prim_sizes[t]
-                    run, base = probe_run(
-                        bnp, pos, n_buf, stride,
-                        [(0, 1, PARR), (pn_off, 4, n), (pt_off, 1, t)],
-                    )
-                    if run > 1:
-                        oids = gather_be(bnp, base[:run], 1, id_w)
-                        prim_meta[t].append((bnp, oids, base[:run] + h_parr, n))
-                    else:
-                        prim_meta[t].append((bnp, [oid], [pos + h_parr], n))
-                    pos += run * stride
-                elif tag == OARR:
-                    oid, _, n, acid = u_oarr(buf, p)
-                    stride = h_oarr + n * id_size
-                    run, base = probe_run(
-                        bnp, pos, n_buf, stride,
-                        [(0, 1, OARR), (pn_off, 4, n)],
-                    )
-                    if run > 1:
-                        oids = gather_be(bnp, base[:run], 1, id_w)
-                        acids = gather_be(bnp, base[:run], ac_off, id_w)
-                        oa_meta.append((bnp, oids, base[:run] + h_oarr, n, acids))
-                    else:
-                        oa_meta.append((bnp, [oid], [pos + h_oarr], n, [acid]))
-                    pos += run * stride
-                elif tag == CLS:
-                    info, pos = H.parse_class_dump(buf, p, id_size)
+                if tag == CLS:
+                    info, pos = H.parse_class_dump(buf, pos + 1, id_size)
                     cls_oindex[0].append(_s64(info.class_obj_id))
                     cls_oindex[1].append(
                         f"class {class_names.get(info.class_obj_id, '(unresolved)')}"
                     )
-                elif tag == H.SUB_ROOT_UNKNOWN:
-                    add_root(tag, unpack_id(buf, p)[0]); pos = p + id_size
-                elif tag == H.SUB_ROOT_JNI_GLOBAL:
-                    add_root(tag, unpack_id(buf, p)[0]); pos = p + 2 * id_size
-                elif tag in (H.SUB_ROOT_JNI_LOCAL, H.SUB_ROOT_JAVA_FRAME):
-                    oid = unpack_id(buf, p)[0]
-                    ts, fi = struct.unpack_from(">II", buf, p + id_size)
-                    add_root(tag, oid, ts, fi); pos = p + id_size + 8
-                elif tag in (H.SUB_ROOT_NATIVE_STACK, H.SUB_ROOT_THREAD_BLOCK):
-                    oid = unpack_id(buf, p)[0]
-                    (ts,) = unpack_I(buf, p + id_size)
-                    add_root(tag, oid, ts); pos = p + id_size + 4
-                elif tag == H.SUB_ROOT_THREAD_OBJ:
-                    oid = unpack_id(buf, p)[0]
-                    (ts,) = unpack_I(buf, p + id_size)
-                    add_root(tag, oid, ts); pos = p + id_size + 8
-                elif tag in (H.SUB_ROOT_STICKY_CLASS, H.SUB_ROOT_MONITOR_USED):
-                    add_root(tag, unpack_id(buf, p)[0]); pos = p + id_size
-                else:
-                    raise ValueError(f"unknown sub-record tag 0x{tag:02x} at {start + pos}")
+                    continue
+                try:
+                    stride = g.size(buf, pos)
+                except ValueError as e:
+                    raise ValueError(f"{e} of the split at file offset {start}") from None
+                run = g.probe_run(buf, pos, stride, n_buf - pos)
+                if run > 1:
+                    base = pos + stride * np.arange(run, dtype=np.int64)
+                    oids = g.run_ids(buf, pos, stride, run, 1)
+                if tag == INST:
+                    if run > 1:
+                        cids = g.run_ids(buf, pos, stride, run, g.class_id)
+                        bodies = base + h_inst
+                        if bool((cids == cids[0]).all()):
+                            # homogeneous run (the common case): one piece
+                            pieces = [(int(cids[0]), oids, bodies)]
+                        else:
+                            pieces = [
+                                (int(c), oids[cids == c], bodies[cids == c])
+                                for c in np.unique(cids)
+                            ]
+                        for ci, o, b in pieces:
+                            if ci in registry:
+                                flush_inst(ci)
+                                inst_pieces.setdefault(ci, []).append((bnp, o, b))
+                    else:
+                        oid, _, cid, _ = u_inst(buf, pos + 1)
+                        if cid in registry:
+                            acc = r_inst.get(cid)
+                            if acc is None:
+                                acc = r_inst[cid] = ([], [])
+                            acc[0].append(oid)
+                            acc[1].append(pos + h_inst)
+                elif tag == PARR:
+                    oid, _, n, t = u_parr(buf, pos + 1)
+                    if run > 1:
+                        prim_meta[t].append((bnp, oids, base + h_parr, n))
+                    else:
+                        prim_meta[t].append((bnp, [oid], [pos + h_parr], n))
+                elif tag == OARR:
+                    oid, _, n, acid = u_oarr(buf, pos + 1)
+                    if run > 1:
+                        acids = g.run_ids(buf, pos, stride, run, g.array_class)
+                        oa_meta.append((bnp, oids, base + h_oarr, n, acids))
+                    else:
+                        oa_meta.append((bnp, [oid], [pos + h_oarr], n, [acid]))
+                else:  # a GC root
+                    vals = g.header[tag].unpack_from(buf, pos + 1)
+                    roots["root_type"].append(H.ROOT_NAMES[tag])
+                    roots["obj_id"].append(_s64(vals[0]))
+                    roots["thread_serial"].append(vals[1] if tag in H.ROOT_WITH_THREAD else None)
+                    roots["frame_index"].append(vals[2] if tag in H.ROOT_WITH_FRAME else None)
+                pos += run * stride
             for cid, acc in r_inst.items():
                 inst_pieces.setdefault(cid, []).append((bnp, acc[0], acc[1]))
 

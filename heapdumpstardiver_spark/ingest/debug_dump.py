@@ -12,7 +12,6 @@ bare ids, exactly like the robo-mode warehouse stores them.
 
 from __future__ import annotations
 
-import struct
 import sys
 
 from . import hprof as H
@@ -35,6 +34,7 @@ def dump_objects(path: str, out=None, limit: int | None = None,
     out = out or sys.stdout
     idx = build_index(path, strict=strict)
     id_size = idx.header.id_size
+    g = H.SUB_RECORDS[id_size]
     n_printed = 0
 
     layouts = {
@@ -54,8 +54,7 @@ def dump_objects(path: str, out=None, limit: int | None = None,
             buf = f.read(end - start)
             pos, n = 0, end - start
             while pos < n:
-                tag = buf[pos]
-                rec_tag, p, meta = H.skip_sub_record(buf, pos, id_size)
+                tag, p, meta = H.skip_sub_record(buf, pos, id_size)
                 if tag == H.SUB_CLASS_DUMP:
                     info = meta["class_info"]
                     name = idx.class_name(info.class_obj_id)
@@ -67,9 +66,8 @@ def dump_objects(path: str, out=None, limit: int | None = None,
                     if emit("\n".join(lines)):
                         return n_printed
                 elif tag == H.SUB_INSTANCE_DUMP:
-                    oid = H._read_id(buf, pos + 1, id_size)
-                    cid = H._read_id(buf, pos + 1 + id_size + 4, id_size)
-                    body = pos + 1 + 2 * id_size + 8
+                    oid, _, cid, _ = g.header[tag].unpack_from(buf, pos + 1)
+                    body = pos + g.payload[tag]
                     if cid in layouts:
                         cname, fields = layouts[cid]
                         lines = [f"id {oid}: {cname}"]
@@ -84,10 +82,8 @@ def dump_objects(path: str, out=None, limit: int | None = None,
                     if emit("\n".join(lines)):
                         return n_printed
                 elif tag == H.SUB_PRIMITIVE_ARRAY_DUMP:
-                    oid = H._read_id(buf, pos + 1, id_size)
-                    (cnt,) = struct.unpack_from(">I", buf, pos + 1 + id_size + 4)
-                    t = buf[pos + 1 + id_size + 8]
-                    body = pos + 1 + id_size + 9
+                    oid, _, cnt, t = g.header[tag].unpack_from(buf, pos + 1)
+                    body = pos + g.payload[tag]
                     shown = []
                     q = body
                     for _ in range(min(cnt, max_elems)):
@@ -101,10 +97,8 @@ def dump_objects(path: str, out=None, limit: int | None = None,
                     ):
                         return n_printed
                 elif tag == H.SUB_OBJECT_ARRAY_DUMP:
-                    oid = H._read_id(buf, pos + 1, id_size)
-                    (cnt,) = struct.unpack_from(">I", buf, pos + 1 + id_size + 4)
-                    acid = H._read_id(buf, pos + 1 + id_size + 8, id_size)
-                    body = pos + 1 + 2 * id_size + 8
+                    oid, _, cnt, acid = g.header[tag].unpack_from(buf, pos + 1)
+                    body = pos + g.payload[tag]
                     els = [
                         str(H._read_id(buf, body + i * id_size, id_size))
                         for i in range(min(cnt, max_elems))

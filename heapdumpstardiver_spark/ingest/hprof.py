@@ -10,12 +10,17 @@ from the public format specification, not from that code.
 
 Everything here operates on byte buffers (mmap-able) with explicit
 offsets so callers can plan byte-range splits for distributed parsing.
+:class:`SubRecords` is the one statement of the heap sub-record layout;
+both ingest passes, the debug printer and the ``hprof`` data source
+locate records through it.
 """
 
 from __future__ import annotations
 
 import struct
 from dataclasses import dataclass, field
+
+import numpy as np
 
 # Top-level record tags
 TAG_UTF8 = 0x01
@@ -246,42 +251,122 @@ def parse_class_dump(buf, pos: int, id_size: int) -> tuple[ClassInfo, int]:
     return info, pos
 
 
-def skip_sub_record(buf, pos: int, id_size: int) -> tuple[int, int, dict]:
-    """At *pos* (a sub-record tag byte), return (tag, end_pos, meta).
+# GC-root kinds whose body carries a u4 thread serial after the object
+# id, and those that follow it with a u4 frame index.
+ROOT_WITH_THREAD = frozenset(
+    (SUB_ROOT_JNI_LOCAL, SUB_ROOT_JAVA_FRAME, SUB_ROOT_NATIVE_STACK,
+     SUB_ROOT_THREAD_BLOCK, SUB_ROOT_THREAD_OBJ)
+)
+ROOT_WITH_FRAME = frozenset((SUB_ROOT_JNI_LOCAL, SUB_ROOT_JAVA_FRAME))
 
-    meta carries the cheap facts a metadata pass wants without full
-    decoding: obj ids, class ids, element counts.
-    """
+RUN_PROBE = 4096  # records compared per vector probe
+
+
+class SubRecords:
+    """The heap sub-record grammar for one identifier size: the fixed
+    header of every kind but CLASS DUMP (which :func:`parse_class_dump`
+    walks), the length of each record, and the prober that finds runs
+    of equal-length records. Offsets count from the tag byte."""
+
+    def __init__(self, id_size: int):
+        i = "Q" if id_size == 8 else "I"
+        self.id_size = id_size
+        # The header after the tag. Object records open with
+        # (object id, u4 stack trace serial); roots with the object id.
+        self.header = {
+            # class id, u4 field-byte count, then the field bytes
+            SUB_INSTANCE_DUMP: struct.Struct(f">{i}I{i}I"),
+            # u4 element count, array class id, then the elements
+            SUB_OBJECT_ARRAY_DUMP: struct.Struct(f">{i}II{i}"),
+            # u4 element count, u1 element type, then the elements
+            SUB_PRIMITIVE_ARRAY_DUMP: struct.Struct(f">{i}IIB"),
+            SUB_ROOT_UNKNOWN: struct.Struct(f">{i}"),
+            SUB_ROOT_JNI_GLOBAL: struct.Struct(f">{i}{i}"),  # + global ref id
+            SUB_ROOT_JNI_LOCAL: struct.Struct(f">{i}II"),    # + thread, frame
+            SUB_ROOT_JAVA_FRAME: struct.Struct(f">{i}II"),   # + thread, frame
+            SUB_ROOT_NATIVE_STACK: struct.Struct(f">{i}I"),  # + thread
+            SUB_ROOT_STICKY_CLASS: struct.Struct(f">{i}"),
+            SUB_ROOT_THREAD_BLOCK: struct.Struct(f">{i}I"),  # + thread
+            SUB_ROOT_MONITOR_USED: struct.Struct(f">{i}"),
+            SUB_ROOT_THREAD_OBJ: struct.Struct(f">{i}II"),   # + thread, trace
+        }
+        # where the fields / elements start; for a root, its full length
+        self.payload = {tag: 1 + s.size for tag, s in self.header.items()}
+        self._inst_head = self.payload[SUB_INSTANCE_DUMP]
+        self._parr_head = self.payload[SUB_PRIMITIVE_ARRAY_DUMP]
+        self._oarr_head = self.payload[SUB_OBJECT_ARRAY_DUMP]
+        self.class_id = 1 + id_size + 4     # INSTANCE: class object id
+        self.count = 1 + id_size + 4        # arrays: element count
+        self.array_class = 1 + id_size + 8  # OBJECT ARRAY: array class id
+        # Bytes that, with the tag, fix an object record's length: two
+        # records agreeing on them are one stride apart.
+        nbytes = self._inst_head - 4
+        self._run_key = {
+            SUB_INSTANCE_DUMP: (nbytes, nbytes + 4),
+            SUB_OBJECT_ARRAY_DUMP: (self.count, self.count + 4),
+            SUB_PRIMITIVE_ARRAY_DUMP: (self.count, self.count + 5),
+        }
+        self._run_cols = {
+            tag: np.array([0, *range(a, b)], dtype=np.int64)
+            for tag, (a, b) in self._run_key.items()
+        }
+        self._id_dtype = np.dtype(f">u{id_size}")
+        self._u4 = struct.Struct(">I").unpack_from
+        self._u4u1 = struct.Struct(">IB").unpack_from
+
+    def size(self, buf, pos: int) -> int:
+        """Length of the record at *pos*, whose kind must not be CLASS
+        DUMP. A header cut short raises ``struct.error``."""
+        tag = buf[pos]
+        if tag == SUB_INSTANCE_DUMP:
+            return self._inst_head + self._u4(buf, pos + self._inst_head - 4)[0]
+        if tag == SUB_PRIMITIVE_ARRAY_DUMP:
+            n, t = self._u4u1(buf, pos + self.count)
+            return self._parr_head + n * PRIM_SIZES[t]
+        if tag == SUB_OBJECT_ARRAY_DUMP:
+            return self._oarr_head + self._u4(buf, pos + self.count)[0] * self.id_size
+        head = self.payload.get(tag)
+        if head is None:
+            raise ValueError(f"unknown heap sub-record tag 0x{tag:02x} at offset {pos}")
+        return head
+
+    def probe_run(self, buf, pos: int, stride: int, limit: int) -> int:
+        """How many records, from the one at *pos*, repeat its tag and
+        length fields at *stride* spacing within *limit* bytes: at least
+        1, at most RUN_PROBE. Roots are always runs of 1.
+
+        The next record is checked with plain byte compares before any
+        vector gather: in heap-walk order a String sits next to its
+        byte[], so most runs end at once."""
+        key = self._run_key.get(buf[pos])
+        if key is None or limit < 2 * stride:
+            return 1
+        a, b = key
+        nxt = pos + stride
+        if buf[nxt] != buf[pos] or buf[nxt + a:nxt + b] != buf[pos + a:pos + b]:
+            return 1
+        count = min(RUN_PROBE, limit // stride)
+        # row r is a zero-copy view of record r's first b header bytes
+        rows = np.ndarray((count, b), np.uint8, buf, pos, (stride, 1))
+        fields = rows[:, self._run_cols[buf[pos]]]
+        ok = (fields == fields[0]).all(axis=1)
+        return count if ok.all() else int(np.argmin(ok))
+
+    def run_ids(self, buf, pos: int, stride: int, run: int, off: int):
+        """The id at *off* in each of the *run* records that start at
+        *pos*, *stride* apart, as a uint64 array."""
+        return np.ndarray((run,), self._id_dtype, buf, pos + off, (stride,)).astype(np.uint64)
+
+
+# by identifier size
+SUB_RECORDS = {4: SubRecords(4), 8: SubRecords(8)}
+
+
+def skip_sub_record(buf, pos: int, id_size: int) -> tuple[int, int, dict]:
+    """At *pos* (a sub-record tag byte), return (tag, end_pos, meta);
+    meta carries the parsed ``class_info`` of a CLASS DUMP."""
     tag = buf[pos]
-    p = pos + 1
-    meta: dict = {}
-    if tag == SUB_ROOT_UNKNOWN or tag == SUB_ROOT_STICKY_CLASS or tag == SUB_ROOT_MONITOR_USED:
-        p += id_size
-    elif tag == SUB_ROOT_JNI_GLOBAL:
-        p += 2 * id_size
-    elif tag in (SUB_ROOT_JNI_LOCAL, SUB_ROOT_JAVA_FRAME):
-        p += id_size + 8
-    elif tag in (SUB_ROOT_NATIVE_STACK, SUB_ROOT_THREAD_BLOCK):
-        p += id_size + 4
-    elif tag == SUB_ROOT_THREAD_OBJ:
-        p += id_size + 8
-    elif tag == SUB_CLASS_DUMP:
-        info, p = parse_class_dump(buf, p, id_size)
-        meta["class_info"] = info
-    elif tag == SUB_INSTANCE_DUMP:
-        p += id_size + 4
-        p += id_size
-        (nbytes,) = struct.unpack_from(">I", buf, p)
-        p += 4 + nbytes
-    elif tag == SUB_OBJECT_ARRAY_DUMP:
-        p += id_size + 4
-        (n,) = struct.unpack_from(">I", buf, p)
-        p += 4 + id_size + n * id_size
-    elif tag == SUB_PRIMITIVE_ARRAY_DUMP:
-        p += id_size + 4
-        (n,) = struct.unpack_from(">I", buf, p)
-        t = buf[p + 4]
-        p += 5 + n * PRIM_SIZES[t]
-    else:
-        raise ValueError(f"unknown heap sub-record tag 0x{tag:02x} at offset {pos}")
-    return tag, p, meta
+    if tag == SUB_CLASS_DUMP:
+        info, end = parse_class_dump(buf, pos + 1, id_size)
+        return tag, end, {"class_info": info}
+    return tag, pos + SUB_RECORDS[id_size].size(buf, pos), {}

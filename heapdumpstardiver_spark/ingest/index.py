@@ -7,6 +7,11 @@ instance-field layouts with shadow renames, and — the Spark-specific
 part — a list of byte-range *splits* aligned to heap sub-record
 boundaries, so pass 2 can parse the heavy instance data in parallel
 tasks instead of the reference's rayon pool.
+
+The segment scan steps over heap sub-records with the grammar in
+:mod:`.hprof`. It leaps over a run of equal-length records in one step,
+but a JVM lists objects in heap-walk order, so on a real dump most
+steps cover one record.
 """
 
 from __future__ import annotations
@@ -82,110 +87,29 @@ def _scan_segment(
     it can run as a Spark task (segments are independent — a split
     never spans the record header between segments).
 
-    The walk is a lean inline skipper (no per-record allocation): the
-    generic ``skip_sub_record`` builds a meta dict per call, which at
-    hundreds of millions of sub-records is the difference between a
-    metadata pass and a second data pass. Constant-stride RUNS of
-    instance/array records (the bulk of any heap) are leapt over with a
-    vectorized numpy probe — same trick as the convert pass — capped at
-    the current split's remaining byte budget so split sizes still land
-    on ~target_split_bytes.
+    Records are located through the shared :class:`~.hprof.SubRecords`
+    grammar; runs of equal-length object records are leapt over with its
+    run prober, capped at the current split's remaining byte budget so
+    split sizes still land on ~target_split_bytes.
     """
-    import numpy as np
-
     with open(path, "rb") as f:
         f.seek(seg_start)
         buf = f.read(seg_end - seg_start)
-    n = len(buf)
-    bnp = np.frombuffer(buf, dtype=np.uint8)
-    RUN_PROBE = 4096
-
-    def probe_run(pos, limit, stride, checks):
-        """# of consecutive records at *pos* (stride-spaced) passing the
-        header *checks*; bounded by *limit* bytes and RUN_PROBE."""
-        count = min(RUN_PROBE, limit // stride)
-        if count <= 1:
-            return 1
-        base = pos + stride * np.arange(count, dtype=np.int64)
-        ok = np.ones(count, dtype=bool)
-        for off, width, want in checks:
-            v = bnp[base + off].astype(np.uint64)
-            for j in range(1, width):
-                v = (v << np.uint64(8)) | bnp[base + off + j]
-            ok &= v == want
-        run = int(np.argmin(ok)) if not ok.all() else count
-        return run if run > 0 else 1
-
-    unpack_I = struct.Struct(">I").unpack_from
-    unpack_IB = struct.Struct(">IB").unpack_from  # prim-array count + elem type
-    prim_sizes = H.PRIM_SIZES
-    CLS, INST, OARR, PARR = (
-        H.SUB_CLASS_DUMP,
-        H.SUB_INSTANCE_DUMP,
-        H.SUB_OBJECT_ARRAY_DUMP,
-        H.SUB_PRIMITIVE_ARRAY_DUMP,
-    )
-    id4 = id_size + 4
-    root_skip = {
-        H.SUB_ROOT_UNKNOWN: id_size,
-        H.SUB_ROOT_STICKY_CLASS: id_size,
-        H.SUB_ROOT_MONITOR_USED: id_size,
-        H.SUB_ROOT_JNI_GLOBAL: 2 * id_size,
-        H.SUB_ROOT_JNI_LOCAL: id_size + 8,
-        H.SUB_ROOT_JAVA_FRAME: id_size + 8,
-        H.SUB_ROOT_NATIVE_STACK: id_size + 4,
-        H.SUB_ROOT_THREAD_BLOCK: id_size + 4,
-        H.SUB_ROOT_THREAD_OBJ: id_size + 8,
-    }
+    g = H.SUB_RECORDS[id_size]
     classes: list = []
     splits: list[tuple[int, int]] = []
-    pos = 0
-    split_start = 0
-    end = n
+    pos = split_start = 0
+    end = n = len(buf)
     while pos < end:
         rec_start = pos
         try:
-            tag = buf[pos]
-            p = pos + 1
-            if tag == INST:
-                (nbytes,) = unpack_I(buf, p + id4 + id_size)
-                stride = 1 + id4 + id_size + 4 + nbytes
-                run = probe_run(
-                    rec_start,
-                    min(end - rec_start, split_start + target_split_bytes - rec_start + stride),
-                    stride,
-                    [(0, 1, INST), (1 + id4 + id_size, 4, nbytes)],
-                )
-                pos = rec_start + run * stride
-            elif tag == PARR:
-                cnt, t = unpack_IB(buf, p + id4)
-                stride = 1 + id4 + 5 + cnt * prim_sizes[t]
-                run = probe_run(
-                    rec_start,
-                    min(end - rec_start, split_start + target_split_bytes - rec_start + stride),
-                    stride,
-                    [(0, 1, PARR), (1 + id4, 4, cnt), (1 + id4 + 4, 1, t)],
-                )
-                pos = rec_start + run * stride
-            elif tag == OARR:
-                (cnt,) = unpack_I(buf, p + id4)
-                stride = 1 + id4 + 4 + id_size + cnt * id_size
-                run = probe_run(
-                    rec_start,
-                    min(end - rec_start, split_start + target_split_bytes - rec_start + stride),
-                    stride,
-                    [(0, 1, OARR), (1 + id4, 4, cnt)],
-                )
-                pos = rec_start + run * stride
-            elif tag == CLS:
-                info, pos = H.parse_class_dump(buf, p, id_size)
+            if buf[pos] == H.SUB_CLASS_DUMP:
+                info, pos = H.parse_class_dump(buf, pos + 1, id_size)
+                classes.append(info)
             else:
-                skip = root_skip.get(tag)
-                if skip is None:
-                    raise ValueError(
-                        f"unknown heap sub-record tag 0x{tag:02x} at offset {seg_start + pos}"
-                    )
-                pos = p + skip
+                stride = g.size(buf, pos)
+                budget = split_start + target_split_bytes - pos + stride
+                pos += stride * g.probe_run(buf, pos, stride, min(end - pos, budget))
         except (struct.error, IndexError):
             # record header itself is cut short
             if not tolerate_truncation:
@@ -195,6 +119,8 @@ def _scan_segment(
                 ) from None
             end = rec_start
             break
+        except ValueError as e:
+            raise ValueError(f"{e} of the heap segment at file offset {seg_start}") from None
         if pos > n:
             # declared body extends past the available bytes
             if not tolerate_truncation:
@@ -204,8 +130,6 @@ def _scan_segment(
                 )
             end = rec_start
             break
-        if tag == CLS:
-            classes.append(info)
         if pos - split_start >= target_split_bytes:
             splits.append((seg_start + split_start, seg_start + pos))
             split_start = pos

@@ -18,7 +18,7 @@ from typing import Any, Optional
 
 from pyspark.sql import SparkSession
 
-from .catalog import Warehouse
+from .catalog import Warehouse, view_names
 
 DEFAULT_PAGE_SIZE = 1000  # mirrors server.py:39
 
@@ -33,7 +33,7 @@ class HeapSession:
     warehouse_dir: Path
     spark: SparkSession = field(repr=False, default=None)
     _warehouse: Optional[Warehouse] = field(default=None, repr=False)
-    _views: list[str] = field(default_factory=list, repr=False)
+    _views: dict[str, str] = field(default_factory=dict, repr=False)
 
     def open(self) -> None:
         if self._warehouse is None:
@@ -42,14 +42,13 @@ class HeapSession:
             # layout auto-detect: a session can point at a warehouse
             # written by the reference binary as-is (see interop.py)
             self._warehouse = open_warehouse(self.spark, str(self.warehouse_dir))
-            for name in self._warehouse.table_names():
-                view = self.view_name(name)
+            self._views = view_names(self._warehouse.table_names(), f"{self.session_id}__")
+            for name, view in self._views.items():
                 self._warehouse.table(name).createOrReplaceTempView(view)
-                self._views.append(view)
 
     def close(self) -> None:
         """Drop the session's views, keep files on disk."""
-        for view in self._views:
+        for view in self._views.values():
             self.spark.catalog.dropTempView(view)
         self._views.clear()
         self._warehouse = None
@@ -65,10 +64,9 @@ class HeapSession:
         return self._warehouse
 
     def view_name(self, table: str) -> str:
-        """Sanitized per-session view name: dots and brackets are not
-        valid in view identifiers (`java.lang.String` → java_lang_String)."""
-        safe = table.replace(".", "_").replace("[", "_").replace("]", "_")
-        return f"{self.session_id}__{safe}".replace("-", "_")
+        """The table's view in this session, e.g. ``wh1__java_lang_String``
+        (see :func:`~heapdumpstardiver_spark.catalog.view_names`)."""
+        return self._views.get(table) or view_names([table], f"{self.session_id}__")[table]
 
 
 class SessionManager:

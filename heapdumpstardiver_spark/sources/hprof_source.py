@@ -105,20 +105,16 @@ def _instance_row(buf, sp: int, sub: int, meta: dict, ids: int):
     def s64(v: int) -> int:
         return v - (1 << 64) if v >= 1 << 63 else v
 
+    header = H.SUB_RECORDS[ids].header
     if sub == H.SUB_INSTANCE_DUMP:
-        obj_id = H._read_id(buf, sp + 1, ids)
-        cls_id = H._read_id(buf, sp + 1 + ids + 4, ids)
-        (nbytes,) = H.struct.unpack_from(">I", buf, sp + 1 + 2 * ids + 4)
-        return (s64(obj_id), "instance", s64(cls_id), int(nbytes))
+        obj_id, _, cls_id, nbytes = header[sub].unpack_from(buf, sp + 1)
+        return (s64(obj_id), "instance", s64(cls_id), nbytes)
     if sub == H.SUB_OBJECT_ARRAY_DUMP:
-        obj_id = H._read_id(buf, sp + 1, ids)
-        (n,) = H.struct.unpack_from(">I", buf, sp + 1 + ids + 4)
-        cls_id = H._read_id(buf, sp + 1 + ids + 8, ids)
-        return (s64(obj_id), "object_array", s64(cls_id), int(n))
+        obj_id, _, n, cls_id = header[sub].unpack_from(buf, sp + 1)
+        return (s64(obj_id), "object_array", s64(cls_id), n)
     if sub == H.SUB_PRIMITIVE_ARRAY_DUMP:
-        obj_id = H._read_id(buf, sp + 1, ids)
-        (n,) = H.struct.unpack_from(">I", buf, sp + 1 + ids + 4)
-        return (s64(obj_id), "primitive_array", None, int(n))
+        obj_id, _, n, _ = header[sub].unpack_from(buf, sp + 1)
+        return (s64(obj_id), "primitive_array", None, n)
     if sub == H.SUB_CLASS_DUMP:
         info = meta["class_info"]
         return (s64(info.class_obj_id), "class", s64(info.class_obj_id), 0)

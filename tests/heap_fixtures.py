@@ -577,6 +577,20 @@ def generate_heap_warehouse(outdir: str) -> dict:
         ),
     )
 
+    # --- classes whose names are not SQL identifiers -------------------------
+    # Inner and anonymous classes carry `$`, as in every real JDK heap;
+    # `a.b_c` and `a_b.c` sanitize to the same identifier.
+    truth["odd_name_classes"] = {}
+    for k, cname in enumerate(("com.heaptest.Outer$Inner", "com.heaptest.Foo$1", "a.b_c", "a_b.c")):
+        o_ids = ids.take(2)
+        _write(
+            outdir,
+            cname,
+            pa.table({"obj_id": pa.array(o_ids, pa.int64()), "tag": pa.array([k, k], pa.int32())}),
+        )
+        idx(o_ids, cname)
+        truth["odd_name_classes"][cname] = k
+
     # --- _object_index -------------------------------------------------------
     _write(
         outdir,

@@ -65,7 +65,10 @@ def _pack_val(w, t, v):
 FIELD_SIZES = {4: 1, 5: 2, 6: 4, 7: 8, 8: 1, 9: 2, 10: 4, 11: 8}
 
 
-def build_fuzz_dump(path, seed):
+def build_fuzz_dump(path, seed, address_ordered=False):
+    """Random heap; instances and arrays are grouped by class and type
+    unless *address_ordered*, which shuffles them together before
+    segmenting, the way a JVM lists objects by address."""
     rnd = random.Random(seed)
     id_size = rnd.choice([4, 8])
     w = HprofWriter(id_size=id_size)
@@ -94,14 +97,23 @@ def build_fuzz_dump(path, seed):
             w.heap_segment(bytes(seg))
             seg = bytearray()
 
+    held: list[bytes] = []
+
+    def add(rec):
+        nonlocal seg
+        if address_ordered:
+            held.append(rec)
+        else:
+            seg += rec
+            maybe_flush()
+
     for cid, cname, fields in classes:
         for _ in range(rnd.randint(0, 4)):
             oid = w.oid()
             vals = {fn: _rand_val(rnd, t, id_size) for fn, t in fields}
             packed = b"".join(_pack_val(w, t, vals[fn]) for fn, t in fields)
-            seg += w.instance(oid, cid, packed)
+            add(w.instance(oid, cid, packed))
             expected_instances.setdefault(cname, {})[oid] = vals
-            maybe_flush()
 
     for t, code in PRIM_TYPES:
         if t == 4:
@@ -109,12 +121,15 @@ def build_fuzz_dump(path, seed):
         for _ in range(rnd.randint(0, 3)):
             oid = w.oid()
             vals = [_rand_val(rnd, t, id_size) for _ in range(rnd.randint(0, 5))]
-            seg += w.prim_array(oid, t, code, vals)
+            add(w.prim_array(oid, t, code, vals))
             from heapdumpstardiver_spark.ingest.hprof import PRIM_NAMES
 
             expected_arrays.setdefault(PRIM_NAMES[t], {})[oid] = vals
-            maybe_flush()
 
+    rnd.shuffle(held)
+    for rec in held:
+        seg += rec
+        maybe_flush()
     if seg:
         w.heap_segment(bytes(seg))
     w.heap_end()
@@ -129,11 +144,19 @@ def _canon(t, v):
     return v
 
 
-@pytest.mark.parametrize("seed", [7, 41, 1337])
-def test_fuzz_roundtrip(spark, tmp_path_factory, seed):
+@pytest.mark.parametrize(
+    "seed,address_ordered",
+    [
+        pytest.param(7, False, id="7"),
+        pytest.param(41, False, id="41"),
+        pytest.param(1337, False, id="1337"),
+        pytest.param(7, True, id="7-address-ordered"),
+    ],
+)
+def test_fuzz_roundtrip(spark, tmp_path_factory, seed, address_ordered):
     d = tmp_path_factory.mktemp(f"fuzz{seed}")
     path = str(d / "f.hprof")
-    id_size, exp_inst, exp_arr = build_fuzz_dump(path, seed)
+    id_size, exp_inst, exp_arr = build_fuzz_dump(path, seed, address_ordered)
     out = str(d / "wh")
     summary = ingest_hprof(spark, path, out, target_split_bytes=512)
     assert summary["id_size"] == id_size

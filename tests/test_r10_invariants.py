@@ -91,7 +91,11 @@ def test_cdc_chunks_reconstruct_documents(spark):
     terms = " + ".join(
         f"element_at(cps, i - {j}) * {w}" for j, w in enumerate(_CDC_WEIGHTS)
     )
-    recon = (
+    # The boundaries are materialised before the check: left lazy, the
+    # `rejoined != text` filter is pushed below the projections and
+    # inlines `bs` and `cps`, re-evaluating the per-character transform
+    # for every position, weight and boundary reference.
+    bounds = (
         d.select(
             "doc_id",
             "text",
@@ -117,7 +121,10 @@ def test_cdc_chunks_reconstruct_documents(spark):
                 " array(cast(length(text) AS LONG)))"
             ).alias("bs"),
         )
-        .select(
+        .localCheckpoint()
+    )
+    recon = (
+        bounds.select(
             "doc_id",
             "text",
             F.expr(

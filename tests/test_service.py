@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import json
 import shutil
 
 import pytest
 
+from heapdumpstardiver_spark.catalog import view_names
+from heapdumpstardiver_spark.mcp_tools import build_tools
 from heapdumpstardiver_spark.service import SessionManager, list_tables, query_heap
 from tests.heap_fixtures import generate_heap_warehouse
 
@@ -28,6 +31,43 @@ def test_single_active_default_and_views(manager):
     info = list_tables(manager)
     assert "_object_index" in info["tables"]
     assert info["tables"]["java.lang.String"]["view"] == "wh1__java_lang_String"
+
+
+def test_views_for_dollar_and_colliding_class_names(spark, tmp_path):
+    """Inner/anonymous classes (`$`) open as views, and `a.b_c` / `a_b.c`
+    (same identifier after sanitizing) each get a view of their own."""
+    d = tmp_path / "wh2"
+    d.mkdir()
+    truth = generate_heap_warehouse(str(d))
+    mgr = SessionManager(spark)
+    out = json.loads(build_tools(mgr)["open_session"](str(d)))
+    assert out["status"] == "ok", out
+    sess = mgr.get("wh2")
+    try:
+        tables = sess.warehouse.table_names()
+        views = {t: sess.view_name(t) for t in tables}
+        assert len(set(views.values())) == len(tables)
+        assert views["java.lang.String"] == "wh2__java_lang_String"
+        for cname, tag in truth["odd_name_classes"].items():
+            out = query_heap(mgr, f"SELECT min(tag) AS lo, max(tag) AS hi FROM {views[cname]}")
+            assert out["rows"] == [{"lo": tag, "hi": tag}], (cname, out)
+    finally:
+        sess.close()
+
+
+def test_view_names_sanitize_and_disambiguate():
+    names = ["java.lang.String", "_gc_roots", "Outer$Inner", "a.b_c", "a_b.c", "a_b_c_2", "x"]
+    views = view_names(names, "s-1__")
+    assert views["java.lang.String"] == "s_1__java_lang_String"
+    assert views["_gc_roots"] == "s_1___gc_roots"
+    assert views["Outer$Inner"] == "s_1__Outer_Inner"
+    # collision: sorted order decides, and no suffix reuses a plain name
+    assert (views["a.b_c"], views["a_b.c"]) == ("s_1__a_b_c", "s_1__a_b_c_3")
+    assert views["a_b_c_2"] == "s_1__a_b_c_2"
+    assert len(set(views.values())) == len(names)
+    # a table already named as its identifier keeps it
+    assert view_names(["a.b", "a_b"]) == {"a_b": "a_b", "a.b": "a_b_2"}
+    assert view_names(["x"], "s-1__") == {"x": views["x"]}
 
 
 def test_query_heap_pagination(manager):
