@@ -27,13 +27,23 @@ ALL_CHECKS = [
 ]
 
 
+class WasteFindings(list):
+    """The findings of one run, plus ``skipped``: a ``{"check",
+    "error"}`` record for each check that raised."""
+
+    def __init__(self):
+        super().__init__()
+        self.skipped: list[dict[str, str]] = []
+
+
 def run_waste_analysis(
     wh: Warehouse, max_tier: int = 2, sample_fraction: float | None = None
 ) -> list[WasteFinding]:
     """Run all checks ≤ max_tier. A failing check is skipped, not fatal
     (the reference's try_query error isolation,
-    analyze_heap_parquet.py:139-147,1137-1138)."""
-    findings: list[WasteFinding] = []
+    analyze_heap_parquet.py:139-147,1137-1138): it is logged to stderr
+    and recorded in the returned list's ``skipped``."""
+    findings = WasteFindings()
     for check_fn, tier in ALL_CHECKS:
         if tier > max_tier:
             continue
@@ -46,5 +56,6 @@ def run_waste_analysis(
                 findings.append(result)
         except Exception as e:  # per-check fault isolation
             print(f"WARNING: {check_fn.__name__} failed: {e}", file=sys.stderr)
+            findings.skipped.append({"check": check_fn.__name__, "error": str(e)})
     findings.sort(key=lambda f: (-f.estimated_waste_bytes, f.severity_rank()))
     return findings

@@ -64,6 +64,14 @@ def _table(wh: Warehouse, name: str) -> Optional[DataFrame]:
         return None
 
 
+def _rows(wh: Warehouse, name: str) -> int:
+    """Footer row count of a table (no Spark job); 0 when it is absent."""
+    try:
+        return wh.row_count(name)
+    except KeyError:
+        return 0
+
+
 def _content_hash(col: str | Column) -> Column:
     """Canonical content hash of an array column: md5 over the
     comma-joined decimal rendering. Equivalent role to the reference's
@@ -93,7 +101,7 @@ def check_duplicate_strings(
 
     scale = 1.0
     s = strings.select("obj_id", F.col("value").alias("byte_id"))
-    if sample_fraction is None and strings.count() > AUTO_SAMPLE_ROWS:
+    if sample_fraction is None and wh.row_count("java.lang.String") > AUTO_SAMPLE_ROWS:
         sample_fraction = AUTO_SAMPLE_FRACTION  # reference's >5M rule
     if sample_fraction is not None and sample_fraction < 1.0:
         s = s.sample(fraction=sample_fraction, seed=42)
@@ -404,10 +412,7 @@ def check_boxed_numbers(wh: Warehouse) -> Optional[WasteFinding]:
     total_waste = 0
     sub = []
     for wtype in _WRAPPERS:
-        t = _table(wh, wtype)
-        if t is None:
-            continue
-        cnt = t.count()
+        cnt = _rows(wh, wtype)
         if cnt == 0:
             continue
         waste = cnt * OBJECT_HEADER
@@ -704,12 +709,10 @@ def check_thread_stacks(wh: Warehouse) -> Optional[WasteFinding]:
     thread-pool frame hunt (analyze_heap_parquet.py:972-1097). The
     bitmask decode is done engine-side with bitwiseAND (the reference
     post-processes in Python)."""
-    traces = _table(wh, "_stack_traces")
-    if traces is None:
-        return None
-    trace_count = traces.count()
+    trace_count = _rows(wh, "_stack_traces")
     if trace_count == 0:
         return None
+    traces = wh.table("_stack_traces")
 
     threads = _table(wh, "java.lang.Thread")
     alive_count = 0

@@ -34,51 +34,112 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def table_rows(sf_dir: str, name: str) -> int:
-    """Exact row count from parquet FOOTERS only (driver-side pyarrow
-    metadata read, cached) — for scale-adaptive knobs like LSH plane
-    counts that need |corpus| before building the plan. Avoids
-    spending a whole Spark job on a number the footers already hold;
-    at cluster scale the same footer read is how AQE/statistics get
-    it. Cache key includes the file set and mtimes, so a rewritten
-    table re-probes."""
-    import pyarrow.parquet as pq
+    """Exact row count from parquet FOOTERS only (see
+    :func:`footer_rows`) — for scale-adaptive knobs like LSH plane
+    counts that need |corpus| before building the plan."""
+    return footer_rows(table_path(sf_dir, name))
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
+
+# Spark's file index silently drops paths starting with "_" or "."
+# (reserved for metadata like _SUCCESS), so the reference's
+# underscore-prefixed system tables (`_gc_roots`, `_object_index`,
+# SURVEY §1.3) are stored physically as ``sys_<name>`` while keeping
+# their logical underscore names — a documented deviation forced by
+# Spark's layout rules. This module is the only one that knows it.
+_SYS = "sys"
+
+
+def physical_name(table: str) -> str:
+    """Logical table name → its file/directory name under the root."""
+    return _SYS + table if table.startswith("_") else table
+
+
+def logical_name(entry: str) -> str:
+    """A root entry (``sys_x``, ``t.parquet``, ``t``) → its logical table."""
+    name = entry.removesuffix(".parquet")
+    return name[len(_SYS):] if name.startswith(_SYS + "_") else name
+
+
+def part_files(path: str) -> list[str]:
+    """The Parquet files backing one table path, sorted: the path itself
+    for a single-file table, else every ``*.parquet`` in the directory
+    and its Hive ``k=v/`` subdirectories. Hidden ``.``/``_`` entries
+    (temps, ``_SUCCESS``) are skipped, as Spark's file index skips them."""
+    if not os.path.isdir(path):
+        return [path]
+    out = []
+    for dp, dns, fs in os.walk(path):
+        dns[:] = [d for d in dns if "=" in d and not d.startswith((".", "_"))]
+        out += [
+            os.path.join(dp, f)
+            for f in fs
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+    return sorted(out)
+
+
+def partition_keys(path: str) -> list[str]:
+    """The Hive partition columns of a table directory, outermost first
+    (``day=/hour=/...``), read from the first directory of each level."""
+    keys: list[str] = []
+    while os.path.isdir(path):
+        level = sorted(
+            e for e in os.listdir(path)
+            if "=" in e and os.path.isdir(os.path.join(path, e))
         )
-    else:
-        files = [path]
-    key = (tuple(files), tuple(int(os.path.getmtime(f)) for f in files))
-    hit = _ROW_CACHE.get((sf_dir, name))
-    if hit and hit[0] == key:
-        return hit[1]
-    n = sum(pq.read_metadata(f).num_rows for f in files)
-    _ROW_CACHE[(sf_dir, name)] = (key, n)
-    return n
-
-
-_ROW_CACHE: dict[tuple[str, str], tuple[tuple, int]] = {}
+        if not level:
+            break
+        keys.append(level[0].split("=", 1)[0])
+        path = os.path.join(path, level[0])
+    return keys
 
 
 def _fs_key(path: str) -> tuple:
     """Identity of the files backing a table: names + mtimes + sizes.
     A rewritten table yields a different key, so caches keyed on it
-    re-probe (same invalidation contract as ``_ROW_CACHE``)."""
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    else:
-        files = [path]
+    re-probe."""
     return tuple(
-        (f, os.path.getmtime(f), os.path.getsize(f)) for f in files
+        (f, os.path.getmtime(f), os.path.getsize(f)) for f in part_files(path)
     )
+
+
+def footer_rows(path: str) -> int:
+    """Exact row count of the table at *path* from its parquet FOOTERS
+    (driver-side pyarrow metadata read, cached on :func:`_fs_key`), so
+    no Spark job is spent on a number the footers already hold; at
+    cluster scale the same footer read is how AQE/statistics get it."""
+    import pyarrow.parquet as pq
+
+    key = _fs_key(path)
+    hit = _ROW_CACHE.get(path)
+    if hit and hit[0] == key:
+        return hit[1]
+    n = sum(pq.read_metadata(f).num_rows for f, _, _ in key)
+    _ROW_CACHE[path] = (key, n)
+    return n
+
+
+_ROW_CACHE: dict[str, tuple[tuple, int]] = {}
+
+
+def swap_in(df: DataFrame, path: str, partition_by=()) -> None:
+    """Replace the table directory *path* with *df*: Spark's committer
+    writes a sibling temp directory (snappy), then two renames swap it
+    in and the old directory is removed. Single writer, no concurrent
+    readers: a DataFrame resolved before the swap fails on its next
+    action."""
+    import shutil
+
+    tmp, old = path + ".swap-tmp", path + ".swap-old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    writer = df.write.mode("overwrite").option("compression", "snappy")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(tmp)
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
 
 
 #: Per-session DataFrame cache for ``load_table`` (r14, guide §1.2):
@@ -242,9 +303,7 @@ class Warehouse:
             t
             for summary in manifest.get("partitions", {}).values()
             for t in summary.get("tables", {})
-            if not os.path.exists(
-                os.path.join(self.root, t[:1].replace("_", "sys_") + t[1:] if t.startswith("_") else t)
-            )
+            if not os.path.exists(os.path.join(self.root, physical_name(t)))
         ]
         if missing:
             raise RuntimeError(
@@ -261,36 +320,17 @@ class Warehouse:
         else:
             self._cache.pop(name, None)
 
-    # Spark's file index silently drops paths starting with "_" or "."
-    # (reserved for metadata like _SUCCESS), so the reference's
-    # underscore-prefixed system tables (`_gc_roots`, `_object_index`,
-    # SURVEY §1.3) are stored physically as ``sys_<name>.parquet`` while
-    # keeping their logical underscore names — a documented deviation
-    # forced by Spark's layout rules.
-
-    @staticmethod
-    def _logical(entry: str) -> str:
-        name = entry[: -len(".parquet")] if entry.endswith(".parquet") else entry
-        if name.startswith("sys_"):
-            return "_" + name[len("sys_"):]
-        return name
-
     def table_names(self) -> list[str]:
-        names = []
-        for entry in sorted(os.listdir(self.root)):
-            full = os.path.join(self.root, entry)
-            if entry.endswith(".parquet") and os.path.isfile(full):
-                names.append(self._logical(entry))
-            elif os.path.isdir(full) and not entry.startswith((".", "_")):
-                names.append(self._logical(entry))
-        return names
+        return [
+            logical_name(entry)
+            for entry in sorted(os.listdir(self.root))
+            if not entry.startswith((".", "_"))
+            and (entry.endswith(".parquet") or os.path.isdir(os.path.join(self.root, entry)))
+        ]
 
     def _resolve(self, name: str) -> str:
-        candidates = [f"{name}.parquet", name]
-        if name.startswith("_"):
-            candidates = [f"sys{name}.parquet", f"sys{name}"] + candidates
-        for cand in candidates:
-            full = os.path.join(self.root, cand)
+        base = os.path.join(self.root, physical_name(name))
+        for full in (f"{base}.parquet", base):
             if os.path.exists(full):
                 return full
         raise KeyError(f"table {name!r} not found under {self.root}")
@@ -299,6 +339,11 @@ class Warehouse:
         if name not in self._cache:
             self._cache[name] = self.spark.read.parquet(self._resolve(name))
         return self._cache[name]
+
+    def row_count(self, name: str) -> int:
+        """Rows of one table from its Parquet footers, with no Spark
+        job; equals ``table(name).count()``."""
+        return footer_rows(self._resolve(name))
 
     def register_all(self) -> None:
         for name, view in view_names(self.table_names()).items():
@@ -360,47 +405,20 @@ def compact_table(
 
     Returns {"files_before", "files_after", "bytes"}.
     """
-    import shutil
-
     wh = warehouse if warehouse is not None else Warehouse(spark, root)
     path = wh._resolve(name)
     if not os.path.isdir(path):  # single-file layout — nothing to do
         return {"files_before": 1, "files_after": 1, "bytes": os.path.getsize(path)}
-    parts = [
-        os.path.join(dp, f)
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    ]
+    parts = part_files(path)
     total = sum(os.path.getsize(p) for p in parts)
     if len(parts) < min_files:
         return {"files_before": len(parts), "files_after": len(parts), "bytes": total}
     n_out = max(1, -(-total // target_bytes))  # ceil
     # Hive-partitioned layout (snapshot=<id> dirs) must be re-emitted
     # with the same directory structure, not flattened into a column.
-    part_keys = sorted(
-        {e.split("=", 1)[0] for e in os.listdir(path) if "=" in e and os.path.isdir(os.path.join(path, e))}
-    )
-    tmp = path + ".compact-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer = (
-        spark.read.parquet(path)
-        .coalesce(n_out)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-    )
-    if part_keys:
-        writer = writer.partitionBy(*part_keys)
-    writer.parquet(tmp)
-    old = path + ".compact-old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(spark.read.parquet(path).coalesce(n_out), path, partition_keys(path))
     wh.invalidate(name)
-    after = sum(
-        1 for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    )
+    after = len(part_files(path))
     return {"files_before": len(parts), "files_after": after, "bytes": total}
 
 
@@ -418,8 +436,7 @@ def write_table(df, root: str, name: str, mode: str = "overwrite",
     — point/range predicates then skip whole row groups at the scan
     (data skipping without any index structure). No shuffle: the sort
     is task-local."""
-    physical = f"sys{name}" if name.startswith("_") else name
-    path = os.path.join(root, physical)
+    path = os.path.join(root, physical_name(name))
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
     writer = df.write.mode(mode).option("compression", compression)
@@ -455,9 +472,8 @@ def upsert_table(
       rewritten. This is the Delta/Iceberg MERGE cost model: work
       scales with the touched slice, not the table; at 100 TB an
       upsert of one day's corrections reads and writes one day.
-    - **Full-rewrite** (unpartitioned table): merge everything to a
-      temp directory, then the same atomic two-rename swap
-      `compact_table` uses. Correct at any size, but O(table); the
+    - **Full-rewrite** (unpartitioned table): merge everything and
+      swap the directory in (`swap_in`, as `compact_table` does). Correct at any size, but O(table); the
       docstring-level advice at scale is: partition (or bucket by
       key — `bucketing.py` — to make the anti-join shuffle-free) any
       table that expects upserts.
@@ -465,28 +481,12 @@ def upsert_table(
     Single-writer contract, like `compact_table`. Returns
     {"strategy", "rows_updated", "rows_inserted", "partitions_touched"}.
     """
-    import shutil
-
     wh = warehouse if warehouse is not None else Warehouse(spark, root)
     path = wh._resolve(name)
-
-    def _partition_keys(p: str) -> list[str]:
-        """Walk the Hive directory levels IN ORDER (day=/hour=/...) —
-        a single-level scan would rewrite a multi-level table with a
-        flattened layout, corrupting it against untouched partitions."""
-        keys: list[str] = []
-        while os.path.isdir(p):
-            level = sorted(
-                e for e in os.listdir(p)
-                if "=" in e and os.path.isdir(os.path.join(p, e))
-            )
-            if not level:
-                break
-            keys.append(level[0].split("=", 1)[0])
-            p = os.path.join(p, level[0])
-        return keys
-
-    part_keys = _partition_keys(path)
+    # every Hive level in order (day=/hour=/...): a single-level scan
+    # would rewrite a multi-level table with a flattened layout,
+    # corrupting it against untouched partitions
+    part_keys = partition_keys(path)
     target = spark.read.parquet(path)
     from pyspark.sql import functions as F
 
@@ -526,14 +526,7 @@ def upsert_table(
     merged = target.join(updates, keys, "left_anti").unionByName(
         updates.select(*target.columns)
     )
-    tmp = path + ".upsert-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-    old = path + ".upsert-old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(merged, path)
     wh.invalidate(name)
     return {
         "strategy": "full-rewrite",

@@ -29,6 +29,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import SparkSession
 
+from ..catalog import physical_name
 from . import hprof as H
 from .index import HprofIndex, build_index
 
@@ -60,11 +61,6 @@ _PRIM_LIST_ARROW = {
     "int": pa.int32(),
     "long": pa.int64(),
 }
-
-
-def _physical(table: str) -> str:
-    """Logical `_x` system tables → physical `sys_x` (see catalog.Warehouse)."""
-    return f"sys{table}" if table.startswith("_") else table
 
 
 def _class_registry(idx: HprofIndex) -> dict:
@@ -116,7 +112,7 @@ def _write_part(out_dir: str, table: str, split_id, arrow_table: pa.Table,
     complete rename wins with identical content. Orphaned temps from a
     killed attempt start with "." so Spark's file index ignores them;
     the driver sweeps them after the job commits."""
-    d = os.path.join(out_dir, _physical(table))
+    d = os.path.join(out_dir, physical_name(table))
     if partition:
         d = os.path.join(d, partition)  # Hive-style `snapshot=<id>` subdir
     os.makedirs(d, exist_ok=True)

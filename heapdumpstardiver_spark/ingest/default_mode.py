@@ -25,13 +25,10 @@ committer, then directory-swapped.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, swap_in
 
 #: columns that are object ids but must stay bare (join keys, not refs)
 _NON_REF_ID_COLS = {"obj_id"}
@@ -83,17 +80,6 @@ def _resolve_table(df: DataFrame, ref_cols: list[str], oindex: DataFrame) -> Dat
     )
 
 
-def _swap_in(spark: SparkSession, df: DataFrame, table_dir: str) -> None:
-    tmp = table_dir + ".default-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").option("compression", "snappy").parquet(tmp)
-    old = table_dir + ".default-old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(table_dir, old)
-    os.rename(tmp, table_dir)
-    shutil.rmtree(old)
-
-
 def resolve_refs_default_mode(spark: SparkSession, warehouse_dir: str) -> dict:
     """Convert a robo warehouse in *warehouse_dir* to the reference's
     default-mode view, in place: every declared-Object field in every
@@ -126,7 +112,7 @@ def resolve_refs_default_mode(spark: SparkSession, warehouse_dir: str) -> dict:
         if not ref_cols:
             continue
         out = _resolve_table(df, ref_cols, oindex)
-        _swap_in(spark, out, os.path.join(warehouse_dir, cls))
+        swap_in(out, wh._resolve(cls))
         wh.invalidate(cls)
         rewritten += 1
 
@@ -144,6 +130,6 @@ def resolve_refs_default_mode(spark: SparkSession, warehouse_dir: str) -> dict:
             .alias("ref_type"),
         )
     )
-    _swap_in(spark, sf2, os.path.join(warehouse_dir, "sys_static_fields"))
+    swap_in(sf2, wh._resolve("_static_fields"))
     wh.invalidate("_static_fields")
     return {"tables_rewritten": rewritten + 1}

@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, footer_rows, partition_keys, physical_name
 from .convert import ingest_hprof
 
 SNAP_COL = "snapshot"
@@ -74,11 +74,19 @@ class SnapshotView(Warehouse):
             df = df.filter(F.col(SNAP_COL) == self.snapshot_id).drop(SNAP_COL)
         return df
 
+    def row_count(self, name: str) -> int:
+        """Footer row count of this snapshot's ``snapshot=<id>/`` only."""
+        path = self._resolve(name)
+        if SNAP_COL not in partition_keys(path):
+            return super().row_count(name)
+        path = os.path.join(path, f"{SNAP_COL}={self.snapshot_id}")
+        return footer_rows(path) if os.path.isdir(path) else 0
+
 
 def list_snapshots(warehouse_dir: str) -> list[int]:
     """Snapshot ids present in the warehouse (from the object-index
     table's partition directories — every snapshot writes one)."""
-    d = os.path.join(warehouse_dir, "sys_object_index")
+    d = os.path.join(warehouse_dir, physical_name("_object_index"))
     if not os.path.isdir(d):
         return []
     ids = []

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .catalog import Warehouse
+from .catalog import Warehouse, part_files, partition_keys, physical_name
 
 _CHUNK_RE = re.compile(r"_chunk(\d+)$")
 _CLASS_ID_RE = re.compile(r"_(\d+)$")
@@ -94,8 +94,7 @@ def attach_reference_warehouse(
         shutil.rmtree(view_dir)
     os.makedirs(view_dir)
     for logical, files in tables.items():
-        physical = f"sys{logical}" if logical.startswith("_") else logical
-        d = os.path.join(view_dir, physical)
+        d = os.path.join(view_dir, physical_name(logical))
         os.makedirs(d)
         for i, src in enumerate(files):
             os.symlink(os.path.abspath(src), os.path.join(d, f"part-{i}.parquet"))
@@ -335,17 +334,12 @@ def export_reference_layout(
 
     def parts_of(name: str) -> list[str]:
         path = wh._resolve(name)
-        if os.path.isfile(path):
-            return [path]
-        out = []
-        for dp, dns, fs in os.walk(path):
-            if any("=" in d for d in dns):
-                raise ValueError(
-                    f"table {name!r} is snapshot-partitioned; the reference "
-                    "layout has no snapshot dimension — export a pinned state"
-                )
-            out.extend(os.path.join(dp, f) for f in fs if f.endswith(".parquet"))
-        return sorted(out)
+        if partition_keys(path):
+            raise ValueError(
+                f"table {name!r} is snapshot-partitioned; the reference "
+                "layout has no snapshot dimension — export a pinned state"
+            )
+        return part_files(path)
 
     # class-obj-id per class name (driver-side: metadata-sized table)
     cid_by_name: dict[str, int] = {}

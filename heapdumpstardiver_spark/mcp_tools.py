@@ -25,7 +25,7 @@ import json
 from pathlib import Path
 from typing import Any, Callable
 
-from .service import DEFAULT_PAGE_SIZE, SessionManager
+from .service import DEFAULT_PAGE_SIZE, SessionManager, on_session
 from .service import explain_query as _svc_explain_query
 from .service import list_tables as _svc_list_tables
 from .service import profile_table as _svc_profile_table
@@ -146,13 +146,12 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         out = _svc_list_tables(manager, session_id or None)
         if "error" in out:
             return _json(out)
-        sess = manager.get(out["session_id"])
         system, classes = [], []
         for name, info in out["tables"].items():
             entry = {
                 "table": name,
                 "view": info["view"],
-                "row_count": sess.warehouse.table(name).count(),
+                "row_count": info["row_count"],
                 "columns": [{"name": c, "type": t} for c, t in info["columns"]],
             }
             (system if name.startswith("_") else classes).append(entry)
@@ -199,12 +198,8 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         byte-array distribution + the tiered waste checks."""
         from .analytics import profile, run_waste_analysis
 
-        try:
-            sess = manager.get(session_id or None)
-        except (KeyError, ValueError) as e:
-            return _json({"error": str(e)})
-        wh = sess.warehouse
-        try:
+        def run(sess) -> dict[str, Any]:
+            wh = sess.warehouse
             result: dict[str, Any] = {"session_id": sess.session_id}
             result["summary"] = [r.asDict() for r in profile.run_summary(wh).collect()][0]
             result["top_types"] = [
@@ -236,9 +231,10 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
                 ]
                 result["total_estimated_waste"] = _fmt_bytes(total)
                 result["total_estimated_waste_bytes"] = total
-            return _json(result)
-        except Exception as e:
-            return _json({"error": str(e)})
+                result["skipped_checks"] = findings.skipped
+            return result
+
+        return _json(on_session(manager, session_id, run))
 
     def analyze_liveness(session_id: str = "", top_n: int = 20) -> str:
         """GC-root reachability analysis (beyond the reference's tool
@@ -249,25 +245,19 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         analytics/reachability.py on the session warehouse."""
         from .analytics import liveness_summary, unreachable_by_type
 
-        try:
-            sess = manager.get(session_id or None)
-        except (KeyError, ValueError) as e:
-            return _json({"error": str(e)})
-        try:
+        def run(sess) -> dict[str, Any]:
             summary = liveness_summary(sess.warehouse).collect()[0].asDict()
             top_dead = [
                 r.asDict()
                 for r in unreachable_by_type(sess.warehouse, k=top_n).collect()
             ]
-            return _json(
-                {
-                    "session_id": sess.session_id,
-                    "summary": summary,
-                    "top_unreachable_types": top_dead,
-                }
-            )
-        except Exception as e:
-            return _json({"error": str(e)})
+            return {
+                "session_id": sess.session_id,
+                "summary": summary,
+                "top_unreachable_types": top_dead,
+            }
+
+        return _json(on_session(manager, session_id, run))
 
     def retained_by_single_referrer(session_id: str = "", top_n: int = 20) -> str:
         """Memory attribution by sole retainer: for objects with
@@ -276,16 +266,12 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         -this-memory triage view (exact without a dominator tree).
         In-degrees from the full heap edge list; shallow sizes from
         the declared field layout and array lengths."""
+        from pyspark.sql import functions as F
+
         from .analytics.reachability import heap_edges
 
-        try:
-            sess = manager.get(session_id or None)
-        except (KeyError, ValueError) as e:
-            return _json({"error": str(e)})
-        wh = sess.warehouse
-        try:
-            from pyspark.sql import functions as F
-
+        def run(sess) -> dict[str, Any]:
+            wh = sess.warehouse
             edges = heap_edges(wh).distinct()
             single = (
                 edges.groupBy("dst")
@@ -313,14 +299,12 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
                 .orderBy(F.desc("n_objects"), "retainer_type", "retained_type")
                 .limit(top_n)
             )
-            return _json(
-                {
-                    "session_id": sess.session_id,
-                    "pairs": [r.asDict() for r in pairs.collect()],
-                }
-            )
-        except Exception as e:
-            return _json({"error": str(e)})
+            return {
+                "session_id": sess.session_id,
+                "pairs": [r.asDict() for r in pairs.collect()],
+            }
+
+        return _json(on_session(manager, session_id, run))
 
     def retained_sizes_dominator(
         session_id: str = "", top_n: int = 20, by_class: bool = False
@@ -334,24 +318,18 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         (which only attributes in-degree-1 objects)."""
         from .analytics.dominators import retained_by_class, retained_sizes
 
-        try:
-            sess = manager.get(session_id or None)
-        except (KeyError, ValueError) as e:
-            return _json({"error": str(e)})
-        try:
+        def run(sess) -> dict[str, Any]:
             if by_class:
                 rows = retained_by_class(sess.warehouse, k=top_n).collect()
             else:
                 rows = retained_sizes(sess.warehouse).limit(top_n).collect()
-            return _json(
-                {
-                    "session_id": sess.session_id,
-                    "by_class": by_class,
-                    "top_retainers": [r.asDict() for r in rows],
-                }
-            )
-        except Exception as e:
-            return _json({"error": str(e)})
+            return {
+                "session_id": sess.session_id,
+                "by_class": by_class,
+                "top_retainers": [r.asDict() for r in rows],
+            }
+
+        return _json(on_session(manager, session_id, run))
 
     return {
         "convert_heap_dump": convert_heap_dump,
@@ -445,11 +423,14 @@ disk and therefore refuses to run unless called with
 
 `query_heap` executes Spark SQL. Every warehouse table is registered
 as the temp view `<session_id>__<table>` (double-underscore
-separator) with dots and brackets folded to underscores, so the
-instance table for `java.util.HashMap` in session `s1` is the view
-`s1__java_util_HashMap`, and auxiliary tables — which already start
-with `_` — end up with three underscores:
-`s1___primitive_arrays_byte`. When unsure, call
+separator) with every character outside `[A-Za-z0-9_]` (dots,
+brackets, `$`) folded to an underscore, so the instance table for
+`java.util.HashMap$Node` in session `s1` is the view
+`s1__java_util_HashMap_Node`, and auxiliary tables — which already
+start with `_` — end up with three underscores:
+`s1___primitive_arrays_byte`. Two tables that fold to the same name
+(`a.b_c` and `a_b.c`) get distinct views: one keeps the name, the
+others gain `_2`, `_3`, and so on. When unsure, call
 `list_parquet_files`: it prints each table next to its exact view
 name. Results come back as JSON pages driven by the tool's
 `limit`/`offset` arguments; always ORDER BY something when paging,
@@ -534,7 +515,7 @@ the target's `obj_id`:
 
 ```sql
 SELECT e.obj_id AS entry_id, idx.type_name AS value_type
-FROM s1_java_util_HashMap_Node e
+FROM s1__java_util_HashMap_Node e
 JOIN s1___object_index idx ON idx.obj_id = e.value
 WHERE e.key = 140021433
 ```
@@ -553,9 +534,10 @@ under `PushedFilters` on the Parquet scan, and the scan's
 
 `analyze_heap(waste_tier=N)` executes the checks of tier ≤ N, each
 an independent DataFrame pipeline in `analytics/waste.py`. A check
-that throws is reported as its own error finding and the remaining
-checks still run. Findings come back as JSON objects with the fields
-`check_name`, `tier`, `severity`, `affected_count`,
+that throws is skipped and the remaining checks still run; the reply's
+`skipped_checks` lists each skipped check as `{check, error}` (empty
+when every check ran). Findings come back as JSON objects with the
+fields `check_name`, `tier`, `severity`, `affected_count`,
 `estimated_waste_bytes`, `details`, `recommendation`, and
 `sub_findings`.
 

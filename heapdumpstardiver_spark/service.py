@@ -14,7 +14,7 @@ from __future__ import annotations
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import SparkSession
 
@@ -138,6 +138,20 @@ class SessionManager:
         return n_files, str(sess.warehouse_dir)
 
 
+def on_session(
+    manager: SessionManager,
+    session_id: str | None,
+    fn: Callable[[HeapSession], dict[str, Any]],
+) -> dict[str, Any]:
+    """``fn(session)`` for the session *session_id* resolves to (the only
+    active one when empty). A missing or ambiguous session, or anything
+    *fn* raises, comes back in-band as ``{"error": message}``."""
+    try:
+        return fn(manager.get(session_id))
+    except Exception as e:
+        return {"error": str(e)}
+
+
 def query_heap(
     manager: SessionManager,
     sql: str,
@@ -149,11 +163,8 @@ def query_heap(
     LIMIT n+1 OFFSET m pagination probe (server.py:479-534). In the SQL,
     reference tables by session view name (see
     :meth:`HeapSession.view_name`)."""
-    try:
-        sess = manager.get(session_id)
-    except (KeyError, ValueError) as e:
-        return {"error": str(e)}
-    try:
+
+    def run(sess: HeapSession) -> dict[str, Any]:
         # n+1 probe: fetch one extra row to learn whether more pages exist.
         df = manager.spark.sql(sql).offset(offset).limit(limit + 1)
         rows = df.collect()
@@ -184,25 +195,27 @@ def query_heap(
                 "an ORDER BY to the query"
             )
         return out
-    except Exception as e:
-        return {"error": str(e)}
+
+    return on_session(manager, session_id, run)
 
 
 def list_tables(manager: SessionManager, session_id: str | None = None) -> dict[str, Any]:
     """Catalog introspection: table → (view, row count, schema) — the
-    `list_parquet_files`/DESCRIBE surface (server.py:427-449)."""
-    try:
-        sess = manager.get(session_id)
-    except (KeyError, ValueError) as e:
-        return {"error": str(e)}
-    tables = {}
-    for name in sess.warehouse.table_names():
-        df = sess.warehouse.table(name)
-        tables[name] = {
-            "view": sess.view_name(name),
-            "columns": [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
-        }
-    return {"session_id": sess.session_id, "tables": tables}
+    `list_parquet_files`/DESCRIBE surface (server.py:427-449). Row
+    counts come from the Parquet footers, with no Spark job."""
+
+    def run(sess: HeapSession) -> dict[str, Any]:
+        tables = {}
+        for name in sess.warehouse.table_names():
+            df = sess.warehouse.table(name)
+            tables[name] = {
+                "view": sess.view_name(name),
+                "row_count": sess.warehouse.row_count(name),
+                "columns": [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+            }
+        return {"session_id": sess.session_id, "tables": tables}
+
+    return on_session(manager, session_id, run)
 
 
 def explain_query(
@@ -221,11 +234,8 @@ def explain_query(
     codegen (Spark EXPLAIN variants)."""
     if mode not in ("formatted", "extended", "cost", "codegen", "simple"):
         return {"error": f"unknown explain mode '{mode}'"}
-    try:
-        sess = manager.get(session_id)
-    except (KeyError, ValueError) as e:
-        return {"error": str(e)}
-    try:
+
+    def run(sess: HeapSession) -> dict[str, Any]:
         # "simple" is Spark's DEFAULT explain — its grammar has no
         # SIMPLE keyword, so emit a bare EXPLAIN for it.
         kw = "" if mode == "simple" else f" {mode.upper()}"
@@ -235,8 +245,8 @@ def explain_query(
             "mode": mode,
             "plan": "\n".join(r[0] for r in rows),
         }
-    except Exception as e:
-        return {"error": str(e)}
+
+    return on_session(manager, session_id, run)
 
 
 def profile_table(
@@ -253,40 +263,36 @@ def profile_table(
     approx_count_distinct instead — the 100-TB default."""
     from pyspark.sql import functions as F
 
-    try:
-        sess = manager.get(session_id)
-    except (KeyError, ValueError) as e:
-        return {"error": str(e)}
-    try:
+    def run(sess: HeapSession) -> dict[str, Any]:
         df = sess.warehouse.table(table)
-    except KeyError as e:
-        return {"error": str(e)}
-    fields = df.schema.fields
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for i, f in enumerate(fields):
-        c = F.col(f"`{f.name}`")
-        aggs.append(F.count(c).alias(f"__nn_{i}"))
-        if i < max_distinct_cols:
-            aggs.append(F.count_distinct(c).alias(f"__nd_{i}"))
-        else:
-            aggs.append(F.approx_count_distinct(c).alias(f"__nd_{i}"))
-        if f.dataType.simpleString() not in ("binary", "array<double>", "array<float>"):
-            aggs.append(F.min(c).cast("string").alias(f"__mn_{i}"))
-            aggs.append(F.max(c).cast("string").alias(f"__mx_{i}"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    cols = {}
-    for i, f in enumerate(fields):
-        cols[f.name] = {
-            "type": f.dataType.simpleString(),
-            "n_nulls": row["__rows"] - row[f"__nn_{i}"],
-            "n_distinct": row[f"__nd_{i}"],
-            "distinct_exact": i < max_distinct_cols,
-            "min": row.get(f"__mn_{i}"),
-            "max": row.get(f"__mx_{i}"),
+        fields = df.schema.fields
+        aggs = [F.count(F.lit(1)).alias("__rows")]
+        for i, f in enumerate(fields):
+            c = F.col(f"`{f.name}`")
+            aggs.append(F.count(c).alias(f"__nn_{i}"))
+            if i < max_distinct_cols:
+                aggs.append(F.count_distinct(c).alias(f"__nd_{i}"))
+            else:
+                aggs.append(F.approx_count_distinct(c).alias(f"__nd_{i}"))
+            if f.dataType.simpleString() not in ("binary", "array<double>", "array<float>"):
+                aggs.append(F.min(c).cast("string").alias(f"__mn_{i}"))
+                aggs.append(F.max(c).cast("string").alias(f"__mx_{i}"))
+        row = df.agg(*aggs).collect()[0].asDict()
+        cols = {}
+        for i, f in enumerate(fields):
+            cols[f.name] = {
+                "type": f.dataType.simpleString(),
+                "n_nulls": row["__rows"] - row[f"__nn_{i}"],
+                "n_distinct": row[f"__nd_{i}"],
+                "distinct_exact": i < max_distinct_cols,
+                "min": row.get(f"__mn_{i}"),
+                "max": row.get(f"__mx_{i}"),
+            }
+        return {
+            "session_id": sess.session_id,
+            "table": table,
+            "n_rows": row["__rows"],
+            "columns": cols,
         }
-    return {
-        "session_id": sess.session_id,
-        "table": table,
-        "n_rows": row["__rows"],
-        "columns": cols,
-    }
+
+    return on_session(manager, session_id, run)

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import swap_in
 from ..queries.llm import BAND_BUCKET_CAP
 
 N_HASHES = 8
@@ -268,8 +269,6 @@ def compact_corpus_index(
     through a staging directory and an atomic rename, so a probe
     racing the compaction reads either the old or the new layout,
     never a partial one."""
-    import shutil
-
     tables = [("bands", _capped_bands)]
     if full:
         tables += [("shingles", None), ("sizes", None)]
@@ -278,12 +277,7 @@ def compact_corpus_index(
         df = spark.read.parquet(path)
         if transform is not None:
             df = transform(df)
-        staging = f"{path}.compact.{os.getpid()}"
-        df.write.mode("overwrite").parquet(staging)
-        old = f"{path}.old.{os.getpid()}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_in(df, path)
 
 
 def dedup_and_append_batch(

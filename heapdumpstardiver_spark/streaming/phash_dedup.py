@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import swap_in
 from ..queries.llm import BAND_BUCKET_CAP
 from ..queries.media import _PHASH_HAM_T, phash_bands, phash_hashes
 
@@ -82,16 +83,8 @@ def compact_phash_index(spark: SparkSession, index_dir: str) -> None:
     """Globally re-cap the band index (canonical smallest-media_id
     rule) via staging + atomic rename; hashes appends are already
     row-canonical."""
-    import shutil
-
     path = os.path.join(index_dir, "bands")
-    df = _capped_phash_bands(spark.read.parquet(path))
-    staging = f"{path}.compact.{os.getpid()}"
-    df.write.mode("overwrite").parquet(staging)
-    old = f"{path}.old.{os.getpid()}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_in(_capped_phash_bands(spark.read.parquet(path)), path)
 
 
 def flag_batch_images(

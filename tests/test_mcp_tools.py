@@ -234,3 +234,76 @@ def test_waste_guide_matches_check_inventory():
         assert check in body, f"guide missing check {check!r}"
     for sev in ("CRITICAL", "HIGH", "MEDIUM", "LOW", "INFO"):
         assert sev in body
+
+
+def test_analyze_heap_reports_skipped_checks(tools, monkeypatch, capsys):
+    """A waste check that raises is listed in ``skipped_checks`` (and
+    still logged to stderr); the other checks' findings are unchanged."""
+    from heapdumpstardiver_spark.analytics import runner
+
+    t, hprof, mgr = tools
+    _ensure_session(t, mgr, hprof)
+    clean = json.loads(t["analyze_heap"](waste_tier=1))
+    assert clean["skipped_checks"] == []
+
+    def check_explodes(wh):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(runner, "ALL_CHECKS", [(check_explodes, 1)] + runner.ALL_CHECKS)
+    out = json.loads(t["analyze_heap"](waste_tier=1))
+    assert out["skipped_checks"] == [{"check": "check_explodes", "error": "boom"}]
+    assert out["waste_findings"] == clean["waste_findings"]
+    assert "WARNING: check_explodes failed: boom" in capsys.readouterr().err
+
+
+def test_sql_guide_view_names_match_view_names():
+    """The SQL guide's example view is the one ``view_names`` registers
+    for an inner class (`$` folds to `_`, after the `s1__` prefix)."""
+    from heapdumpstardiver_spark.catalog import view_names
+    from heapdumpstardiver_spark.mcp_tools import build_resources
+
+    body = build_resources()["heapdump://guides/sql-examples"][2]
+    view = view_names(["java.util.HashMap$Node"], "s1__")["java.util.HashMap$Node"]
+    assert f"FROM {view} e" in body
+    assert "s1_java" not in body
+
+
+def test_footer_row_counts_on_every_warehouse_kind(spark, tmp_path):
+    """``Warehouse.row_count`` and ``list_parquet_files`` row counts
+    equal ``table(name).count()`` on a native warehouse, a reference-
+    layout warehouse (read through its symlinks) and a two-snapshot
+    warehouse, opened plainly and pinned to each snapshot."""
+    from heapdumpstardiver_spark.ingest import append_snapshot, ingest_hprof
+    from heapdumpstardiver_spark.ingest.snapshots import SnapshotView
+    from heapdumpstardiver_spark.interop import export_reference_layout
+
+    a, b = str(tmp_path / "a.hprof"), str(tmp_path / "b.hprof")
+    build_test_dump(a)
+    build_test_dump(b, extra_strings=3, omit_base=True)
+    native, ref, snaps = (str(tmp_path / d) for d in ("native", "ref", "snaps"))
+    ingest_hprof(spark, a, native)
+    export_reference_layout(spark, native, ref, robo=True, chunks=2)
+    append_snapshot(spark, a, snaps, 1)
+    append_snapshot(spark, b, snaps, 2)
+
+    mgr = SessionManager(spark)
+    t = build_tools(mgr)
+    warehouses = []
+    for sid, path in (("native", native), ("ref", ref), ("snaps", snaps)):
+        assert json.loads(t["open_session"](path, session_id=sid))["status"] == "ok"
+        listed = json.loads(t["list_parquet_files"](session_id=sid))
+        wh = mgr.get(sid).warehouse
+        for e in listed["system_tables"] + listed["class_tables"]:
+            assert e["row_count"] == wh.table(e["table"]).count(), (sid, e["table"])
+        warehouses.append(wh)
+    warehouses += [SnapshotView(spark, snaps, 1), SnapshotView(spark, snaps, 2)]
+    try:
+        for wh in warehouses:
+            for name in wh.table_names():
+                assert wh.row_count(name) == wh.table(name).count(), (wh, name)
+        counts = [{n: wh.row_count(n) for n in wh.table_names()} for wh in warehouses[2:]]
+        assert counts[0]["java.lang.String"] == counts[1]["java.lang.String"] + counts[2]["java.lang.String"]
+        assert counts[2]["java.lang.String"] == counts[1]["java.lang.String"] + 3
+    finally:
+        for sess in mgr.sessions.values():
+            sess.close()
