@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Warehouse
-from .reachability import heap_edges
+from .reachability import heap_edges, root_ids
 
 #: virtual super-root object id — the HPROF null sentinel, never a
 #: real object id, so it cannot collide.
@@ -155,20 +155,12 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
 def _rooted_edges(wh: Warehouse) -> DataFrame:
     """Distinct (src, dst) edges with the virtual super-root attached
     to every GC root; self-edges dropped (they never affect
-    dominance — any path using one revisits the node)."""
-    edges = heap_edges(wh).filter(F.col("src") != F.col("dst"))
-    try:
-        roots = (
-            wh.table("_gc_roots")
-            .filter(F.col("obj_id") != 0)
-            .select(
-                F.lit(SUPER_ROOT).cast("long").alias("src"),
-                F.col("obj_id").alias("dst"),
-            )
-        )
-    except KeyError:
-        roots = wh.spark.createDataFrame([], "src long, dst long")
-    return edges.unionByName(roots).distinct()
+    dominance — any path using one revisits the node). Both halves are
+    distinct and no heap edge leaves the super-root, so the union is."""
+    roots = root_ids(wh).select(
+        F.lit(SUPER_ROOT).cast("long").alias("src"), F.col("obj_id").alias("dst")
+    )
+    return heap_edges(wh).filter(F.col("src") != F.col("dst")).unionByName(roots)
 
 
 def dominator_pairs(wh: Warehouse, max_rounds: int = 256) -> DataFrame:
@@ -289,10 +281,7 @@ def _dominator_pairs_driver(spark, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(pairs, "obj_id long, dom long")
 
 
-def _dominator_pairs_loop(
-    spark, rooted_edges: DataFrame, max_rounds: int
-) -> DataFrame:
-    edges = rooted_edges.localCheckpoint()
+def _dominator_pairs_loop(spark, edges: DataFrame, max_rounds: int) -> DataFrame:
     pad = lambda c: F.lpad(c.cast("string"), 20, "0")  # noqa: E731
 
     # BFS tree path per node, min-(depth, path) like gc_root_path.

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -275,6 +276,7 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self._cache: dict[str, DataFrame] = {}
+        self._derived: dict[str, DataFrame] = {}
         if require_manifest:
             self.verify()
 
@@ -314,11 +316,22 @@ class Warehouse:
 
     def invalidate(self, name: str | None = None) -> None:
         """Drop cached DataFrame(s) whose file listings may be stale —
-        call after an external rewrite such as ``compact_table``."""
+        call after an external rewrite such as ``compact_table``. Every
+        derived relation goes too: any table may feed it."""
+        self._derived.clear()
         if name is None:
             self._cache.clear()
         else:
             self._cache.pop(name, None)
+
+    def derived(self, key: str, build: Callable[[], DataFrame]) -> DataFrame:
+        """The relation *key* derived from this warehouse's tables (the
+        heap graph's edge list, its live set), built on first use and
+        kept for the life of this instance. A build that raises stores
+        nothing."""
+        if key not in self._derived:
+            self._derived[key] = build()
+        return self._derived[key]
 
     def table_names(self) -> list[str]:
         return [

@@ -262,38 +262,17 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
     def retained_by_single_referrer(session_id: str = "", top_n: int = 20) -> str:
         """Memory attribution by sole retainer: for objects with
         exactly one incoming reference, which (retainer type →
-        retained type) pairs hold the most bytes — the who-is-holding
-        -this-memory triage view (exact without a dominator tree).
-        In-degrees from the full heap edge list; shallow sizes from
-        the declared field layout and array lengths."""
+        retained type) pairs hold the most objects, ranked by
+        ``n_objects`` — the who-is-holding-this-memory triage view
+        (exact without a dominator tree). In-degrees come from the
+        session's heap edge list (analytics/reachability.py)."""
         from pyspark.sql import functions as F
 
-        from .analytics.reachability import heap_edges
+        from .analytics.reachability import sole_retainers
 
         def run(sess) -> dict[str, Any]:
-            wh = sess.warehouse
-            edges = heap_edges(wh).distinct()
-            single = (
-                edges.groupBy("dst")
-                .agg(F.count(F.lit(1)).alias("n"), F.min("src").alias("retainer"))
-                .filter(F.col("n") == 1)
-            )
-            oi = wh.table("_object_index")
             pairs = (
-                single.join(
-                    oi.select(
-                        F.col("obj_id").alias("dst"),
-                        F.col("type_name").alias("retained_type"),
-                    ),
-                    "dst",
-                )
-                .join(
-                    oi.select(
-                        F.col("obj_id").alias("retainer"),
-                        F.col("type_name").alias("retainer_type"),
-                    ),
-                    "retainer",
-                )
+                sole_retainers(sess.warehouse)
                 .groupBy("retainer_type", "retained_type")
                 .agg(F.count(F.lit(1)).alias("n_objects"))
                 .orderBy(F.desc("n_objects"), "retainer_type", "retained_type")

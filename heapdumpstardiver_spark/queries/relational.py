@@ -1370,23 +1370,9 @@ def reachability_live_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round work is one join + one anti-join, rounds = reference-
     chain depth with a non-convergence guard; the census itself is one
     broadcast-sized join (live set ≪ index) + one aggregation."""
-    from ..analytics.reachability import reachable_from_roots
+    from ..analytics.reachability import live_census
 
-    wh = _fixture_warehouse(spark)
-    live = reachable_from_roots(wh).withColumn("live", F.lit(1))
-    return (
-        wh.table("_object_index")
-        .join(live, "obj_id", "left")
-        .groupBy("type_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_objects"),
-            F.sum(F.coalesce("live", F.lit(0))).cast("long").alias("n_reachable"),
-            F.sum(F.when(F.col("live").isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_unreachable"),
-        )
-        .orderBy("type_name")
-    )
+    return live_census(_fixture_warehouse(spark)).orderBy("type_name")
 
 
 def _retainer_oracle() -> str:
@@ -1440,39 +1426,17 @@ def single_retainer_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     `size()` projection per array table; the final rollup is a
     (type, type) aggregation — nothing driver-side beyond the class
     registry."""
-    from ..analytics.reachability import heap_edges
-
-    wh = _fixture_warehouse(spark)
-    edges = heap_edges(wh).distinct()
-    single = (
-        edges.groupBy("dst")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("src").alias("retainer"))
-        .filter(F.col("n") == 1)
-    )
-
     # Shared additive size model (header + field widths / element
     # bytes) — one implementation, analytics/dominators.shallow_sizes,
     # serves this query, the dominator tree, and the MCP tools, so a
     # model fix (e.g. the zero-field-class fallback) lands everywhere.
     from ..analytics.dominators import shallow_sizes
+    from ..analytics.reachability import sole_retainers
 
-    oi = wh.table("_object_index")
-    sizes = shallow_sizes(wh)
-
-    retained = single.join(sizes, single.dst == sizes.obj_id).join(
-        oi.select(
-            F.col("obj_id").alias("r_obj"), F.col("type_name").alias("retained_type")
-        ),
-        F.col("dst") == F.col("r_obj"),
-    )
+    wh = _fixture_warehouse(spark)
     return (
-        retained.join(
-            oi.select(
-                F.col("obj_id").alias("t_obj"),
-                F.col("type_name").alias("retainer_type"),
-            ),
-            F.col("retainer") == F.col("t_obj"),
-        )
+        sole_retainers(wh)
+        .join(shallow_sizes(wh), F.col("dst") == F.col("obj_id"))
         .groupBy("retainer_type", "retained_type")
         .agg(
             F.count(F.lit(1)).alias("n_objects"),
@@ -1617,7 +1581,7 @@ def growth_by_retainer(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from metadata-bounded joins. Nothing driver-side beyond the
     class registry."""
     from ..analytics.dominators import shallow_sizes
-    from ..analytics.reachability import heap_edges
+    from ..analytics.reachability import retainers
     from ..ingest.snapshots import SnapshotView, object_diff
 
     wh = _snapshot_warehouse(spark)
@@ -1627,10 +1591,7 @@ def growth_by_retainer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("status") == "new")
         .select("obj_id", F.col("type_name").alias("grown_type"))
     )
-    edges = heap_edges(after).distinct()
-    indeg = edges.groupBy("dst").agg(
-        F.count(F.lit(1)).alias("n"), F.min("src").alias("retainer")
-    )
+    indeg = retainers(after)
     oi = after.table("_object_index").select(
         F.col("obj_id").alias("r_obj"), F.col("type_name").alias("r_type")
     )
@@ -1717,53 +1678,28 @@ def gc_root_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth. Ids are zero-padded so lexicographic order equals numeric
     order, which makes the per-layer greedy choice equal the global
     (depth, path) minimum the oracle computes by full enumeration."""
-    from ..analytics.reachability import heap_edges
+    from ..analytics.reachability import heap_edges, root_ids, walk_frontier
 
     wh = _fixture_warehouse(spark)
-    edges = heap_edges(wh).distinct().localCheckpoint()
+    edges = heap_edges(wh)
     pad = lambda c: F.lpad(c.cast("string"), 8, "0")  # noqa: E731
-    roots = (
-        wh.table("_gc_roots")
-        .filter(F.col("obj_id") != 0)
-        .select("obj_id")
-        .distinct()
-        .select("obj_id", F.lit(0).alias("depth"), pad(F.col("obj_id")).alias("path"))
-        .localCheckpoint()
-    )
-    visited = roots
-    frontier = roots
-    max_depth = 64  # runaway backstop, not a truncation: see raise below
-    for depth in range(1, max_depth + 1):
-        # Lazy checkpoint + count: the emptiness probe IS the
-        # materializing job (one action/round); `visited` stays a lazy
-        # union of checkpointed frontiers — re-checkpointing the union
-        # would re-cache all prior rows every round for no lineage win.
-        nxt = (
-            edges.join(frontier, edges.src == frontier.obj_id)
+
+    def step(fr: DataFrame) -> DataFrame:
+        return (
+            edges.join(fr, edges.src == fr.obj_id)
             .select(
                 F.col("dst").alias("obj_id"),
-                F.lit(depth).alias("depth"),
+                (F.col("depth") + 1).alias("depth"),
                 F.concat(F.col("path"), F.lit("->"), pad(F.col("dst"))).alias("path"),
             )
             .groupBy("obj_id", "depth")
             .agg(F.min("path").alias("path"))
-            .join(visited, "obj_id", "left_anti")
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
-            frontier = None
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    if frontier is not None:
-        # Same contract as reachable_from_roots / dominator_pairs_from:
-        # a still-growing frontier at the round cap means objects
-        # deeper than max_depth exist — refuse to return a silently
-        # partial "every reachable object" result.
-        raise RuntimeError(
-            f"gc_root_path did not converge within {max_depth} rounds; "
-            "reference chains exceed the depth cap"
-        )
+
+    seed = root_ids(wh).select(
+        "obj_id", F.lit(0).alias("depth"), pad(F.col("obj_id")).alias("path")
+    )
+    visited = walk_frontier(seed, step, "gc_root_path")
     oi = wh.table("_object_index")
     return (
         visited.join(oi, "obj_id")

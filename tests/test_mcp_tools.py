@@ -98,6 +98,55 @@ def test_retained_sizes_dominator_tool(tools):
     assert cls["by_class"] and cls["top_retainers"]
 
 
+def test_session_builds_heap_graph_once(tools, spark, tmp_path, monkeypatch):
+    """analyze_liveness, retained_by_single_referrer and
+    retained_sizes_dominator in one session share one edge build and
+    one BFS; a re-opened session starts over. Each edge build reads the
+    `_static_fields` edge source once."""
+    from heapdumpstardiver_spark.analytics import reachability
+    from heapdumpstardiver_spark.ingest import ingest_hprof
+
+    t, hprof, mgr = tools
+    out = str(tmp_path / "wh")
+    ingest_hprof(spark, hprof, out)
+    bfs_runs: list[int] = []
+    bfs = reachability.reachable_from_roots
+
+    def counted_bfs(*a, **k):
+        bfs_runs.append(1)
+        return bfs(*a, **k)
+
+    monkeypatch.setattr(reachability, "reachable_from_roots", counted_bfs)
+
+    def run_tools(sid: str) -> list[str]:
+        assert json.loads(t["open_session"](out, session_id=sid))["status"] == "ok"
+        wh = mgr.get(sid).warehouse
+        table = wh.table
+
+        def counted_table(name: str):
+            if name == "_static_fields":
+                edge_reads.append(name)
+            return table(name)
+
+        monkeypatch.setattr(wh, "table", counted_table)
+        return [
+            t["analyze_liveness"](session_id=sid),
+            t["retained_by_single_referrer"](session_id=sid),
+            t["retained_sizes_dominator"](session_id=sid),
+        ]
+
+    edge_reads: list[str] = []
+    replies = run_tools("graph_once")
+    assert not any("error" in json.loads(r) for r in replies)
+    assert (len(bfs_runs), len(edge_reads)) == (1, 1)
+
+    t["close_session"]("graph_once")
+    edge_reads.clear()
+    assert run_tools("graph_once") == replies
+    assert (len(bfs_runs), len(edge_reads)) == (2, 1)
+    t["close_session"]("graph_once")
+
+
 def test_cleanup_confirm_gate(tools):
     t, hprof, mgr = tools
     blocked = json.loads(t["cleanup_session"]("app"))

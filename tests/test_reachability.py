@@ -6,9 +6,11 @@ from __future__ import annotations
 import pytest
 
 from heapdumpstardiver_spark import analytics as A
+from heapdumpstardiver_spark.analytics import reachability
 from heapdumpstardiver_spark.catalog import Warehouse
 from heapdumpstardiver_spark.ingest import ingest_hprof
 from heapdumpstardiver_spark.ingest.hprof_writer import build_test_dump
+from heapdumpstardiver_spark.service import SessionManager
 
 
 @pytest.fixture(scope="module")
@@ -114,10 +116,9 @@ def test_missing_tables_tolerated(spark, tmp_path):
     assert {(r["src"], r["dst"]) for r in edges.collect()} == {(1, 2), (2, 3)}
 
 
-def test_nonconvergence_raises(spark, tmp_path):
-    """A frontier still alive at max_rounds must raise, never silently
-    return a partial reachable set (ADVICE r3)."""
-    root = str(tmp_path / "chain_wh")
+def _chain_warehouse(spark, root: str) -> Warehouse:
+    """A 10-object reference chain from one GC root, plus object 11,
+    which nothing references."""
     ft = spark.createDataFrame(
         [(0x10, "chain.Cls", "nxt", "Object", 0)],
         "class_obj_id long, class_name string, field_name string, "
@@ -131,8 +132,73 @@ def test_nonconvergence_raises(spark, tmp_path):
     spark.createDataFrame([(1,)], "obj_id long").write.parquet(
         f"{root}/sys_gc_roots.parquet"
     )
-    wh = Warehouse(spark, root)
+    spark.createDataFrame(
+        [(i, "chain.Cls") for i in range(1, 12)], "obj_id long, type_name string"
+    ).write.parquet(f"{root}/sys_object_index.parquet")
+    return Warehouse(spark, root)
+
+
+def test_nonconvergence_raises(spark, tmp_path):
+    """A frontier still alive at max_rounds must raise, never silently
+    return a partial reachable set (ADVICE r3)."""
+    wh = _chain_warehouse(spark, str(tmp_path / "chain_wh"))
     with pytest.raises(RuntimeError, match="did not converge"):
         A.reachable_from_roots(wh, max_rounds=3)
     got = {r["obj_id"] for r in A.reachable_from_roots(wh).collect()}
     assert got == set(range(1, 11))
+
+
+def _liveness(wh) -> tuple[int, int, int]:
+    row = A.liveness_summary(wh).collect()[0]
+    return row["n_objects"], row["n_reachable"], row["n_unreachable"]
+
+
+def test_failed_bfs_memoises_nothing(spark, tmp_path, monkeypatch):
+    """A BFS that raises leaves no live set on the warehouse: the next
+    call recomputes it and succeeds."""
+    wh = _chain_warehouse(spark, str(tmp_path / "chain_wh"))
+    bfs = reachability.reachable_from_roots
+    monkeypatch.setattr(
+        reachability, "reachable_from_roots", lambda w: bfs(w, max_rounds=3)
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        A.liveness_summary(wh)
+    monkeypatch.undo()
+    assert _liveness(wh) == (11, 10, 1)
+
+
+def _truth_liveness(truth: dict) -> tuple[int, int, int]:
+    adj: dict[int, list[int]] = {}
+    for s, d in truth["edges"]:
+        adj.setdefault(s, []).append(d)
+    seen = {r for r in truth["roots"] if r != 0}
+    stack = list(seen)
+    while stack:
+        for m in adj.get(stack.pop(), ()):
+            if m not in seen:
+                seen.add(m)
+                stack.append(m)
+    ids = {o for o, _t, _b in truth["objects"]}
+    return len(ids), len(ids & seen), len(ids - seen)
+
+
+def test_liveness_follows_reingest(spark, tmp_path):
+    """The session memo never outlives the tables it was built from:
+    after a different dump is re-ingested into the same directory,
+    Warehouse.invalidate() and a re-opened session both report the new
+    heap's liveness."""
+    a, b = str(tmp_path / "a.hprof"), str(tmp_path / "b.hprof")
+    want_a = _truth_liveness(build_test_dump(a))
+    want_b = _truth_liveness(build_test_dump(b, extra_strings=6, hold_extras=True))
+    assert want_a != want_b
+    out = str(tmp_path / "wh")
+    ingest_hprof(spark, a, out)
+    wh = Warehouse(spark, out)
+    mgr = SessionManager(spark)
+    assert _liveness(wh) == _liveness(mgr.create_session(out, "s").warehouse) == want_a
+
+    ingest_hprof(spark, b, out, overwrite=True)
+    wh.invalidate()
+    assert _liveness(wh) == want_b
+    assert _liveness(mgr.create_session(out, "s").warehouse) == want_b
+    mgr.close_session("s")
