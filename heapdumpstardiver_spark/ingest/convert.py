@@ -629,8 +629,11 @@ def ingest_hprof(
     """Convert an HPROF heap dump into a Parquet warehouse readable by
     :class:`~heapdumpstardiver_spark.catalog.Warehouse`.
 
-    Pass 1 builds the driver index and split plan; pass 2 fans the
-    splits out as one Spark task each. Returns a summary manifest.
+    Pass 1 builds the driver index and split plan, scanning the heap
+    segments on the driver unless they exceed
+    :data:`~.index.FANOUT_MIN_SEGMENT_BYTES`; pass 2 fans the splits out
+    as one Spark task each. Below that size an ingest is one Spark job.
+    Returns a summary manifest.
 
     A non-empty *out_dir* is refused unless ``overwrite=True`` (which
     clears it) — a differently-split re-run would otherwise leave stale

@@ -11,15 +11,41 @@ tasks instead of the reference's rayon pool.
 The segment scan steps over heap sub-records with the grammar in
 :mod:`.hprof`. It leaps over a run of equal-length records in one step,
 but a JVM lists objects in heap-walk order, so on a real dump most
-steps cover one record.
+steps cover one record. The scan runs on the driver unless the heap
+segments together exceed :data:`FANOUT_MIN_SEGMENT_BYTES`; past that it
+fans out as one Spark task per segment.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 from dataclasses import dataclass, field
 
 from . import hprof as H
+
+
+# Heap-segment bytes above which pass 1 scans the segments as a Spark
+# job (one task per segment) instead of on the driver. A PySpark job
+# costs 0.2-0.35 s before its first task starts, more than the driver
+# needs for the whole scan of a small dump. `build_index` seconds, warm,
+# `local[4]` on a 4-core VM, range over two runs of 5-8 repetitions:
+#
+#   dump (4 MB segments)                   driver      Spark fan-out
+#   heapgen 27 MB, 6 segments              0.02-0.05   0.35-0.66
+#   interleaved String/byte[]   7 MB       0.15-0.25   0.24-0.39
+#   interleaved                16 MB       0.32-0.37   0.28-0.43
+#   interleaved                27 MB       0.52-0.84   0.48-0.81
+#   interleaved                32 MB       0.66-0.71   0.50-0.73
+#   interleaved                48 MB       1.21-2.13   0.83-1.61
+#   interleaved                64 MB       1.34-2.59   1.16-1.84
+#   interleaved               107 MB       2.14-4.19   2.14-3.02
+#
+# Interleaved records are the driver's worst case (one step per
+# record): there the two tie near 30 MB. Heapgen's grouped records are
+# leapt over in runs, and the driver wins by 10x. The gate sits at the
+# worst-case tie.
+FANOUT_MIN_SEGMENT_BYTES = 32 * 1024 * 1024
 
 
 @dataclass
@@ -80,17 +106,22 @@ def _scan_segment(
     seg_end: int,
     id_size: int,
     target_split_bytes: int,
-    tolerate_truncation: bool = False,
-) -> tuple[list, list[tuple[int, int]]]:
+) -> tuple[list, list[tuple[int, int]], int | None]:
     """Skip-scan one heap segment: harvest ClassDumps and plan split
     boundaries on sub-record boundaries. Reads ONLY its byte range, so
-    it can run as a Spark task (segments are independent — a split
-    never spans the record header between segments).
+    it runs alike on the driver and as a Spark task (segments are
+    independent — a split never spans the record header between
+    segments).
 
     Records are located through the shared :class:`~.hprof.SubRecords`
     grammar; runs of equal-length object records are leapt over with its
     run prober, capped at the current split's remaining byte budget so
     split sizes still land on ~target_split_bytes.
+
+    A sub-record cut short by the end of the segment ends the scan: the
+    splits stop before it, and the third element of the result is its
+    file offset (``None`` when the segment is whole). The caller decides
+    whether that is an error, so both scan paths report it alike.
     """
     with open(path, "rb") as f:
         f.seek(seg_start)
@@ -111,23 +142,11 @@ def _scan_segment(
                 budget = split_start + target_split_bytes - pos + stride
                 pos += stride * g.probe_run(buf, pos, stride, min(end - pos, budget))
         except (struct.error, IndexError):
-            # record header itself is cut short
-            if not tolerate_truncation:
-                raise ValueError(
-                    f"truncated heap sub-record at offset {seg_start + rec_start}; "
-                    "re-run with strict=False to ingest the complete prefix"
-                ) from None
-            end = rec_start
-            break
+            pos = n + 1  # the record header itself is cut short
         except ValueError as e:
             raise ValueError(f"{e} of the heap segment at file offset {seg_start}") from None
         if pos > n:
-            # declared body extends past the available bytes
-            if not tolerate_truncation:
-                raise ValueError(
-                    f"truncated heap sub-record at offset {seg_start + rec_start}; "
-                    "re-run with strict=False to ingest the complete prefix"
-                )
+            # the record runs past the segment's bytes
             end = rec_start
             break
         if pos - split_start >= target_split_bytes:
@@ -135,7 +154,7 @@ def _scan_segment(
             split_start = pos
     if split_start < end:
         splits.append((seg_start + split_start, seg_start + end))
-    return classes, splits
+    return classes, splits, seg_start + end if end < n else None
 
 
 def build_index(
@@ -146,16 +165,17 @@ def build_index(
 ) -> HprofIndex:
     """Driver metadata pass. The top-level walk reads ONLY record
     headers plus the (bounded) metadata record bodies — heap-segment
-    bodies, the O(heap) part, are ``seek``ed over and later scanned by
-    executor tasks. Driver memory and I/O stay O(strings + classes +
-    frames) no matter how large the dump is.
+    bodies, the O(heap) part, are ``seek``ed over. The segments are
+    then skip-scanned one at a time on the driver or, when *spark* is
+    given and they total more than :data:`FANOUT_MIN_SEGMENT_BYTES`, as
+    one Spark task each. Driver memory stays O(strings + classes +
+    frames), plus one segment while the driver scans it.
 
     Real-world dumps are often cut short (disk full, process killed).
     ``strict=True`` (default) raises on any truncation; ``strict=False``
-    ingests the complete-record prefix and sets ``idx.truncated``."""
-    import os as _os
-
-    file_size = _os.path.getsize(path)
+    ingests the complete-record prefix and sets ``idx.truncated``, also
+    when a heap sub-record is cut short inside a segment."""
+    file_size = os.path.getsize(path)
     # Metadata record bodies the driver must materialize; everything
     # else (above all the multi-GB heap segments) is skipped by seek.
     _KEEP_BODY = (H.TAG_UTF8, H.TAG_LOAD_CLASS, H.TAG_STACK_FRAME, H.TAG_STACK_TRACE)
@@ -237,38 +257,29 @@ def build_index(
             pos = off + length
 
     # Skip-scan segments: harvest ClassDumps (schema source) and plan
-    # splits on sub-record boundaries. Segments are independent, so
-    # when a SparkSession is supplied the scan fans out one task per
-    # segment — on a big dump this turns the O(heap) part of pass 1
-    # into a parallel job, leaving the driver with only the (bounded)
-    # string/class/frame metadata.
-    abspath = __import__("os").path.abspath(path)
-    if spark is not None and len(segment_ranges) > 1:
+    # splits on sub-record boundaries. Segments are independent, so on
+    # a big dump the scan fans out one Spark task per segment; below
+    # the crossover a job's fixed cost exceeds the whole scan.
+    abspath = os.path.abspath(path)
+    segment_bytes = sum(e - s for s, e in segment_ranges)
+    if spark is not None and len(segment_ranges) > 1 and segment_bytes > FANOUT_MIN_SEGMENT_BYTES:
         scanned = (
-            spark.sparkContext.parallelize(
-                list(enumerate(segment_ranges)), numSlices=len(segment_ranges)
-            )
-            .map(
-                lambda t: (
-                    t[0],
-                    _scan_segment(
-                        abspath, t[1][0], t[1][1], id_size, target_split_bytes,
-                        tolerate_truncation=not strict,
-                    ),
-                )
-            )
+            spark.sparkContext.parallelize(segment_ranges, numSlices=len(segment_ranges))
+            .map(lambda r: _scan_segment(abspath, r[0], r[1], id_size, target_split_bytes))
             .collect()
         )
-        scanned = [r for _, r in sorted(scanned)]
     else:
         scanned = [
-            _scan_segment(
-                abspath, s, e, id_size, target_split_bytes,
-                tolerate_truncation=not strict,
-            )
-            for s, e in segment_ranges
+            _scan_segment(abspath, s, e, id_size, target_split_bytes) for s, e in segment_ranges
         ]
-    for class_infos, seg_splits in scanned:
+    for class_infos, seg_splits, cut in scanned:
+        if cut is not None:
+            if strict:
+                raise ValueError(
+                    f"truncated heap sub-record at offset {cut}; "
+                    "re-run with strict=False to ingest the complete prefix"
+                )
+            idx.truncated = True
         for info in class_infos:
             info.name = idx.class_name(info.class_obj_id)
             idx.classes[info.class_obj_id] = info

@@ -3,7 +3,8 @@ both id widths, multiple segments, empty classes/arrays) written with
 our fixture writer, ingested with the Spark pipeline, and compared
 value-for-value against the generator's ground truth. Covers grammar
 corners the fixed fixture never hits (char/short/float instance
-fields, zero-field classes, many tiny segments)."""
+fields, zero-field classes, many tiny segments). Pass 1's two segment
+scans (driver and Spark fan-out) must agree on every such dump."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ import struct
 import pytest
 
 from heapdumpstardiver_spark.catalog import Warehouse
+from heapdumpstardiver_spark.ingest import index as pass1
 from heapdumpstardiver_spark.ingest import ingest_hprof
 from heapdumpstardiver_spark.ingest.hprof_writer import HprofWriter
 
@@ -184,3 +186,94 @@ def test_fuzz_roundtrip(spark, tmp_path_factory, seed, address_ordered):
             assert rows[oid] == [int(x) if ptype == "char" else x for x in want], (
                 ptype, oid, rows[oid], want,
             )
+
+
+def build_cut_instance_dump(path):
+    """Three heap segments of 4, 5 and 4 ``com.fuzz.Point`` instances.
+    The middle segment's last instance is cut 5 bytes short, while every
+    segment's declared length still fits the file."""
+    w = HprofWriter()
+    obj, point = w.oid(), w.oid()
+    w.load_class(1, obj, "java/lang/Object")
+    w.load_class(2, point, "com/fuzz/Point")
+    fields = [(w.sid("x"), 10), (w.sid("y"), 10)]
+    segs = [[w.class_dump(obj, 0, 0, [], []), w.class_dump(point, obj, 8, [], fields)], [], []]
+    for seg, n in zip(segs, (4, 5, 4)):
+        seg += [w.instance(w.oid(), point, struct.pack(">ii", i, -i)) for i in range(n)]
+    segs[1][-1] = segs[1][-1][:-5]
+    for seg in segs:
+        w.heap_segment(b"".join(seg))
+    w.heap_end()
+    with open(path, "wb") as f:
+        f.write(w.buf)
+
+
+def test_sub_record_cut_inside_segment(spark, tmp_path):
+    """A heap sub-record cut short inside a segment is a truncation:
+    strict mode refuses it, and strict=False ingests the 12 complete
+    instances and says the dump was truncated."""
+    path = str(tmp_path / "cut.hprof")
+    build_cut_instance_dump(path)
+    with pytest.raises(ValueError, match="truncated heap sub-record"):
+        ingest_hprof(spark, path, str(tmp_path / "wh_strict"))
+    summary = ingest_hprof(spark, path, str(tmp_path / "wh"), strict=False)
+    assert summary["truncated"] is True
+    assert Warehouse(spark, str(tmp_path / "wh")).table("com.fuzz.Point").count() == 12
+
+
+def _spark_jobs(spark, group, fn):
+    """Run fn under its own Spark job group: its result and the number
+    of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_ingest_runs_one_spark_job(spark, tmp_path):
+    """Pass 1 scans a small dump's heap segments on the driver, so the
+    whole ingest of this four-segment dump is one Spark job: pass 2."""
+    path = str(tmp_path / "f.hprof")
+    build_fuzz_dump(path, 1337)
+    wh = str(tmp_path / "wh")
+    _, jobs = _spark_jobs(spark, "one-job-ingest", lambda: ingest_hprof(spark, path, wh))
+    assert jobs == 1
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["7", "41", "1337", "7-address-ordered", "1337-tail-cut", "cut-instance"],
+)
+def test_driver_and_fanout_scans_agree(spark, tmp_path, monkeypatch, case):
+    """Every dump here is far below FANOUT_MIN_SEGMENT_BYTES, so the
+    driver scans it; with the gate at 0 the same scan fans out as one
+    Spark job. Both must plan the same splits, class layouts and
+    truncation."""
+    path = str(tmp_path / "f.hprof")
+    strict = True
+    if case == "cut-instance":
+        build_cut_instance_dump(path)
+        strict = False
+    else:
+        build_fuzz_dump(path, int(case.split("-")[0]), case.endswith("address-ordered"))
+    if case.endswith("tail-cut"):
+        with open(path, "r+b") as f:
+            f.truncate(f.seek(0, 2) - 30)
+        strict = False
+
+    def scan():
+        return pass1.build_index(path, target_split_bytes=512, spark=spark, strict=strict)
+
+    driver, driver_jobs = _spark_jobs(spark, f"pass1-driver-{case}", scan)
+    monkeypatch.setattr(pass1, "FANOUT_MIN_SEGMENT_BYTES", 0)
+    fanout, fanout_jobs = _spark_jobs(spark, f"pass1-fanout-{case}", scan)
+
+    assert driver.record_counts["HeapDumpSegment"] > 1
+    assert (driver_jobs, fanout_jobs) == (0, 1)
+    assert fanout.splits == driver.splits
+    assert fanout.classes == driver.classes
+    assert fanout.truncated is driver.truncated is (not strict)
