@@ -73,8 +73,8 @@ EXT_OPS = [
     "copurchase_triangle_count",
     "scd2_merge_batch",
     "bm25_keyword_search",
-    # iterative BFS-vote dominator pairs: the Σdepth state bound gets a
-    # measured sf1 ratio like every other iterative op (r4 verdict #6)
+    # dominator retained sizes over the driver-side graph index get a
+    # measured sf1 ratio like every other graph op (r4 verdict #6)
     "dominator_retained",
 ]
 # Round-7 additions (same pattern): the heavier members of the new

@@ -1,63 +1,47 @@
 """Dominator-tree retained size over the heap object graph — the
-MAT-style "retained heap" metric as iterative DataFrame dataflow.
+MAT-style "retained heap" metric, solved on the driver over the
+session's graph index.
 
 The reference attributes memory only by class histogram and (in this
 engine's `single_retainer_bytes`) by sole-retainer in-degree; neither
 answers "how many bytes become collectible if THIS object dies", which
 needs dominators: d dominates n iff every path from a GC root to n
 passes through d, and retained(d) = Σ shallow(m) over all m dominated
-by d. Computed here with the classic dataflow equations
+by d.
 
-    dom(n) = {n} ∪ ⋂_{p ∈ preds(n)} dom(p)
+Both come from :func:`~.reachability.heap_graph`, the numpy CSR the
+session builds once from its edge list, with a virtual super-root 0
+(the HPROF null id) above every GC root:
 
-iterated to the greatest fixpoint, entirely as joins/aggregations:
+1. immediate dominators by Cooper–Harvey–Kennedy ("A Simple, Fast
+   Dominance Algorithm"): idom(n) is the nearest common ancestor of
+   n's predecessors in the current tree, iterated to a fixpoint over
+   the graph's breadth-first walk order. A dominator lies on every
+   root path, the shortest one included, so it always precedes the
+   nodes it dominates in that order — the numbering the ancestor climb
+   needs. A node with one predecessor is dominated by it, so only
+   nodes with several predecessors are revisited;
+2. retained sizes as subtree sums over the idom tree, one level of
+   walk depth at a time from the deepest up (an idom is always
+   shallower than the nodes it dominates).
 
-1. add a virtual super-root 0 with an edge to every GC root (0 is the
-   HPROF null sentinel, so no real object carries it);
-2. BFS from the super-root recording one tree path per node (the
-   gc_root_path construction) — its node set is a valid upper bound
-   for dom(n) (every dominator lies on EVERY root path, hence on this
-   one), and because the bound comes from a tree, one dataflow step
-   only shrinks it, so Kleene iteration converges downward to the
-   greatest fixpoint = the dominator sets;
-3. each round: explode dom(p) over the edge list, count votes per
-   (n, candidate), keep candidates voted by ALL in-edges, re-add {n}.
-   Fixpoint when the pair count stops shrinking (the sequence is
-   strictly decreasing until convergence). Driver traffic is one
-   scalar count per round; lineage is checkpoint-truncated.
-
-idom(n) is then the deepest strict dominator (dominators of n are
-totally ordered, so argmax by |dom(d)| is unique), and retained sizes
-are one explode + join + groupBy over the final (node, dominator)
-pair set.
-
-Scale notes: state is the (node, dominator) pair list — Σ|dom(n)| =
-Σ depth(n), the same bound as storing one root path per node
-(gc_root_path). Heap graphs are shallow in practice; rounds are
-fixpoint-bounded with a non-convergence guard like reachability's
-BFS. At 100 TB the pair list shuffles on fixed-width longs only, and
-per-round work is one join + one aggregation — no driver-side graph.
-
-Adaptive small-graph fast path: below ``DRIVER_FALLBACK_EDGES`` the
-edge list is broadcast-small, and the distributed loop's per-round
-scheduling latency dwarfs the work — so the graph is collected and
-solved in-process (Cooper-Harvey-Kennedy idom iteration), the same
-collect-when-tiny trade Spark's broadcast-join threshold encodes.
-Both paths produce the identical pair set (adversarially
-cross-checked in tests).
+The solve is a Python loop over the multi-predecessor nodes only; the
+idom array it returns is kept with the graph until the session
+closes. Results reach Spark as DataFrames built from Arrow tables,
+joined there to ``_object_index`` for type names.
 """
 
 from __future__ import annotations
 
+from array import array
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Warehouse
-from .reachability import heap_edges, root_ids
-
-#: virtual super-root object id — the HPROF null sentinel, never a
-#: real object id, so it cannot collide.
-SUPER_ROOT = 0
+from .reachability import HeapGraph, heap_graph
 
 # Primitive field widths (bytes) for the additive shallow-size model:
 # 16-byte header + packed field bytes / array element bytes.
@@ -152,301 +136,117 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
     return out
 
 
-def _rooted_edges(wh: Warehouse) -> DataFrame:
-    """Distinct (src, dst) edges with the virtual super-root attached
-    to every GC root; self-edges dropped (they never affect
-    dominance — any path using one revisits the node). Both halves are
-    distinct and no heap edge leaves the super-root, so the union is."""
-    roots = root_ids(wh).select(
-        F.lit(SUPER_ROOT).cast("long").alias("src"), F.col("obj_id").alias("dst")
+def immediate_dominators(g: HeapGraph) -> np.ndarray:
+    """Immediate dominator (node number) of every reachable node, the
+    super-root its own; -1 where unreachable."""
+    live = g.depth[g.src] >= 0  # an unreachable referrer never counts
+    src, dst = g.src[live], g.dst[live]
+    indeg = np.bincount(dst, minlength=g.ids.size)
+    # A lone predecessor is the walk parent and the idom. Nodes with
+    # several start undefined and are solved in walk order; their
+    # predecessor lists are laid out in that order.
+    idom = np.where(indeg == 1, g.parent, -1)
+    idom[g.root] = g.root
+    pos = np.zeros(g.ids.size, np.int64)
+    pos[g.order] = np.arange(g.order.size)
+    shared = indeg[dst] > 1
+    preds = src[shared][np.argsort(pos[dst[shared]], kind="stable")]
+    multi = g.order[indeg[g.order] > 1]
+    ends = np.cumsum(indeg[multi])
+    # array("q"): 8 bytes a slot, and faster to index than a list
+    idom, pos, preds, multi, starts, ends = (
+        array("q", a.astype(np.int64).tobytes())
+        for a in (idom, pos, preds, multi, ends - indeg[multi], ends)
     )
-    return heap_edges(wh).filter(F.col("src") != F.col("dst")).unionByName(roots)
-
-
-def dominator_pairs(wh: Warehouse, max_rounds: int = 256) -> DataFrame:
-    """(obj_id, dom) — every (node, dominator) pair over the reachable
-    subgraph, including (n, n) self-pairs and the super-root's
-    dominance of everything. Greatest-fixpoint dataflow per the module
-    docstring; raises on non-convergence rather than returning an
-    unsound over-approximation."""
-    return dominator_pairs_from(wh.spark, _rooted_edges(wh), max_rounds)
-
-
-#: Edge-count gate for the driver-side fast path — the same
-#: "small enough to collect" scale Spark's broadcast-join threshold
-#: encodes (100k fixed-width edges ≈ a couple of MB). Below it, the
-#: per-round job-scheduling latency of the distributed fixpoint
-#: (~0.2-0.5 s/round regardless of data) dwarfs the actual work, so
-#: the graph is collected and solved in-process; above it, the
-#: distributed dataflow runs unchanged. Exactly the adaptive
-#: small-input strategy AQE applies to joins, applied to an
-#: iterative fixpoint.
-DRIVER_FALLBACK_EDGES = 100_000
-
-
-def dominator_pairs_from(
-    spark,
-    rooted_edges: DataFrame,
-    max_rounds: int = 256,
-    force_distributed: bool = False,
-) -> DataFrame:
-    """Fixpoint core over an explicit (src, dst) edge DataFrame that
-    already includes super-root→root edges (src=0). Exposed so tests
-    can drive arbitrary synthetic graphs without an HPROF ingest.
-    ``force_distributed`` bypasses the small-graph driver fast path so
-    tests can pin the distributed dataflow on tiny graphs."""
-    edges = rooted_edges.localCheckpoint()
-    if not force_distributed and edges.count() <= DRIVER_FALLBACK_EDGES:
-        return _dominator_pairs_driver(spark, edges)
-    # Size-based (not parallelism-based) AQE coalescing for the
-    # duration of the iterative loops: each round's state is one
-    # shrinking relation, and coalescing its post-shuffle partitions
-    # to the advisory size instead of defaultParallelism cuts the
-    # per-round task count (measured ~15% wall on the bench fixture)
-    # while staying correct at scale — a large pair set still gets
-    # size-proportional partitions. Restored on exit.
-    _PFIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    prev_pfirst = spark.conf.get(_PFIRST, "true")
-    spark.conf.set(_PFIRST, "false")
-    try:
-        return _dominator_pairs_loop(spark, edges, max_rounds)
-    finally:
-        spark.conf.set(_PFIRST, prev_pfirst)
-
-
-def _dominator_pairs_driver(spark, edges: DataFrame) -> DataFrame:
-    """In-process dominator solve for broadcast-small graphs:
-    Cooper-Harvey-Kennedy iterative idom intersection over a
-    BFS order, then the pair set expands along idom chains (the
-    dominators of n ARE its idom-tree ancestors). The BFS index is a
-    valid walk order for the intersect climb: a dominator always has
-    strictly smaller BFS depth than the nodes it dominates, so
-    idx[idom[n]] < idx[n] holds at the fixpoint (asserted below).
-    Output contract is identical to the distributed loop: (obj_id,
-    dom) over the reachable subgraph, self-pairs included."""
-    from collections import deque
-
-    rows = [(r[0], r[1]) for r in edges.collect() if r[0] != r[1]]
-    succ: dict[int, list[int]] = {}
-    for s, d in rows:
-        succ.setdefault(s, []).append(d)
-    order = [SUPER_ROOT]
-    seen = {SUPER_ROOT}
-    dq = deque([SUPER_ROOT])
-    while dq:
-        u = dq.popleft()
-        for v in sorted(succ.get(u, ())):
-            if v not in seen:
-                seen.add(v)
-                order.append(v)
-                dq.append(v)
-    idx = {n: i for i, n in enumerate(order)}
-    preds: dict[int, list[int]] = {n: [] for n in order}
-    for s, d in rows:
-        if s in seen and d in seen:
-            preds[d].append(s)
-
-    idom: dict[int, int] = {SUPER_ROOT: SUPER_ROOT}
-
-    def intersect(a: int, b: int) -> int:
-        while a != b:
-            while idx[a] > idx[b]:
-                a = idom[a]
-            while idx[b] > idx[a]:
-                b = idom[b]
-        return a
-
-    changed = True
+    first, changed = True, True
     while changed:
         changed = False
-        for n in order[1:]:
-            ps = [p for p in preds[n] if p in idom]
-            if not ps:
-                continue
-            new = ps[0]
-            for p in ps[1:]:
-                new = intersect(new, p)
-            if idom.get(n) != new:
-                idom[n] = new
-                changed = True
-    for n in order[1:]:
-        assert idx[idom[n]] < idx[n], "idom order invariant violated"
-    pairs = []
-    for n in order:
-        pairs.append((n, n))
-        d = n
-        while d != SUPER_ROOT:
-            d = idom[d]
-            pairs.append((n, d))
-    return spark.createDataFrame(pairs, "obj_id long, dom long")
+        for n, lo, hi in zip(multi, starts, ends):
+            new = -1
+            for p in preds[lo:hi]:
+                if first and pos[p] > pos[n]:
+                    continue  # not yet processed in the first pass
+                if new < 0:
+                    new = p
+                    continue
+                while p != new:  # climb to the nearest common ancestor
+                    while pos[p] > pos[new]:
+                        p = idom[p]
+                    while pos[new] > pos[p]:
+                        new = idom[new]
+            if idom[n] != new:
+                idom[n], changed = new, True
+        first = False
+    return np.frombuffer(idom, np.int64).copy()
 
 
-def _dominator_pairs_loop(spark, edges: DataFrame, max_rounds: int) -> DataFrame:
-    pad = lambda c: F.lpad(c.cast("string"), 20, "0")  # noqa: E731
+def subtree_sums(g: HeapGraph, idom: np.ndarray, weight: np.ndarray) -> np.ndarray:
+    """*weight* (one row per node) summed over each node's dominated
+    set, itself included: deepest walk level first, as an idom is
+    always shallower than the nodes it dominates."""
+    acc = weight.copy()
+    levels = np.split(g.order, np.flatnonzero(np.diff(g.depth[g.order])) + 1)
+    for level in reversed(levels[1:]):
+        np.add.at(acc, idom[level], acc[level])
+    return acc
 
-    # BFS tree path per node, min-(depth, path) like gc_root_path.
-    start = spark.createDataFrame([(SUPER_ROOT,)], "obj_id long").select(
-        "obj_id", pad(F.col("obj_id")).alias("path")
-    )
 
-    def expand(fr: DataFrame) -> DataFrame:
-        return (
-            edges.join(fr, edges.src == fr.obj_id)
-            .select(
-                F.col("dst").alias("obj_id"),
-                F.concat(F.col("path"), F.lit("|"), pad(F.col("dst"))).alias("path"),
-            )
-            .groupBy("obj_id")
-            .agg(F.min("path").alias("path"))
-        )
+def _dominators(wh: Warehouse) -> tuple[HeapGraph, np.ndarray]:
+    """The session's graph index and its idom array, solved once."""
 
-    # Iterative-loop wall time is dominated by per-action scheduling,
-    # not data, once the state fits in a few partitions — so each
-    # round materializes TWO hops in one eager checkpoint (halving the
-    # action count; the per-action DAG is one join deeper, which the
-    # scheduler amortizes far better than an extra job). The two-hop
-    # merge keeps the parent-prefix tree invariant the dataflow seed
-    # relies on: nxt2 paths extend nxt1's CHOSEN min paths, and nodes
-    # already in nxt1 are anti-joined out of nxt2 so no node's chosen
-    # path is rewritten after a child extended it. `visited` stays a
-    # lazy union of checkpointed frontiers — each piece's lineage is
-    # already truncated, so re-checkpointing the union every round
-    # would re-cache all previous rows (O(depth²) writes) for nothing.
-    # Lazy checkpoint + count(): the count action IS the materializing
-    # job, so each round costs ONE job instead of an eager-checkpoint
-    # job followed by an emptiness probe (count, not isEmpty, because
-    # a partial-evaluation probe would leave checkpoint partitions
-    # unmaterialized).
-    visited, frontier = start.localCheckpoint(), start
-    for _ in range(max_rounds):
-        nxt1 = expand(frontier).join(visited, "obj_id", "left_anti")
-        nxt2 = (
-            expand(nxt1)
-            .join(visited, "obj_id", "left_anti")
-            .join(nxt1, "obj_id", "left_anti")
-        )
-        nxt = nxt1.unionByName(nxt2).localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"dominator BFS did not converge within {max_rounds} rounds"
-        )
+    def solve() -> tuple[HeapGraph, np.ndarray]:
+        g = heap_graph(wh)
+        return g, immediate_dominators(g)
 
-    reachable = visited.select("obj_id").localCheckpoint()
-    # Init dom(n) = nodes on n's BFS tree path (a superset of dom(n)).
-    dom = visited.select(
-        "obj_id",
-        F.explode(
-            F.transform(F.split("path", r"\|"), lambda s: s.cast("long"))
-        ).alias("dom"),
-    ).localCheckpoint()
-
-    # indeg is attached to the edge list ONCE (it is per-dst constant),
-    # so each fixpoint round runs exactly two shuffles — the dom-set
-    # propagation join and the vote count — instead of four (the old
-    # shape re-aggregated indeg and re-joined it every round, then paid
-    # a distinct() shuffle the self-pair filter below makes redundant).
-    indeg = edges.join(reachable, edges.src == reachable.obj_id).groupBy(
-        "dst"
-    ).agg(F.count(F.lit(1)).alias("indeg"))
-    redges = (
-        edges.join(reachable, edges.src == reachable.obj_id)
-        .select("src", "dst")
-        .join(indeg, "dst")
-        .localCheckpoint()
-    )
-    selfpairs = reachable.select("obj_id", F.col("obj_id").alias("dom"))
-
-    def step(d: DataFrame) -> DataFrame:
-        voted = (
-            redges.join(d, redges.src == d.obj_id)
-            .select("dst", "dom", "indeg")
-            .groupBy("dst", "dom", "indeg")
-            .agg(F.count(F.lit(1)).alias("votes"))
-            .filter(F.col("votes") == F.col("indeg"))
-            .select(F.col("dst").alias("obj_id"), "dom")
-        )
-        # voted is unique by construction (groupBy key) and the
-        # self-pair filter makes the union disjoint, so no distinct():
-        # set-wise, (voted \ selfpairs) ∪ selfpairs = voted ∪ selfpairs.
-        return (
-            voted.filter(F.col("obj_id") != F.col("dom"))
-            .unionByName(selfpairs)
-        )
-
-    # Two dataflow applications per materialized round (same
-    # action-count rationale as the BFS above). Sound termination:
-    # the tree-path seed gives F(X) ⊆ X, so the iterate chain is
-    # monotone decreasing — |F²(X)| = |X| forces F²(X) = F(X) = X,
-    # i.e. an equal pair count across a DOUBLE step still certifies
-    # the fixpoint, never a skipped oscillation.
-    prev_n = dom.count()
-    for _ in range(max_rounds):
-        # lazy checkpoint: the convergence count doubles as the
-        # materializing action — one job per round, lineage truncated.
-        dom = step(step(dom)).localCheckpoint(eager=False)
-        n = dom.count()
-        if n == prev_n:
-            return dom
-        prev_n = n
-    raise RuntimeError(
-        f"dominator dataflow did not converge within {max_rounds} rounds"
-    )
+    return wh.derived("idoms", solve)
 
 
 def dominator_tree(wh: Warehouse) -> DataFrame:
     """(obj_id, idom) — the immediate dominator of every reachable
-    object (idom = the deepest strict dominator; unique because a
-    node's dominators are totally ordered). The super-root appears as
-    idom 0: "kept alive directly by a GC root"."""
-    return dominator_tree_from_pairs(dominator_pairs(wh))
+    object. The super-root appears as idom 0: "kept alive directly by
+    a GC root"."""
+    g, idom = _dominators(wh)
+    nodes = g.order[1:]
+    return wh.spark.createDataFrame(
+        pa.table({"obj_id": g.ids[nodes], "idom": g.ids[idom[nodes]]})
+    )
 
 
 def retained_sizes(wh: Warehouse) -> DataFrame:
     """(obj_id, type_name, idom, n_dominated, retained_bytes) per
     reachable object: the bytes that become collectible if the object
     dies — Σ shallow over its dominated set (itself included), the
-    MAT "retained heap" column. One explode-free join + aggregation
-    over the dominator pair set."""
-    # No extra materialization for the two consumers below: the
-    # distributed path returns a checkpointed pair set, the
-    # driver fast path a local-list DataFrame (trivially re-playable).
-    dom = dominator_pairs(wh)
-    sizes = shallow_sizes(wh)
-    retained = (
-        dom.filter(F.col("dom") != SUPER_ROOT)
-        .join(sizes, "obj_id")
-        .groupBy("dom")
-        .agg(
-            F.count(F.lit(1)).alias("n_dominated"),
-            F.sum("shallow_bytes").cast("long").alias("retained_bytes"),
+    MAT "retained heap" column. Only objects with a
+    :func:`shallow_sizes` row count toward ``n_dominated`` and
+    ``retained_bytes``; an object whose dominated set has none is left
+    out."""
+    g, idom = _dominators(wh)
+    sizes = shallow_sizes(wh).toArrow()
+    obj = sizes.column("obj_id").to_numpy()
+    at = np.minimum(np.searchsorted(g.ids, obj), g.ids.size - 1)
+    hit = (g.ids[at] == obj) & (g.depth[at] > 0)
+    acc = np.zeros((g.ids.size, 2), np.int64)  # (n_dominated, retained_bytes)
+    np.add.at(acc[:, 0], at[hit], 1)
+    size = sizes.column("shallow_bytes").fill_null(0).to_numpy()
+    np.add.at(acc[:, 1], at[hit], size[hit].astype(np.int64))
+    acc = subtree_sums(g, idom, acc)
+    nodes = g.order[1:]
+    nodes = nodes[acc[nodes, 0] > 0]
+    retained = wh.spark.createDataFrame(
+        pa.table(
+            {
+                "obj_id": g.ids[nodes],
+                "idom": g.ids[idom[nodes]],
+                "n_dominated": acc[nodes, 0],
+                "retained_bytes": acc[nodes, 1],
+            }
         )
-        .withColumnRenamed("dom", "obj_id")
     )
-    idom = dominator_tree_from_pairs(dom)
     oi = wh.table("_object_index").select("obj_id", "type_name")
     return (
         retained.join(oi, "obj_id")
-        .join(idom, "obj_id")
         .select("obj_id", "type_name", "idom", "n_dominated", "retained_bytes")
         .orderBy(F.desc("retained_bytes"), "obj_id")
-    )
-
-
-def dominator_tree_from_pairs(dom: DataFrame) -> DataFrame:
-    """idom extraction when the pair set is already materialized."""
-    depths = dom.groupBy("obj_id").agg(F.count(F.lit(1)).alias("depth"))
-    d_depth = depths.select(
-        F.col("obj_id").alias("dom"), F.col("depth").alias("dom_depth")
-    )
-    return (
-        dom.filter(F.col("dom") != F.col("obj_id"))
-        .join(d_depth, "dom")
-        .groupBy("obj_id")
-        .agg(F.max_by("dom", "dom_depth").alias("idom"))
     )
 
 

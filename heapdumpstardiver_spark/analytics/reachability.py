@@ -21,24 +21,29 @@ Edge sources (complete by construction of the warehouse):
 
 Derived relations, one definition each: the distinct, checkpointed
 edge list (:func:`heap_edges`), the live set (:func:`live_set`), the
-per-type live census (:func:`live_census`) and the in-degree /
-sole-retainer map (:func:`retainers`, :func:`sole_retainers`). The
-edge list and the live set are memoised on the session's
+per-type live census (:func:`live_census`), the in-degree /
+sole-retainer map (:func:`retainers`, :func:`sole_retainers`) and the
+driver-side graph index (:func:`heap_graph`). The edge list, the live
+set and the index are memoised on the session's
 :class:`~heapdumpstardiver_spark.catalog.Warehouse`
 (``Warehouse.derived``): built once, shared by the session's liveness,
-sole-retainer and dominator tools, held in executor storage until the
-session closes, dropped by ``Warehouse.invalidate()``. The rest is lazy.
+sole-retainer and dominator tools, held until the session closes,
+dropped by ``Warehouse.invalidate()``. The rest is lazy.
 
 Scale notes: the per-class loop is driver-side over the CLASS REGISTRY
 (thousands), never over instances; each class contributes a
 column-pruned scan of exactly (obj_id + its ref columns). Every BFS
-round is one join + one anti-join over fixed-width (src, dst) longs.
+round of the live-set walk is one join + one anti-join over
+fixed-width (src, dst) longs. The index holds the edge list in driver
+memory as numpy arrays (32 bytes per node plus 16 per edge, DEPLOY.md);
+its walk is a handful of vectorised numpy calls per level of depth.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,6 +52,10 @@ from ..catalog import Warehouse
 #: Round cap of every frontier walk — a runaway backstop, not a
 #: truncation: a walk still growing at the cap raises.
 MAX_ROUNDS = 1024
+
+#: Virtual super-root of the graph index, with an edge to every GC
+#: root — the HPROF null id, so no real object carries it.
+SUPER_ROOT = 0
 
 
 def heap_edges(wh: Warehouse) -> DataFrame:
@@ -153,6 +162,86 @@ def live_set(wh: Warehouse) -> DataFrame:
     """(obj_id) of every live object, computed once per session. A BFS
     that raises leaves nothing behind, so the next call retries."""
     return wh.derived("live_set", lambda: reachable_from_roots(wh))
+
+
+class HeapGraph(NamedTuple):
+    """The heap graph as numpy edge arrays over dense node numbers,
+    walked once breadth-first from the super-root. Node ``root`` is the
+    super-root; self-edges are dropped (they never change a path or a
+    dominator)."""
+
+    ids: np.ndarray  # object id of each node, ascending
+    root: int  # node number of the super-root
+    src: np.ndarray  # edges, sorted by (src, dst)
+    dst: np.ndarray
+    order: np.ndarray  # reachable nodes level by level, super-root first
+    parent: np.ndarray  # previous node on the minimal root path; -1 unreachable
+    depth: np.ndarray  # hops from the super-root; -1 unreachable
+
+
+def heap_graph(wh: Warehouse) -> HeapGraph:
+    """The session's :class:`HeapGraph`, built on first use from the
+    memoised :func:`heap_edges` plus one super-root edge per
+    :func:`root_ids` row, read back to the driver in one ``toArrow()``."""
+
+    def build() -> HeapGraph:
+        rooted = heap_edges(wh).unionByName(
+            root_ids(wh).select(
+                F.lit(SUPER_ROOT).cast("long").alias("src"),
+                F.col("obj_id").alias("dst"),
+            )
+        )
+        t = rooted.toArrow()
+        return index_edges(t.column("src").to_numpy(), t.column("dst").to_numpy())
+
+    return wh.derived("heap_graph", build)
+
+
+def index_edges(src: np.ndarray, dst: np.ndarray) -> HeapGraph:
+    """The :class:`HeapGraph` of (src, dst) object-id edges, GC roots
+    entered as edges from :data:`SUPER_ROOT`.
+
+    The walk keeps, for every reachable object, the root path that is
+    minimal by (depth, path) with each path read as its sequence of
+    object ids: one parent per node, taken level by level as the
+    frontier parent whose own path sorts first."""
+    src, dst = np.asarray(src, np.int64), np.asarray(dst, np.int64)
+    src, dst = src[src != dst], dst[src != dst]
+    ids, nodes = np.unique(np.concatenate([[SUPER_ROOT], src, dst]), return_inverse=True)
+    root = int(nodes[0])
+    src, dst = nodes[1 : 1 + src.size], nodes[1 + src.size :]
+    by_src = np.argsort(src * ids.size + dst)  # by (src, dst)
+    src, dst = src[by_src], dst[by_src]
+    indptr = np.zeros(ids.size + 1, np.int64)
+    np.cumsum(np.bincount(src, minlength=ids.size), out=indptr[1:])
+    return HeapGraph(ids, root, src, dst, *_walk(indptr, dst, root))
+
+
+def _walk(indptr, succ, root):
+    """(order, parent, depth) of the breadth-first walk from *root*.
+    Each level is kept in root-path order and each node's out-edges are
+    sorted by target (node numbers follow object ids), so in a level's
+    edge list the first edge to reach a new node comes from the parent
+    whose path sorts first, and those first edges, in list order, are
+    the next level in path order."""
+    parent = np.full(indptr.size - 1, -1, np.int64)
+    depth = np.full(indptr.size - 1, -1, np.int64)
+    parent[root], depth[root] = root, 0
+    levels = [np.array([root], np.int64)]
+    while True:
+        level = levels[-1]
+        starts = indptr[level]
+        deg = indptr[level + 1] - starts
+        hop = np.repeat(starts - np.cumsum(deg) + deg, deg) + np.arange(deg.sum())
+        src, dst = np.repeat(level, deg), succ[hop]
+        fresh = depth[dst] < 0
+        src, dst = src[fresh], dst[fresh]
+        if not dst.size:
+            return np.concatenate(levels), parent, depth
+        first = np.sort(np.unique(dst, return_index=True)[1])
+        nxt = dst[first]
+        parent[nxt], depth[nxt] = src[first], len(levels)
+        levels.append(nxt)
 
 
 def live_census(wh: Warehouse) -> DataFrame:

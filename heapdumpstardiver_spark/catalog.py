@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
 
 # The driver's synthetic relational fixture tables (TESTDATA.md).
 TABLES = (
@@ -276,7 +278,7 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self._cache: dict[str, DataFrame] = {}
-        self._derived: dict[str, DataFrame] = {}
+        self._derived: dict[str, object] = {}
         if require_manifest:
             self.verify()
 
@@ -324,11 +326,11 @@ class Warehouse:
         else:
             self._cache.pop(name, None)
 
-    def derived(self, key: str, build: Callable[[], DataFrame]) -> DataFrame:
+    def derived(self, key: str, build: Callable[[], _T]) -> _T:
         """The relation *key* derived from this warehouse's tables (the
-        heap graph's edge list, its live set), built on first use and
-        kept for the life of this instance. A build that raises stores
-        nothing."""
+        heap graph's edge list, its live set, its driver-side index),
+        built on first use and kept for the life of this instance. A
+        build that raises stores nothing."""
         if key not in self._derived:
             self._derived[key] = build()
         return self._derived[key]

@@ -291,10 +291,11 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         """MAT-style retained heap via a true dominator tree: per
         object (or per class with by_class), the bytes that become
         collectible if it dies — Σ shallow over its dominated set.
-        Dominators from the BFS-seeded greatest-fixpoint dataflow of
-        analytics/dominators.py; idom 0 means "held directly by a GC
-        root". Strictly stronger than retained_by_single_referrer
-        (which only attributes in-degree-1 objects)."""
+        Dominators are solved once per session on the driver over the
+        session's heap-graph index (analytics/dominators.py); idom 0
+        means "held directly by a GC root". Strictly stronger than
+        retained_by_single_referrer (which only attributes
+        in-degree-1 objects)."""
         from .analytics.dominators import retained_by_class, retained_sizes
 
         def run(sess) -> dict[str, Any]:

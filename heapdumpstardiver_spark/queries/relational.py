@@ -1625,9 +1625,9 @@ def growth_by_retainer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _root_path_oracle() -> str:
     """Oracle for gc_root_path: DuckDB enumerates every root-to-object
     path with a recursive CTE (depth-bounded cycle guard) and picks,
-    per object, the (depth, path)-minimal one; Spark's BFS keeps one
-    min path per node per layer. With fixed-width id segments,
-    per-layer greedy prefix minimality equals the global
+    per object, the (depth, path)-minimal one; the graph index's walk
+    keeps one min-path parent per node per level. With fixed-width id
+    segments, per-level greedy prefix minimality equals the global
     (depth, path) minimum, so the two constructions agree exactly."""
     _, truth = hprof_fixture()
     edges = ", ".join(f"({s}, {d})" for s, d in truth["edges"])
@@ -1671,39 +1671,39 @@ def gc_root_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/mcp_server/server.py:179-184), so arbitrary-depth
     paths are outside its expressible queries.
 
-    BFS with path tracking: the frontier carries (node, path); each
-    round extends paths over the edge list, keeps one min path per
-    newly-discovered node, and anti-joins the visited set — per-round
-    state is one fixed-width string per node, rounds = reference-chain
-    depth. Ids are zero-padded so lexicographic order equals numeric
-    order, which makes the per-layer greedy choice equal the global
-    (depth, path) minimum the oracle computes by full enumeration."""
-    from ..analytics.reachability import heap_edges, root_ids, walk_frontier
+    The path is read off the session's graph index
+    (analytics/reachability.heap_graph): one breadth-first walk keeps,
+    per object, its depth and the parent on its (depth, path)-minimal
+    root path, taken level by level as the frontier parent whose own
+    path sorts first. Ids are zero-padded to 8 digits, so (for ids
+    below 10^8, as in the fixture) the string order of the rendered
+    paths is the walk's numeric order, and each path is its parent's
+    path plus one segment — the (depth, path) minimum the oracle
+    computes by full enumeration."""
+    import pyarrow as pa
+
+    from ..analytics.reachability import heap_graph
 
     wh = _fixture_warehouse(spark)
-    edges = heap_edges(wh)
-    pad = lambda c: F.lpad(c.cast("string"), 8, "0")  # noqa: E731
-
-    def step(fr: DataFrame) -> DataFrame:
-        return (
-            edges.join(fr, edges.src == fr.obj_id)
-            .select(
-                F.col("dst").alias("obj_id"),
-                (F.col("depth") + 1).alias("depth"),
-                F.concat(F.col("path"), F.lit("->"), pad(F.col("dst"))).alias("path"),
-            )
-            .groupBy("obj_id", "depth")
-            .agg(F.min("path").alias("path"))
+    g = heap_graph(wh)
+    nodes = g.order[1:]  # the super-root's walk minus the super-root
+    path: dict[int, str] = {}
+    for n, obj, up in zip(nodes.tolist(), g.ids[nodes].tolist(), g.parent[nodes].tolist()):
+        seg = str(obj).rjust(8, "0")[:8]  # lpad(obj, 8, '0')
+        path[n] = seg if up == g.root else f"{path[up]}->{seg}"
+    walked = spark.createDataFrame(
+        pa.table(
+            {
+                "obj_id": g.ids[nodes],
+                "depth": (g.depth[nodes] - 1).astype("int32"),
+                "path": pa.array(list(path.values()), pa.string()),
+            }
         )
-
-    seed = root_ids(wh).select(
-        "obj_id", F.lit(0).alias("depth"), pad(F.col("obj_id")).alias("path")
     )
-    visited = walk_frontier(seed, step, "gc_root_path")
     oi = wh.table("_object_index")
     return (
-        visited.join(oi, "obj_id")
-        .select("obj_id", "type_name", F.col("depth").cast("int").alias("depth"), "path")
+        walked.join(oi, "obj_id")
+        .select("obj_id", "type_name", "depth", "path")
         .orderBy("obj_id")
     )
 
@@ -1760,9 +1760,10 @@ def _dominator_oracle() -> str:
     from FIRST PRINCIPLES — enumerate every simple root-to-node path
     with a recursive CTE, then d dominates n iff d appears on ALL of
     n's paths (the definition; simple paths suffice because any walk
-    contains a simple subpath over a subset of its nodes). Spark
-    instead runs the BFS-seeded greatest-fixpoint dataflow over the
-    INGESTED warehouse, so construction, engine, and input all differ."""
+    contains a simple subpath over a subset of its nodes). The query
+    instead solves immediate dominators (Cooper–Harvey–Kennedy) over
+    the INGESTED warehouse, so construction, engine, and input all
+    differ."""
     _, truth = graph_fixture()
     edges = ", ".join(f"({s}, {d})" for s, d in truth["edges"])
     roots = ", ".join(f"({r})" for r in sorted(set(truth["roots"])))
@@ -1815,23 +1816,17 @@ def _dominator_oracle() -> str:
 @query("dominator_retained", oracle=_dominator_oracle())
 def dominator_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAT-style retained heap per object over the INGESTED graph
-    dump: dominator sets via BFS-seeded greatest-fixpoint dataflow
-    (analytics/dominators.py), then retained_bytes = Σ shallow over
-    each object's dominated set and idom = its deepest strict
-    dominator. This is the "how many bytes die with this object"
-    metric neither the reference's class histograms
+    dump: immediate dominators by Cooper–Harvey–Kennedy over the
+    session's driver-side graph index (analytics/dominators.py), then
+    retained_bytes = Σ shallow over each object's dominated set as a
+    subtree sum over the idom tree. This is the "how many bytes die
+    with this object" metric neither the reference's class histograms
     (analyze_heap_parquet.py) nor fixed-hop joins (server.py:179-184)
     can express — it needs an arbitrary-depth all-paths property.
 
-    Scale shape: state is the (node, dominator) pair set, bounded by
-    Σ depth(n) — the same budget as storing one root path per node;
-    per-round work is one join + one count aggregation on fixed-width
-    longs, rounds are fixpoint-bounded with a non-convergence guard,
-    and the driver only ever sees a scalar pair count per round.
-    Graphs under the broadcast-small edge threshold take the
-    in-process CHK fast path instead (analytics/dominators.py:
-    DRIVER_FALLBACK_EDGES) — per-round scheduling latency would
-    otherwise dominate by orders of magnitude."""
+    Scale shape: the graph index holds a few numpy arrays per node and
+    per edge in driver memory, read back from Spark once per session;
+    no Spark work depends on graph depth."""
     from ..analytics.dominators import retained_sizes
 
     wh = _graph_warehouse(spark)

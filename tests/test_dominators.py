@@ -1,8 +1,9 @@
 """Dominator-tree retained size vs an independent pure-Python
 computation — over the purpose-built graph fixture dump (diamond,
-multi-root confluence, chain, cycle, shared payload, garbage) and over
-randomized graphs (the Spark fixpoint checked against textbook
-iterative dataflow computed in plain sets).
+multi-root confluence, chain, cycle, shared payload, garbage), over
+randomized graphs (the driver-side solver checked against textbook
+iterative dataflow computed in plain sets, and its root paths against
+enumerated paths) and over a chain deeper than any round cap.
 """
 
 from __future__ import annotations
@@ -10,16 +11,19 @@ from __future__ import annotations
 import os
 import random
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from heapdumpstardiver_spark.analytics.dominators import (
-    SUPER_ROOT,
-    dominator_pairs_from,
     dominator_tree,
+    immediate_dominators,
     retained_by_class,
     retained_sizes,
+    subtree_sums,
 )
+from heapdumpstardiver_spark.analytics.reachability import SUPER_ROOT, heap_graph, index_edges
 from heapdumpstardiver_spark.catalog import Warehouse
 from heapdumpstardiver_spark.ingest import ingest_hprof
 from heapdumpstardiver_spark.ingest.hprof_writer import build_graph_dump
@@ -128,35 +132,139 @@ def test_retained_by_class(graph_wh):
     assert by_type["com.graph.Node"]["n_objects"] == 12
 
 
-@pytest.mark.parametrize("force_distributed", [False, True])
-def test_random_graphs_match_python(spark, force_distributed):
-    """Randomized adversarial check: arbitrary digraphs (cycles,
-    multi-edges, unreachable islands) — BOTH engine paths (the
-    driver-side CHK fast path these small graphs route to, and the
-    distributed greatest-fixpoint dataflow when forced) must equal the
-    textbook top-down iteration exactly."""
-    rng = random.Random(0xD0B)
-    trials = 6 if not force_distributed else 3  # distributed rounds are slow
-    for trial in range(trials):
-        n = rng.randint(4, 14)
-        nodes = list(range(1, n + 1))
-        edges = [
-            (rng.choice(nodes), rng.choice(nodes))
-            for _ in range(rng.randint(n, 3 * n))
-        ]
-        roots = rng.sample(nodes, rng.randint(1, 2))
-        want = py_dominators(edges, roots)
+def py_root_paths(edges: list[tuple[int, int]], roots: list[int]) -> dict[int, tuple[int, ...]]:
+    """Per reachable object, the (length, id sequence)-minimal simple
+    path from a GC root, by enumerating every simple path."""
+    adj: dict[int, set[int]] = {}
+    for s, d in edges:
+        adj.setdefault(s, set()).add(d)
+    best: dict[int, tuple[int, ...]] = {}
 
-        e = [(s, d) for s, d in edges if s != d] + [
-            (SUPER_ROOT, r) for r in set(roots)
-        ]
-        edf = spark.createDataFrame(
-            sorted(set(e)), "src long, dst long"
-        )
-        pairs = dominator_pairs_from(
-            spark, edf, force_distributed=force_distributed
-        ).collect()
+    def visit(path: tuple[int, ...]) -> None:
+        n = path[-1]
+        if n not in best or (len(path), path) < (len(best[n]), best[n]):
+            best[n] = path
+        for m in adj.get(n, ()):
+            if m not in path:
+                visit(path + (m,))
+
+    for r in set(roots):
+        visit((r,))
+    return best
+
+
+def _random_graph(rng: random.Random) -> tuple[list[tuple[int, int]], list[int]]:
+    """Arbitrary digraph: cycles, self-edges, multi-edges, one to three
+    roots, often an unreachable island feeding into the reachable part."""
+    n = rng.randint(1, 12)
+    nodes = list(range(1, n + 1))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(rng.randint(0, 3 * n))]
+    if rng.random() < 0.5:  # garbage island pointing at live objects
+        island = list(range(100, 100 + rng.randint(1, 4)))
+        edges += [(rng.choice(island), rng.choice(island + nodes)) for _ in range(5)]
+    return edges, rng.sample(nodes, rng.randint(1, min(3, n)))
+
+
+@pytest.mark.parametrize("shuffle_edges", [False, True])
+def test_random_graphs_match_python(shuffle_edges):
+    """Randomized adversarial check, no Spark: idoms, dominated-set
+    sizes and minimal root paths of the graph index equal the textbook
+    top-down dataflow and exhaustive path enumeration exactly — with the
+    edges in generation order, and shuffled with duplicates added, as
+    an edge table read back from Spark partitions arrives."""
+    rng = random.Random(0xD0B)
+    for trial in range(400):
+        edges, roots = _random_graph(rng)
+        rooted = edges + [(SUPER_ROOT, r) for r in roots]
+        if shuffle_edges:
+            rooted += rng.sample(rooted, len(rooted) // 2)
+            rng.shuffle(rooted)
+        g = index_edges([s for s, _ in rooted], [d for _, d in rooted])
+        idom, obj = immediate_dominators(g), g.ids.tolist()
         got: dict[int, set[int]] = {}
-        for r in pairs:
-            got.setdefault(r["obj_id"], set()).add(r["dom"])
+        for n in g.order.tolist():
+            got[obj[n]] = {obj[n]} | (got[obj[idom[n]]] if n != g.root else set())
+        want = py_dominators(edges, roots)
         assert got == want, f"trial {trial}: {got} != {want}"
+
+        n_dom = subtree_sums(g, idom, np.ones(g.ids.size, np.int64))
+        want_n = {d: sum(d in ds for ds in want.values()) for d in want}
+        assert {obj[n]: n_dom[n] for n in g.order.tolist()} == want_n
+
+        paths: dict[int, tuple[int, ...]] = {}
+        for n in g.order[1:].tolist():
+            paths[obj[n]] = paths.get(obj[g.parent[n]], ()) + (obj[n],)
+            assert len(paths[obj[n]]) == g.depth[n]
+        assert paths == py_root_paths(edges, roots), f"trial {trial}"
+
+
+def _deep_chain_warehouse(spark, root: str, depth: int, leaves: int) -> Warehouse:
+    """One GC root holding a *depth*-node chain (ids 1..depth, class
+    chain.Cls with one reference field) and a second GC root, an
+    Object[] (id 5000000), holding *leaves* distinct leaf objects."""
+    ints = lambda xs: pa.array(xs, pa.int64())  # noqa: E731
+    pq.write_table(
+        pa.table(
+            {
+                "class_obj_id": ints([0x10]),
+                "class_name": ["chain.Cls"],
+                "field_name": ["nxt"],
+                "field_type": ["Object"],
+                "field_index": pa.array([0], pa.int32()),
+            }
+        ),
+        f"{root}/sys_field_types.parquet",
+    )
+    chain = np.arange(1, depth + 1)
+    pq.write_table(
+        pa.table({"obj_id": ints(chain), "nxt": ints(np.r_[chain[1:], 0])}),
+        f"{root}/chain.Cls.parquet",
+    )
+    arr = 5_000_000
+    pq.write_table(
+        pa.table(
+            {
+                "obj_id": ints([arr]),
+                "elements": pa.array(
+                    [np.arange(10_000_000, 10_000_000 + leaves)], pa.list_(pa.int64())
+                ),
+            }
+        ),
+        f"{root}/sys_object_arrays.parquet",
+    )
+    pq.write_table(pa.table({"obj_id": ints([1, arr])}), f"{root}/sys_gc_roots.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "obj_id": ints(np.r_[chain, arr]),
+                "type_name": ["chain.Cls"] * depth + ["java.lang.Object[]"],
+            }
+        ),
+        f"{root}/sys_object_index.parquet",
+    )
+    return Warehouse(spark, root)
+
+
+def test_deep_chain_dominators_and_root_paths(spark, tmp_path):
+    """A 3000-deep chain beside 100k other edges: every chain node is
+    dominated by its predecessor, the head retains the whole chain, and
+    the tail's root path runs down the chain — with no round cap and no
+    edge-count gate between two solvers."""
+    depth = 3000
+    wh = _deep_chain_warehouse(spark, str(tmp_path), depth, leaves=100_000)
+    idom = {r["obj_id"]: r["idom"] for r in dominator_tree(wh).collect()}
+    assert len(idom) == depth + 1 + 100_000
+    assert idom[1] == SUPER_ROOT
+    assert all(idom[i] == i - 1 for i in range(2, depth + 1))
+
+    head = retained_sizes(wh).filter("obj_id = 1").collect()[0]
+    assert (head["n_dominated"], head["retained_bytes"]) == (depth, depth * (16 + 8))
+
+    g = heap_graph(wh)
+    tail = int(np.searchsorted(g.ids, depth))
+    assert g.depth[tail] - 1 == depth - 1  # root-path depth: the root is depth 0
+    walk, n = [], tail
+    while n != g.root:
+        walk.append(int(g.ids[n]))
+        n = g.parent[n]
+    assert walk == list(range(depth, 0, -1))
