@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 The implementations live in ``heapdumpstardiver_spark`` (see
 SURVEY.md §2 for the operator inventory each entry maps to).
@@ -23,76 +23,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return hds.QUERIES["pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# Driver-check scheduling: the driver verifies at most ~50 queries
-# per round, taken in dict order.
-#
-# FRESHNESS POLICY (r10, restated with the cadence math kept generic
-# so the text survives registry growth): every registered query's
-# canonical driver row is re-sampled within ceil(registry_size / ~50)
-# rounds (new-query head slots are paid first each round). The
-# per-round compensating gate is the local registry-wide
-# `scripts/verify_contract.py` pass at sf0.01 + sf0.1, which
-# re-checks EVERY oracle-paired query each round regardless of what
-# the driver samples.
-#
-# r13 front (composition validated by `scripts/update_counts.py`
-# --check-head, which derives every count from the registry and the
-# CORRECTNESS_r*.json record instead of prose arithmetic):
-# (1) the query NEW in r13 — first canonical row.
-# (2) the full 48-row r6-vintage block (r12 verdict item 1) — the
-#     oldest rows in the record. Done-bar: the post-r13 vintage
-#     histogram shows zero rows older than r7 and --check-head
-#     reports "stale rows NOT in head: 0".
-# (3) one spare slot: the alphabetically-first r7-vintage row, giving
-#     the r14 rotation a head start.
-# The SIX queries added later in r13 (after this head was composed per
-# the r12 verdict's "48-row block first, at most 2 new slots") are
-# never-green and take the r14 head FIRST per the standing policy:
-# 6 new + the 44 remaining r7-vintage rows = exactly 50 slots.
-# --check-head reports them under "never-green", distinct from stale.
-_CHECK_PRIORITY = [
-    # r14 rotation. 1: every query whose plan/derivation was rewritten
-    # in the r14 optimization round (results re-verified exact locally
-    # at sf0.01 + sf0.1; the driver's sample should confirm them)
-    "similarity_topk", "similarity_lsh_bucketed", "similarity_ivf_probe",
-    "ann_recall_at_k", "hybrid_search_rrf", "rank_biased_overlap",
-    "filtered_ann_pre_vs_post", "ndcg_lexical_vs_dense",
-    "lsh_plane_recall_curve", "label_coherence_audit",
-    "hard_negative_mining", "mmr_diverse_selection",
-    "kcenter_coreset_selection", "bm25_keyword_search",
-    "kcore_fixpoint", "image_phash_near_dup",
-    "jaccard_pairs", "containment_pairs",
-    # 2: never driver-verified (no head slot since they were added)
-    "hprof_fleet_census", "minhash_estimate_error",
-    "semantic_decontaminate_embed", "tfrecord_example_decode_stats",
-    "tfrecord_record_tally", "tfrecord_roundtrip_tally",
-    "weighted_reservoir_sample",
-    # 3: stalest rows (last green vintage <= r7)
-    "arithmetic_charge", "association_rules_lift",
-    "benford_digit_audit", "boilerplate_passage_filter",
-    "calibration_reliability", "conditional_agg", "constraint_audit",
-    "count_distinct", "cuped_adjusted_metric", "cusum_changepoint",
-    "dedup_exact", "dedup_keep_best", "dedup_prefix_groups",
-    "did_estimator", "geo_grid_neighbor_pairs", "having_dup_groups",
-    "incremental_dedup_new_batch", "inverted_index_postings",
-    "l_diversity_audit", "label_balance_resample",
-    "lsh_tuning_recommend", "multimodal_jpeg_420_decode",
-    "multimodal_png_decode", "ngram_shingle_overlap",
-    "pareto_frontier_docs",
-]
-
-
-def _ordered(mapping: dict) -> dict:
-    head = {n: mapping[n] for n in _CHECK_PRIORITY if n in mapping}
-    tail = {n: v for n, v in mapping.items() if n not in head}
-    return {**head, **tail}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return _ordered(dict(hds.QUERIES))
+    return dict(hds.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB oracle SQL twin for each query (same column names/types)."""
-    return _ordered(dict(hds.ORACLE_SQL))
+    return dict(hds.ORACLE_SQL)

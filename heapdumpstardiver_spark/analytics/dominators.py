@@ -38,18 +38,17 @@ from array import array
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import Warehouse
+from ..ingest.hprof import PRIM_WIDTHS
+from .findings import OBJECT_HEADER
 from .reachability import HeapGraph, heap_graph
 
-# Primitive field widths (bytes) for the additive shallow-size model:
-# 16-byte header + packed field bytes / array element bytes.
-_PRIM_WIDTHS = {
-    "Object": 8, "long": 8, "double": 8, "int": 4, "float": 4,
-    "short": 2, "char": 2, "byte": 1, "boolean": 1,
-}
-_OBJ_HEADER = 16
+# Field widths (bytes) for the additive shallow-size model: header +
+# packed field bytes / array element bytes, references uncompressed.
+_FIELD_WIDTHS = {"Object": 8, **PRIM_WIDTHS}
 
 
 def shallow_sizes(wh: Warehouse) -> DataFrame:
@@ -76,13 +75,13 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
             F.coalesce(
                 *[
                     F.when(F.col("field_type") == name, F.lit(w))
-                    for name, w in _PRIM_WIDTHS.items()
+                    for name, w in _FIELD_WIDTHS.items()
                 ]
             )
         ).alias("field_bytes")
     )
     class_sizes = per_class.groupBy("class_name").agg(
-        (F.lit(_OBJ_HEADER) + F.max("field_bytes")).alias("shallow_bytes")
+        (F.lit(OBJECT_HEADER) + F.max("field_bytes")).alias("shallow_bytes")
     )
     oi = wh.table("_object_index")
     # Arrays live in the object index too (`T[]` type names) but get
@@ -97,15 +96,12 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
             "left",
         ).select(
             "obj_id",
-            F.coalesce("shallow_bytes", F.lit(_OBJ_HEADER)).alias(
+            F.coalesce("shallow_bytes", F.lit(OBJECT_HEADER)).alias(
                 "shallow_bytes"
             ),
         )
     ]
-    for suffix, width in (
-        ("byte", 1), ("boolean", 1), ("char", 2), ("short", 2),
-        ("int", 4), ("float", 4), ("long", 8), ("double", 8),
-    ):
+    for suffix, width in PRIM_WIDTHS.items():
         try:
             t = wh.table(f"_primitive_arrays_{suffix}")
         except KeyError:
@@ -113,7 +109,7 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
         parts.append(
             t.select(
                 "obj_id",
-                (F.lit(_OBJ_HEADER) + F.size("values") * width)
+                (F.lit(OBJECT_HEADER) + F.size("values") * width)
                 .cast("long")
                 .alias("shallow_bytes"),
             )
@@ -123,7 +119,7 @@ def shallow_sizes(wh: Warehouse) -> DataFrame:
         parts.append(
             oa.select(
                 "obj_id",
-                (F.lit(_OBJ_HEADER) + F.size("elements") * 8)
+                (F.lit(OBJECT_HEADER) + F.size("elements") * 8)
                 .cast("long")
                 .alias("shallow_bytes"),
             )
@@ -250,15 +246,54 @@ def retained_sizes(wh: Warehouse) -> DataFrame:
     )
 
 
+def dominated_intervals(g: HeapGraph, idom: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Preorder number and subtree size of every reachable node in the
+    idom tree: n dominates m iff pre[n] <= pre[m] < pre[n] + size[n].
+    Siblings are numbered in node order, parents before children one
+    walk level at a time."""
+    size = subtree_sums(g, idom, np.ones(g.ids.size, np.int64))
+    kids = g.order[1:]
+    kids = kids[np.argsort(idom[kids], kind="stable")]
+    before = np.cumsum(size[kids]) - size[kids]  # sizes of the nodes ahead
+    first = np.r_[True, idom[kids[1:]] != idom[kids[:-1]]]
+    offset = np.zeros(g.ids.size, np.int64)
+    offset[kids] = before - np.maximum.accumulate(np.where(first, before, 0))
+    pre = np.zeros(g.ids.size, np.int64)
+    levels = np.split(g.order, np.flatnonzero(np.diff(g.depth[g.order])) + 1)
+    for level in levels[1:]:
+        pre[level] = pre[idom[level]] + 1 + offset[level]
+    return pre, size
+
+
 def retained_by_class(wh: Warehouse, k: int = 20) -> DataFrame:
-    """Top-k classes by total retained bytes of their instances — the
-    class-level triage view ("which TYPE holds the heap")."""
+    """Top-k classes by the bytes their instances retain together — the
+    class-level triage view ("which TYPE holds the heap").
+    ``total_retained`` is Σ shallow over the union of the instances'
+    dominated sets: an instance dominated by another of its class is
+    already inside that one's retained bytes, so only instances outside
+    every earlier dominated interval of their class (in preorder) are
+    summed. ``n_objects`` and ``max_retained`` are over every instance
+    :func:`retained_sizes` lists."""
+    g, idom = _dominators(wh)
+    pre, size = dominated_intervals(g, idom)
+    nodes = g.order[1:]
+    intervals = wh.spark.createDataFrame(
+        pa.table({"obj_id": g.ids[nodes], "pre": pre[nodes], "end": pre[nodes] + size[nodes]})
+    )
+    earlier = Window.partitionBy("type_name").orderBy("pre").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    outermost = F.coalesce(F.col("pre") >= F.max("end").over(earlier), F.lit(True))
     return (
         retained_sizes(wh)
+        .join(intervals, "obj_id")
+        .withColumn("outermost", outermost)
         .groupBy("type_name")
         .agg(
             F.count(F.lit(1)).alias("n_objects"),
-            F.sum("retained_bytes").cast("long").alias("total_retained"),
+            F.sum(F.when(F.col("outermost"), F.col("retained_bytes")))
+            .cast("long")
+            .alias("total_retained"),
             F.max("retained_bytes").cast("long").alias("max_retained"),
         )
         .orderBy(F.desc("total_retained"), "type_name")

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Warehouse
+from ..ingest.hprof import PRIM_WIDTHS
 from .findings import (
     ARRAY_HEADER,
     ARRAYLIST_SHELL_SIZE,
@@ -309,24 +310,12 @@ def check_bad_object_arrays(wh: Warehouse) -> Optional[WasteFinding]:
     )
 
 
-_PRIM_SIZES = {
-    "boolean": 1,
-    "byte": 1,
-    "char": 2,
-    "short": 2,
-    "int": 4,
-    "long": 8,
-    "float": 4,
-    "double": 8,
-}
-
-
 def check_bad_primitive_arrays(wh: Warehouse) -> Optional[WasteFinding]:
     """Bad Primitive Arrays: zero-length / single / all-zero across all 8
     element types (analyze_heap_parquet.py:526-590). The 8 per-type scans
     are unioned into one Spark job instead of 8 sequential queries."""
     per_type: list[DataFrame] = []
-    for ptype, elem_size in _PRIM_SIZES.items():
+    for ptype, elem_size in PRIM_WIDTHS.items():
         t = _table(wh, f"_primitive_arrays_{ptype}")
         if t is None:
             continue
@@ -360,7 +349,7 @@ def check_bad_primitive_arrays(wh: Warehouse) -> Optional[WasteFinding]:
     by_type: dict[str, tuple[int, int]] = {}
     for r in rows:
         cnt, data = r["count"], r["data_bytes"] or 0
-        elem = _PRIM_SIZES[r["ptype"]]
+        elem = PRIM_WIDTHS[r["ptype"]]
         if r["pattern"] == "zero_length":
             waste = cnt * ARRAY_HEADER
         elif r["pattern"] == "all_zero":

@@ -100,6 +100,8 @@ PRIM_NAMES = {
     T_INT: "int",
     T_LONG: "long",
 }
+# Element width by type name ("int" -> 4), for size models over the warehouse
+PRIM_WIDTHS = {PRIM_NAMES[t]: PRIM_SIZES[t] for t in PRIM_NAMES}
 # struct codes (big-endian) per basic type; object code depends on id size
 PRIM_STRUCT = {T_BOOLEAN: "B", T_CHAR: "H", T_FLOAT: "f", T_DOUBLE: "d", T_BYTE: "b", T_SHORT: "h", T_INT: "i", T_LONG: "q"}
 

@@ -289,9 +289,12 @@ def build_tools(manager: SessionManager) -> dict[str, Callable[..., str]]:
         session_id: str = "", top_n: int = 20, by_class: bool = False
     ) -> str:
         """MAT-style retained heap via a true dominator tree: per
-        object (or per class with by_class), the bytes that become
-        collectible if it dies — Σ shallow over its dominated set.
-        Dominators are solved once per session on the driver over the
+        object, the bytes that become collectible if it dies — Σ
+        shallow over its dominated set. With by_class, per class: the
+        bytes its instances retain together, each object counted once
+        even where instances dominate one another (a linked list's
+        head already retains the rest of the list). Dominators are
+        solved once per session on the driver over the
         session's heap-graph index (analytics/dominators.py); idom 0
         means "held directly by a GC root". Strictly stronger than
         retained_by_single_referrer (which only attributes

@@ -1,5 +1,5 @@
 """Deterministic sfN scale-up of the driver's sf0.1 fixture tables,
-for scale-stress benchmarking (bench.py's sf1 pass).
+the sf1 input of the all-query scale sweep (scripts/scale_sweep.py).
 
 The driver ships sf0.001/0.01/0.1 only; scale evidence beyond that
 needs bigger inputs with the same shape. This derives them from sf0.1

@@ -1,10 +1,10 @@
 """All-query scale sweep: run EVERY registered query once at sf0.1 and
 once at the derived sf1 dataset, rank by wall-clock ratio.
 
-The headline bench covers 19 queries; this sweep covers all of them —
-it is what caught `semantic_dedup_centroid` going 44x at 10x rows
-(cluster-only blocking) and the explode-parallelism starvation in the
-multimodal queries during round 4. A query whose ratio sits well past
+Covering every registered query is what caught
+`semantic_dedup_centroid` going 44x at 10x rows (cluster-only
+blocking) and the explode-parallelism starvation in the multimodal
+queries. A query whose ratio sits well past
 ~10x at 10x rows has a super-linear term; ratios under ~10x mean
 fixed costs still dominate or the plan is genuinely sub-linear.
 

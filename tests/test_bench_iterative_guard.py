@@ -1,47 +1,39 @@
-"""Bench accounting guard (r13 verdict item 2): a HEADLINE query that
-runs Spark jobs at DataFrame *construction* time (eager localCheckpoint
-of an intermediate, iterative convergence loops) must be in
-bench.ITERATIVE, otherwise its bench wall times only the residual plan
-over checkpointed rows and the corpus pass escapes the timed region
-(the r13 pareto_frontier_docs accounting hole: 0.125 s recorded where
-the honest construct+execute wall is ~0.5 s).
+"""Benchmark accounting guard: a corpus_ops operator that runs Spark
+jobs while its DataFrame is *built* (eager localCheckpoint of an
+intermediate, iterative convergence loops) must be in perfbench's
+``ITERATIVE`` set. The corpus_ops round times only ``collect()`` for
+the other operators, so construction-time work there would escape the
+timed region.
 
-The check is dynamic — each non-ITERATIVE headline query is constructed
-under its own job group and the status tracker must report ZERO jobs
-for that group — so any future rewrite that adds an eager checkpoint to
-a headline query fails this test until the query joins ITERATIVE.
+The check is dynamic: each non-ITERATIVE operator is constructed under
+its own job group and the status tracker must report zero jobs for
+that group. A rewrite that adds an eager checkpoint to one of them
+fails here until it joins ``ITERATIVE``.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import sys
-
-import pytest
 
 import heapdumpstardiver_spark as hds
 
 from conftest import SF_DIR
 
-_BENCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
-_spec = importlib.util.spec_from_file_location("bench_guard", _BENCH)
-bench = importlib.util.module_from_spec(_spec)
-sys.modules["bench_guard"] = bench
-_spec.loader.exec_module(bench)
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench"))
+from workloads import CORPUS_OPS, ITERATIVE  # noqa: E402
 
 
 def test_eagerly_checkpointing_headline_queries_are_iterative(spark):
     sc = spark.sparkContext
     offenders = {}
-    for name in bench.HEADLINE:
-        if name in bench.ITERATIVE:
+    for name in CORPUS_OPS:
+        if name in ITERATIVE:
             continue
-        # First construction warms one-time session state (parquet
-        # schema-inference jobs, footer row-count cache) — the bench's
-        # untimed warm rep pays these too, so they are not what leaks
-        # out of the timed region. The SECOND construction is what an
-        # eager checkpointer re-runs per rep: it must run zero jobs.
+        # The first construction warms one-time session state (parquet
+        # schema inference, footer row counts) that perfbench's warm-up
+        # pays too. The second is what an eager checkpointer would
+        # re-run every round: it must run zero jobs.
         hds.QUERIES[name](spark, SF_DIR)
         group = f"construction-guard-{name}"
         sc.setJobGroup(group, f"construction probe: {name}")
@@ -54,23 +46,15 @@ def test_eagerly_checkpointing_headline_queries_are_iterative(spark):
         if jobs:
             offenders[name] = len(jobs)
     assert not offenders, (
-        "headline queries run Spark jobs at construction but are not in "
-        f"bench.ITERATIVE (their bench walls would exclude that work): "
-        f"{offenders}"
+        "corpus_ops operators run Spark jobs at construction but are not in "
+        f"perfbench ITERATIVE (their timed wall would exclude that work): {offenders}"
     )
 
 
 def test_known_eager_checkpointers_are_pinned_iterative():
-    """Belt-and-braces static pin for the documented eager
-    checkpointers, so an accidental ITERATIVE edit is caught even if
+    """Static pin of the corpus_ops operators known to checkpoint at
+    construction, so an accidental ITERATIVE edit is caught even if
     the dynamic probe is skipped."""
-    for name in (
-        "pareto_frontier_docs",
-        "minhash_lsh_candidates",
-        "minhash_prefilter_jaccard",
-        "jaccard_pairs",
-        "containment_pairs",
-        "dedup_connected_components",
-        "kmeans_embedding_clusters",
-    ):
-        assert name in bench.ITERATIVE, name
+    for name in ("minhash_lsh_candidates", "bm25_keyword_search"):
+        assert name in CORPUS_OPS, name
+        assert name in ITERATIVE, name

@@ -17,6 +17,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from heapdumpstardiver_spark.analytics.dominators import (
+    dominated_intervals,
     dominator_tree,
     immediate_dominators,
     retained_by_class,
@@ -130,6 +131,13 @@ def test_retained_by_class(graph_wh):
     assert by_type["byte[]"]["max_retained"] == 416
     # Node instances: 12 reachable (all but G1, G2)
     assert by_type["com.graph.Node"]["n_objects"] == 12
+    # their total is the bytes of the union of their dominated sets,
+    # each object once although Node instances dominate one another
+    dom = py_dominators(truth["edges"], truth["roots"])
+    shallow = {o: sz for o, _t, sz in truth["objects"]}
+    nodes = {o for o, t, _ in truth["objects"] if t == "com.graph.Node" and o in dom}
+    held = {n for n, ds in dom.items() if ds & nodes}
+    assert by_type["com.graph.Node"]["total_retained"] == sum(shallow[n] for n in held)
 
 
 def py_root_paths(edges: list[tuple[int, int]], roots: list[int]) -> dict[int, tuple[int, ...]]:
@@ -190,6 +198,13 @@ def test_random_graphs_match_python(shuffle_edges):
         n_dom = subtree_sums(g, idom, np.ones(g.ids.size, np.int64))
         want_n = {d: sum(d in ds for ds in want.values()) for d in want}
         assert {obj[n]: n_dom[n] for n in g.order.tolist()} == want_n
+
+        pre, size = dominated_intervals(g, idom)
+        reach = g.order.tolist()
+        assert sorted(pre[reach].tolist()) == list(range(len(reach)))
+        for n in reach:
+            inside = {obj[m] for m in reach if pre[n] <= pre[m] < pre[n] + size[n]}
+            assert inside == {m for m, ds in want.items() if obj[n] in ds}, f"trial {trial}"
 
         paths: dict[int, tuple[int, ...]] = {}
         for n in g.order[1:].tolist():
@@ -259,6 +274,9 @@ def test_deep_chain_dominators_and_root_paths(spark, tmp_path):
 
     head = retained_sizes(wh).filter("obj_id = 1").collect()[0]
     assert (head["n_dominated"], head["retained_bytes"]) == (depth, depth * (16 + 8))
+    by_type = {r["type_name"]: r for r in retained_by_class(wh).collect()}
+    chain = by_type["chain.Cls"]  # the head holds the rest: each node counted once
+    assert (chain["n_objects"], chain["total_retained"]) == (depth, depth * (16 + 8))
 
     g = heap_graph(wh)
     tail = int(np.searchsorted(g.ids, depth))

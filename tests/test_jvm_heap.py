@@ -71,4 +71,7 @@ def test_chain_head_dominates_the_chain(jvm_session):
     nodes = [r for r in rows if r["type_name"] == "Main$Node"]
     assert nodes and nodes[0]["n_dominated"] == CHAIN
     by_class = _reply(jvm_session["retained_sizes_dominator"](by_class=True))
-    assert "Main$Node" in {r["type_name"] for r in by_class["top_retainers"]}
+    cls = {r["type_name"]: r for r in by_class["top_retainers"]}["Main$Node"]
+    # the head's retained bytes already hold every later node: counted once
+    assert cls["n_objects"] == CHAIN
+    assert cls["total_retained"] == cls["max_retained"] == nodes[0]["retained_bytes"]

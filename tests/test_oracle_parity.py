@@ -72,12 +72,17 @@ def test_parity(name, spark, oracle_con):
 
 def test_all_queries_nonvacuous(spark, oracle_con):
     """Queries should return at least one row at sf0.01 (a vacuous
-    oracle match proves nothing)."""
-    empty = []
+    oracle match proves nothing), and none may plan a CartesianProduct
+    (an all-pairs join whose cost grows with the square of its input)."""
+    empty, cartesian = [], []
     for name, fn in hds.QUERIES.items():
-        if fn(spark, SF_DIR).limit(1).count() == 0:
+        df = fn(spark, SF_DIR)
+        if df.limit(1).count() == 0:
             empty.append(name)
+        if "CartesianProduct" in df._jdf.queryExecution().executedPlan().toString():
+            cartesian.append(name)
     assert not empty, f"empty result sets: {empty}"
+    assert not cartesian, f"plans with a CartesianProduct: {cartesian}"
 
 
 def test_oracle_output_type_guard(spark, oracle_con):

@@ -1218,28 +1218,6 @@ def test_jsd_one_explode_bounded_grid(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_plans_md_covers_plan_set():
-    """PLANS.md (the judge's plan-audit artifact) must contain a
-    section for every PLAN_SET member and zero CartesianProduct
-    anywhere — regenerate with `python scripts/dump_plans.py` after
-    adding or changing any query (r7 verdict item 3: the artifact
-    lagged the code for a round because nothing enforced it)."""
-    import importlib.util
-    import pathlib
-
-    root = pathlib.Path(__file__).parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "dump_plans", root / "scripts" / "dump_plans.py"
-    )
-    dp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(dp)
-
-    text = (root / "PLANS.md").read_text()
-    missing = [n for n in dp.PLAN_SET if f"## {n}" not in text]
-    assert not missing, f"PLANS.md lacks sections (rerun dump_plans.py): {missing}"
-    assert "CartesianProduct" not in text
-
-
 def test_spearman_rank_windows_over_customer_aggregate(spark):
     """spearman_rank_correlation: rank windows consume the
     customer-bounded aggregate (HashAggregate below the first Window
