@@ -15,14 +15,6 @@ from pyspark.sql import functions as F
 from ..catalog import Warehouse
 
 
-def _has(wh: Warehouse, name: str) -> bool:
-    try:
-        wh._resolve(name)
-        return True
-    except KeyError:
-        return False
-
-
 def run_summary(wh: Warehouse) -> DataFrame:
     """Total objects + unique classes from `_object_index`
     (analyze_heap_parquet.py:160-173)."""

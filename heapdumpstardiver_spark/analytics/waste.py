@@ -539,12 +539,12 @@ def check_duplicate_byte_arrays(wh: Warehouse) -> Optional[WasteFinding]:
     if b is None:
         return None
     n = F.size("values")
-    # r13 (guide §2.3): group by xxhash64 over the array VALUE — the
+    # r13: group by xxhash64 over the array VALUE — the
     # md5-over-decimal-rendering canonical form materialized ~3.7
     # bytes of string per element before hashing and dominated this
     # check's wall. Only group membership matters here (sub_findings
     # are empty; the DuckDB parity test compares counts). r14
-    # (verdict item 7): the 64-bit hash alone invites birthday
+    # The 64-bit hash alone invites birthday
     # collisions at billions of arrays, silently merging distinct
     # arrays into one "duplicate" group — the key is (hash, length),
     # one extra fixed-width column on the same scan (length is O(1)

@@ -35,45 +35,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .exprs import dot, round_col
+from .exprs import dot, fold_dot, lit_vec, nearest_centroid, round_col, self_dot
 
 IVF_K = 4
 IVF_ROUNDS = 2
 
 
-def _lit_vec(xs: list[float]):
-    # single Literal node — see exprs.lit_vec (r13)
-    return F.lit([float(x) for x in xs])
-
-
-def _self_dot(xs: list[float]) -> float:
-    # Left-to-right fold == DuckDB list_dot_product over the same
-    # rounded doubles (the kmeans-oracle convention).
-    acc = 0.0
-    for x in xs:
-        acc = acc + x * x
-    return acc
-
-
 def _assign(vecs: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Argmin-centroid assignment via one greatest() projection —
     ties break toward the smaller cid (negated-cid struct field)."""
-    scored = [
-        F.struct(
-            (
-                -(
-                    dot(F.col("v"), F.col("v"))
-                    - 2 * dot(F.col("v"), _lit_vec(cv))
-                    + F.lit(_self_dot(cv))
-                )
-            ).alias("negd"),
-            F.lit(-cid).alias("ncid"),
-            F.lit(int(cid)).alias("cid"),
-        )
-        for cid, cv in centroids
-    ]
-    best = F.greatest(*scored)
-    return vecs.withColumn("cid", best.getField("cid"))
+    return vecs.withColumn(
+        "cid", nearest_centroid(F.col("v"), centroids).getField("cid")
+    )
 
 
 def train_centroids(
@@ -178,35 +151,6 @@ PQ_DSUB = 16  # dims per subspace (4 x 16 = the 64-dim corpus)
 PQ_K = 4  # codebook entries per subspace
 
 
-def _fold_dot(xs: list[float], ys: list[float]) -> float:
-    # left-to-right fold == DuckDB list_dot_product on the same doubles
-    acc = 0.0
-    for x, y in zip(xs, ys):
-        acc = acc + x * y
-    return acc
-
-
-def _argmin_cid(vec_col, centroids: list[tuple[int, list[float]]]):
-    """Argmin-centroid cid as one greatest() projection over an
-    arbitrary vector column (ties toward the smaller cid) — the
-    `_assign` scoring generalized to subvector slices."""
-    scored = [
-        F.struct(
-            (
-                -(
-                    dot(vec_col, vec_col)
-                    - 2 * dot(vec_col, _lit_vec(cv))
-                    + F.lit(_self_dot(cv))
-                )
-            ).alias("negd"),
-            F.lit(-cid).alias("ncid"),
-            F.lit(int(cid)).alias("cid"),
-        )
-        for cid, cv in centroids
-    ]
-    return F.greatest(*scored).getField("cid")
-
-
 def train_pq_codebooks(v: DataFrame) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace product-quantization codebooks: one exact Lloyd
     update from deterministic init (the vectors with vec_id < PQ_K,
@@ -229,9 +173,9 @@ def train_pq_codebooks(v: DataFrame) -> list[list[tuple[int, list[float]]]]:
     assigned = v.select(
         "v",
         *[
-            _argmin_cid(
+            nearest_centroid(
                 F.slice("v", PQ_DSUB * s + 1, PQ_DSUB), inits[s]
-            ).alias(f"cid{s}")
+            ).getField("cid").alias(f"cid{s}")
             for s in range(PQ_M)
         ],
     )
@@ -311,9 +255,9 @@ def build_ivfpq_index(
             "nrm",
             "cid",
             *[
-                _argmin_cid(
+                nearest_centroid(
                     F.slice("v", PQ_DSUB * s + 1, PQ_DSUB), books[s]
-                ).alias(f"c{s}")
+                ).getField("cid").alias(f"c{s}")
                 for s in range(PQ_M)
             ],
         )
@@ -359,9 +303,9 @@ def probe_ivfpq_index(
     with vec_id tie-breaks."""
     books = read_pq_codebooks(spark, index_dir)
     centroids = read_centroids(spark, index_dir)
-    qq_full = _self_dot(query_vec)
+    qq_full = self_dot(query_vec)
     qd = {
-        cid: qq_full - 2 * _fold_dot(query_vec, cv) + _self_dot(cv)
+        cid: qq_full - 2 * fold_dot(query_vec, cv) + self_dot(cv)
         for cid, cv in centroids
     }
     chosen = [
@@ -375,12 +319,12 @@ def probe_ivfpq_index(
     subdists = []
     for s in range(PQ_M):
         qsub = query_vec[PQ_DSUB * s : PQ_DSUB * (s + 1)]
-        qq = _fold_dot(qsub, qsub)
+        qq = fold_dot(qsub, qsub)
         # chained CASE keyed on the stored code: robust to a codebook
         # that lost an empty cluster (element_at positions would shift)
         expr = F.lit(None).cast("double")
         for cid, cv in books[s]:
-            d = qq - 2 * _fold_dot(qsub, cv) + _fold_dot(cv, cv)
+            d = qq - 2 * fold_dot(qsub, cv) + fold_dot(cv, cv)
             expr = F.when(F.col(f"c{s}") == cid, F.lit(float(d))).otherwise(
                 expr
             )
@@ -391,7 +335,7 @@ def probe_ivfpq_index(
         .orderBy("adist", "vec_id")
         .limit(shortlist)
     )
-    qv = _lit_vec(query_vec)
+    qv = lit_vec(query_vec)
     qn = float(qq_full) ** 0.5
     cos = round_col(dot(F.col("v"), qv) / (F.col("nrm") * F.lit(qn)), 4)
     return (
@@ -423,9 +367,9 @@ def probe_ivf_index(
     tie-breaks, so rankings are engine-stable."""
     centroids = read_centroids(spark, index_dir)
     qd = {
-        cid: _self_dot(cv)
+        cid: self_dot(cv)
         - 2.0 * sum(a * b for a, b in zip(query_vec, cv))
-        + _self_dot(query_vec)
+        + self_dot(query_vec)
         for cid, cv in centroids
     }
     chosen = [cid for cid, _d in sorted(qd.items(), key=lambda kv: (kv[1], kv[0]))][
@@ -436,8 +380,8 @@ def probe_ivf_index(
     )
     if exclude_vec_id is not None:
         asg = asg.filter(F.col("vec_id") != exclude_vec_id)
-    qv = _lit_vec(query_vec)
-    qn = float(_self_dot(query_vec)) ** 0.5
+    qv = lit_vec(query_vec)
+    qn = float(self_dot(query_vec)) ** 0.5
     cos = round_col(dot(F.col("v"), qv) / (F.col("nrm") * F.lit(qn)), 4)
     return (
         asg.select(

@@ -145,9 +145,9 @@ def swap_in(df: DataFrame, path: str, partition_by=()) -> None:
     shutil.rmtree(old)
 
 
-#: Per-session DataFrame cache for ``load_table`` (r14, guide §1.2):
+#: Per-session DataFrame cache for ``load_table`` (r14):
 #: every ``spark.read.parquet`` pays a schema-inference job plus file
-#: listing PER CALL, so a query constructed N times (bench reps,
+#: listing PER CALL, so a query constructed N times (repeated runs,
 #: multi-table queries) re-paid ~10-40 ms of driver/scheduler fixed
 #: cost per table each time. The cached object is the UNEXECUTED
 #: DataFrame (a plan + resolved file index) — never data, never

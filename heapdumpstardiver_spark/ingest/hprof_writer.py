@@ -336,76 +336,6 @@ def build_test_dump(
     return truth
 
 
-def build_scale_dump(
-    path: str,
-    n_instances: int = 1_000_000,
-    n_prim_arrays: int = 250_000,
-    n_obj_arrays: int = 125_000,
-    n_classes: int = 20,
-    segment_bytes: int = 8 * 1024 * 1024,
-    id_size: int = 8,
-) -> dict:
-    """Deterministic large dump for ingest benchmarking: *n_classes*
-    classes with 3 int fields + 1 ref, instances, 64-byte byte[]'s and
-    10-slot object arrays, segmented every *segment_bytes* so the
-    segment scan and split planner parallelize. Scale analogue of the
-    reference's test-heap-generator SCALE knob
-    (/root/reference/test-heap-generator/build-and-run.sh:4)."""
-    w = HprofWriter(id_size=id_size)
-    class_ids = []
-    for c in range(n_classes):
-        cid = w.oid()
-        class_ids.append(cid)
-        w.load_class(c + 1, cid, f"com/scale/Cls{c}")
-    class_dumps = []
-    for cid in class_ids:
-        fs = [(w.sid(f"f{i}"), 10) for i in range(3)] + [(w.sid("ref"), 2)]
-        class_dumps.append(w.class_dump(cid, 0, 20, [], fs))
-    oarr_cid = w.oid()
-    w.load_class(998, oarr_cid, "[Lcom/scale/Cls0;")
-
-    seg = bytearray()
-    for cd in class_dumps:
-        seg += cd
-
-    def flush():
-        nonlocal seg
-        if seg:
-            w.heap_segment(bytes(seg))
-            seg = bytearray()
-
-    pack_i = struct.Struct(">iii" + ("Q" if id_size == 8 else "I")).pack
-    bvals = list(range(-32, 32))
-    els = [0x100000 + k for k in range(10)]
-    instance, prim_array, obj_array = w.instance, w.prim_array, w.obj_array
-    for i in range(n_instances):
-        seg += instance(0x100000 + i, class_ids[i % n_classes],
-                        pack_i(i, i * 2, i % 97, 0x100000 + (i % 1000)))
-        if len(seg) >= segment_bytes:
-            flush()
-    for i in range(n_prim_arrays):
-        seg += prim_array(0x10000000 + i, 8, "b", bvals)
-        if len(seg) >= segment_bytes:
-            flush()
-    for i in range(n_obj_arrays):
-        seg += obj_array(0x20000000 + i, oarr_cid, els)
-        if len(seg) >= segment_bytes:
-            flush()
-    flush()
-    roots = bytearray()
-    roots += w.root(0x05, 0x100001)
-    w.heap_segment(bytes(roots))
-    w.heap_end()
-    with open(path, "wb") as f:
-        f.write(w.buf)
-    return {
-        "bytes": len(w.buf),
-        "instances": n_instances,
-        "prim_arrays": n_prim_arrays,
-        "obj_arrays": n_obj_arrays,
-    }
-
-
 def build_graph_dump(path: str, id_size: int = 8) -> dict:
     """Deterministic dump whose object graph is purpose-built for
     dominator/retained-size analysis: a diamond (dominator != parent),

@@ -14,16 +14,23 @@ broadcasts only the (tiny) query vector set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..exprs import (
+    centroid_argmax,
     cosine,
     cosine_bn,
     dot,
+    fold_dot,
+    lit_vec,
+    minhash_bands,
+    nearest_centroid,
     round_col,
     round_sql,
+    self_dot,
+    shingle_hashes,
     stable_render,
     stable_render_sql,
 )
@@ -35,8 +42,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _spread(df: DataFrame, spark: SparkSession, *keys: str) -> DataFrame:
-    """Scale-adaptive parallelism floor for map-heavy stages (r13,
-    guide §2.5/§6): the shingle/fingerprint pipelines front-load their
+    """Scale-adaptive parallelism floor for map-heavy stages (r13):
+    the shingle/fingerprint pipelines front-load their
     cost into per-row md5 + higher-order array transforms, so their
     wall tracks the SCAN's task count. Locally a small table is one
     parquet file = one split, serializing the whole hash stage on one
@@ -118,9 +125,9 @@ def _scan_split_estimate(spark: SparkSession, df: DataFrame) -> int:
 
 def _fp_materialize(df: DataFrame, sf_dir: str) -> DataFrame:
     """Materialize a fingerprint relation once so every consumer reads
-    the flat rows (guide §5 «localCheckpoint is a cheaper way to cut
-    lineage», §8 «make every pass but the last operate on a
-    lightweight proxy»). The LSH queries fan ONE expensive per-doc md5
+    the flat rows: localCheckpoint is a cheaper way to cut lineage
+    than recomputing it, and every pass but the last then operates on
+    a lightweight proxy. The LSH queries fan ONE expensive per-doc md5
     derivation (distinct trigram hashes, salted min-hashes) into 2–4
     consumers (candidate self-join sides, verify probes); Spark
     recomputes the derivation per consumer because broadcast builds
@@ -132,8 +139,9 @@ def _fp_materialize(df: DataFrame, sf_dir: str) -> DataFrame:
     job barrier + a block-manager round trip of fixed-width rows,
     which honest construct+execute A/Bs showed is already a wash or a
     win at sf0.1. Results are unaffected — only how many times the
-    same derivation executes. (bench: the callers are listed in
-    ITERATIVE so the checkpoint jobs stay inside the timed region.)"""
+    same derivation executes. The checkpoint job runs while the query
+    is built, so a benchmark must time construction too
+    (perfbench/workloads.py::ITERATIVE lists the callers it runs)."""
     del sf_dir  # kept for call-site symmetry with _spread
     return df.localCheckpoint()
 
@@ -149,7 +157,7 @@ SHINGLE_DF_CAP = 64
 # (minhash_prefilter_jaccard): m near-identical documents land in the
 # SAME bucket in EVERY band, so an uncapped band self-join is Θ(m²)
 # from one bucket — the dominant failure mode of a dup-heavy crawl
-# (the "curse of the last reducer"; r8 verdict item 4). Keeping the
+# (the "curse of the last reducer"). Keeping the
 # deterministic first K members (row_number by doc_id) bounds any
 # bucket's pair fan-out at K²/2 while a K-sized sample of an
 # m-identical cluster still wires the cluster together for the
@@ -181,7 +189,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Strings check generalized (analyze_heap_parquet.py:255-342). The
     md5 group key makes the shuffle key fixed-width regardless of
     document size; at 100 TB use xxhash64 and keep the text out of the
-    shuffle entirely. (r13, guide §2.4: keep-first needs no per-hash
+    shuffle entirely. (r13: keep-first needs no per-hash
     ranking when only the census is emitted — kept == number of hash
     groups, dropped == multiplicity minus one per group — so the
     row_number window's sort and the separate countDistinct branch
@@ -563,9 +571,8 @@ def cross_source_ngram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "source", F.expr("filter(split(text, ' '), t -> t != '')").alias("t")
     ).filter(F.size("t") >= 8)
-    idx = F.sequence(F.lit(1), F.size("t") - 7)
-    hashes = F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, 8))))
-    # r13 second pass (guide §2.3/§2.4): the old shape ran a global
+    hashes = shingle_hashes("t", 8)
+    # r13 second pass: the old shape ran a global
     # DISTINCT exchange, a df groupBy, a join back, a kept×kept
     # self-join and a per-source rollup — five shuffles, with the
     # md5 gram pipeline re-derived per consumer. ONE groupBy(g) now
@@ -687,12 +694,7 @@ def ngram_repetition_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = []
     for n in (1, 2, 4, 8):
         grams = toks.filter(F.size("t") >= n).select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (n - 1)),
-                    lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, n))),
-                )
-            ).alias("g")
+            F.explode(shingle_hashes("t", n)).alias("g")
         )
         arms.append(
             grams.agg(
@@ -807,11 +809,8 @@ def ngram_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n = 4
     # positions 1 .. len-n+1 (1-based), matching DuckDB's range unnest
-    idx = F.sequence(F.lit(1), F.size("tokens") - n + 1)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n)))
-    )
-    # r13 optimization (guide §2.3 — shuffle fewer bytes): a doc's
+    hashes = shingle_hashes("tokens", n)
+    # r13 optimization (shuffle fewer bytes): a doc's
     # repeated shingles are deduplicated row-locally (array_distinct)
     # BEFORE the explode, so duplicate (doc, shingle) rows never reach
     # the bucket Exchange; collect_set previously absorbed them after
@@ -851,14 +850,162 @@ def ngram_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+# Retrieval legs shared by the similarity and hybrid-search operators:
+# the BM25 lexical ranking and the dense cosine ranking against the
+# query vector (vec_id 0), each in Spark and as oracle CTEs.
+
+_BM25_TERMS = ["join", "scan", "merge"]
+
+# One query term's BM25 contribution: the Lucene idf
+# ln(1 + (N - df + 0.5) / (df + 0.5)), k1 = 1.2, b = 0.75.
+_BM25_TERM_SQL = (
+    "ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))"
+    " * (t.tf * 2.2)"
+    " / (t.tf + 1.2 * (0.25 + 0.75 * l.dlen / s.avgdl))"
+)
+
+_QUERY_VEC_SQL = """q AS (
+        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
+    )"""
+
+_QUERY_COS_SQL = round_sql(
+    "list_dot_product(CAST(embedding AS DOUBLE[]), qv)"
+    " / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),"
+    " CAST(embedding AS DOUBLE[])))"
+    " * sqrt(list_dot_product(qv, qv)))",
+    4,
+)
+
+
+def _bm25_term(tf: Column, df: Column) -> Column:
+    """`_BM25_TERM_SQL` in Spark, over the ``n_docs``, ``avgdl`` and
+    ``dlen`` columns."""
+    idf = F.log(F.lit(1.0) + (F.col("n_docs") - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    denom = tf + F.lit(1.2) * (
+        F.lit(0.25) + F.lit(0.75) * F.col("dlen") / F.col("avgdl")
+    )
+    return idf * (tf * F.lit(2.2)) / denom
+
+
+def _ranked(scored: DataFrame, score: str, depth: int, rk: str) -> DataFrame:
+    """(doc_id, rk): the top ``depth`` rows by ``score`` desc, doc_id.
+    TakeOrdered(depth) runs FIRST, so the global row_number window only
+    ever sees ``depth`` rows and nothing corpus-sized funnels through
+    one partition."""
+    w = Window.orderBy(F.desc(score), "doc_id")
+    return (
+        scored.orderBy(F.desc(score), "doc_id")
+        .limit(depth)
+        .withColumn(rk, F.row_number().over(w))
+        .select("doc_id", rk)
+    )
+
+
+def _lex_leg(d: DataFrame, depth: int, rk: str) -> DataFrame:
+    """BM25 ranking of the documents for `_BM25_TERMS`. Only query-term
+    tokens are exploded; df and the corpus stats (N, avgdl) are
+    broadcast-sized."""
+    base = d.select(
+        "doc_id",
+        F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
+    )
+    dl = base.select("doc_id", F.size("toks").alias("dlen"))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dlen").alias("avgdl")
+    )
+    tf = (
+        base.select("doc_id", F.explode("toks").alias("token"))
+        .filter(F.col("token").isin(_BM25_TERMS))
+        .groupBy("doc_id", "token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    lex_scored = (
+        tf.join(F.broadcast(df), "token")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", _bm25_term(F.col("tf"), F.col("df")).alias("part"))
+        .groupBy("doc_id")
+        .agg(round_col(F.sum("part"), 4).alias("score"))
+    )
+    return _ranked(lex_scored, "score", depth, rk)
+
+
+def _lex_leg_sql(depth: int, rk: str) -> str:
+    """`_lex_leg` as oracle CTEs ``base`` .. ``lex(doc_id, <rk>)``."""
+    terms = ", ".join(f"'{t}'" for t in _BM25_TERMS)
+    return f"""base AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        FROM documents
+    ),
+    dl AS (SELECT doc_id, len(toks) AS dlen FROM base),
+    stats AS (SELECT count(*) AS n_docs, avg(dlen) AS avgdl FROM dl),
+    tf AS (
+        SELECT doc_id, token, count(*) AS tf FROM (
+            SELECT doc_id, unnest(toks) AS token FROM base
+        )
+        WHERE token IN ({terms})
+        GROUP BY doc_id, token
+    ),
+    df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+    lex_scored AS (
+        SELECT t.doc_id,
+               {round_sql(f"sum({_BM25_TERM_SQL})", 4)} AS score
+        FROM tf t
+        JOIN df d ON t.token = d.token
+        JOIN dl l ON t.doc_id = l.doc_id, stats s
+        GROUP BY t.doc_id
+    ),
+    lex AS (
+        SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS {rk}
+        FROM lex_scored QUALIFY {rk} <= {depth}
+    )"""
+
+
+def _query_scan(e: DataFrame) -> tuple[DataFrame, Column]:
+    """Every embedding but the query (vec_id 0), next to the broadcast
+    query vector ``qv``, plus the 4-dp cosine to it. The query norm
+    ``qn`` is hoisted onto the 1-row broadcast side, so each row pays
+    one fold (dot) + one sqrt instead of two folds."""
+    qv = (
+        e.filter(F.col("vec_id") == 0)
+        .select(F.col("embedding").cast("array<double>").alias("qv"))
+        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
+    )
+    ev = F.col("embedding").cast("array<double>")
+    cos = round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4)
+    return e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(qv)), cos
+
+
+def _dense_leg(e: DataFrame, depth: int, rk: str) -> DataFrame:
+    """Cosine ranking of the embeddings against the query vector."""
+    rows, cos = _query_scan(e)
+    return _ranked(
+        rows.select(F.col("vec_id").alias("doc_id"), cos.alias("cos")), "cos", depth, rk
+    )
+
+
+def _dense_leg_sql(depth: int, rk: str) -> str:
+    """`_dense_leg` as oracle CTEs ``q`` .. ``dense(doc_id, <rk>)``."""
+    return f"""{_QUERY_VEC_SQL},
+    dense_scored AS (
+        SELECT vec_id AS doc_id,
+               {_QUERY_COS_SQL} AS cos
+        FROM embeddings, q WHERE vec_id <> 0
+    ),
+    dense AS (
+        SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS {rk}
+        FROM dense_scored QUALIFY {rk} <= {depth}
+    )"""
+
+
 @query(
     "similarity_topk",
     oracle=f"""
-    WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    )
+    WITH {_QUERY_VEC_SQL}
     SELECT vec_id, label,
-           {round_sql("list_dot_product(CAST(embedding AS DOUBLE[]), qv) / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) * sqrt(list_dot_product(qv, qv)))", 4)} AS cos_sim
+           {_QUERY_COS_SQL} AS cos_sim
     FROM embeddings, q
     WHERE vec_id <> 0
     ORDER BY cos_sim DESC, vec_id LIMIT 10
@@ -869,21 +1016,9 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broadcast; similarity is a sequential-fold dot product
     (exprs.dot) entirely in JVM expressions; top-k is TakeOrdered. At
     scale, the corpus side stays partition-parallel with no shuffle."""
-    e = _t(spark, sf_dir, "embeddings")
-    # r14 (guide §1.2/§3, verdict item 3): the query norm is constant
-    # across the scan — hoist it onto the 1-row broadcast side so the
-    # per-row work is one fold (dot) + one sqrt instead of two folds.
-    qv = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
-    )
-    ev = F.col("embedding").cast("array<double>")
-    sim = round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4)
+    rows, sim = _query_scan(_t(spark, sf_dir, "embeddings"))
     return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select("vec_id", "label", sim.alias("cos_sim"))
+        rows.select("vec_id", "label", sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
     )
@@ -927,7 +1062,7 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sgn.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"),
         F.col("bucket").alias("qb"),
-        # query norm hoisted to the 1-row broadcast side (r14, §1.2)
+        # query norm hoisted to the 1-row broadcast side (r14)
         F.sqrt(dot(F.col("v"), F.col("v"))).alias("qn"),
     )
     sim = round_col(cosine_bn(F.col("v"), F.col("qv"), F.col("qn")), 4)
@@ -1117,7 +1252,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    # r13 optimization (guide §2.4 — remove shuffles outright): the
+    # r13 optimization (remove shuffles outright): the
     # per-doc distinct-shingle set and the per-doc min-hashes are
     # row-local (every shingle of a doc lives in its own tokens row),
     # so array_distinct + array_min over transformed arrays replace
@@ -1132,29 +1267,13 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sets = toks.select("doc_id", sh_arr.alias("shs"))
-    sig = sets.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform("shs", lambda s: F.md5(F.concat(s, F.lit(f":{k}"))))
-            ).alias(f"h{k}")
-            for k in range(4)
-        ],
+    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("shs", h)), 4, 2)
+    bands = (
+        sets.select("doc_id", *sig)
+        .select("doc_id", bb)
+        .select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band"), F.md5(F.concat("h0", "h1")).alias("bucket")
-                ),
-                F.struct(
-                    F.lit(1).alias("band"), F.md5(F.concat("h2", "h3")).alias("bucket")
-                ),
-            )
-        ).alias("bb"),
-    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # r13 optimization, second pass (guide §2.4/§5): left to the
+    # r13 optimization, second pass: left to the
     # planner this self-join goes BROADCAST, and a broadcast build has
     # no exchange to share — the whole shingle+minhash md5 pipeline
     # above ran TWICE (two identical corpus pipelines in the executed
@@ -1164,8 +1283,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint and let both join sides read the flat rows: the
     # corpus is hashed exactly once per run, and the join keeps its
     # cheap broadcast build. Pair set unchanged — materialization
-    # never affects results. (bench: listed in ITERATIVE so the
-    # checkpoint job is always inside the timed region.)
+    # never affects results. (perfbench/workloads.py::ITERATIVE lists
+    # this operator, so perfbench times the checkpoint job with it.)
     bands = _fp_materialize(bands, sf_dir)
     a, b = bands.alias("a"), bands.alias("b")
     return (
@@ -1366,22 +1485,11 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     cents.sort()
 
-    def lit_vec(xs):
-        # single Literal node — see exprs.lit_vec (r13)
-        return F.lit([float(x) for x in xs])
-
-    # argmax over the codebook as greatest() of (affinity, -cid, cid)
-    # structs — max affinity, ties to the smallest cid, matching the
-    # oracle's ORDER BY aff DESC, cid.
-    scored = [
-        F.struct(
-            dot(F.col("v"), lit_vec(cv)).alias("aff"),
-            F.lit(-cid).alias("neg_cid"),
-            F.lit(int(cid)).alias("cid"),
-        )
-        for cid, cv in cents
-    ]
-    best_cell = F.greatest(*scored).getField("cid")
+    # argmax over the codebook by affinity — max affinity, ties to the
+    # smallest cid, matching the oracle's ORDER BY aff DESC, cid.
+    best_cell = centroid_argmax(
+        cents, lambda cv: dot(F.col("v"), lit_vec(cv)), "aff", "neg_cid"
+    ).getField("cid")
 
     # Probe cells of the query vector: same fold, computed driver-side
     # (a left-to-right Python float sum is the identical IEEE sequence).
@@ -1389,21 +1497,15 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") == 0).select(vcol.alias("v")).collect()[0]["v"]
     )
 
-    def pydot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
+    probe = [cid for cid, _ in sorted(cents, key=lambda c: (-fold_dot(qv, c[1]), c[0]))[:2]]
 
-    probe = [cid for cid, _ in sorted(cents, key=lambda c: (-pydot(qv, c[1]), c[0]))[:2]]
-
-    # r14 (§1.2): the query self-norm is a constant the HOF fold would
+    # r14: the query self-norm is a constant the HOF fold would
     # otherwise re-evaluate per row (literal-array aggregates are not
     # constant-folded past the lambda). math.sqrt of the identical
     # left fold is the same correctly-rounded IEEE double.
     import math
 
-    qn = F.lit(math.sqrt(pydot(qv, qv)))
+    qn = F.lit(math.sqrt(self_dot(qv)))
     sim = round_col(cosine_bn(F.col("v"), lit_vec(qv), qn), 4)
     return (
         e.select("vec_id", "label", vcol.alias("v"))
@@ -1422,7 +1524,7 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     shingle buckets → in-row ordered pairs → (doc_a, doc_b) count,
     with per-doc set sizes joined back broadcast.
 
-    r13 second pass (guide §2.3/§5): the fused shape — bucket
+    r13 second pass: the fused shape — bucket
     collect_set + pair explode + pair aggregate in ONE stage chain —
     measured 11–21 s warm at sf1 with 26.6 M pair rows, and its
     single-shot cold runs blew past 40 s (the bucket ObjectHashAggregate
@@ -1430,7 +1532,7 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     same stage chain). Materializing the per-doc shingle arrays once
     (`_fp_materialize`) decouples the stages; the bucket state and the
     26.6 M exploded pair rows then carry BARE doc ids (16 bytes of key
-    instead of 32 — guide §2.3 «shuffle fewer bytes»), and the two set
+    instead of 32: fewer shuffled bytes), and the two set
     sizes join back from the flat per-doc relation (one row per doc,
     broadcast twice) AFTER the count — the pair aggregate's key is
     half as wide and the heavy explode never carries payload it does
@@ -1441,10 +1543,7 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     toks = _spread(
         d.select("doc_id", F.split("text", " ").alias("tokens")), spark, "doc_id"
     )
-    idx = F.sequence(F.lit(1), F.size("tokens") - n + 1)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n)))
-    )
+    hashes = shingle_hashes("tokens", n)
     sets = _fp_materialize(
         toks.filter(F.size("tokens") >= n).select(
             "doc_id", F.array_distinct(hashes).alias("hs")
@@ -1590,7 +1689,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup with a keep-best policy: per content-hash group,
     retain the longest document (ties → lowest id) instead of
     keep-first — the quality-aware variant every training pipeline
-    runs. (r13, guide §2.3: keep-best is a per-group ARGMAX, so a
+    runs. (r13: keep-best is a per-group ARGMAX, so a
     partial-aggregating `max(struct(n_chars, -doc_id, doc_id))` rides
     the map side — only one best-struct + count per (partition, hash)
     reaches the exchange, where the row_number window shuffled and
@@ -1616,7 +1715,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _inrow_tf(docs: DataFrame) -> DataFrame:
     """Per-document term frequencies WITHOUT a (doc_id, term)
-    aggregation exchange (r13, guide §2.4): doc_id is unique per
+    aggregation exchange (r13): doc_id is unique per
     input row, so the global (doc, term) count is row-local — run-
     length encode the SORTED token array and explode (term, tf) pairs
     straight off the map side. `starts` holds the 1-based position of
@@ -1962,52 +2061,29 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    idx = F.sequence(F.lit(1), F.size("tokens") - 2)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, 3)))
-    )
-    # r13 optimization (guide §2.4): per-doc distinct set, size and
+    hashes = shingle_hashes("tokens", 3)
+    # r13 optimization: per-doc distinct set, size and
     # 8 salted min-hashes are row-local — array_distinct / size /
     # array_min replace the explode→.distinct() Exchange and both
     # groupBy(doc_id) Exchanges (sizes + sig); the verify stage reads
     # set sizes straight off the per-doc arrays, so no sizes relation
     # ever joins back.
-    # r13 second pass (guide §2.4/§5): the index side, the batch side
+    # r13 second pass: the index side, the batch side
     # and the verify stage all re-derived this trigram-md5 pipeline.
     # The per-doc distinct shingle arrays are the one expensive
     # derivation — materialize them ONCE with localCheckpoint and
     # derive signatures, bands and the verify intersections from the
-    # flat rows. (bench: listed in ITERATIVE so the checkpoint job
-    # stays inside the timed region.)
+    # flat rows.
     sets = _fp_materialize(
         toks.select("doc_id", F.array_distinct(hashes).alias("hs")), sf_dir
     )
-    sig = sets.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform("hs", lambda s: F.md5(F.concat(s, F.lit(f":{k}"))))
-            ).alias(f"h{k}")
-            for k in range(8)
-        ],
+    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("hs", h)), 8, 4)
+    bands_all = (
+        sets.select("doc_id", *sig)
+        .select("doc_id", bb)
+        .select("doc_id", "bb.band", "bb.bucket")
     )
-    bands_all = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(F.concat(f"h{2 * bi}", f"h{2 * bi + 1}")).alias(
-                            "bucket"
-                        ),
-                    )
-                    for bi in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    # r13 optimization, second pass (guide §2.4): the corpus-index
+    # r13 optimization, second pass: the corpus-index
     # side and the batch side are filters of the SAME band relation,
     # but as separate lineages each re-ran the 8-salt minhash pass
     # over the (checkpointed) shingle sets. One keyed repartition on
@@ -2015,7 +2091,7 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — and the cap Window, whose required partitioning it is — hang
     # off a single exchange (the second branch plans as a
     # ReusedExchange), so the salt pass runs once. The exchange moves
-    # 4 fixed-width band rows per doc — metadata, not payloads (§2.3).
+    # 4 fixed-width band rows per doc — metadata, not payloads.
     bands_all = bands_all.repartition("band", "bucket")
     wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
     corpus_index = (
@@ -2035,7 +2111,7 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("b.doc_id").alias("b_doc"), F.col("c.doc_id").alias("c_doc"))
         .distinct()
     )
-    # r13 optimization, second pass (guide §2.3/§2.4): the exact
+    # r13 optimization, second pass: the exact
     # verify used to explode EVERY doc's shingle set and equi-join two
     # copies of that corpus-sized relation to score a handful of
     # candidates. Same shape as minhash_prefilter_jaccard now:
@@ -2162,7 +2238,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Trained quality classifier (r12 verdict item 3): distributed
+# Trained quality classifier (r12): distributed
 # logistic regression replaces quality_classifier_score's literal
 # weights with weights FIT in-engine.
 # ---------------------------------------------------------------------------
@@ -2515,10 +2591,7 @@ def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     n = 8
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
-    idx = F.sequence(F.lit(1), F.size("tokens") - n + 1)
-    hashed = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n)))
-    )
+    hashed = shingle_hashes("tokens", n)
     occ = (
         toks.filter(F.size("tokens") >= n)
         .select(
@@ -2655,31 +2728,6 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m, k, dsub, nq, topk = 4, 4, 16, 3, 10
 
-    def fold_dot(xs, ys):
-        acc = 0.0
-        for x, y in zip(xs, ys):
-            acc = acc + x * y
-        return acc
-
-    def argmin_struct(sv, cents):
-        # greatest over (-dist, -cid) == argmin over (dist, cid); the
-        # _lloyd_assignments tie-break conventions
-        scored = [
-            F.struct(
-                (
-                    -(
-                        dot(sv, sv)
-                        - 2 * dot(sv, F.lit([float(x) for x in cv]))
-                        + F.lit(fold_dot(cv, cv))
-                    )
-                ).alias("negd"),
-                F.lit(-cid).alias("ncid"),
-                F.lit(int(cid)).alias("cid"),
-            )
-            for cid, cv in cents
-        ]
-        return F.greatest(*scored).getField("cid")
-
     codebooks = []
     for s in range(m):
         sub = v.select("vec_id", F.slice("v", 16 * s + 1, dsub).alias("sv"))
@@ -2688,7 +2736,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in sub.filter(F.col("vec_id") < k).collect()
         )
         rows = (
-            sub.withColumn("cid", argmin_struct(F.col("sv"), init))
+            sub.withColumn("cid", nearest_centroid(F.col("sv"), init).getField("cid"))
             .select("cid", F.posexplode("sv").alias("pos", "val"))
             .groupBy("cid", "pos")
             .agg(round_col(F.avg("val"), 6).alias("val"))
@@ -2704,7 +2752,9 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = v.select(
         "vec_id",
         *[
-            argmin_struct(F.slice("v", 16 * s + 1, dsub), codebooks[s]).alias(f"c{s}")
+            nearest_centroid(F.slice("v", 16 * s + 1, dsub), codebooks[s])
+            .getField("cid")
+            .alias(f"c{s}")
             for s in range(m)
         ],
     ).localCheckpoint()
@@ -2860,9 +2910,7 @@ def zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored AS (
         SELECT t.doc_id,
                sum(
-                   ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                   * (t.tf * 2.2)
-                   / (t.tf + 1.2 * (0.25 + 0.75 * l.dlen / s.avgdl))
+                   {_BM25_TERM_SQL}
                ) AS score
         FROM tf t
         JOIN df d ON t.token = d.token
@@ -2889,14 +2937,13 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded broadcast scalars; the final score is one partial-
     aggregated shuffle on doc_id and a TakeOrdered(20). An inverted
     index materializes nothing here because the term list prunes the
-    token stream before it ever moves. (r13, guide §2.4: per-term tf
+    token stream before it ever moves. (r13: per-term tf
     is a k-bounded in-row `size(filter(...))` per query term, so the
     token explode, the (doc, term) aggregation exchange and the
     tf⋈dlen join all disappear — one corpus scan feeds one scalar
     aggregate (N, avgdl, per-term df) and one scored projection,
     ending in the same TakeOrdered(20).)"""
     d = _t(spark, sf_dir, "documents")
-    terms = ["join", "scan", "merge"]
     base = d.select(
         "doc_id",
         F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
@@ -2906,39 +2953,30 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # second parameter to the element INDEX, shadowing the term.
         return F.size(F.filter("toks", lambda x: x == F.lit(term)))
 
-    # r14 (verdict item 4, guide §8): the stats aggregate and the
+    # r14: the stats aggregate and the
     # scored projection each re-ran the corpus tokenize + 3 in-row tf
     # folds (two full scans). The per-doc tf/dlen rows are a narrow
     # fixed-width proxy (doc_id + 4 ints, ~4 MB at sf1) — materialize
-    # them once and both consumers read flat checkpointed rows (bench:
-    # bm25 joins ITERATIVE so the checkpoint stays in the timed wall).
+    # them once and both consumers read flat checkpointed rows
+    # (perfbench/workloads.py::ITERATIVE lists bm25, so perfbench
+    # times the checkpoint with the query).
     wide = base.select(
         "doc_id",
         F.size("toks").alias("dlen"),
-        *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(terms)],
+        *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(_BM25_TERMS)],
     ).localCheckpoint()
     stats = wide.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg("dlen").alias("avgdl"),
         *[
             F.count(F.when(F.col(f"tf_{i}") > 0, 1)).alias(f"df_{i}")
-            for i in range(len(terms))
+            for i in range(len(_BM25_TERMS))
         ],
     )
 
     def part(i: int):
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col(f"df_{i}") + F.lit(0.5))
-            / (F.col(f"df_{i}") + F.lit(0.5))
-        )
-        denom = F.col(f"tf_{i}") + F.lit(1.2) * (
-            F.lit(0.25) + F.lit(0.75) * F.col("dlen") / F.col("avgdl")
-        )
-        return F.when(
-            F.col(f"tf_{i}") > 0,
-            idf * (F.col(f"tf_{i}") * F.lit(2.2)) / denom,
-        ).otherwise(F.lit(0.0))
+        tf = F.col(f"tf_{i}")
+        return F.when(tf > 0, _bm25_term(tf, F.col(f"df_{i}"))).otherwise(F.lit(0.0))
 
     score = part(0) + part(1) + part(2)
     return (
@@ -3585,7 +3623,7 @@ def lsh_plane_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "v", *[bucket(p).alias(f"b{p}") for p in (4, 6, 8, 10)]
         # self-norm hoisted per side: each sample row pairs with ~199
         # others, so the per-pair norm folds are cross-pair redundant
-        # (r14, §1.2; same IEEE quotient)
+        # (r14; same IEEE quotient)
     ).withColumn("nrm", F.sqrt(dot(F.col("v"), F.col("v"))))
     a, b = sgn.alias("a"), sgn.alias("b")
     cos = dot(F.col("a.v"), F.col("b.v")) / (
@@ -3704,7 +3742,7 @@ def label_coherence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("clabel"),
         "cv",
         # centroid norm rides the broadcast; row norm is computed once
-        # per row instead of once per (row, centroid) pair (r14, §1.2)
+        # per row instead of once per (row, centroid) pair (r14)
         F.sqrt(dot(F.col("cv"), F.col("cv"))).alias("cn"),
     )
     e = emb.select(
@@ -3797,7 +3835,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("nlabel"),
         F.col("embedding").cast("array<double>").alias("nv"),
         # both self-norms hoisted out of the corpus × anchors panel
-        # scan (r14, §1.2; same IEEE quotient)
+        # scan (r14; same IEEE quotient)
     ).withColumn("nn", F.sqrt(dot(F.col("nv"), F.col("nv"))))
     cos = dot(F.col("av"), F.col("nv")) / (F.col("an") * F.col("nn"))
     scored = (
@@ -4064,7 +4102,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
         + F.when(F.element_at("embedding", 3) > 0, 1).otherwise(0)
     )
-    # r14 (§1.2, the r13 panel-scan hoist pattern): each corpus row
+    # r14 (the r13 panel-scan hoist pattern): each corpus row
     # fans out into 10 (row, query) pairs, so BOTH self-norms are
     # cross-pair redundant — project each side's norm once before the
     # broadcast join. Same IEEE quotient dot/(sqrt(aa)·sqrt(bb)).
@@ -4280,55 +4318,31 @@ def minhash_prefilter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    idx = F.sequence(F.lit(1), F.size("tokens") - 2)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, 3)))
-    )
-    # r13 optimization (guide §2.4): per-doc distinct set, size and
+    hashes = shingle_hashes("tokens", 3)
+    # r13 optimization: per-doc distinct set, size and
     # 8 salted min-hashes are row-local — array_distinct / size /
     # array_min replace the explode→.distinct() Exchange and both
     # groupBy(doc_id) Exchanges (sizes + sig); the verify stage reads
     # set sizes straight off the per-doc arrays, so no sizes relation
     # ever joins back.
-    # r13 second pass (guide §2.4/§5): the candidate stage and the
+    # r13 second pass: the candidate stage and the
     # verify stage both re-derived this trigram-md5 pipeline (and the
     # candidate self-join's broadcast build re-derived it once more —
     # runtime exchange reuse only dedups below the pre-hash _spread
     # exchange), so the corpus was hashed 3–4×. The per-doc distinct
     # shingle arrays are the query's ONE expensive derivation:
     # materialize them ONCE with localCheckpoint and derive signatures,
-    # bands and the verify intersections from the flat rows. (bench:
-    # listed in ITERATIVE so the checkpoint jobs stay inside the
-    # timed region.)
+    # bands and the verify intersections from the flat rows.
     sets = _fp_materialize(
         toks.select("doc_id", F.array_distinct(hashes).alias("hs")), sf_dir
     )
-    sig = sets.select(
-        "doc_id",
-        *[
-            F.array_min(
-                F.transform("hs", lambda s: F.md5(F.concat(s, F.lit(f":{k}"))))
-            ).alias(f"h{k}")
-            for k in range(8)
-        ],
+    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("hs", h)), 8, 4)
+    bands = (
+        sets.select("doc_id", *sig)
+        .select("doc_id", bb)
+        .select("doc_id", "bb.band", "bb.bucket")
     )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(F.concat(f"h{2 * bi}", f"h{2 * bi + 1}")).alias(
-                            "bucket"
-                        ),
-                    )
-                    for bi in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    # Hot-bucket cap (r8 verdict item 4): keep the deterministic first
+    # Hot-bucket cap: keep the deterministic first
     # BAND_BUCKET_CAP members per (band, bucket) so m near-identical
     # docs — same bucket in EVERY band — cost K²/2 candidate pairs,
     # not m²/2. row_number (sort-based, O(m log m) pass-through)
@@ -4356,8 +4370,8 @@ def minhash_prefilter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    # r13 optimization, second pass (guide §2.3 — shuffle keys and
-    # metadata, §2.4): the exact-verify stage used to explode EVERY
+    # r13 optimization, second pass (shuffle keys and metadata,
+    # not payloads): the exact-verify stage used to explode EVERY
     # document's shingle set into (doc, shingle) rows and equi-join
     # two full copies of that relation — two more corpus-wide md5
     # passes plus a corpus-sized shuffle, to verify a handful of
@@ -4587,7 +4601,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     million docs is excluded as a stop-fingerprint instead of
     exploding quadratically; TakeOrdered bounds the output."""
     d = _t(spark, sf_dir, "documents")
-    # r13 optimization (guide §2.4 — remove shuffles outright): the
+    # r13 optimization (remove shuffles outright): the
     # w=4 sliding-window minimum runs over ONE document's ordered
     # gram-hash sequence, which lives entirely in that document's own
     # row — so the old Window(partitionBy doc_id) + its Exchange+Sort
@@ -4609,10 +4623,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    idx = F.sequence(F.lit(1), F.size("tokens") - 2)
-    hs = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, 3)))
-    )
+    hs = shingle_hashes("tokens", 3)
     # window starts i = 1 .. m-3 over the m = tokens-2 gram hashes
     fps_arr = F.array_distinct(
         F.transform(
@@ -4637,7 +4648,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("z"),
     ).select("doc_id", F.col("z.nfp").alias("nfp"), F.col("z.fp").alias("fp"))
-    # r13 optimization, second pass (guide §2.4/§1.1): the old
+    # r13 optimization, second pass: the old
     # eligible-groupBy → join → self-join pairing planned every join
     # as a BroadcastHashJoin, so NOTHING shared an exchange and the
     # whole per-doc trigram-md5 pipeline above ran FOUR times (the
@@ -4881,56 +4892,8 @@ _RRF_DEPTH = 50  # per-leg candidate depth fed into the fusion
 @query(
     "hybrid_search_rrf",
     oracle=f"""
-    WITH base AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
-    dl AS (SELECT doc_id, len(toks) AS dlen FROM base),
-    stats AS (SELECT count(*) AS n_docs, avg(dlen) AS avgdl FROM dl),
-    tf AS (
-        SELECT doc_id, token, count(*) AS tf FROM (
-            SELECT doc_id, unnest(toks) AS token FROM base
-        )
-        WHERE token IN ('join', 'scan', 'merge')
-        GROUP BY doc_id, token
-    ),
-    df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    lex_scored AS (
-        SELECT t.doc_id,
-               {round_sql(
-                   "sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))"
-                   " * (t.tf * 2.2)"
-                   " / (t.tf + 1.2 * (0.25 + 0.75 * l.dlen / s.avgdl)))", 4)} AS score
-        FROM tf t
-        JOIN df d ON t.token = d.token
-        JOIN dl l ON t.doc_id = l.doc_id, stats s
-        GROUP BY t.doc_id
-    ),
-    lex AS (
-        SELECT doc_id,
-               row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rk
-        FROM lex_scored
-        QUALIFY lex_rk <= {_RRF_DEPTH}
-    ),
-    q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ),
-    dense_scored AS (
-        SELECT vec_id AS doc_id,
-               {round_sql(
-                   "list_dot_product(CAST(embedding AS DOUBLE[]), qv)"
-                   " / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),"
-                   " CAST(embedding AS DOUBLE[])))"
-                   " * sqrt(list_dot_product(qv, qv)))", 4)} AS cos
-        FROM embeddings, q WHERE vec_id <> 0
-    ),
-    dense AS (
-        SELECT doc_id,
-               row_number() OVER (ORDER BY cos DESC, doc_id) AS dense_rk
-        FROM dense_scored
-        QUALIFY dense_rk <= {_RRF_DEPTH}
-    ),
+    WITH {_lex_leg_sql(_RRF_DEPTH, "lex_rk")},
+    {_dense_leg_sql(_RRF_DEPTH, "dense_rk")},
     fused AS (
         SELECT coalesce(l.doc_id, d.doc_id) AS doc_id,
                coalesce(l.lex_rk, 0) AS lex_rk,
@@ -4962,75 +4925,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-side cost is exactly the two legs' (term-pruned lexical
     scan; ANN-replaceable dense scan). Ranks tie-break on doc_id over
     ROUNDED scores in both engines, so ranking is deterministic."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
-    terms = ["join", "scan", "merge"]
-
-    base = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dlen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dlen").alias("avgdl")
-    )
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("token"))
-        .filter(F.col("token").isin(terms))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(1.2) * (
-        F.lit(0.25) + F.lit(0.75) * F.col("dlen") / F.col("avgdl")
-    )
-    lex_scored = (
-        tf.join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", (idf * (F.col("tf") * F.lit(2.2)) / denom).alias("part"))
-        .groupBy("doc_id")
-        .agg(round_col(F.sum("part"), 4).alias("score"))
-    )
-    # TakeOrdered(depth) FIRST, then rank the depth-bounded result: the
-    # global row_number window only ever sees _RRF_DEPTH rows, so no
-    # corpus-sized relation funnels through a single partition.
-    w_lex = Window.orderBy(F.desc("score"), "doc_id")
-    lex = (
-        lex_scored.orderBy(F.desc("score"), "doc_id")
-        .limit(_RRF_DEPTH)
-        .withColumn("lex_rk", F.row_number().over(w_lex))
-        .select("doc_id", "lex_rk")
-    )
-
-    qv = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-        # query norm hoisted to the 1-row broadcast side (r14, §1.2)
-        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
-    )
-    ev = F.col("embedding").cast("array<double>")
-    dense_scored = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4).alias("cos"),
-        )
-    )
-    w_dense = Window.orderBy(F.desc("cos"), "doc_id")
-    dense = (
-        dense_scored.orderBy(F.desc("cos"), "doc_id")
-        .limit(_RRF_DEPTH)
-        .withColumn("dense_rk", F.row_number().over(w_dense))
-        .select("doc_id", "dense_rk")
-    )
+    lex = _lex_leg(_t(spark, sf_dir, "documents"), _RRF_DEPTH, "lex_rk")
+    dense = _dense_leg(_t(spark, sf_dir, "embeddings"), _RRF_DEPTH, "dense_rk")
 
     lex_term = F.when(
         F.col("lex_rk").isNull(), F.lit(0.0)
@@ -5204,52 +5100,8 @@ def _rbo_oracle() -> str:
         for d in range(1, _RBO_DEPTH + 1)
     )
     return f"""
-    WITH base AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
-    dl AS (SELECT doc_id, len(toks) AS dlen FROM base),
-    stats AS (SELECT count(*) AS n_docs, avg(dlen) AS avgdl FROM dl),
-    tf AS (
-        SELECT doc_id, token, count(*) AS tf FROM (
-            SELECT doc_id, unnest(toks) AS token FROM base
-        )
-        WHERE token IN ('join', 'scan', 'merge')
-        GROUP BY doc_id, token
-    ),
-    df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    lex_scored AS (
-        SELECT t.doc_id,
-               {round_sql(
-                   "sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))"
-                   " * (t.tf * 2.2)"
-                   " / (t.tf + 1.2 * (0.25 + 0.75 * l.dlen / s.avgdl)))", 4)} AS score
-        FROM tf t
-        JOIN df d ON t.token = d.token
-        JOIN dl l ON t.doc_id = l.doc_id, stats s
-        GROUP BY t.doc_id
-    ),
-    lex AS (
-        SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS pa
-        FROM lex_scored QUALIFY pa <= {_RBO_DEPTH}
-    ),
-    q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ),
-    dense_scored AS (
-        SELECT vec_id AS doc_id,
-               {round_sql(
-                   "list_dot_product(CAST(embedding AS DOUBLE[]), qv)"
-                   " / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),"
-                   " CAST(embedding AS DOUBLE[])))"
-                   " * sqrt(list_dot_product(qv, qv)))", 4)} AS cos
-        FROM embeddings, q WHERE vec_id <> 0
-    ),
-    dense AS (
-        SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS pb
-        FROM dense_scored QUALIFY pb <= {_RBO_DEPTH}
-    ),
+    WITH {_lex_leg_sql(_RBO_DEPTH, "pa")},
+    {_dense_leg_sql(_RBO_DEPTH, "pb")},
     joined AS (
         SELECT coalesce(l.doc_id, d.doc_id) AS doc_id,
                coalesce(l.pa, {_RBO_DEPTH + 1}) AS pa,
@@ -5280,71 +5132,8 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exactly-representable doubles (p^(d-1) carried as the
     rational 9^(d-1)/10^(d-1), no libm pow) — bit-identical in both
     engines with no SUM-order dependence."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
-    terms = ["join", "scan", "merge"]
-
-    base = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dlen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dlen").alias("avgdl")
-    )
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("token"))
-        .filter(F.col("token").isin(terms))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(1.2) * (
-        F.lit(0.25) + F.lit(0.75) * F.col("dlen") / F.col("avgdl")
-    )
-    lex_scored = (
-        tf.join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", (idf * (F.col("tf") * F.lit(2.2)) / denom).alias("part"))
-        .groupBy("doc_id")
-        .agg(round_col(F.sum("part"), 4).alias("score"))
-    )
-    w_lex = Window.orderBy(F.desc("score"), "doc_id")
-    lex = (
-        lex_scored.orderBy(F.desc("score"), "doc_id")
-        .limit(_RBO_DEPTH)
-        .withColumn("pa", F.row_number().over(w_lex))
-        .select("doc_id", "pa")
-    )
-    qv = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-        # query norm hoisted to the 1-row broadcast side (r14, §1.2)
-        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
-    )
-    ev = F.col("embedding").cast("array<double>")
-    dense_scored = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4).alias("cos"),
-        )
-    )
-    w_dense = Window.orderBy(F.desc("cos"), "doc_id")
-    dense = (
-        dense_scored.orderBy(F.desc("cos"), "doc_id")
-        .limit(_RBO_DEPTH)
-        .withColumn("pb", F.row_number().over(w_dense))
-        .select("doc_id", "pb")
-    )
+    lex = _lex_leg(_t(spark, sf_dir, "documents"), _RBO_DEPTH, "pa")
+    dense = _dense_leg(_t(spark, sf_dir, "embeddings"), _RBO_DEPTH, "pb")
     absent = _RBO_DEPTH + 1
     joined = lex.join(dense, "doc_id", "full_outer").select(
         F.coalesce("pa", F.lit(absent)).alias("pa"),
@@ -5373,16 +5162,10 @@ _FANN_OVERFETCH = 3  # post-filter candidate multiplier
 @query(
     "filtered_ann_pre_vs_post",
     oracle=f"""
-    WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ),
+    WITH {_QUERY_VEC_SQL},
     scored AS (
         SELECT vec_id, label,
-               {round_sql(
-                   "list_dot_product(CAST(embedding AS DOUBLE[]), qv)"
-                   " / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),"
-                   " CAST(embedding AS DOUBLE[])))"
-                   " * sqrt(list_dot_product(qv, qv)))", 4)} AS cos
+               {_QUERY_COS_SQL} AS cos
         FROM embeddings, q WHERE vec_id <> 0
     ),
     pre AS (
@@ -5427,25 +5210,8 @@ def filtered_ann_pre_vs_post(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning a partition and scanning the corpus. Rankings are over
     ROUNDED cosines with vec_id tie-break — deterministic in both
     engines."""
-    from pyspark.sql import Window
-
-    e = _t(spark, sf_dir, "embeddings")
-    qv = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-        # query norm hoisted to the 1-row broadcast side (r14, §1.2)
-        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
-    )
-    ev = F.col("embedding").cast("array<double>")
-    scored = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4).alias("cos"),
-        )
-    )
+    rows, cos = _query_scan(_t(spark, sf_dir, "embeddings"))
+    scored = rows.select("vec_id", "label", cos.alias("cos"))
 
     def ranked_topk(sdf: DataFrame, k: int, rk_name: str) -> DataFrame:
         w = Window.orderBy(F.desc("cos"), "vec_id")
@@ -5652,10 +5418,7 @@ def ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for n in _NGC_ORDERS:
-        idx = F.sequence(F.lit(1), F.size("toks") - n + 1)
-        grams = F.transform(
-            idx, lambda i: F.md5(F.concat_ws(" ", F.slice("toks", i, n)))
-        )
+        grams = shingle_hashes("toks", n)
         def gram_rel(sdf):
             return (
                 sdf.filter(F.size("toks") >= n)
@@ -6213,46 +5976,11 @@ def _ndcg_oracle() -> str:
         for i in range(1, _NDCG_K + 1)
     )
     return f"""
-    WITH base AS (
-        SELECT doc_id,
-               list_filter(string_split(text, ' '), x -> x <> '') AS toks
-        FROM documents
-    ),
-    dl AS (SELECT doc_id, len(toks) AS dlen FROM base),
-    stats AS (SELECT count(*) AS n_docs, avg(dlen) AS avgdl FROM dl),
-    tf AS (
-        SELECT doc_id, token, count(*) AS tf FROM (
-            SELECT doc_id, unnest(toks) AS token FROM base
-        )
-        WHERE token IN ('join', 'scan', 'merge')
-        GROUP BY doc_id, token
-    ),
-    df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-    lex_scored AS (
-        SELECT t.doc_id,
-               {round_sql(
-                   "sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))"
-                   " * (t.tf * 2.2)"
-                   " / (t.tf + 1.2 * (0.25 + 0.75 * l.dlen / s.avgdl)))", 4)} AS score
-        FROM tf t
-        JOIN df d ON t.token = d.token
-        JOIN dl l ON t.doc_id = l.doc_id, stats s
-        GROUP BY t.doc_id
-    ),
-    lex AS (
-        SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rk
-        FROM lex_scored QUALIFY rk <= {_NDCG_K}
-    ),
-    q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    ),
+    WITH {_lex_leg_sql(_NDCG_K, "rk")},
+    {_QUERY_VEC_SQL},
     gains AS MATERIALIZED (
         SELECT vec_id AS doc_id,
-               greatest({round_sql(
-                   "list_dot_product(CAST(embedding AS DOUBLE[]), qv)"
-                   " / (sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),"
-                   " CAST(embedding AS DOUBLE[])))"
-                   " * sqrt(list_dot_product(qv, qv)))", 4)}, 0.0) AS g
+               greatest({_QUERY_COS_SQL}, 0.0) AS g
         FROM embeddings, q WHERE vec_id <> 0
     ),
     lexp AS (
@@ -6289,63 +6017,10 @@ def ndcg_lexical_vs_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivoted rank columns (the RBO convention) — no SUM-order
     dependence anywhere. Both rankings bound to k rows before any
     window runs."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    e = _t(spark, sf_dir, "embeddings")
-    terms = ["join", "scan", "merge"]
-
-    base = d.select(
-        "doc_id",
-        F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
-    )
-    dl = base.select("doc_id", F.size("toks").alias("dlen"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dlen").alias("avgdl")
-    )
-    tf = (
-        base.select("doc_id", F.explode("toks").alias("token"))
-        .filter(F.col("token").isin(terms))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(1.2) * (
-        F.lit(0.25) + F.lit(0.75) * F.col("dlen") / F.col("avgdl")
-    )
-    lex_scored = (
-        tf.join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("doc_id", (idf * (F.col("tf") * F.lit(2.2)) / denom).alias("part"))
-        .groupBy("doc_id")
-        .agg(round_col(F.sum("part"), 4).alias("score"))
-    )
-    w_lex = Window.orderBy(F.desc("score"), "doc_id")
-    lex = (
-        lex_scored.orderBy(F.desc("score"), "doc_id")
-        .limit(_NDCG_K)
-        .withColumn("rk", F.row_number().over(w_lex))
-        .select("doc_id", "rk")
-    )
-    qv = (
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>").alias("qv"))
-        # query norm hoisted to the 1-row broadcast side (r14, §1.2)
-        .select("qv", F.sqrt(dot(F.col("qv"), F.col("qv"))).alias("qn"))
-    )
-    ev = F.col("embedding").cast("array<double>")
-    gains = (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.greatest(round_col(cosine_bn(ev, F.col("qv"), F.col("qn")), 4), F.lit(0.0)).alias("g"),
-        )
+    lex = _lex_leg(_t(spark, sf_dir, "documents"), _NDCG_K, "rk")
+    rows, cos = _query_scan(_t(spark, sf_dir, "embeddings"))
+    gains = rows.select(
+        F.col("vec_id").alias("doc_id"), F.greatest(cos, F.lit(0.0)).alias("g")
     )
     lexp = (
         lex.join(gains, "doc_id", "left")
@@ -6563,7 +6238,7 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     ms = F.explode(F.array(*[F.lit(m) for m in _MRL_MS])).alias("m")
-    # r13 second pass (guide §1.2 per-task work): cosine(tv, tq)
+    # r13 second pass (per-task work): cosine(tv, tq)
     # evaluated THREE 64-dim-bounded folds per (row × query × m)
     # triple, and the self-norms are redundant across rows: the
     # corpus-side norm depends only on (vec_id, m) — it was
@@ -6819,7 +6494,7 @@ def semantic_decontaminate_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram verifier before training."""
     e = _t(spark, sf_dir, "embeddings")
     c = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    # r13 second pass (guide §1.2 per-task work): cosine(v, pv)
+    # r13 second pass (per-task work): cosine(v, pv)
     # re-evaluated sqrt(dot(v, v)) once per (vector, panel) pair —
     # 64 redundant self-norm folds per corpus vector, across rows
     # where codegen subexpression elimination cannot help. Hoist both

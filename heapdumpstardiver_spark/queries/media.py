@@ -1440,7 +1440,7 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
     )
 
-    # r14 (verdict item 10, guide §4): the plan consumes the hash
+    # r14: the plan consumes the hash
     # relation four times (two band-join sides + two verify sides),
     # and each consumer re-ran the PNG decode + DCT mapInPandas stage.
     # One localCheckpoint shares a single decode pass — the shape the

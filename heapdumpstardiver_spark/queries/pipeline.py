@@ -17,7 +17,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..exprs import round_col, round_sql, stable_render, stable_render_sql
+from ..exprs import (
+    nearest_centroid,
+    round_col,
+    round_sql,
+    self_dot,
+    shingle_hashes,
+    stable_render,
+    stable_render_sql,
+)
 from ..registry import query
 from .llm import _spread, minhash_lsh_candidates
 
@@ -276,10 +284,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     n = 5
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.size("tokens") - n + 1),
-        lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n))),
-    )
+    hashes = shingle_hashes("tokens", n)
     grams = (
         toks.filter(F.size("tokens") >= n)
         .select("doc_id", F.explode(hashes).alias("g"))
@@ -684,10 +689,7 @@ def passage_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     n, stride = 8, 4
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.size("tokens") - n + 1, F.lit(stride)),
-        lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n))),
-    )
+    hashes = shingle_hashes("tokens", n, stride)
     passages = toks.filter(F.size("tokens") >= n).select(
         "doc_id", F.explode(hashes).alias("p")
     )
@@ -1285,8 +1287,6 @@ def _lloyd_assignments(spark: SparkSession, sf_dir: str, k: int = 4,
     re-scanning the embeddings parquet per iteration (at 100 TB you
     persist the assignment input, not re-read the corpus per round —
     the same posture as _cc_labels' edge-list checkpoint)."""
-    from ..exprs import dot
-
     e = _t(spark, sf_dir, "embeddings")
     v = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -1298,39 +1298,13 @@ def _lloyd_assignments(spark: SparkSession, sf_dir: str, k: int = 4,
         .collect()
     )
 
-    def lit_vec(xs):
-        # single Literal node — see exprs.lit_vec (r13)
-        return F.lit([float(x) for x in xs])
-
-    def self_dot(xs):
-        # Left-to-right Python fold == DuckDB list_dot_product(cv, cv)
-        # over the identical rounded doubles.
-        acc = 0.0
-        for x in xs:
-            acc = acc + x * x
-        return acc
-
     def assign(centroids):
-        scored = [
-            F.struct(
-                (
-                    -(
-                        dot(F.col("v"), F.col("v"))
-                        - 2 * dot(F.col("v"), lit_vec(cv))
-                        + F.lit(self_dot(cv))
-                    )
-                ).alias("negd"),
-                F.lit(-cid).alias("ncid"),
-                F.lit(int(cid)).alias("cid"),
-            )
-            for cid, cv in centroids
-        ]
-        best = F.greatest(*scored)
+        best = nearest_centroid(F.col("v"), centroids)
         return v.withColumn("cid", best.getField("cid")).withColumn(
             "dist", -best.getField("negd")
         )
 
-    # r13 optimization round A/B (guide §1.1 measure-first): a
+    # r13 optimization round A/B (measured first): a
     # per-dimension agg (groupBy(cid).agg(avg(element_at(v, i)) x d),
     # no explode, no n x d shuffle) measured SLOWER than this
     # posexplode shape at BOTH sf0.1 (0.57 vs 0.42 s/round) and sf1
@@ -1590,20 +1564,12 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import math
 
-    def _pydot(xs):
-        # left fold in index order — identical IEEE sequence to
-        # exprs.dot, and math.sqrt is the same correctly-rounded op
-        acc = 0.0
-        for x in xs:
-            acc = acc + x * x
-        return acc
-
     cvals = [float(r["c"]) for r in cent_rows]
     cv = F.lit(cvals)
-    # r14 (§1.2): the literal vectors' self-norms are per-row constants
+    # r14: the literal vectors' self-norms are per-row constants
     # the HOF fold re-evaluated every row (literal-array aggregates are
     # not constant-folded past the lambda) — compute them driver-side.
-    cvn = F.lit(math.sqrt(_pydot(cvals)))
+    cvn = F.lit(math.sqrt(self_dot(cvals)))
     rel = base.withColumn(
         "rel",
         dot(F.col("v"), cv) / (F.sqrt(dot(F.col("v"), F.col("v"))) * cvn),
@@ -1629,7 +1595,7 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((t, row["vec_id"], row["rel"], row["mmr"]))
         sel_ids.append(row["vec_id"])
         svals = [float(x) for x in row["v"]]
-        sel_vecs.append((F.lit(svals), F.lit(math.sqrt(_pydot(svals)))))
+        sel_vecs.append((F.lit(svals), F.lit(math.sqrt(self_dot(svals)))))
     out = spark.createDataFrame(
         picks, "pick_idx int, vec_id long, rel_raw double, mmr_raw double"
     )
@@ -1813,7 +1779,7 @@ def importance_resample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar row (broadcast crossJoin), the per-doc rollup shuffles
     doc×bucket counts, never tokens. At 100 TB the hashed-feature
     reduction is the point of DSIR: model fitting touches only
-    fixed-width count vectors. (r13, guide §2.4: unigram+bigram
+    fixed-width count vectors. (r13: unigram+bigram
     features are built IN-ROW — bigrams as a zip_with over the
     shifted token array — replacing the old posexplode → per-doc lag
     window, which shuffled and sorted every corpus token, and the
@@ -2531,7 +2497,7 @@ def curation_funnel_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lazy plan (four 1-row aggregates broadcast-joined, stages
     unpivoted from struct literals — no driver-side counting loop).
 
-    Scale (r13 rewrite, guide §1.1/§2.4): the quality gate is pure
+    Scale (r13 rewrite): the quality gate is pure
     in-row arithmetic — max term frequency is the longest run in the
     sorted token array, identical in value to the old
     explode→groupBy(doc_id,t)→max chain but with ZERO exchanges — so
@@ -2601,10 +2567,7 @@ def curation_funnel_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n = 5
-    gram_hashes = F.transform(
-        F.sequence(F.lit(1), F.size("tokens") - n + 1),
-        lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, n))),
-    )
+    gram_hashes = shingle_hashes("tokens", n)
     bench_g = (
         d.filter((F.col("doc_id") % 50 == 0) & (F.size("tokens") >= n))
         .select(F.explode(F.array_distinct(gram_hashes)).alias("g"))
@@ -3140,10 +3103,7 @@ def greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select("source", F.split("text", " ").alias("tokens"))
-    idx = F.sequence(F.lit(1), F.size("tokens") - 3 + 1)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, 3)))
-    )
+    hashes = shingle_hashes("tokens", 3)
     st = (
         toks.filter(F.size("tokens") >= 3)
         .select("source", F.explode(hashes).alias("token"))
@@ -3501,7 +3461,7 @@ def boilerplate_passage_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys — document-frequency aggregate, then a per-source rollup
     joined to a source-sized doc-count relation. No pair joins, no
     skew beyond source cardinality (salt the rollup if one source
-    dominates a real crawl). (r13, guide §2.3/§2.4: the within-doc
+    dominates a real crawl). (r13: the within-doc
     chunk dedup is `array_distinct` IN-ROW before the explode — with
     doc_id unique, the exploded rows are then already distinct, so
     the corpus-sized DISTINCT exchange disappears and doc_id never
@@ -3516,14 +3476,7 @@ def boilerplate_passage_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("t") >= n)
     chunks = toks.select(
         "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - n + 1, F.lit(stride)),
-                    lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, n))),
-                )
-            )
-        ).alias("h"),
+        F.explode(F.array_distinct(shingle_hashes("t", n, stride))).alias("h"),
     )
     df_rel = chunks.groupBy("source", "h").agg(F.count(F.lit(1)).alias("d"))
     # Every doc that passes the size filter contributes >=1 chunk, so
@@ -3688,7 +3641,7 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`quality_percentile_gate`) flatten away. All-integer objectives,
     so the dominance comparisons are engine-exact.
 
-    Scale shape (r13, guide §1.1/§2.4): the corpus reduces in ONE
+    Scale shape (r13): the corpus reduces in ONE
     scan to DISTINCT objective pairs carrying their doc lists
     (`collect_list` rides the cell groupBy), localCheckpointed so the
     dominance branch and the survivor join-back share the single
@@ -4071,7 +4024,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    # r13 optimization (guide §2.4): the per-doc gram distinct is
+    # r13 optimization: the per-doc gram distinct is
     # row-local (array_distinct before the explode — the old
     # explode→.distinct() Exchange is gone), and each gram's first
     # owner comes from min(doc_id) OVER (PARTITION BY gram) on the
@@ -4582,20 +4535,17 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-# Inclusion probabilities for the Horvitz-Thompson sampler: fixed
-# length bands with EXACTLY-REPRESENTABLE dyadic probabilities, so
-# y/pi is integer arithmetic (y*8, y*4, y*2, y) and the md5-prefix
-# inclusion thresholds are exact 48-bit integers in both engines.
-_HT_BANDS = [(500, 0.125, 8), (1500, 0.25, 4), (3000, 0.5, 2)]  # else pi=1
-
-
 def _ht_pi_thresh(pi: float) -> str:
     return format(int(pi * 16 ** 12), "012x")
 
 
 def _ht_case_sql(u: str) -> tuple[str, str]:
     """(include_predicate, y_over_pi) SQL fragments shared verbatim by
-    the Spark query and the DuckDB oracle."""
+    the Spark query and the DuckDB oracle. The inclusion probabilities
+    are fixed length bands (< 500, < 1500, < 3000 chars, else 1) with
+    EXACTLY-REPRESENTABLE dyadic values 1/8, 1/4, 1/2, so y/pi is
+    integer arithmetic (y*8, y*4, y*2, y) and the md5-prefix inclusion
+    thresholds are exact 48-bit integers in both engines."""
     inc = (
         f"(CASE WHEN n_chars < 500 THEN {u} < '{_ht_pi_thresh(0.125)}' "
         f"WHEN n_chars < 1500 THEN {u} < '{_ht_pi_thresh(0.25)}' "
@@ -5912,7 +5862,7 @@ def cross_modal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     from .llm import minhash_lsh_candidates
 
     d = _t(spark, sf_dir, "documents")
-    # r13 second pass (guide §2.3/§2.4): the old verify exploded EVERY
+    # r13 second pass: the old verify exploded EVERY
     # document's distinct shingles and consumed that corpus-sized
     # relation three times (both pair sides + the sizes rollup). The
     # candidate set is tiny, so: broadcast the candidate doc ids,
@@ -6384,23 +6334,15 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the same greedy pick every round (ties on vec_id)."""
     from ..exprs import dot
 
-    def _pydot2(xs):
-        # left fold in index order — identical IEEE sequence to
-        # exprs.dot evaluating dot(sv, sv) on the same doubles
-        acc = 0.0
-        for x in xs:
-            acc = acc + x * x
-        return acc
-
     e = _t(spark, sf_dir, "embeddings")
     base = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     seed = base.filter(F.col("vec_id") == 0).collect()[0]
     picks = [(1, int(seed["vec_id"]), 0.0)]
     sel_ids = [int(seed["vec_id"])]
     svals = [float(x) for x in seed["v"]]
-    # r14 (§1.2): each literal vector's self-dot is a per-row constant
+    # r14: each literal vector's self-dot is a per-row constant
     # the HOF fold re-evaluated every row — computed driver-side.
-    sel_vecs = [(F.lit(svals), F.lit(_pydot2(svals)))]
+    sel_vecs = [(F.lit(svals), F.lit(self_dot(svals)))]
     for t in range(2, KCENTER_K + 1):
         dists = [
             dot(F.col("v"), F.col("v"))
@@ -6419,7 +6361,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((t, int(row["vec_id"]), float(row["mind"])))
         sel_ids.append(int(row["vec_id"]))
         rvals = [float(x) for x in row["v"]]
-        sel_vecs.append((F.lit(rvals), F.lit(_pydot2(rvals))))
+        sel_vecs.append((F.lit(rvals), F.lit(self_dot(rvals))))
     out = spark.createDataFrame(picks, "pick_idx int, vec_id long, mind double")
     return out.select(
         "pick_idx", "vec_id", stable_render(F.col("mind"), 6).alias("min_dist_sq")
@@ -6825,7 +6767,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists BECAUSE this is an audit; the production path keeps only
     the estimate. At 100 TB the audit runs on a candidate sample."""
     d = _t(spark, sf_dir, "documents")
-    # r13 second pass (guide §2.3/§2.4): per-doc shingle set and the
+    # r13 second pass: per-doc shingle set and the
     # _MEE_H estimator min-hashes are row-local (array_distinct +
     # array_min over the same set yield exactly the old
     # collect_set/min values), and only CANDIDATE docs' rows are ever

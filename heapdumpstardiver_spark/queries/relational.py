@@ -3627,7 +3627,7 @@ def kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    # r14 (verdict item 9, the dedup_cc §2.2 treatment): the symmetric
+    # r14 (the dedup_cc treatment): the symmetric
     # edge list is STATIC across all ~27 peel rounds but was re-derived
     # from the pairs checkpoint (two scans + a union) every round;
     # checkpoint it once, hash-repartitioned by the round-join key so

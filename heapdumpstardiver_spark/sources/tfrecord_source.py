@@ -93,7 +93,7 @@ def _crc32c_bytewise(data: bytes) -> int:
     return crc ^ 0xFFFFFFFF
 
 
-# Vectorized CRC32C (r13, optimization guide §4 — the per-byte Python
+# Vectorized CRC32C (r13: the per-byte Python
 # loop ran at ~8 MB/s and dominated every validating TFRecord scan and
 # every sink write). CRC update is affine over GF(2): one byte-step
 # from state c is c' = (c >> 8) ^ TAB[(c ^ b) & 0xFF]
@@ -177,7 +177,7 @@ def masked_crc(data: bytes) -> int:
 
 def crc32c_many(items: list[bytes]) -> list[int]:
     """CRC32C of many byte strings in ONE vectorized pass — the
-    per-record reader/writer hot path (r13, guide §4): a single
+    per-record reader/writer hot path (r13): a single
     gather + ``xor.reduceat`` over the concatenated payloads
     amortizes the numpy call overhead that dominates per-record
     calls at typical (~hundreds of bytes) record sizes. Bit-identical
@@ -241,7 +241,7 @@ def write_record(f, payload: bytes) -> None:
 
 def write_records(f, payloads: list[bytes]) -> None:
     """Frame *payloads* with ONE vectorized CRC pass over all headers
-    + payloads and one buffered write (r13, guide §4) — byte-identical
+    + payloads and one buffered write (r13) — byte-identical
     to per-record `write_record` calls."""
     headers = [struct.pack("<Q", len(p)) for p in payloads]
     crcs = masked_crc_many(headers + payloads)
@@ -348,7 +348,7 @@ def _file_record_batches(path: str, validate: bool):
     def flush():
         if validate:
             # ONE vectorized CRC pass over the batch's headers +
-            # payloads (r13, guide §4 — the per-record scalar calls
+            # payloads (r13: the per-record scalar calls
             # dominated every validating scan)
             crcs = masked_crc_many(heads + pays)
             n = len(pays)

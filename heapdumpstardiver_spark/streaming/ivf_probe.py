@@ -29,8 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ann_index import _self_dot, read_centroids
-from ..exprs import dot, round_col
+from ..ann_index import read_centroids
+from ..exprs import dot, round_col, self_dot
 
 #: query-vector stream schema: an id plus the embedding to probe with
 QUERY_SCHEMA = "qid long, qv array<double>"
@@ -43,9 +43,9 @@ def _chosen_cids(
     (``ann_index.probe_ivf_index``): squared euclidean on driver-side
     metadata, ties to the smaller cid."""
     qd = {
-        cid: _self_dot(cv)
+        cid: self_dot(cv)
         - 2.0 * sum(a * b for a, b in zip(qv, cv))
-        + _self_dot(qv)
+        + self_dot(qv)
         for cid, cv in centroids
     }
     return [cid for cid, _d in sorted(qd.items(), key=lambda kv: (kv[1], kv[0]))][
@@ -81,7 +81,7 @@ def probe_ivf_index_batch(
         "qid long, cid int",
     )
     qdf = spark.createDataFrame(
-        [(qid, qv, float(_self_dot(qv)) ** 0.5) for qid, qv in queries],
+        [(qid, qv, float(self_dot(qv)) ** 0.5) for qid, qv in queries],
         "qid long, qv array<double>, qn double",
     )
     from pyspark.sql import Window

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import swap_in
+from ..exprs import minhash_bands, shingle_hashes
 from ..queries.llm import BAND_BUCKET_CAP
 
 N_HASHES = 8
@@ -37,11 +38,9 @@ def doc_shingles(docs: DataFrame) -> DataFrame:
     toks = docs.select("doc_id", F.split("text", " ").alias("tokens")).filter(
         F.size("tokens") >= 3
     )
-    idx = F.sequence(F.lit(1), F.size("tokens") - 2)
-    hashes = F.transform(
-        idx, lambda i: F.md5(F.concat_ws(" ", F.slice("tokens", i, 3)))
-    )
-    return toks.select("doc_id", F.explode(hashes).alias("shingle")).distinct()
+    return toks.select(
+        "doc_id", F.explode(shingle_hashes("tokens", 3)).alias("shingle")
+    ).distinct()
 
 
 def bands_from_shingles(sh: DataFrame) -> DataFrame:
@@ -51,41 +50,20 @@ def bands_from_shingles(sh: DataFrame) -> DataFrame:
     materialized (localCheckpointed) shingle relation feeds BOTH
     artifacts without re-deriving the shingle pipeline (r13: each
     extra lineage paid tokenize+explode+distinct again)."""
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f":{k}")))).alias(f"h{k}")
-            for k in range(N_HASHES)
-        ]
+    sig, bb = minhash_bands(lambda h: F.min(h(F.col("shingle"))), N_HASHES, N_BANDS)
+    return (
+        sh.groupBy("doc_id")
+        .agg(*sig)
+        .select("doc_id", bb)
+        .select("doc_id", "bb.band", "bb.bucket")
     )
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(F.concat(f"h{2 * bi}", f"h{2 * bi + 1}")).alias(
-                            "bucket"
-                        ),
-                    )
-                    for bi in range(N_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-
-
-def doc_signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(shingles, band rows) for a (doc_id, text) relation."""
-    sh = doc_shingles(docs)
-    return sh, bands_from_shingles(sh)
 
 
 def build_corpus_index(spark: SparkSession, corpus: DataFrame, index_dir: str) -> None:
     """Persist the probe-side artifacts: capped band index, shingle
     sets, and shingle-set sizes. In production this is the corpus
     pipeline's side output, bucketed by (band, bucket) / doc_id."""
-    # r13 (guide §1.1): the shingles table is written ANYWAY, so write
+    # r13: the shingles table is written ANYWAY, so write
     # it FIRST and derive bands + sizes from reading it back — one
     # shingle pipeline pass instead of three (each write is its own
     # job, so the tokenize+explode+distinct lineage re-ran per

@@ -19,7 +19,7 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# Oracle output-type guard (r7 verdict item 2). DuckDB's fetchall
+# Oracle output-type guard (r7). DuckDB's fetchall
 # path silently normalizes HUGEINT/DECIMAL to Python int, so a
 # fetchall-based parity check CANNOT see the bug class that kept the
 # survival family red for three driver rounds: `sum(BIGINT)` returns

@@ -28,7 +28,7 @@ def test_decode_non_png_without_codec_raises(media):
     # Under host contention the action can instead surface a Py4J
     # worker-crash error whose TOP-LEVEL message lacks "codec", so
     # match against the full exception chain (str + causes + java
-    # stack text), not just str(exc) (r8 verdict item 1b).
+    # stack text), not just str(exc).
     def chain_text(exc) -> str:
         parts, seen = [], set()
         while exc is not None and id(exc) not in seen:

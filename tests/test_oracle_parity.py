@@ -89,7 +89,7 @@ def test_oracle_output_type_guard(spark, oracle_con):
     """No oracle may emit HUGEINT/UHUGEINT/DECIMAL, and every Spark
     output column's type category must match its oracle twin.
 
-    Why this exists (r7 verdict item 2): DuckDB `sum(BIGINT)` returns
+    Why this exists (r7): DuckDB `sum(BIGINT)` returns
     HUGEINT. The local fetchall path normalizes HUGEINT to Python int
     (parity looks exact), but the driver's pandas/Arrow fetch renders
     it float64/decimal128 — `150.0` vs Spark's BIGINT `150` — which

@@ -1420,3 +1420,23 @@ def test_similarity_topk_query_norm_on_broadcast_side(spark):
     # the query self-fold zip_with(qv, qv, ...) appears exactly once —
     # in the broadcast side's projection, not the per-row scorer
     assert plan.count("zip_with(qv") == 1, plan.count("zip_with(qv")
+
+
+def test_cdc_codepoints_evaluated_once_under_downstream_operators(spark):
+    """The CDC chain cps -> bpos -> bs references each codepoint array
+    once per window weight and each boundary array several times. If
+    the optimizer inlined those projections into each other, the
+    per-character transform would run once per reference (the shape
+    that once hung the chunk-reconstruction test). With filters and a
+    limit stacked on the operator, the optimized plan must still hold
+    the codepoint transform exactly once."""
+    from pyspark.sql import functions as F
+
+    df = (
+        hds.QUERIES["cdc_chunk_dedup"](spark, SF_DIR)
+        .filter(F.col("n_occ") > 1)
+        .filter(F.col("chunk_len") >= 8)
+        .limit(5)
+    )
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"transform\(sequence\(1, length\(text", plan)) == 1, plan
