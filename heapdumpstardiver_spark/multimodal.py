@@ -3,15 +3,16 @@ columns with typed metadata (100-TB training-pipeline surface).
 
 The Spark-side plumbing — schemas, Arrow-batched `mapInPandas`
 signatures, partition-preserving shapes — is real and tested, and so
-are the IMAGE codecs: built-in stdlib implementations cover 8-bit
-truecolor PNG (all five filters) and the JPEG matrix — baseline
-grayscale, 4:4:4 and 4:2:0 color, DRI/RSTn restart intervals, and
-full progressive (SOF2, spectral selection + successive
-approximation). What remains injected (``decode(decoder=...)``) is
-audio/video and exotic JPEG variants (lossless/hierarchical/
-arithmetic-coded, 16-bit quant tables, sampling factors > 2) — those
-libraries are not in this environment, and an unsupported payload
-raises ``NotImplementedError`` loudly. ``extract_features`` uses a
+are the built-in stdlib codecs: 8-bit truecolor PNG (all five
+filters), PCM16 mono WAV, and the JPEG matrix — baseline/extended
+sequential grayscale, 4:4:4, 4:2:2 and 4:2:0 color, 16-bit quant
+tables, DRI/RSTn restart intervals, full progressive (SOF2, spectral
+selection + successive approximation), lossless (SOF3) and
+arithmetic-coded (SOF9) grayscale — plus the MJPEG container. What
+remains injected (``decode(decoder=...)``) is compressed audio,
+inter-frame video and exotic JPEG variants (hierarchical, sampling
+factors > 2); an unsupported payload raises ``NotImplementedError``
+loudly, and a truncated one raises ``ValueError``. ``extract_features`` uses a
 clearly-marked deterministic fake (bytes → hash → unit vector) where
 a real model would plug in. The surrounding plan is exactly what
 production would run.
@@ -24,6 +25,8 @@ only fixed-width outputs (features, metadata) flow downstream.
 from __future__ import annotations
 
 import hashlib
+import struct
+import zlib
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
@@ -60,12 +63,8 @@ def encode_png(width: int, height: int, rgb: bytes,
     build deterministic image fixtures. By default each scanline
     cycles filter types 0-4 (None/Sub/Up/Average/Paeth) so a decoder
     round-trip exercises every unfilter path in the spec."""
-    import struct
-    import zlib
-
+    _check_fixture(width, height, rgb, 3, 1)
     stride = width * 3
-    if len(rgb) != stride * height:
-        raise ValueError(f"need {stride * height} RGB bytes, got {len(rgb)}")
     raw = bytearray()
     prev = bytes(stride)
     for y in range(height):
@@ -122,19 +121,17 @@ def decode_png(payload: bytes) -> bytes:
     8-bit non-interlaced truecolor (the fixture/export format). All
     five PNG filter types are reconstructed per the spec; anything
     fancier (palette, 16-bit, interlace) still needs an injected
-    codec."""
-    import struct
-    import zlib
-
-    if bytes(payload[:8]) != _PNG_MAGIC:
+    codec. A chunk that runs past the payload end, a missing IEND or
+    corrupt image data raises ``ValueError``."""
+    data = bytes(payload)
+    if data[:8] != _PNG_MAGIC:
         raise ValueError("not a PNG payload")
     pos, idat, w, h = 8, bytearray(), None, None
-    data = bytes(payload)
-    while pos + 8 <= len(data):
-        (ln,) = struct.unpack(">I", data[pos:pos + 4])
-        tag = data[pos + 4:pos + 8]
-        body = data[pos + 8:pos + 8 + ln]
-        pos += 12 + ln
+    while True:
+        end = pos + 12 + int.from_bytes(data[pos:pos + 4], "big")
+        if end > len(data):
+            raise ValueError("PNG chunk runs past the payload end")
+        tag, body, pos = data[pos + 4:pos + 8], data[pos + 8:end - 4], end
         if tag == b"IHDR":
             w, h, depth, ctype, _comp, _filt, inter = struct.unpack(
                 ">IIBBBBB", body
@@ -149,7 +146,10 @@ def decode_png(payload: bytes) -> bytes:
             break
     if w is None:
         raise ValueError("PNG missing IHDR")
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError(f"PNG image data: {e}") from e
     stride = w * 3
     out = bytearray()
     prev = bytes(stride)
@@ -192,8 +192,6 @@ def encode_wav_pcm16(samples: list[int], sample_rate: int = 8000) -> bytes:
     deterministic audio fixtures: 16-bit signed little-endian PCM,
     mono, with a spec-complete ``fmt `` chunk (audio format 1 = PCM,
     block align = 2, byte rate = 2·rate)."""
-    import struct
-
     data = struct.pack(f"<{len(samples)}h", *samples)
     fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     body = (
@@ -212,9 +210,8 @@ def decode_wav(payload: bytes) -> bytes:
     chunks before data), validates 16-bit mono integer PCM, and
     returns the data chunk bytes (little-endian int16 samples).
     Compressed formats (ADPCM, float, mp3-in-wav) still need an
-    injected codec."""
-    import struct
-
+    injected codec; a chunk that runs past the payload end raises
+    ``ValueError``."""
     data = bytes(payload)
     if data[:4] != _WAV_MAGIC or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -222,6 +219,8 @@ def decode_wav(payload: bytes) -> bytes:
     while pos + 8 <= len(data):
         tag = data[pos:pos + 4]
         (ln,) = struct.unpack("<I", data[pos + 4:pos + 8])
+        if pos + 8 + ln > len(data):
+            raise ValueError("WAV chunk runs past the payload end")
         body = data[pos + 8:pos + 8 + ln]
         pos += 8 + ln + (ln & 1)  # chunks are word-aligned
         if tag == b"fmt ":
@@ -239,20 +238,15 @@ def decode_wav(payload: bytes) -> bytes:
 
 
 def _builtin_decoder(payload: bytes) -> bytes:
-    if bytes(payload[:8]) == _PNG_MAGIC:
-        return decode_png(payload)
-    if bytes(payload[:4]) == _WAV_MAGIC:
-        return decode_wav(payload)
-    if bytes(payload[:2]) == _JPEG_MAGIC:
-        data = bytes(payload)
-        sof = _jpeg_sof_marker(data)
-        if sof == 0xFFC3:
-            return _decode_jpeg_lossless(data)
-        if sof == 0xFFC9:
-            return _decode_jpeg_arith(data)
-        if _jpeg_is_progressive(data):
-            return _jpeg_to_pixels(*_decode_jpeg_progressive(data))
-        return _jpeg_to_pixels(*_decode_jpeg(data))
+    data = bytes(payload)
+    if data[:8] == _PNG_MAGIC:
+        return decode_png(data)
+    if data[:4] == _WAV_MAGIC:
+        return decode_wav(data)
+    if data[:2] == _JPEG_MAGIC:
+        return _decode_jpeg_any(data)
+    if any(m.startswith(data) for m in (_PNG_MAGIC, _WAV_MAGIC, _JPEG_MAGIC)):
+        raise ValueError("media payload ends inside its format magic")
     raise NotImplementedError(
         "no built-in codec for this payload format; inject decoder=... "
         "(PNG, PCM16 WAV, and baseline/extended/progressive/lossless/"
@@ -264,11 +258,16 @@ def _builtin_decoder(payload: bytes) -> bytes:
 def decode(df: DataFrame, decoder: Callable | None = None) -> DataFrame:
     """Decode payloads to raw bytes via Arrow-batched ``mapInPandas``.
 
-    PNG payloads decode with the built-in stdlib codec
-    (:func:`decode_png`); other formats need an injected *decoder*
-    (production would supply PIL/libav — those libraries don't ship in
-    this environment, and a non-PNG payload without an injected codec
-    raises ``NotImplementedError`` executor-side)."""
+    The built-in stdlib codecs cover PNG (:func:`decode_png`), PCM16
+    WAV (:func:`decode_wav`) and the JPEG matrix (baseline/extended
+    gray, 4:4:4, 4:2:2 and 4:2:0 color, restart intervals,
+    progressive, lossless, arithmetic — :func:`decode_jpeg_gray` /
+    :func:`decode_jpeg_color`); other formats need an injected
+    *decoder* (production would supply PIL/libav — those libraries
+    don't ship in this environment). Executor-side, a payload outside
+    the built-in surface raises ``NotImplementedError`` and a
+    truncated one (any proper prefix of a supported payload) raises
+    ``ValueError`` — never wrong bytes."""
     if decoder is None:
         decoder = _builtin_decoder
 
@@ -471,15 +470,17 @@ def split_mjpeg_frames(df: DataFrame, decoder: Callable | None = None) -> DataFr
 
 
 # ---------------------------------------------------------------------------
-# Baseline JPEG (grayscale), stdlib-only — the second built-in codec.
+# JPEG, stdlib-only — the second built-in image codec.
 #
-# Same posture as the PNG pair above: encoder builds deterministic
-# fixtures, decoder is the production-plumbing codec behind
-# :func:`decode`. Baseline sequential DCT, single 8-bit component
-# (the reference pipeline's image payloads are opaque anyway; color /
-# progressive / restart markers still need an injected codec, and say
-# so loudly). Huffman tables are carried IN the file (DHT) and the
+# Same posture as the PNG pair above: encoders build deterministic
+# fixtures, decoders are the production-plumbing codec behind
+# :func:`decode`. Huffman tables are carried IN the file (DHT) and the
 # decoder trusts only those, so encoder/decoder share no hidden state.
+# Every encoder writes its segments through one writer (`_seg`,
+# `_frame_header`, `_sos`) and the baseline layouts share one core
+# (`_encode_baseline`); every decoder reads through one segment reader
+# (`_jpeg_segments`) and one table parser (`_jpeg_scans`), and one
+# dispatcher (`_decode_jpeg_any`) routes a payload by its SOF marker.
 # ---------------------------------------------------------------------------
 
 _JPEG_MAGIC = b"\xff\xd8"
@@ -541,6 +542,11 @@ _AC_VALS_C = [
     0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
 
+# DHT segment specs (Tc<<4 | Th, bits, values): table id 0 serves
+# component 0 (luma), id 1 every later component (chroma).
+_LUMA_DHT = [(0x00, _DC_BITS, _DC_VALS), (0x10, _AC_BITS, _AC_VALS)]
+_CHROMA_DHT = [(0x01, _DC_BITS_C, _DC_VALS_C), (0x11, _AC_BITS_C, _AC_VALS_C)]
+
 
 def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """Canonical Huffman assignment per the JPEG spec: value ->
@@ -553,6 +559,13 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
             k += 1
         code <<= 1
     return out
+
+
+# Annex-K (DC codes, AC codes) per table id: 0 luma, 1 chroma
+_ANNEX_K_CODES = [
+    tuple(_huff_codes(bits, vals) for _tcth, bits, vals in dht)
+    for dht in (_LUMA_DHT, _CHROMA_DHT)
+]
 
 
 def _category(v: int) -> int:
@@ -579,6 +592,12 @@ class _BitWriter:
             if byte == 0xFF:  # byte stuffing
                 self.out.append(0x00)
             self.nbits -= 8
+
+    def put_signed(self, code: tuple[int, int], v: int, s: int) -> None:
+        """Huffman *code*, then the *s* magnitude bits of *v* (negative
+        values as v + 2^s - 1, T.81 F.1.2.1)."""
+        self.put(*code)
+        self.put(v if v >= 0 else v + (1 << s) - 1, s)
 
     def flush(self) -> bytes:
         if self.nbits:
@@ -635,23 +654,31 @@ def _idct8x8(coef: list[float]) -> list[float]:
     return out
 
 
+def _quant_zigzag_block(plane, stride: int, ox: int, oy: int) -> list[int]:
+    """FDCT + quantize the level-shifted 8x8 block at (ox, oy) of
+    *plane*; returns its coefficients in zigzag order."""
+    block = [
+        float(plane[(oy + y) * stride + ox + x]) - 128.0
+        for y in range(8)
+        for x in range(8)
+    ]
+    coef = _fdct8x8(block)
+    q = [int(round(coef[i] / _QTABLE[i])) for i in range(64)]
+    return [q[_ZIGZAG[i]] for i in range(64)]
+
+
 def _encode_block(
     w: "_BitWriter",
-    block: list[float],
+    zz: list[int],
     prev_dc: int,
     dc_codes: dict,
     ac_codes: dict,
 ) -> int:
-    """FDCT + quantize + Huffman-code one level-shifted 8x8 block into
-    *w*; returns the new DC predictor for this component's chain."""
-    coef = _fdct8x8(block)
-    q = [int(round(coef[i] / _QTABLE[i])) for i in range(64)]
-    zz = [q[_ZIGZAG[i]] for i in range(64)]
+    """Huffman-code one quantized zigzag block into *w*; returns the
+    new DC predictor for this component's chain."""
     diff = zz[0] - prev_dc
     s = _category(diff)
-    w.put(*dc_codes[s])
-    if s:
-        w.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+    w.put_signed(dc_codes[s], diff, s)
     run = 0
     last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
     for i in range(1, last_nz + 1):
@@ -662,9 +689,7 @@ def _encode_block(
                 run = 0
             continue
         s = _category(zz[i])
-        w.put(*ac_codes[(run << 4) | s])
-        v = zz[i]
-        w.put(v if v >= 0 else v + (1 << s) - 1, s)
+        w.put_signed(ac_codes[(run << 4) | s], zz[i], s)
         run = 0
     if last_nz < 63:
         w.put(*ac_codes[0x00])  # EOB
@@ -696,6 +721,154 @@ def ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
     return clamp(r), clamp(g), clamp(b)
 
 
+def _ycbcr_planes(width: int, height: int, rgb: bytes) -> list[bytearray]:
+    """Full-resolution Y, Cb, Cr planes of interleaved RGB bytes
+    (:func:`rgb_to_ycbcr` per pixel)."""
+    planes = [bytearray(width * height) for _ in range(3)]
+    for i in range(width * height):
+        y, cb, cr = rgb_to_ycbcr(rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
+        planes[0][i], planes[1][i], planes[2][i] = y, cb, cr
+    return planes
+
+
+def _box_downsample(plane, width: int, height: int, sx: int, sy: int) -> bytearray:
+    """Subsample a plane by *sx* x *sy* box averages with half-up
+    integer rounding, ``(sum + n//2) // n`` for n = sx*sy."""
+    cw, n = width // sx, sx * sy
+    out = bytearray(cw * (height // sy))
+    for i in range(len(out)):
+        ox, oy = (i % cw) * sx, (i // cw) * sy
+        s = sum(
+            plane[(oy + dy) * width + ox + dx]
+            for dy in range(sy)
+            for dx in range(sx)
+        )
+        out[i] = (s + n // 2) // n
+    return out
+
+
+def _check_fixture(
+    width: int, height: int, data: bytes, channels: int, mult: int = 8
+) -> None:
+    """Argument checks shared by the fixture encoders: dims a multiple
+    of *mult* and exactly width*height*channels input bytes."""
+    if width % mult or height % mult:
+        raise ValueError(f"fixture encoder requires multiple-of-{mult} dims")
+    n = width * height * channels
+    if len(data) != n:
+        rgb = "RGB " if channels == 3 else ""
+        raise ValueError(f"need {n} {rgb}bytes, got {len(data)}")
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: marker, 2-byte length (counting itself), body."""
+    return struct.pack(">HH", marker, len(body) + 2) + body
+
+
+def _frame_header(
+    sof: int,
+    width: int,
+    height: int,
+    samp: list[int],
+    dht: list[tuple[int, list[int], list[int]]],
+    dqt: bool = True,
+    quant16: bool = False,
+    restart_interval: int = 0,
+) -> bytes:
+    """The segments between SOI and the first SOS: DQT (one copy of
+    :data:`_QTABLE` per table id in use, 16-bit entries under
+    *quant16*), SOFn, one DHT segment per ``(TcTh, bits, values)`` in
+    *dht*, and DRI when *restart_interval* is nonzero. Component i+1
+    samples at ``samp[i]`` (the H<<4 | V byte) and uses quant table
+    ``min(i, 1)``."""
+    out = b""
+    for tq in range(min(len(samp), 2) if dqt else 0):
+        if quant16:
+            entries = b"".join(struct.pack(">H", _QTABLE[z]) for z in _ZIGZAG)
+        else:
+            entries = bytes(_QTABLE[z] for z in _ZIGZAG)
+        out += _seg(0xFFDB, bytes([(quant16 << 4) | tq]) + entries)
+    body = struct.pack(">BHHB", 8, height, width, len(samp))
+    for ci, s in enumerate(samp):
+        body += bytes([ci + 1, s, min(ci, 1)])
+    out += _seg(sof, body)
+    for tcth, bits, vals in dht:
+        out += _seg(0xFFC4, bytes([tcth]) + bytes(bits) + bytes(vals))
+    if restart_interval:
+        out += _seg(0xFFDD, struct.pack(">H", restart_interval))
+    return out
+
+
+def _sos(comps, ss: int, se: int, ahal: int) -> bytes:
+    """SOS segment for component indices *comps* (table ids as in
+    :func:`_frame_header`), spectral band *ss*..*se*, Ah<<4 | Al."""
+    body = bytes([len(comps)])
+    for ci in comps:
+        t = min(ci, 1)
+        body += bytes([ci + 1, (t << 4) | t])
+    return _seg(0xFFDA, body + bytes([ss, se, ahal]))
+
+
+def _encode_baseline(
+    width: int,
+    height: int,
+    planes: list,
+    samp: list[int],
+    restart_interval: int = 0,
+    quant16: bool = False,
+) -> bytes:
+    """Baseline sequential Huffman encoder core behind every baseline
+    layout. Component i is ``planes[i]`` (stride: its own width),
+    sampled at ``samp[i]`` (H<<4 | V) and coded with the Annex-K
+    luminance tables for i == 0, the chrominance tables otherwise;
+    each MCU interleaves every component's V x H blocks in raster
+    order, one DC predictor chain per component. A nonzero
+    *restart_interval* emits a DRI segment and RSTn markers every
+    that many MCUs (padded, predictors reset). *quant16* writes the
+    quant table with 16-bit entries (Pq=1) under SOF1 — extended
+    sequential Huffman, the frame type that permits 16-bit tables;
+    its entropy coding is identical to baseline."""
+    hmax = max(s >> 4 for s in samp)
+    vmax = max(s & 0xF for s in samp)
+    w = _BitWriter()
+    prev = [0] * len(planes)
+    mcu = 0
+    for my in range(height // (8 * vmax)):
+        for mx in range(width // (8 * hmax)):
+            if restart_interval and mcu and mcu % restart_interval == 0:
+                w.restart_marker((mcu // restart_interval - 1) % 8)
+                prev = [0] * len(planes)
+            mcu += 1
+            for ci, (plane, s) in enumerate(zip(planes, samp)):
+                hi, vi = s >> 4, s & 0xF
+                for bv in range(vi):  # V x H blocks, raster order in MCU
+                    for bh in range(hi):
+                        zz = _quant_zigzag_block(
+                            plane,
+                            width * hi // hmax,
+                            (mx * hi + bh) * 8,
+                            (my * vi + bv) * 8,
+                        )
+                        prev[ci] = _encode_block(
+                            w, zz, prev[ci], *_ANNEX_K_CODES[min(ci, 1)]
+                        )
+    return (
+        _JPEG_MAGIC
+        + _frame_header(
+            0xFFC1 if quant16 else 0xFFC0,
+            width,
+            height,
+            samp,
+            _LUMA_DHT + (_CHROMA_DHT if len(planes) > 1 else []),
+            quant16=quant16,
+            restart_interval=restart_interval,
+        )
+        + _sos(range(len(planes)), 0, 63, 0)
+        + w.flush()
+        + b"\xff\xd9"
+    )
+
+
 def encode_jpeg_gray(
     width: int,
     height: int,
@@ -712,63 +885,63 @@ def encode_jpeg_gray(
     on — while non-flat blocks exercise the full AC path. A nonzero
     *restart_interval* emits a DRI segment and RSTn markers every
     that many MCUs (padded, predictors reset) — the re-sync chunking
-    real encoders use for error resilience / parallel decode."""
-    import struct
+    real encoders use for error resilience / parallel decode.
+    *quant16* writes a 16-bit quant table under SOF1."""
+    _check_fixture(width, height, gray, 1)
+    return _encode_baseline(width, height, [gray], [0x11], restart_interval, quant16)
 
-    if width % 8 or height % 8:
-        raise ValueError("fixture encoder requires multiple-of-8 dims")
-    if len(gray) != width * height:
-        raise ValueError(f"need {width * height} bytes, got {len(gray)}")
 
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
-    ac_codes = _huff_codes(_AC_BITS, _AC_VALS)
-    w = _BitWriter()
-    prev_dc = 0
-    mcu_done = 0
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            if restart_interval and mcu_done and mcu_done % restart_interval == 0:
-                w.restart_marker((mcu_done // restart_interval - 1) % 8)
-                prev_dc = 0
-            mcu_done += 1
-            block = [
-                float(gray[(by * 8 + y) * width + bx * 8 + x]) - 128.0
-                for y in range(8)
-                for x in range(8)
-            ]
-            prev_dc = _encode_block(w, block, prev_dc, dc_codes, ac_codes)
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    if quant16:
-        # Pq=1 DQT (16-bit big-endian entries) + SOF1 (extended
-        # sequential Huffman — the frame type that permits 16-bit
-        # tables; its entropy coding is identical to baseline).
-        dqt = seg(
-            0xFFDB,
-            bytes([0x10])
-            + b"".join(
-                struct.pack(">H", _QTABLE[_ZIGZAG[i]]) for i in range(64)
-            ),
-        )
-        sof = seg(
-            0xFFC1, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
-        )
-    else:
-        dqt = seg(0xFFDB, bytes([0]) + bytes(_QTABLE[_ZIGZAG[i]] for i in range(64)))
-        sof = seg(0xFFC0, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    dht = seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS)) + seg(
-        0xFFC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS)
+def encode_jpeg_color(width: int, height: int, rgb: bytes) -> bytes:
+    """Baseline sequential JPEG encoder for 4:4:4 YCbCr color (three
+    8-bit components, no subsampling; dims must be multiples of 8).
+    JFIF forward transform via :func:`rgb_to_ycbcr`, then per MCU the
+    Y, Cb, Cr blocks are Huffman-interleaved — luminance tables (id 0)
+    for Y, Annex-K chrominance tables (id 1) for Cb/Cr, separate DC
+    predictors per component, two DQT segments — the full baseline
+    color surface minus subsampling. Flat blocks whose (Y, Cb, Cr)
+    are all EVEN reconstruct exactly under the step-16 quantizer, the
+    property `multimodal_jpeg_color_decode` leans on."""
+    _check_fixture(width, height, rgb, 3)
+    return _encode_baseline(
+        width, height, _ycbcr_planes(width, height, rgb), [0x11, 0x11, 0x11]
     )
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
+
+
+def encode_jpeg_422(width: int, height: int, rgb: bytes) -> bytes:
+    """Baseline sequential JPEG encoder for 4:2:2 YCbCr (chroma
+    halved horizontally only; dims must be multiples of 16 for MCU
+    alignment). One MCU = two Y blocks side by side + one Cb + one
+    Cr; chroma downsampling is a horizontal 2-pixel box average with
+    half-up integer rounding, and the decoder's factor-ratio sampling
+    replicates it back. 16x16-flat even-YCbCr MCUs round-trip
+    exactly, like the other layouts — exercised by pytest and by the
+    oracle-paired `multimodal_jpeg_422_decode`; this layout completes
+    the sampling-factor matrix {1,2}x{1,2} the decoder accepts."""
+    _check_fixture(width, height, rgb, 3, 16)
+    y, cb, cr = _ycbcr_planes(width, height, rgb)
+    chroma = [_box_downsample(p, width, height, 2, 1) for p in (cb, cr)]
+    return _encode_baseline(width, height, [y, *chroma], [0x21, 0x11, 0x11])
+
+
+def encode_jpeg_420(
+    width: int, height: int, rgb: bytes, restart_interval: int = 0
+) -> bytes:
+    """Baseline sequential JPEG encoder for 4:2:0 subsampled YCbCr
+    (dims must be multiples of 16 — one MCU = four Y blocks + one Cb
+    + one Cr). Chroma planes are box-downsampled 2x2 with half-up
+    integer averaging (floor((a+b+c+d+2)/4)); the decoder upsamples
+    by replication, so a 16x16-flat MCU whose (Y, Cb, Cr) are all
+    EVEN round-trips exactly — the `multimodal_jpeg_420_decode`
+    oracle invariant. Everything else (tables, predictors, quality)
+    matches :func:`encode_jpeg_color`. A nonzero *restart_interval*
+    emits DRI + RSTn every that many MCUs with all three DC
+    predictors reset."""
+    _check_fixture(width, height, rgb, 3, 16)
+    y, cb, cr = _ycbcr_planes(width, height, rgb)
+    chroma = [_box_downsample(p, width, height, 2, 2) for p in (cb, cr)]
+    return _encode_baseline(
+        width, height, [y, *chroma], [0x22, 0x11, 0x11], restart_interval
     )
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return _JPEG_MAGIC + dqt + sof + dht + dri + sos + scan + b"\xff\xd9"
 
 
 # ---------------------------------------------------------------------------
@@ -818,14 +991,11 @@ def encode_jpeg_lossless(
     a DC coefficient — category via the Huffman table, then category
     magnitude bits. No DCT, no quant tables; decode reproduces the
     input byte-for-byte (pinned by pytest)."""
-    import struct
-
-    if len(gray) != width * height:
-        raise ValueError(f"need {width * height} bytes, got {len(gray)}")
+    _check_fixture(width, height, gray, 1, 1)
     if not 1 <= predictor <= 7:
         raise ValueError("predictor must be 1-7")
 
-    dc_codes = _huff_codes(_DC_BITS, _DC_VALS)
+    dc_codes = _ANNEX_K_CODES[0][0]
     w = _BitWriter()
     recon = bytearray(gray)  # lossless: reconstruction == source
     for y in range(height):
@@ -835,358 +1005,152 @@ def encode_jpeg_lossless(
             if diff >= 32768:
                 diff -= 65536
             cat = _category(diff)
-            code, ln = dc_codes[cat]
-            w.put(code, ln)
-            if cat:
-                v = diff if diff >= 0 else diff + (1 << cat) - 1
-                w.put(v & ((1 << cat) - 1), cat)
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    sof = seg(0xFFC3, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    dht = seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    # SOS for lossless: Ss = predictor selector, Se = 0, AhAl = 0
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, predictor, 0, 0]))
-    return _JPEG_MAGIC + sof + dht + sos + scan + b"\xff\xd9"
+            w.put_signed(dc_codes[cat], diff, cat)
+    return (
+        _JPEG_MAGIC
+        + _frame_header(0xFFC3, width, height, [0x11], _LUMA_DHT[:1], dqt=False)
+        # SOS for lossless: Ss = predictor selector, Se = 0, AhAl = 0
+        + _sos([0], predictor, 0, 0)
+        + w.flush()
+        + b"\xff\xd9"
+    )
 
 
-def _decode_jpeg_lossless(payload: bytes) -> bytes:
-    """Lossless JPEG (SOF3) decode to raw 8-bit grayscale bytes:
-    Huffman-decode each residual category + magnitude bits, _extend to
-    the signed difference, add the selected prediction mod 2^16."""
-    import struct
+# ---------------------------------------------------------------------------
+# Decoding: one segment reader, one table parser, one dispatcher.
+# ---------------------------------------------------------------------------
 
-    data = bytes(payload)
+_SOF_MARKERS = frozenset(range(0xFFC0, 0xFFD0)) - {0xFFC4, 0xFFC8, 0xFFCC}
+
+
+def _scan_end(data: bytes, pos: int) -> int:
+    """Offset of the marker that ends the entropy-coded data starting
+    at *pos*: the first 0xFF not followed by a stuffed 0x00 or an RSTn
+    code. A scan with no such marker runs past the payload end."""
+    while True:
+        pos = data.find(b"\xff", pos)
+        if pos < 0 or pos + 1 >= len(data):
+            raise ValueError("JPEG scan runs past the payload end")
+        if data[pos + 1] != 0x00 and not 0xD0 <= data[pos + 1] <= 0xD7:
+            return pos
+        pos += 2
+
+
+def _jpeg_segments(data: bytes) -> Iterator[tuple[int, bytes, bytes]]:
+    """The JPEG segment reader every decoder shares: walk *data* from
+    SOI to EOI, yielding ``(marker, body, scan)`` per marker segment,
+    where *scan* is the entropy-coded data an SOS segment opens (RSTn
+    markers included) and ``b""`` for every other segment. A segment
+    or scan that runs past the payload end — a cut payload — raises
+    ``ValueError``, so it can never decode to wrong bytes."""
     if data[:2] != _JPEG_MAGIC:
         raise ValueError("not a JPEG payload")
     pos = 2
-    htables: dict[int, object] = {}
-    w = h = None
-    predictor = None
-    scan_start = None
-    dc_read = None
-    while pos + 4 <= len(data):
+    while True:
+        if pos + 2 > len(data):
+            raise ValueError("JPEG payload ends before EOI")
         if data[pos] != 0xFF:
             raise ValueError("bad JPEG marker alignment")
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
+        marker = (data[pos] << 8) | data[pos + 1]
         if marker == 0xFFD9:
-            break
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + ln]
-        pos += 2 + ln
-        if marker == 0xFFC3:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "stdlib lossless JPEG covers one 8-bit component"
-                )
+            return
+        end = pos + 2 + int.from_bytes(data[pos + 2:pos + 4], "big")
+        if pos + 4 > len(data) or end > len(data):
+            raise ValueError("JPEG segment runs past the payload end")
+        body, pos, scan = data[pos + 4:end], end, b""
+        if marker == 0xFFDA:
+            pos = _scan_end(data, end)
+            scan = data[end:pos]
+        yield marker, body, scan
+
+
+class _JpegFrame:
+    """What a decoder has read of a JPEG header so far: SOFn marker,
+    dims, components ``(id, h, v, tq)``, quant tables in natural order
+    by id, Huffman readers by ``(class, id)``, restart interval."""
+
+    def __init__(self) -> None:
+        self.sof: int | None = None
+        self.w = self.h = 0
+        self.comps: list[tuple[int, int, int, int]] = []
+        self.q: dict[int, list[int]] = {}
+        self.huff: dict[tuple[int, int], Callable] = {}
+        self.restart = 0
+
+
+def _jpeg_scans(data: bytes) -> Iterator[tuple[_JpegFrame, bytes, bytes]]:
+    """The JPEG table parser every decoder shares: fold the DQT
+    (8- or 16-bit entries), DHT, DRI and SOFn segments into one
+    :class:`_JpegFrame` and yield ``(frame, sos_body, scan)`` per
+    scan. A frame beyond the built-in surface (not 8-bit, not 1 or 3
+    components, a sampling factor above 2) raises
+    ``NotImplementedError``."""
+    f = _JpegFrame()
+    for marker, body, scan in _jpeg_segments(data):
+        if marker == 0xFFDB:
+            o = 0
+            while o < len(body):
+                pq, tq = body[o] >> 4, body[o] & 0xF
+                if pq == 0:  # 8-bit entries
+                    zz = body[o + 1:o + 65]
+                else:  # Pq=1: 16-bit big-endian entries (extended seq.)
+                    zz = struct.unpack(">64H", body[o + 1:o + 129])
+                t = [0] * 64
+                for i in range(64):
+                    t[_ZIGZAG[i]] = zz[i]
+                f.q[tq] = t
+                o += 129 if pq else 65
         elif marker == 0xFFC4:
             o = 0
             while o < len(body):
-                tc, th = body[o] >> 4, body[o] & 0xF
                 bits = list(body[o + 1:o + 17])
                 n = sum(bits)
                 vals = list(body[o + 17:o + 17 + n])
-                htables[th] = _huff_decoder(bits, vals)
+                f.huff[(body[o] >> 4, body[o] & 0xF)] = _huff_decoder(bits, vals)
                 o += 17 + n
+        elif marker == 0xFFDD:
+            (f.restart,) = struct.unpack(">H", body[:2])
+        elif marker in _SOF_MARKERS:
+            prec, f.h, f.w, ncomp = struct.unpack(">BHHB", body[:6])
+            if prec != 8 or ncomp not in (1, 3):
+                raise NotImplementedError(
+                    "built-in codec covers 8-bit 1- or 3-component JPEG only"
+                )
+            for ci in range(ncomp):
+                cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
+                hi, vi = samp >> 4, samp & 0xF
+                if hi not in (1, 2) or vi not in (1, 2):
+                    raise NotImplementedError(
+                        "sampling factors beyond 2 need an injected codec"
+                    )
+                f.comps.append((cid, hi, vi, tq))
+            f.sof = marker
         elif marker == 0xFFDA:
-            ns = body[0]
-            if ns != 1:
-                raise NotImplementedError("one-component lossless scan only")
-            dc_read = htables[body[2] >> 4]
-            predictor = body[3]  # Ss field selects the predictor
-            scan_start = pos
-            break
-    if w is None or scan_start is None or predictor is None:
-        raise ValueError("lossless JPEG missing SOF3/SOS")
-    r = _BitReader(data[scan_start:])
-    recon = bytearray(w * h)
-    for y in range(h):
-        for x in range(w):
-            s = dc_read(r)
-            diff = 32768 if s == 16 else (_extend(r.bits(s), s) if s else 0)
-            px = _lossless_predict(recon, w, x, y, predictor)
-            recon[y * w + x] = (px + diff) & 0xFF
-    return bytes(recon)
+            if f.sof is None:
+                raise ValueError("JPEG scan before its SOF")
+            yield f, body, scan
 
 
 def _jpeg_sof_marker(data: bytes) -> int | None:
-    """Walk segment headers up to the first SOS; return the SOFn
-    marker encountered (None if none before SOS/EOI)."""
-    import struct
-
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return None
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
-        if 0xFFC0 <= marker <= 0xFFCF and marker not in (0xFFC4, 0xFFC8, 0xFFCC):
+    """The SOFn marker before the first scan (None if there is none)."""
+    for marker, _body, _scan in _jpeg_segments(data):
+        if marker in _SOF_MARKERS:
             return marker
-        if marker in (0xFFDA, 0xFFD9):
+        if marker == 0xFFDA:
             return None
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        pos += 2 + ln
     return None
 
 
-def encode_jpeg_color(width: int, height: int, rgb: bytes) -> bytes:
-    """Baseline sequential JPEG encoder for 4:4:4 YCbCr color (three
-    8-bit components, no subsampling; dims must be multiples of 8).
-    JFIF forward transform via :func:`rgb_to_ycbcr`, then per MCU the
-    Y, Cb, Cr blocks are Huffman-interleaved — luminance tables (id 0)
-    for Y, Annex-K chrominance tables (id 1) for Cb/Cr, separate DC
-    predictors per component, two DQT segments — the full baseline
-    color surface minus subsampling. Flat blocks whose (Y, Cb, Cr)
-    are all EVEN reconstruct exactly under the step-16 quantizer, the
-    property `multimodal_jpeg_color_decode` leans on."""
-    import struct
-
-    if width % 8 or height % 8:
-        raise ValueError("fixture encoder requires multiple-of-8 dims")
-    if len(rgb) != width * height * 3:
-        raise ValueError(f"need {width * height * 3} RGB bytes, got {len(rgb)}")
-
-    planes = [bytearray(width * height) for _ in range(3)]
-    for i in range(width * height):
-        y, cb, cr = rgb_to_ycbcr(rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-        planes[0][i], planes[1][i], planes[2][i] = y, cb, cr
-
-    luma = (_huff_codes(_DC_BITS, _DC_VALS), _huff_codes(_AC_BITS, _AC_VALS))
-    chroma = (
-        _huff_codes(_DC_BITS_C, _DC_VALS_C),
-        _huff_codes(_AC_BITS_C, _AC_VALS_C),
-    )
-    comp_codes = [luma, chroma, chroma]
-    w = _BitWriter()
-    prev_dc = [0, 0, 0]
-    for by in range(height // 8):
-        for bx in range(width // 8):
-            for ci in range(3):
-                plane = planes[ci]
-                block = [
-                    float(plane[(by * 8 + y) * width + bx * 8 + x]) - 128.0
-                    for y in range(8)
-                    for x in range(8)
-                ]
-                dc_codes, ac_codes = comp_codes[ci]
-                prev_dc[ci] = _encode_block(
-                    w, block, prev_dc[ci], dc_codes, ac_codes
-                )
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    zz_q = bytes(_QTABLE[_ZIGZAG[i]] for i in range(64))
-    dqt = seg(0xFFDB, bytes([0x00]) + zz_q) + seg(0xFFDB, bytes([0x01]) + zz_q)
-    # components: (id, sampling 1x1, quant table) — Y->q0, Cb/Cr->q1
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht = (
-        seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-        + seg(0xFFC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS))
-        + seg(0xFFC4, bytes([0x01]) + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-        + seg(0xFFC4, bytes([0x11]) + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return _JPEG_MAGIC + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def encode_jpeg_422(width: int, height: int, rgb: bytes) -> bytes:
-    """Baseline sequential JPEG encoder for 4:2:2 YCbCr (chroma
-    halved horizontally only; dims must be multiples of 16 for MCU
-    alignment). One MCU = two Y blocks side by side + one Cb + one
-    Cr; chroma downsampling is a horizontal 2-pixel box average with
-    half-up integer rounding, and the decoder's factor-ratio sampling
-    replicates it back. 16x16-flat even-YCbCr MCUs round-trip
-    exactly, like the other layouts — exercised by pytest; the
-    registered oracle queries cover gray/4:4:4/4:2:0/progressive, and
-    this layout completes the sampling-factor matrix {1,2}x{1,2} the
-    decoder accepts."""
-    import struct
-
-    if width % 16 or height % 16:
-        raise ValueError("fixture encoder requires multiple-of-16 dims")
-    if len(rgb) != width * height * 3:
-        raise ValueError(f"need {width * height * 3} RGB bytes, got {len(rgb)}")
-
-    yp = bytearray(width * height)
-    cw = width // 2
-    cbp, crp = bytearray(cw * height), bytearray(cw * height)
-    cbs = [[0] * width for _ in range(height)]
-    crs = [[0] * width for _ in range(height)]
-    for yy in range(height):
-        for xx in range(width):
-            i = 3 * (yy * width + xx)
-            y, cb, cr = rgb_to_ycbcr(rgb[i], rgb[i + 1], rgb[i + 2])
-            yp[yy * width + xx] = y
-            cbs[yy][xx], crs[yy][xx] = cb, cr
-    for yy in range(height):
-        for cx in range(cw):
-            for src, dst in ((cbs, cbp), (crs, crp)):
-                s = src[yy][2 * cx] + src[yy][2 * cx + 1]
-                dst[yy * cw + cx] = (s + 1) // 2
-
-    luma = (_huff_codes(_DC_BITS, _DC_VALS), _huff_codes(_AC_BITS, _AC_VALS))
-    chroma = (
-        _huff_codes(_DC_BITS_C, _DC_VALS_C),
-        _huff_codes(_AC_BITS_C, _AC_VALS_C),
-    )
-
-    def block(plane, stride, ox, oy):
-        return [
-            float(plane[(oy + y) * stride + ox + x]) - 128.0
-            for y in range(8)
-            for x in range(8)
-        ]
-
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(height // 8):
-        for mx in range(width // 16):
-            for bh_i in range(2):  # two Y blocks per MCU, left to right
-                prev[0] = _encode_block(
-                    w, block(yp, width, mx * 16 + bh_i * 8, my * 8), prev[0], *luma
-                )
-            prev[1] = _encode_block(
-                w, block(cbp, cw, mx * 8, my * 8), prev[1], *chroma
-            )
-            prev[2] = _encode_block(
-                w, block(crp, cw, mx * 8, my * 8), prev[2], *chroma
-            )
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    zz_q = bytes(_QTABLE[_ZIGZAG[i]] for i in range(64))
-    dqt = seg(0xFFDB, bytes([0x00]) + zz_q) + seg(0xFFDB, bytes([0x01]) + zz_q)
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x21, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht = (
-        seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-        + seg(0xFFC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS))
-        + seg(0xFFC4, bytes([0x01]) + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-        + seg(0xFFC4, bytes([0x11]) + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return _JPEG_MAGIC + dqt + sof + dht + sos + scan + b"\xff\xd9"
-
-
-def encode_jpeg_420(
-    width: int, height: int, rgb: bytes, restart_interval: int = 0
-) -> bytes:
-    """Baseline sequential JPEG encoder for 4:2:0 subsampled YCbCr
-    (dims must be multiples of 16 — one MCU = four Y blocks + one Cb
-    + one Cr). Chroma planes are box-downsampled 2x2 with half-up
-    integer averaging (floor((a+b+c+d+2)/4)); the decoder upsamples
-    by replication, so a 16x16-flat MCU whose (Y, Cb, Cr) are all
-    EVEN round-trips exactly — the `multimodal_jpeg_420_decode`
-    oracle invariant. Everything else (tables, predictors, quality)
-    matches :func:`encode_jpeg_color`. A nonzero *restart_interval*
-    emits DRI + RSTn every that many MCUs with all three DC
-    predictors reset."""
-    import struct
-
-    if width % 16 or height % 16:
-        raise ValueError("fixture encoder requires multiple-of-16 dims")
-    if len(rgb) != width * height * 3:
-        raise ValueError(f"need {width * height * 3} RGB bytes, got {len(rgb)}")
-
-    yp = bytearray(width * height)
-    cw, chh = width // 2, height // 2
-    cbp, crp = bytearray(cw * chh), bytearray(cw * chh)
-    cbs = [[0] * width for _ in range(height)]
-    crs = [[0] * width for _ in range(height)]
-    for yy in range(height):
-        for xx in range(width):
-            i = 3 * (yy * width + xx)
-            y, cb, cr = rgb_to_ycbcr(rgb[i], rgb[i + 1], rgb[i + 2])
-            yp[yy * width + xx] = y
-            cbs[yy][xx], crs[yy][xx] = cb, cr
-    for cy in range(chh):
-        for cx in range(cw):
-            for src, dst in ((cbs, cbp), (crs, crp)):
-                s = (
-                    src[2 * cy][2 * cx]
-                    + src[2 * cy][2 * cx + 1]
-                    + src[2 * cy + 1][2 * cx]
-                    + src[2 * cy + 1][2 * cx + 1]
-                )
-                dst[cy * cw + cx] = (s + 2) // 4
-
-    luma = (_huff_codes(_DC_BITS, _DC_VALS), _huff_codes(_AC_BITS, _AC_VALS))
-    chroma = (
-        _huff_codes(_DC_BITS_C, _DC_VALS_C),
-        _huff_codes(_AC_BITS_C, _AC_VALS_C),
-    )
-
-    def block(plane, stride, ox, oy):
-        return [
-            float(plane[(oy + y) * stride + ox + x]) - 128.0
-            for y in range(8)
-            for x in range(8)
-        ]
-
-    w = _BitWriter()
-    prev = [0, 0, 0]
-    mcu_done = 0
-    for my in range(height // 16):
-        for mx in range(width // 16):
-            if restart_interval and mcu_done and mcu_done % restart_interval == 0:
-                w.restart_marker((mcu_done // restart_interval - 1) % 8)
-                prev = [0, 0, 0]
-            mcu_done += 1
-            for bv in range(2):  # four Y blocks, raster order in MCU
-                for bh in range(2):
-                    prev[0] = _encode_block(
-                        w,
-                        block(yp, width, mx * 16 + bh * 8, my * 16 + bv * 8),
-                        prev[0],
-                        *luma,
-                    )
-            prev[1] = _encode_block(
-                w, block(cbp, cw, mx * 8, my * 8), prev[1], *chroma
-            )
-            prev[2] = _encode_block(
-                w, block(crp, cw, mx * 8, my * 8), prev[2], *chroma
-            )
-    scan = w.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    zz_q = bytes(_QTABLE[_ZIGZAG[i]] for i in range(64))
-    dqt = seg(0xFFDB, bytes([0x00]) + zz_q) + seg(0xFFDB, bytes([0x01]) + zz_q)
-    sof = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, width, 3)
-        + bytes([1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    dht = (
-        seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-        + seg(0xFFC4, bytes([0x10]) + bytes(_AC_BITS) + bytes(_AC_VALS))
-        + seg(0xFFC4, bytes([0x01]) + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-        + seg(0xFFC4, bytes([0x11]) + bytes(_AC_BITS_C) + bytes(_AC_VALS_C))
-    )
-    dri = (
-        seg(0xFFDD, struct.pack(">H", restart_interval))
-        if restart_interval
-        else b""
-    )
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    return _JPEG_MAGIC + dqt + sof + dht + dri + sos + scan + b"\xff\xd9"
+def _jpeg_is_progressive(data: bytes) -> bool:
+    """True iff the payload's frame is progressive (SOF2)."""
+    return _jpeg_sof_marker(bytes(data)) == 0xFFC2
 
 
 class _BitReader:
+    """MSB-first reader over one scan's entropy-coded bytes: stuffed
+    0xFF00 pairs read as 0xFF, RSTn markers are consumed only by
+    :meth:`expect_restart`."""
+
     def __init__(self, data: bytes) -> None:
         self.data = data
         self.pos = 0
@@ -1195,19 +1159,16 @@ class _BitReader:
 
     def bit(self) -> int:
         if self.nbits == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG scan data truncated")
-            b = self.data[self.pos]
+            # past the end of the scan is the marker that ends it
+            b = self.data[self.pos] if self.pos < len(self.data) else None
             self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else None
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    raise NotImplementedError(
-                        "unexpected marker inside entropy-coded data "
-                        "(progressive JPEG / desynced restart) — inject a codec"
-                    )
+            if b == 0xFF and self.data[self.pos:self.pos + 1] == b"\x00":
+                self.pos += 1  # stuffed byte
+            elif b is None or b == 0xFF:
+                raise NotImplementedError(
+                    "unexpected marker inside entropy-coded data "
+                    "(progressive JPEG / desynced restart) — inject a codec"
+                )
             self.acc = b
             self.nbits = 8
         self.nbits -= 1
@@ -1259,273 +1220,43 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _decode_jpeg(
-    payload: bytes,
-) -> tuple[int, int, list[bytearray], list[tuple[int, int]], int]:
-    """Pure-stdlib baseline JPEG decode to per-component 8-bit planes.
-    Covers baseline sequential DCT, 1 component (grayscale) or 3
-    YCbCr components with sampling factors in {1, 2} — i.e. 4:4:4
-    AND 4:2:0/4:2:2-style subsampling — plus DRI/RSTn restart
-    intervals (predictor reset + byte re-sync at each boundary);
-    progressive payloads raise ``NotImplementedError`` and need an
-    injected codec. All tables come from the file's own DQT/DHT
-    segments; nothing is assumed about the encoder.
-
-    Returns ``(w, h, planes, factors, mcux)`` where each plane is a
-    block-padded buffer of stride ``mcux * h_i * 8`` (callers index
-    subsampled planes through the factor ratios)."""
-    import struct
-
-    data = bytes(payload)
-    if data[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], object] = {}
-    w = h = None
-    comps: list[tuple[int, int, int, int]] = []  # (id, hi, vi, quant id)
-    scan: list[tuple[int, object, object]] = []  # (comp index, dc, ac)
-    scan_start = None
-    restart_interval = 0
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
-        if marker == 0xFFD9:
+def _decode_jpeg_lossless(payload: bytes) -> bytes:
+    """Lossless JPEG (SOF3) decode to raw 8-bit grayscale bytes:
+    Huffman-decode each residual category + magnitude bits, _extend to
+    the signed difference, add the selected prediction mod 2^16."""
+    for f, sos, scan in _jpeg_scans(bytes(payload)):
+        if f.sof != 0xFFC3:
             break
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + ln]
-        pos += 2 + ln
-        if marker == 0xFFDB:
-            o = 0
-            while o < len(body):
-                pq, tq = body[o] >> 4, body[o] & 0xF
-                if pq == 0:  # 8-bit entries
-                    zz = list(body[o + 1:o + 65])
-                    o += 65
-                else:  # Pq=1: 16-bit big-endian entries (extended seq.)
-                    zz = [
-                        struct.unpack(">H", body[o + 1 + 2 * i:o + 3 + 2 * i])[0]
-                        for i in range(64)
-                    ]
-                    o += 129
-                t = [0] * 64
-                for i in range(64):
-                    t[_ZIGZAG[i]] = zz[i]
-                qtables[tq] = t
-        elif marker in (0xFFC2, 0xFFC3, 0xFFC5, 0xFFC6, 0xFFC7,
-                        0xFFC9, 0xFFCA, 0xFFCB, 0xFFCD, 0xFFCE, 0xFFCF):
+        if len(f.comps) != 1:
             raise NotImplementedError(
-                "sequential Huffman JPEG (SOF0/SOF1) decodes here; "
-                "progressive/lossless route via the dispatcher"
+                "stdlib lossless JPEG covers one 8-bit component"
             )
-        elif marker in (0xFFC0, 0xFFC1):
-            # SOF1 (extended sequential, Huffman) differs from SOF0
-            # only in the ranges it permits (16-bit quant tables);
-            # the decode path is identical.
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "built-in codec covers 8-bit 1- or 3-component JPEG only"
-                )
-            for ci in range(ncomp):
-                cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise NotImplementedError(
-                        "sampling factors beyond 2 need an injected codec"
-                    )
-                comps.append((cid, hi, vi, tq))
-        elif marker == 0xFFC4:
-            o = 0
-            while o < len(body):
-                tc, th = body[o] >> 4, body[o] & 0xF
-                bits = list(body[o + 1:o + 17])
-                n = sum(bits)
-                vals = list(body[o + 17:o + 17 + n])
-                htables[(tc, th)] = _huff_decoder(bits, vals)
-                o += 17 + n
-        elif marker == 0xFFDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xFFDA:
-            ns = body[0]
-            if ns != len(comps):
-                raise NotImplementedError(
-                    "multi-scan JPEG needs an injected codec"
-                )
-            ids = [c[0] for c in comps]
-            for si in range(ns):
-                cs, tda = body[1 + 2 * si], body[2 + 2 * si]
-                scan.append(
-                    (ids.index(cs), htables[(0, tda >> 4)], htables[(1, tda & 0xF)])
-                )
-            scan_start = pos
-            break
-    if w is None or scan_start is None:
-        raise ValueError("JPEG missing SOF0/SOS")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # block-padded per-component planes; caller crops via factors
-    planes = [
-        bytearray((mcux * hi * 8) * (mcuy * vi * 8))
-        for _cid, hi, vi, _tq in comps
-    ]
-    r = _BitReader(data[scan_start:])
-    prev_dc = [0] * len(comps)
-    mcu_done = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_done and mcu_done % restart_interval == 0:
-                # re-sync: padded to a byte boundary, RSTn (n cycling
-                # 0..7), DC predictors reset — the independently
-                # decodable chunk boundary baseline JPEG uses for
-                # error resilience / parallel decode
-                r.expect_restart((mcu_done // restart_interval - 1) % 8)
-                prev_dc = [0] * len(comps)
-            mcu_done += 1
-            for ci, dc_read, ac_read in scan:
-                _cid, hi, vi, tq = comps[ci]
-                q = qtables[tq]
-                stride = mcux * hi * 8
-                for bv in range(vi):
-                    for bh in range(hi):
-                        zz = [0] * 64
-                        s = dc_read(r)
-                        diff = _extend(r.bits(s), s) if s else 0
-                        prev_dc[ci] += diff
-                        zz[0] = prev_dc[ci]
-                        i = 1
-                        while i < 64:
-                            rs = ac_read(r)
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                i += 16
-                                continue
-                            i += rs >> 4
-                            s = rs & 0xF
-                            if i > 63:
-                                raise ValueError("AC coefficient index overflow")
-                            zz[i] = _extend(r.bits(s), s)
-                            i += 1
-                        coef = [0.0] * 64
-                        for i in range(64):
-                            coef[_ZIGZAG[i]] = zz[i] * q[_ZIGZAG[i]]
-                        pix = _idct8x8(coef)
-                        out = planes[ci]
-                        oy = (my * vi + bv) * 8
-                        ox = (mx * hi + bh) * 8
-                        for y in range(8):
-                            row = (oy + y) * stride + ox
-                            for x in range(8):
-                                v = int(round(pix[y * 8 + x])) + 128
-                                out[row + x] = (
-                                    0 if v < 0 else (255 if v > 255 else v)
-                                )
-    return w, h, planes, [(hi, vi) for _cid, hi, vi, _tq in comps], mcux
-
-
-def _jpeg_to_pixels(
-    w: int,
-    h: int,
-    planes: list[bytearray],
-    factors: list[tuple[int, int]],
-    mcux: int,
-) -> bytes:
-    """Crop/upsample the block-padded component planes to image
-    pixels: gray bytes for one component, interleaved RGB (JFIF
-    inverse transform) for three. Subsampled chroma upsamples by
-    pixel replication — component sample at (x, y) is
-    ``plane[(y*vi)//vmax][(x*hi)//hmax]``, the spec-legal nearest
-    mapping whose determinism the exact oracles rely on."""
-    hmax = max(f[0] for f in factors)
-    vmax = max(f[1] for f in factors)
-    strides = [mcux * f[0] * 8 for f in factors]
-
-    def sample(ci: int, x: int, y: int) -> int:
-        hi, vi = factors[ci]
-        return planes[ci][((y * vi) // vmax) * strides[ci] + (x * hi) // hmax]
-
-    if len(planes) == 1:
-        out = bytearray(w * h)
+        if sos[0] != 1:
+            raise NotImplementedError("one-component lossless scan only")
+        dc_read = f.huff[(0, sos[2] >> 4)]
+        predictor = sos[3]  # Ss field selects the predictor
+        w, h = f.w, f.h
+        r = _BitReader(scan)
+        recon = bytearray(w * h)
         for y in range(h):
             for x in range(w):
-                out[y * w + x] = sample(0, x, y)
-        return bytes(out)
-    out = bytearray(w * h * 3)
-    for y in range(h):
-        for x in range(w):
-            r, g, b = ycbcr_to_rgb(
-                sample(0, x, y), sample(1, x, y), sample(2, x, y)
-            )
-            i = 3 * (y * w + x)
-            out[i], out[i + 1], out[i + 2] = r, g, b
-    return bytes(out)
-
-
-def decode_jpeg_gray(payload: bytes) -> bytes:
-    """Baseline JPEG decode to raw 8-bit grayscale bytes — the JPEG
-    twin of :func:`decode_png`. A 3-component payload is an error
-    here; route it to :func:`decode_jpeg_color` (or use the
-    dispatcher in :func:`decode`)."""
-    data = bytes(payload)
-    sof = _jpeg_sof_marker(data)
-    if sof == 0xFFC3:
-        return _decode_jpeg_lossless(data)
-    if sof == 0xFFC9:
-        return _decode_jpeg_arith(data)
-    decode = _decode_jpeg_progressive if _jpeg_is_progressive(data) else _decode_jpeg
-    w, h, planes, factors, mcux = decode(data)
-    if len(planes) != 1:
-        raise ValueError("color JPEG: use decode_jpeg_color")
-    return _jpeg_to_pixels(w, h, planes, factors, mcux)
-
-
-def decode_jpeg_color(payload: bytes) -> bytes:
-    """Baseline color JPEG decode to interleaved raw RGB bytes: the
-    three YCbCr planes from :func:`_decode_jpeg` merged through the
-    JFIF inverse transform (:func:`ycbcr_to_rgb`, floor(x+0.5) — the
-    arithmetic the color oracles mirror in SQL). Handles 4:4:4 and
-    subsampled (4:2:0 / 4:2:2) layouts; chroma upsamples by
-    replication."""
-    data = bytes(payload)
-    decode = _decode_jpeg_progressive if _jpeg_is_progressive(data) else _decode_jpeg
-    w, h, planes, factors, mcux = decode(data)
-    if len(planes) != 3:
-        raise ValueError("grayscale JPEG: use decode_jpeg_gray")
-    return _jpeg_to_pixels(w, h, planes, factors, mcux)
+                s = dc_read(r)
+                diff = 32768 if s == 16 else (_extend(r.bits(s), s) if s else 0)
+                px = _lossless_predict(recon, w, x, y, predictor)
+                recon[y * w + x] = (px + diff) & 0xFF
+        return bytes(recon)
+    raise ValueError("lossless JPEG missing SOF3/SOS")
 
 
 # ---------------------------------------------------------------------------
-# Progressive JPEG (SOF2): spectral selection + successive approximation.
-#
-# Separate path from the baseline decoder above — progressive decode is
-# a coefficient-accumulation model (every scan deposits bits into the
-# per-block coefficient arrays; dequant + IDCT happen once at the end),
-# while the proven baseline path streams block-at-a-time. The scan
-# algorithms follow ITU-T T.81 G.2 (the same structure libjpeg's
-# decode_mcu_DC/AC_first/refine implement from the spec).
+# DCT Huffman decode (SOF0/SOF1 sequential, SOF2 progressive) as one
+# coefficient-accumulation model: every scan deposits bits into the
+# per-block coefficient arrays; dequant + IDCT happen once at the end.
+# A sequential scan is the model's special case — DC first plus AC
+# first over the whole band 1-63 at Al=0, every component interleaved
+# per MCU. The scan algorithms follow ITU-T T.81 G.2 (the same
+# structure libjpeg's decode_mcu_DC/AC_first/refine implement).
 # ---------------------------------------------------------------------------
-
-
-def _jpeg_is_progressive(data: bytes) -> bool:
-    """Walk segment headers up to the first SOS; True iff SOF2."""
-    import struct
-
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return False
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
-        if marker == 0xFFC2:
-            return True
-        if marker in (0xFFC0, 0xFFC1, 0xFFDA, 0xFFD9):
-            return False
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        pos += 2 + ln
-    return False
 
 
 def _dc_first_block(r, coef, al, dcr, prev_dc):
@@ -1546,7 +1277,7 @@ def _ac_first_block(r, coef, ss, se, al, acr, eobrun):
         if s:
             k += rr
             if k > se:
-                raise ValueError("AC band overflow in progressive scan")
+                raise ValueError("AC band overflow in JPEG scan")
             coef[k] = _extend(r.bits(s), s) * (1 << al)
             k += 1
         else:
@@ -1601,212 +1332,218 @@ def _ac_refine_block(r, coef, ss, se, al, acr, eobrun):
     return eobrun
 
 
-def _decode_jpeg_progressive(
+def _decode_jpeg(
     payload: bytes,
 ) -> tuple[int, int, list[bytearray], list[tuple[int, int]], int]:
-    """Full progressive-JPEG decode: parses every scan of an SOF2
-    stream (DC first/refine interleaved or single-component, AC
-    first/refine per-component spectral bands with EOBRUN), deposits
-    successive-approximation bits into per-block coefficient arrays,
-    and runs dequant + IDCT once at the end. Returns the same
-    ``(w, h, planes, factors, mcux)`` contract as the baseline
-    :func:`_decode_jpeg` so the plane-to-pixels path is shared.
-    Restart intervals reset DC predictors and the EOB run."""
-    import struct
+    """Pure-stdlib Huffman DCT JPEG decode to per-component 8-bit
+    planes: baseline/extended sequential (SOF0/SOF1, 8- or 16-bit
+    quant tables) and full progressive (SOF2: DC first/refine
+    interleaved or single-component, AC first/refine per-component
+    spectral bands with EOBRUN), 1 component (grayscale) or 3 YCbCr
+    components with sampling factors in {1, 2} — 4:4:4 and
+    4:2:0/4:2:2 subsampling — plus DRI/RSTn restart intervals
+    (predictor and EOB-run reset + byte re-sync at each boundary).
+    All tables come from the file's own DQT/DHT segments; nothing is
+    assumed about the encoder. Other SOFn frames raise
+    ``NotImplementedError``.
 
-    data = bytes(payload)
-    if data[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG payload")
-
-    def seg_end(p: int) -> int:
-        i = p
-        while i + 1 < len(data):
-            if (
-                data[i] == 0xFF
-                and data[i + 1] != 0x00
-                and not (0xD0 <= data[i + 1] <= 0xD7)
-            ):
-                return i
-            i += 1
-        return len(data)
-
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], object] = {}
-    w = h = None
-    comps: list[tuple[int, int, int, int]] = []  # (id, hi, vi, tq)
-    restart_interval = 0
-    coefs: list[list[list[int]]] = []  # per comp, per block, 64 zigzag ints
-    grids: list[tuple[int, int]] = []  # per comp padded block grid (bw, bh)
-    mcux = mcuy = hmax = vmax = 0
-
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
-        if marker == 0xFFD9:
-            break
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + ln]
-        pos += 2 + ln
-        if marker == 0xFFDB:
-            o = 0
-            while o < len(body):
-                pq, tq = body[o] >> 4, body[o] & 0xF
-                if pq != 0:
-                    raise NotImplementedError(
-                        "16-bit quant tables need an injected codec"
-                    )
-                zz = list(body[o + 1:o + 65])
-                t = [0] * 64
-                for i in range(64):
-                    t[_ZIGZAG[i]] = zz[i]
-                qtables[tq] = t
-                o += 65
-        elif marker == 0xFFC2:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp not in (1, 3):
-                raise NotImplementedError(
-                    "built-in codec covers 8-bit 1- or 3-component JPEG only"
-                )
-            for ci in range(ncomp):
-                cid, samp, tq = body[6 + 3 * ci:9 + 3 * ci]
-                hi, vi = samp >> 4, samp & 0xF
-                if hi not in (1, 2) or vi not in (1, 2):
-                    raise NotImplementedError(
-                        "sampling factors beyond 2 need an injected codec"
-                    )
-                comps.append((cid, hi, vi, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcux = (w + 8 * hmax - 1) // (8 * hmax)
-            mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-            for _cid, hi, vi, _tq in comps:
-                bw, bh = mcux * hi, mcuy * vi
-                grids.append((bw, bh))
-                coefs.append([[0] * 64 for _ in range(bw * bh)])
-        elif marker in (0xFFC0, 0xFFC1, 0xFFC3, 0xFFC5, 0xFFC6, 0xFFC7,
-                        0xFFC9, 0xFFCA, 0xFFCB, 0xFFCD, 0xFFCE, 0xFFCF):
-            raise ValueError("not a progressive (SOF2) stream")
-        elif marker == 0xFFC4:
-            o = 0
-            while o < len(body):
-                tc, th = body[o] >> 4, body[o] & 0xF
-                bits = list(body[o + 1:o + 17])
-                n = sum(bits)
-                vals = list(body[o + 17:o + 17 + n])
-                htables[(tc, th)] = _huff_decoder(bits, vals)
-                o += 17 + n
-        elif marker == 0xFFDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xFFDA:
-            if w is None:
-                raise ValueError("SOS before SOF2")
-            ns = body[0]
-            ids = [c[0] for c in comps]
-            sel = []
-            for si in range(ns):
-                cs, tda = body[1 + 2 * si], body[2 + 2 * si]
-                sel.append((ids.index(cs), tda >> 4, tda & 0xF))
-            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0xF
+    Returns ``(w, h, planes, factors, mcux)`` where each plane is a
+    block-padded buffer of stride ``mcux * h_i * 8`` (callers index
+    subsampled planes through the factor ratios)."""
+    f = coefs = None
+    for f, sos, scan in _jpeg_scans(bytes(payload)):
+        if f.sof not in (0xFFC0, 0xFFC1, 0xFFC2):
+            raise NotImplementedError(
+                "hierarchical / arithmetic-progressive JPEG needs an "
+                "injected codec"
+            )
+        hmax = max(c[1] for c in f.comps)
+        vmax = max(c[2] for c in f.comps)
+        mcux = (f.w + 8 * hmax - 1) // (8 * hmax)
+        mcuy = (f.h + 8 * vmax - 1) // (8 * vmax)
+        if coefs is None:  # per comp, per padded block, 64 zigzag ints
+            coefs = [
+                [[0] * 64 for _ in range(mcux * hi * mcuy * vi)]
+                for _cid, hi, vi, _tq in f.comps
+            ]
+        ns = sos[0]
+        ids = [c[0] for c in f.comps]
+        tables = {}  # scan component index -> (DC reader, AC reader)
+        for si in range(ns):
+            tda = sos[2 + 2 * si]
+            tables[ids.index(sos[1 + 2 * si])] = (
+                f.huff.get((0, tda >> 4)),
+                f.huff.get((1, tda & 0xF)),
+            )
+        if f.sof == 0xFFC2:
+            ss, se, ahal = sos[1 + 2 * ns:4 + 2 * ns]
             if (ss == 0) != (se == 0):
                 raise ValueError(
                     "invalid progressive scan: DC band must be Ss=Se=0"
                 )
-            end = seg_end(pos)
-            r = _BitReader(data[pos:end])
-            pos = end
-            prev_dc = [0] * len(comps)
-            eobrun = 0
-            rst_n = 0
-            if ns > 1 or (ss == 0 and len(comps) == 1):
-                # interleaved DC scan (or trivially single-component)
-                if ss != 0:
-                    raise ValueError("interleaved AC scan is not legal JPEG")
-                unit = 0
-                for my in range(mcuy):
-                    for mx in range(mcux):
-                        if (
-                            restart_interval
-                            and unit
-                            and unit % restart_interval == 0
-                        ):
-                            r.expect_restart(rst_n % 8)
-                            rst_n += 1
-                            prev_dc = [0] * len(comps)
-                        unit += 1
-                        for ci, td, _ta in sel:
-                            _cid, hi, vi, _tq = comps[ci]
-                            bw, _bh = grids[ci]
-                            for bv in range(vi):
-                                for bh_i in range(hi):
-                                    bi = (my * vi + bv) * bw + mx * hi + bh_i
-                                    coef = coefs[ci][bi]
-                                    if ah == 0:
-                                        prev_dc[ci] = _dc_first_block(
-                                            r, coef, al,
-                                            htables[(0, td)], prev_dc[ci],
-                                        )
-                                    else:
-                                        coef[0] |= r.bit() << al
-            else:
-                ci, td, ta = sel[0]
-                _cid, hi, vi, _tq = comps[ci]
-                bw_pad, _bh_pad = grids[ci]
-                cw = (w * hi + hmax - 1) // hmax
-                ch = (h * vi + vmax - 1) // vmax
-                bw, bh = (cw + 7) // 8, (ch + 7) // 8
-                for bi in range(bw * bh):
-                    if (
-                        restart_interval
-                        and bi
-                        and bi % restart_interval == 0
-                    ):
-                        r.expect_restart(rst_n % 8)
-                        rst_n += 1
-                        prev_dc = [0] * len(comps)
-                        eobrun = 0
-                    row, col = bi // bw, bi % bw
-                    coef = coefs[ci][row * bw_pad + col]
-                    if ss == 0:
-                        if ah == 0:
-                            prev_dc[ci] = _dc_first_block(
-                                r, coef, al, htables[(0, td)], prev_dc[ci]
-                            )
-                        else:
-                            coef[0] |= r.bit() << al
-                    elif ah == 0:
-                        eobrun = _ac_first_block(
-                            r, coef, ss, se, al, htables[(1, ta)], eobrun
-                        )
-                    else:
-                        eobrun = _ac_refine_block(
-                            r, coef, ss, se, al, htables[(1, ta)], eobrun
-                        )
-    if w is None:
-        raise ValueError("JPEG missing SOF2")
+            if ns > 1 and ss != 0:
+                raise ValueError("interleaved AC scan is not legal JPEG")
+        else:
+            ss, se, ahal = 0, 63, 0
+        ah, al = ahal >> 4, ahal & 0xF
+        # restart units: MCUs of an interleaved (or one-component)
+        # scan, else the blocks of the one component's own grid
+        if ns > 1 or len(f.comps) == 1:
+            sampling = [(ci, f.comps[ci][1], f.comps[ci][2]) for ci in tables]
+            units = [
+                [
+                    (ci, (my * vi + bv) * mcux * hi + mx * hi + bh)
+                    for ci, hi, vi in sampling
+                    for bv in range(vi)
+                    for bh in range(hi)
+                ]
+                for my in range(mcuy)
+                for mx in range(mcux)
+            ]
+        else:
+            (ci,) = tables
+            _cid, hi, vi, _tq = f.comps[ci]
+            bw = ((f.w * hi + hmax - 1) // hmax + 7) // 8
+            bh = ((f.h * vi + vmax - 1) // vmax + 7) // 8
+            units = [
+                [(ci, row * mcux * hi + col)]
+                for row in range(bh)
+                for col in range(bw)
+            ]
+        r = _BitReader(scan)
+        prev_dc = [0] * len(f.comps)
+        eobrun = 0
+        for u, blocks in enumerate(units):
+            if f.restart and u and u % f.restart == 0:
+                # re-sync: padded to a byte boundary, RSTn (n cycling
+                # 0..7 from each scan's start), DC predictors and EOB
+                # run reset — the independently decodable chunk
+                # boundary JPEG uses for error resilience / parallel
+                # decode
+                r.expect_restart((u // f.restart - 1) % 8)
+                prev_dc = [0] * len(f.comps)
+                eobrun = 0
+            for ci, bi in blocks:
+                coef = coefs[ci][bi]
+                dcr, acr = tables[ci]
+                if ss == 0 and ah == 0:
+                    prev_dc[ci] = _dc_first_block(r, coef, al, dcr, prev_dc[ci])
+                elif ss == 0:
+                    coef[0] |= r.bit() << al
+                if se:
+                    band = _ac_first_block if ah == 0 else _ac_refine_block
+                    eobrun = band(r, coef, max(ss, 1), se, al, acr, eobrun)
+    if coefs is None:
+        raise ValueError("JPEG missing SOF/SOS")
     # final reconstruction: dequant + IDCT every block into planes
     planes = []
-    for ci, (_cid, hi, vi, tq) in enumerate(comps):
-        q = qtables[tq]
-        bw, bh = grids[ci]
-        stride = bw * 8
-        plane = bytearray(stride * bh * 8)
+    for ci, (_cid, hi, vi, tq) in enumerate(f.comps):
+        q = f.q[tq]
+        stride = mcux * hi * 8
+        plane = bytearray(stride * mcuy * vi * 8)
         for bi, zz in enumerate(coefs[ci]):
             coef = [0.0] * 64
             for i in range(64):
                 coef[_ZIGZAG[i]] = zz[i] * q[_ZIGZAG[i]]
             pix = _idct8x8(coef)
-            oy, ox = (bi // bw) * 8, (bi % bw) * 8
+            oy, ox = (bi // (mcux * hi)) * 8, (bi % (mcux * hi)) * 8
             for y in range(8):
                 row = (oy + y) * stride + ox
                 for x in range(8):
                     v = int(round(pix[y * 8 + x])) + 128
                     plane[row + x] = 0 if v < 0 else (255 if v > 255 else v)
         planes.append(plane)
-    return w, h, planes, [(hi, vi) for _cid, hi, vi, _tq in comps], mcux
+    return f.w, f.h, planes, [(hi, vi) for _cid, hi, vi, _tq in f.comps], mcux
 
+
+def _jpeg_to_pixels(
+    w: int,
+    h: int,
+    planes: list[bytearray],
+    factors: list[tuple[int, int]],
+    mcux: int,
+) -> bytes:
+    """Crop/upsample the block-padded component planes to image
+    pixels: gray bytes for one component, interleaved RGB (JFIF
+    inverse transform) for three. Subsampled chroma upsamples by
+    pixel replication — component sample at (x, y) is
+    ``plane[(y*vi)//vmax][(x*hi)//hmax]``, the spec-legal nearest
+    mapping whose determinism the exact oracles rely on."""
+    hmax = max(f[0] for f in factors)
+    vmax = max(f[1] for f in factors)
+    strides = [mcux * f[0] * 8 for f in factors]
+
+    def sample(ci: int, x: int, y: int) -> int:
+        hi, vi = factors[ci]
+        return planes[ci][((y * vi) // vmax) * strides[ci] + (x * hi) // hmax]
+
+    if len(planes) == 1:
+        out = bytearray(w * h)
+        for y in range(h):
+            for x in range(w):
+                out[y * w + x] = sample(0, x, y)
+        return bytes(out)
+    out = bytearray(w * h * 3)
+    for y in range(h):
+        for x in range(w):
+            r, g, b = ycbcr_to_rgb(
+                sample(0, x, y), sample(1, x, y), sample(2, x, y)
+            )
+            i = 3 * (y * w + x)
+            out[i], out[i + 1], out[i + 2] = r, g, b
+    return bytes(out)
+
+
+def _decode_jpeg_any(payload: bytes, ncomp: int | None = None) -> bytes:
+    """The JPEG decode dispatcher behind :func:`_builtin_decoder`,
+    :func:`decode_jpeg_gray` and :func:`decode_jpeg_color`: route by
+    SOF marker — SOF3 lossless, SOF9 arithmetic, every other frame
+    to the DCT Huffman decoder — and return gray or interleaved RGB
+    bytes. Given *ncomp*, a payload with another component count
+    raises ``ValueError`` naming the decoder that takes it."""
+    data = bytes(payload)
+    sof = _jpeg_sof_marker(data)
+    if sof == 0xFFC3:
+        n, pixels = 1, _decode_jpeg_lossless(data)
+    elif sof == 0xFFC9:
+        n, pixels = 1, _decode_jpeg_arith(data)
+    else:
+        w, h, planes, factors, mcux = _decode_jpeg(data)
+        n, pixels = len(planes), _jpeg_to_pixels(w, h, planes, factors, mcux)
+    if ncomp is not None and n != ncomp:
+        raise ValueError(
+            "color JPEG: use decode_jpeg_color"
+            if ncomp == 1
+            else "grayscale JPEG: use decode_jpeg_gray"
+        )
+    return pixels
+
+
+def decode_jpeg_gray(payload: bytes) -> bytes:
+    """JPEG decode to raw 8-bit grayscale bytes — the JPEG twin of
+    :func:`decode_png`, over every variant the built-in codec covers
+    (baseline/extended, restart intervals, progressive, lossless,
+    arithmetic). A 3-component payload is an error here; route it to
+    :func:`decode_jpeg_color` (or use the dispatcher in
+    :func:`decode`)."""
+    return _decode_jpeg_any(payload, ncomp=1)
+
+
+def decode_jpeg_color(payload: bytes) -> bytes:
+    """Color JPEG decode to interleaved raw RGB bytes: the three
+    YCbCr planes merged through the JFIF inverse transform
+    (:func:`ycbcr_to_rgb`, floor(x+0.5) — the arithmetic the color
+    oracles mirror in SQL). Handles 4:4:4 and subsampled (4:2:0 /
+    4:2:2) layouts, baseline or progressive; chroma upsamples by
+    replication. A 1-component payload is an error here; route it to
+    :func:`decode_jpeg_gray`."""
+    return _decode_jpeg_any(payload, ncomp=3)
+
+
+# ---------------------------------------------------------------------------
+# Progressive JPEG (SOF2) encoder: spectral selection + successive
+# approximation, decoded by :func:`_decode_jpeg` above.
+# ---------------------------------------------------------------------------
 
 # AC Huffman table for PROGRESSIVE scans: the Annex-K baseline tables
 # have no EOBn codes (r<<4, r=1..14 with size 0 — they only exist in
@@ -1865,8 +1602,7 @@ class _ProgAcWriter:
                     run = 0
                 continue
             s = _category(v)
-            self.w.put(*self.ac[(run << 4) | s])
-            self.w.put(v if v >= 0 else v + (1 << s) - 1, s)
+            self.w.put_signed(self.ac[(run << 4) | s], v, s)
             run = 0
         if last_nz < se - ss:
             self.eobrun += 1
@@ -1909,32 +1645,18 @@ class _ProgAcWriter:
                 self.flush_eobrun()
 
 
-def _quant_zigzag_block(plane, stride: int, ox: int, oy: int) -> list[int]:
-    block = [
-        float(plane[(oy + y) * stride + ox + x]) - 128.0
-        for y in range(8)
-        for x in range(8)
-    ]
-    coef = _fdct8x8(block)
-    q = [int(round(coef[i] / _QTABLE[i])) for i in range(64)]
-    return [q[_ZIGZAG[i]] for i in range(64)]
-
-
 def _encode_progressive(
     width: int,
     height: int,
     planes: list[bytes],
-    chroma_from: int,
     restart_interval: int = 0,
 ) -> bytes:
     """Shared progressive-encoder core (all components 1x1): DC-first
     (Al=1, interleaved) → AC-first per component in two spectral
     bands (1-5, 6-63, Al=1) → DC refine (raw bits) → AC refine per
     component per band — the classic successive-approximation scan
-    script. *chroma_from*: component index from which the Annex-K
-    chrominance tables apply."""
-    import struct
-
+    script. Component 0 codes its DC with the Annex-K luminance
+    table, later components with the chrominance one."""
     ncomp = len(planes)
     bw, bh = width // 8, height // 8
     blocks = [
@@ -1945,40 +1667,17 @@ def _encode_progressive(
         ]
         for p in planes
     ]
-    luma_dc = _huff_codes(_DC_BITS, _DC_VALS)
-    chroma_dc = _huff_codes(_DC_BITS_C, _DC_VALS_C)
+    dc_codes = [_ANNEX_K_CODES[min(ci, 1)][0] for ci in range(ncomp)]
     prog_ac = _huff_codes(_AC_BITS_P, _AC_VALS_P)
-    dc_codes = [luma_dc if ci < chroma_from else chroma_dc for ci in range(ncomp)]
-    ac_codes = [prog_ac for _ in range(ncomp)]
-    tbl_id = [0 if ci < chroma_from else 1 for ci in range(ncomp)]
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    def sos(comps: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        body = bytes([len(comps)])
-        for ci in comps:
-            body += bytes([ci + 1, (tbl_id[ci] << 4) | tbl_id[ci]])
-        body += bytes([ss, se, (ah << 4) | al])
-        return seg(0xFFDA, body)
+    dht = [(0x00, _DC_BITS, _DC_VALS), (0x10, _AC_BITS_P, _AC_VALS_P)]
+    if ncomp > 1:
+        dht += [(0x01, _DC_BITS_C, _DC_VALS_C), (0x11, _AC_BITS_P, _AC_VALS_P)]
 
     out = bytearray(_JPEG_MAGIC)
-    zz_q = bytes(_QTABLE[_ZIGZAG[i]] for i in range(64))
-    out += seg(0xFFDB, bytes([0x00]) + zz_q)
-    if ncomp > 1:
-        out += seg(0xFFDB, bytes([0x01]) + zz_q)
-    sof_body = struct.pack(">BHHB", 8, height, width, ncomp)
-    for ci in range(ncomp):
-        sof_body += bytes([ci + 1, 0x11, tbl_id[ci]])
-    out += seg(0xFFC2, sof_body)
-    out += seg(0xFFC4, bytes([0x00]) + bytes(_DC_BITS) + bytes(_DC_VALS))
-    out += seg(0xFFC4, bytes([0x10]) + bytes(_AC_BITS_P) + bytes(_AC_VALS_P))
-    if ncomp > 1:
-        out += seg(0xFFC4, bytes([0x01]) + bytes(_DC_BITS_C) + bytes(_DC_VALS_C))
-        out += seg(0xFFC4, bytes([0x11]) + bytes(_AC_BITS_P) + bytes(_AC_VALS_P))
-
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
+    out += _frame_header(
+        0xFFC2, width, height, [0x11] * ncomp, dht,
+        restart_interval=restart_interval,
+    )
 
     def maybe_restart(w, bi, ac=None):
         """Per-scan restart boundary: flush any pending EOB run
@@ -2002,21 +1701,19 @@ def _encode_progressive(
             diff = v - prev[ci]
             prev[ci] = v
             s = _category(diff)
-            w.put(*dc_codes[ci][s])
-            if s:
-                w.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-    out += sos(list(range(ncomp)), 0, 0, 0, 1) + w.flush()
+            w.put_signed(dc_codes[ci][s], diff, s)
+    out += _sos(range(ncomp), 0, 0, 0x01) + w.flush()
 
     # scans 2..: AC first per component, two spectral bands, Al=1
     for ci in range(ncomp):
         for ss, se in ((1, 5), (6, 63)):
             w = _BitWriter()
-            ac = _ProgAcWriter(w, ac_codes[ci], 1)
+            ac = _ProgAcWriter(w, prog_ac, 1)
             for bi in range(bw * bh):
                 maybe_restart(w, bi, ac)
                 ac.first_block(blocks[ci][bi], ss, se)
             ac.flush_eobrun()
-            out += sos([ci], ss, se, 0, 1) + w.flush()
+            out += _sos([ci], ss, se, 0x01) + w.flush()
 
     # DC refine: one raw bit per block, interleaved
     w = _BitWriter()
@@ -2024,18 +1721,18 @@ def _encode_progressive(
         maybe_restart(w, bi)
         for ci in range(ncomp):
             w.put(blocks[ci][bi][0] & 1, 1)
-    out += sos(list(range(ncomp)), 0, 0, 1, 0) + w.flush()
+    out += _sos(range(ncomp), 0, 0, 0x10) + w.flush()
 
     # AC refine per component per band
     for ci in range(ncomp):
         for ss, se in ((1, 5), (6, 63)):
             w = _BitWriter()
-            ac = _ProgAcWriter(w, ac_codes[ci], 0)
+            ac = _ProgAcWriter(w, prog_ac, 0)
             for bi in range(bw * bh):
                 maybe_restart(w, bi, ac)
                 ac.refine_block(blocks[ci][bi], ss, se)
             ac.flush_eobrun()
-            out += sos([ci], ss, se, 1, 0) + w.flush()
+            out += _sos([ci], ss, se, 0x10) + w.flush()
 
     out += b"\xff\xd9"
     return bytes(out)
@@ -2050,30 +1747,15 @@ def encode_jpeg_progressive_gray(
     *restart_interval* emits DRI + per-scan RSTn boundaries (EOB runs
     flushed before each marker, predictors reset, numbering from 0 in
     every scan)."""
-    if width % 8 or height % 8:
-        raise ValueError("fixture encoder requires multiple-of-8 dims")
-    if len(gray) != width * height:
-        raise ValueError(f"need {width * height} bytes, got {len(gray)}")
-    return _encode_progressive(
-        width, height, [gray], chroma_from=1,
-        restart_interval=restart_interval,
-    )
+    _check_fixture(width, height, gray, 1)
+    return _encode_progressive(width, height, [gray], restart_interval)
 
 
 def encode_jpeg_progressive_color(width: int, height: int, rgb: bytes) -> bytes:
     """Progressive (SOF2) 4:4:4 color encoder — JFIF transform, then
     the same successive-approximation scan script per component."""
-    if width % 8 or height % 8:
-        raise ValueError("fixture encoder requires multiple-of-8 dims")
-    if len(rgb) != width * height * 3:
-        raise ValueError(f"need {width * height * 3} RGB bytes, got {len(rgb)}")
-    planes = [bytearray(width * height) for _ in range(3)]
-    for i in range(width * height):
-        y, cb, cr = rgb_to_ycbcr(rgb[3 * i], rgb[3 * i + 1], rgb[3 * i + 2])
-        planes[0][i], planes[1][i], planes[2][i] = y, cb, cr
-    return _encode_progressive(
-        width, height, [bytes(p) for p in planes], chroma_from=1
-    )
+    _check_fixture(width, height, rgb, 3)
+    return _encode_progressive(width, height, _ycbcr_planes(width, height, rgb))
 
 
 # ---------------------------------------------------------------------------
@@ -2508,36 +2190,21 @@ def encode_jpeg_arith_gray(width: int, height: int, gray: bytes) -> bytes:
     as :func:`encode_jpeg_gray`, entropy-coded by the QM coder with
     Annex F context models instead of Huffman tables (so the payload
     carries a DQT but no DHT)."""
-    import struct
-
-    if width % 8 or height % 8:
-        raise ValueError("fixture encoder requires multiple-of-8 dims")
-    if len(gray) != width * height:
-        raise ValueError(f"need {width * height} bytes, got {len(gray)}")
-
+    _check_fixture(width, height, gray, 1)
     enc = _QMEncoder()
     stats = _ArithStats()
     state = {"last_dc": 0, "dc_context": 0}
     for by in range(height // 8):
         for bx in range(width // 8):
-            block = [
-                float(gray[(by * 8 + y) * width + bx * 8 + x]) - 128.0
-                for y in range(8)
-                for x in range(8)
-            ]
-            coef = _fdct8x8(block)
-            q = [int(round(coef[i] / _QTABLE[i])) for i in range(64)]
-            zz = [q[_ZIGZAG[i]] for i in range(64)]
+            zz = _quant_zigzag_block(gray, width, bx * 8, by * 8)
             _arith_encode_block(enc, stats, zz, state)
-    scan = enc.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    dqt = seg(0xFFDB, bytes([0]) + bytes(_QTABLE[_ZIGZAG[i]] for i in range(64)))
-    sof = seg(0xFFC9, struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0]))
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return _JPEG_MAGIC + dqt + sof + sos + scan + b"\xff\xd9"
+    return (
+        _JPEG_MAGIC
+        + _frame_header(0xFFC9, width, height, [0x11], [])
+        + _sos([0], 0, 63, 0)
+        + enc.flush()
+        + b"\xff\xd9"
+    )
 
 
 def _decode_jpeg_arith(payload: bytes) -> bytes:
@@ -2545,57 +2212,32 @@ def _decode_jpeg_arith(payload: bytes) -> bytes:
     bytes: QM-decode each block's quantized coefficients through the
     Annex F models, then the same dequant + IDCT + level-shift as the
     Huffman path."""
-    import struct
-
-    data = bytes(payload)
-    if data[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtable = None
-    w = h = None
-    scan_start = None
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = struct.unpack(">H", data[pos:pos + 2])[0]
-        if marker == 0xFFD9:
+    for f, _sos_body, scan in _jpeg_scans(bytes(payload)):
+        if f.sof != 0xFFC9 or f.comps[0][3] not in f.q:
             break
-        (ln,) = struct.unpack(">H", data[pos + 2:pos + 4])
-        body = data[pos + 4:pos + 2 + ln]
-        pos += 2 + ln
-        if marker == 0xFFDB:
-            zz = list(body[1:65])
-            qtable = [0] * 64
-            for i in range(64):
-                qtable[_ZIGZAG[i]] = zz[i]
-        elif marker == 0xFFC9:
-            prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
-            if prec != 8 or ncomp != 1:
-                raise NotImplementedError(
-                    "stdlib arithmetic JPEG covers one 8-bit component"
-                )
-        elif marker == 0xFFDA:
-            scan_start = pos
-            break
-    if w is None or scan_start is None or qtable is None:
-        raise ValueError("arithmetic JPEG missing DQT/SOF9/SOS")
-    scan_end = data.rfind(b"\xff\xd9")
-    dec = _QMDecoder(data[scan_start:scan_end if scan_end > 0 else len(data)])
-    stats = _ArithStats()
-    state = {"last_dc": 0, "dc_context": 0}
-    out = bytearray(w * h)
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            zz = _arith_decode_block(dec, stats, state)
-            q = [0] * 64
-            for i in range(64):
-                q[_ZIGZAG[i]] = zz[i]
-            coef = [q[i] * qtable[i] for i in range(64)]
-            pix = _idct8x8(coef)
-            for y in range(8):
-                for x in range(8):
-                    v = int(round(pix[y * 8 + x] + 128.0))
-                    out[(by * 8 + y) * w + bx * 8 + x] = (
-                        0 if v < 0 else (255 if v > 255 else v)
-                    )
-    return bytes(out)
+        if len(f.comps) != 1:
+            raise NotImplementedError(
+                "stdlib arithmetic JPEG covers one 8-bit component"
+            )
+        qtable = f.q[f.comps[0][3]]
+        w, h = f.w, f.h
+        dec = _QMDecoder(scan)
+        stats = _ArithStats()
+        state = {"last_dc": 0, "dc_context": 0}
+        out = bytearray(w * h)
+        for by in range(h // 8):
+            for bx in range(w // 8):
+                zz = _arith_decode_block(dec, stats, state)
+                q = [0] * 64
+                for i in range(64):
+                    q[_ZIGZAG[i]] = zz[i]
+                coef = [q[i] * qtable[i] for i in range(64)]
+                pix = _idct8x8(coef)
+                for y in range(8):
+                    for x in range(8):
+                        v = int(round(pix[y * 8 + x] + 128.0))
+                        out[(by * 8 + y) * w + bx * 8 + x] = (
+                            0 if v < 0 else (255 if v > 255 else v)
+                        )
+        return bytes(out)
+    raise ValueError("arithmetic JPEG missing DQT/SOF9/SOS")

@@ -17,7 +17,7 @@ fixtures; compressed audio and inter-coded video stay injected.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import multimodal as M
@@ -181,6 +181,77 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _fixture_frame(spark: SparkSession, rows: list, slices: int = 4) -> DataFrame:
+    """MEDIA_SCHEMA frame over in-memory fixture rows. Parallelism is
+    set at the source (numSlices), NOT via .repartition: a
+    repartition would put the payload bytes through a round-robin
+    exchange, breaking the payloads-never-shuffle contract the plan
+    tests pin."""
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, slices), M.MEDIA_SCHEMA
+    )
+
+
+def _image_rows(n: int, dims, pixels, encode, fmt: str = "jpeg") -> list:
+    """Fixture rows for images k = 0..n-1: image k is ``dims(k)`` =
+    (w, h) with raw pixels ``pixels(w, h, k)`` and payload
+    ``encode(w, h, raw)``."""
+    rows = []
+    for k in range(n):
+        w, h = dims(k)
+        rows.append((k, "image", encode(w, h, pixels(w, h, k)), (fmt, w, h, None, None)))
+    return rows
+
+
+def _byte_sums(channels: int) -> list:
+    """``(name, pandas_udf)`` pairs summing decoded bytes: ``pixel_sum``
+    over all bytes for one channel, ``r_sum``/``g_sum``/``b_sum`` over
+    interleaved RGB. Lambdas, not defs: the module's postponed
+    annotations break pandas_udf's type-hint introspection."""
+    if channels == 1:
+        return [
+            ("pixel_sum", F.pandas_udf(lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"))
+        ]
+    return [
+        (
+            f"{c}_sum",
+            F.pandas_udf(
+                lambda s, _o=off: s.map(lambda b: int(sum(bytes(b)[_o::3]))), "long"
+            ),
+        )
+        for off, c in enumerate("rgb")
+    ]
+
+
+def _decoded_stats(
+    spark: SparkSession,
+    rows: list,
+    channels: int = 1,
+    slices: int = 4,
+    lead: tuple = (),
+    extra: tuple = (),
+) -> DataFrame:
+    """Decode fixture *rows* through ``multimodal.decode``'s
+    Arrow-batched ``mapInPandas`` and reduce each image to media_id,
+    the *lead* columns, width, height, n_bytes, its
+    :func:`_byte_sums` and the *extra* ``(name, udf)`` stats, ordered
+    by media_id. Payloads stay inside the one narrow decode stage;
+    only fixed-width stats flow downstream."""
+    stats = _byte_sums(channels) + list(extra)
+    return (
+        M.decode(_fixture_frame(spark, rows, slices))
+        .select(
+            F.col("media_id").cast("int").alias("media_id"),
+            *lead,
+            F.col("meta.width").alias("width"),
+            F.col("meta.height").alias("height"),
+            F.length("decoded").cast("long").alias("n_bytes"),
+            *[udf("decoded").alias(name) for name, udf in stats],
+        )
+        .orderBy("media_id")
+    )
+
+
 def _png_pattern(width: int, height: int, salt: int) -> bytes:
     """Deterministic RGB test pattern: pixel (x, y, channel c) =
     (7x + 13y + 31c + 3*salt) mod 256 — closed-form, so an oracle can
@@ -231,41 +302,18 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never shuffled); only fixed-width stats flow downstream — the
     contract a 100-TB image pipeline needs. Production swaps the codec
     for PIL/libav via decode(decoder=...); schema and plan unchanged."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_png(8 + k, 5 + k, _png_pattern(8 + k, 5 + k, k)),
-            ("png", 8 + k, 5 + k, None, None),
-        )
-        for k in range(_N_PNG)
-    ]
-    # Parallelism set at the source (numSlices), NOT via .repartition:
-    # a repartition would put the payload bytes through a round-robin
-    # exchange, breaking the payloads-never-shuffle contract the plan
-    # test pins.
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_PNG, lambda k: (8 + k, 5 + k), _png_pattern, M.encode_png, "png"
     )
-
-    byte_sum = F.pandas_udf(
-        lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"
-    )
-
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            byte_sum("decoded").alias("pixel_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows)
 
 
 _N_JPEG = 10  # images k=0..9: w = 8*(1 + k%3), h = 8*(1 + k%2)
+
+
+def _block_dims(k: int) -> tuple[int, int]:
+    """Dims of block-fixture image k: w = 8*(1 + k%3), h = 8*(1 + k%2)."""
+    return 8 * (1 + k % 3), 8 * (1 + k % 2)
 
 
 def _jpeg_block_value(bx: int, by: int, salt: int) -> int:
@@ -283,12 +331,14 @@ def _jpeg_pattern(width: int, height: int, salt: int) -> bytes:
     )
 
 
-@query(
-    "multimodal_jpeg_decode",
-    oracle=f"""
+def _even_gray_oracle(n: int) -> str:
+    """Oracle of the even-gray block fixtures (images k = 0..n-1 of
+    :func:`_block_dims`, pixels :func:`_jpeg_pattern`): every decoded
+    pixel recomputed from the generative formula."""
+    return f"""
     WITH imgs(media_id, w, h) AS (
         SELECT i, 8 * (1 + i % 3), 8 * (1 + i % 2)
-        FROM (SELECT unnest(range({_N_JPEG})) AS i)
+        FROM (SELECT unnest(range({n})) AS i)
     ),
     bxs(bx) AS (SELECT unnest(range(3))),
     bys(by) AS (SELECT unnest(range(2))),
@@ -303,8 +353,10 @@ def _jpeg_pattern(width: int, height: int, salt: int) -> bytes:
            CAST(sum(v) * 64 AS BIGINT) AS pixel_sum
     FROM blocks GROUP BY media_id, w, h
     ORDER BY media_id
-    """,
-)
+    """
+
+
+@query("multimodal_jpeg_decode", oracle=_even_gray_oracle(_N_JPEG))
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline-JPEG decode through the production plumbing — the
     lossy-codec twin of `multimodal_png_decode`: deterministic
@@ -322,38 +374,8 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the PNG query — payloads never shuffle,
     one narrow mapInPandas stage, fixed-width stats downstream."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_jpeg_gray(
-                8 * (1 + k % 3),
-                8 * (1 + k % 2),
-                _jpeg_pattern(8 * (1 + k % 3), 8 * (1 + k % 2), k),
-            ),
-            ("jpeg", 8 * (1 + k % 3), 8 * (1 + k % 2), None, None),
-        )
-        for k in range(_N_JPEG)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
-
-    byte_sum = F.pandas_udf(
-        lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"
-    )
-
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            byte_sum("decoded").alias("pixel_sum"),
-        )
-        .orderBy("media_id")
-    )
+    rows = _image_rows(_N_JPEG, _block_dims, _jpeg_pattern, M.encode_jpeg_gray)
+    return _decoded_stats(spark, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -390,6 +412,43 @@ def _pal_values_sql() -> str:
     )
 
 
+def _jfif_roundtrip_sql(keys: str, src: str) -> str:
+    """The ``yc`` and ``rgb2`` CTEs: each (r, g, b) row of *src*
+    through the JFIF forward transform and back, floor(x + 0.5) on
+    DOUBLEs (e-notation literals) exactly as ``rgb_to_ycbcr`` /
+    ``ycbcr_to_rgb`` round; *keys* are the columns carried along."""
+    return f"""yc AS (
+        SELECT {keys},
+               CAST(floor(0.299e0 * r + 0.587e0 * g + 0.114e0 * b + 0.5e0) AS BIGINT) AS y,
+               CAST(floor(128.0e0 - 0.168736e0 * r - 0.331264e0 * g + 0.5e0 * b + 0.5e0) AS BIGINT) AS cb,
+               CAST(floor(128.0e0 + 0.5e0 * r - 0.418688e0 * g - 0.081312e0 * b + 0.5e0) AS BIGINT) AS cr
+        FROM {src}
+    ),
+    rgb2 AS (
+        SELECT {keys},
+               CAST(floor(y + 1.402e0 * (cr - 128) + 0.5e0) AS BIGINT) AS r2,
+               CAST(floor(y - 0.344136e0 * (cb - 128) - 0.714136e0 * (cr - 128) + 0.5e0) AS BIGINT) AS g2,
+               CAST(floor(y + 1.772e0 * (cb - 128) + 0.5e0) AS BIGINT) AS b2
+        FROM yc
+    )"""
+
+
+def _rgb_image_sums_sql(src: str, px: int) -> str:
+    """:func:`_jfif_roundtrip_sql` over *src* rows (media_id, w, h,
+    r, g, b — each standing for *px* identical pixels), then the
+    per-image n_bytes and channel sums the color queries return."""
+    return _jfif_roundtrip_sql("media_id, w, h", src) + f"""
+    SELECT CAST(media_id AS INT) AS media_id,
+           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
+           CAST(w * h * 3 AS BIGINT) AS n_bytes,
+           CAST(sum(r2) * {px} AS BIGINT) AS r_sum,
+           CAST(sum(g2) * {px} AS BIGINT) AS g_sum,
+           CAST(sum(b2) * {px} AS BIGINT) AS b_sum
+    FROM rgb2 GROUP BY media_id, w, h
+    ORDER BY media_id
+    """
+
+
 @query(
     "multimodal_jpeg_color_decode",
     oracle=f"""
@@ -406,29 +465,7 @@ def _pal_values_sql() -> str:
         JOIN pal ON pi = (bx + by * 3 + media_id * 5) % 12
         WHERE bx * 8 < w AND by * 8 < h
     ),
-    yc AS (
-        SELECT media_id, w, h,
-               CAST(floor(0.299e0 * r + 0.587e0 * g + 0.114e0 * b + 0.5e0) AS BIGINT) AS y,
-               CAST(floor(128.0e0 - 0.168736e0 * r - 0.331264e0 * g + 0.5e0 * b + 0.5e0) AS BIGINT) AS cb,
-               CAST(floor(128.0e0 + 0.5e0 * r - 0.418688e0 * g - 0.081312e0 * b + 0.5e0) AS BIGINT) AS cr
-        FROM blocks
-    ),
-    rgb2 AS (
-        SELECT media_id, w, h,
-               CAST(floor(y + 1.402e0 * (cr - 128) + 0.5e0) AS BIGINT) AS r2,
-               CAST(floor(y - 0.344136e0 * (cb - 128) - 0.714136e0 * (cr - 128) + 0.5e0) AS BIGINT) AS g2,
-               CAST(floor(y + 1.772e0 * (cb - 128) + 0.5e0) AS BIGINT) AS b2
-        FROM yc
-    )
-    SELECT CAST(media_id AS INT) AS media_id,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(w * h * 3 AS BIGINT) AS n_bytes,
-           CAST(sum(r2) * 64 AS BIGINT) AS r_sum,
-           CAST(sum(g2) * 64 AS BIGINT) AS g_sum,
-           CAST(sum(b2) * 64 AS BIGINT) AS b_sum
-    FROM rgb2 GROUP BY media_id, w, h
-    ORDER BY media_id
-    """,
+    {_rgb_image_sums_sql("blocks", 64)}""",
 )
 def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:4:4 color baseline-JPEG decode through the production
@@ -447,42 +484,10 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: payloads never shuffle — one narrow Arrow-batched
     mapInPandas decode stage, fixed-width per-channel sums
     downstream."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_jpeg_color(
-                8 * (1 + k % 3),
-                8 * (1 + k % 2),
-                _jpeg_color_pattern(8 * (1 + k % 3), 8 * (1 + k % 2), k),
-            ),
-            ("jpeg", 8 * (1 + k % 3), 8 * (1 + k % 2), None, None),
-        )
-        for k in range(_N_JPEG_COLOR)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_JPEG_COLOR, _block_dims, _jpeg_color_pattern, M.encode_jpeg_color
     )
-
-    def _ch_sum(off: int):
-        return F.pandas_udf(
-            lambda s, _o=off: s.map(lambda b: int(sum(bytes(b)[_o::3]))), "long"
-        )
-
-    r_sum, g_sum, b_sum = _ch_sum(0), _ch_sum(1), _ch_sum(2)
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            r_sum("decoded").alias("r_sum"),
-            g_sum("decoded").alias("g_sum"),
-            b_sum("decoded").alias("b_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows, channels=3)
 
 
 _N_JPEG_420 = 8  # images k=0..7: w = 16*(1 + k%2), h = 16*(1 + k%3)
@@ -514,29 +519,7 @@ def _jpeg_420_pattern(width: int, height: int, salt: int) -> bytes:
         JOIN pal ON pi = (mx + my * 2 + media_id * 7) % 12
         WHERE mx * 16 < w AND my * 16 < h
     ),
-    yc AS (
-        SELECT media_id, w, h,
-               CAST(floor(0.299e0 * r + 0.587e0 * g + 0.114e0 * b + 0.5e0) AS BIGINT) AS y,
-               CAST(floor(128.0e0 - 0.168736e0 * r - 0.331264e0 * g + 0.5e0 * b + 0.5e0) AS BIGINT) AS cb,
-               CAST(floor(128.0e0 + 0.5e0 * r - 0.418688e0 * g - 0.081312e0 * b + 0.5e0) AS BIGINT) AS cr
-        FROM mcus
-    ),
-    rgb2 AS (
-        SELECT media_id, w, h,
-               CAST(floor(y + 1.402e0 * (cr - 128) + 0.5e0) AS BIGINT) AS r2,
-               CAST(floor(y - 0.344136e0 * (cb - 128) - 0.714136e0 * (cr - 128) + 0.5e0) AS BIGINT) AS g2,
-               CAST(floor(y + 1.772e0 * (cb - 128) + 0.5e0) AS BIGINT) AS b2
-        FROM yc
-    )
-    SELECT CAST(media_id AS INT) AS media_id,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(w * h * 3 AS BIGINT) AS n_bytes,
-           CAST(sum(r2) * 256 AS BIGINT) AS r_sum,
-           CAST(sum(g2) * 256 AS BIGINT) AS g_sum,
-           CAST(sum(b2) * 256 AS BIGINT) AS b_sum
-    FROM rgb2 GROUP BY media_id, w, h
-    ORDER BY media_id
-    """,
+    {_rgb_image_sums_sql("mcus", 256)}""",
 )
 def multimodal_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:0 SUBSAMPLED baseline-JPEG decode through the production
@@ -555,75 +538,24 @@ def multimodal_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other media queries — payloads
     never shuffle, one narrow Arrow-batched mapInPandas stage."""
-    rows = [
-        (
-            k,
-            "image",
-            # restart_interval=2: every other MCU boundary carries a
-            # real RSTn marker, so the driver gate also exercises the
-            # DRI re-sync path (predictor reset + byte alignment) —
-            # restart chunking never changes a decoded pixel, so the
-            # closed-form oracle is unaffected
-            M.encode_jpeg_420(
-                16 * (1 + k % 2),
-                16 * (1 + k % 3),
-                _jpeg_420_pattern(16 * (1 + k % 2), 16 * (1 + k % 3), k),
-                restart_interval=2,
-            ),
-            ("jpeg", 16 * (1 + k % 2), 16 * (1 + k % 3), None, None),
-        )
-        for k in range(_N_JPEG_420)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_JPEG_420,
+        lambda k: (16 * (1 + k % 2), 16 * (1 + k % 3)),
+        _jpeg_420_pattern,
+        # restart_interval=2: every other MCU boundary carries a real
+        # RSTn marker, so the driver gate also exercises the DRI
+        # re-sync path (predictor reset + byte alignment) — restart
+        # chunking never changes a decoded pixel, so the closed-form
+        # oracle is unaffected
+        lambda w, h, rgb: M.encode_jpeg_420(w, h, rgb, restart_interval=2),
     )
-
-    def _ch_sum(off: int):
-        return F.pandas_udf(
-            lambda s, _o=off: s.map(lambda b: int(sum(bytes(b)[_o::3]))), "long"
-        )
-
-    r_sum, g_sum, b_sum = _ch_sum(0), _ch_sum(1), _ch_sum(2)
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            r_sum("decoded").alias("r_sum"),
-            g_sum("decoded").alias("g_sum"),
-            b_sum("decoded").alias("b_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows, channels=3)
 
 
 _N_JPEG_PROG = 8  # images k=0..7: w = 8*(1 + k%3), h = 8*(1 + k%2)
 
 
-@query(
-    "multimodal_jpeg_progressive_decode",
-    oracle=f"""
-    WITH imgs(media_id, w, h) AS (
-        SELECT i, 8 * (1 + i % 3), 8 * (1 + i % 2)
-        FROM (SELECT unnest(range({_N_JPEG_PROG})) AS i)
-    ),
-    bxs(bx) AS (SELECT unnest(range(3))),
-    bys(by) AS (SELECT unnest(range(2))),
-    blocks AS (
-        SELECT media_id, w, h,
-               ((bx * 14 + by * 26 + media_id * 6) % 128) * 2 AS v
-        FROM imgs, bxs, bys WHERE bx * 8 < w AND by * 8 < h
-    )
-    SELECT CAST(media_id AS INT) AS media_id,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(w * h AS BIGINT) AS n_bytes,
-           CAST(sum(v) * 64 AS BIGINT) AS pixel_sum
-    FROM blocks GROUP BY media_id, w, h
-    ORDER BY media_id
-    """,
-)
+@query("multimodal_jpeg_progressive_decode", oracle=_even_gray_oracle(_N_JPEG_PROG))
 def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) JPEG decode through the production plumbing
     — completes the JPEG matrix after baseline grayscale, 4:4:4, and
@@ -641,36 +573,10 @@ def multimodal_jpeg_progressive_decode(spark: SparkSession, sf_dir: str) -> Data
 
     Scale shape: payloads never shuffle — one narrow Arrow-batched
     mapInPandas stage, fixed-width stats downstream."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_jpeg_progressive_gray(
-                8 * (1 + k % 3),
-                8 * (1 + k % 2),
-                _jpeg_pattern(8 * (1 + k % 3), 8 * (1 + k % 2), k),
-            ),
-            ("jpeg", 8 * (1 + k % 3), 8 * (1 + k % 2), None, None),
-        )
-        for k in range(_N_JPEG_PROG)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_JPEG_PROG, _block_dims, _jpeg_pattern, M.encode_jpeg_progressive_gray
     )
-    byte_sum = F.pandas_udf(
-        lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"
-    )
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            byte_sum("decoded").alias("pixel_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows)
 
 
 _N_JPEG_422 = 6  # images k=0..5: w = 16*(1 + k%2), h = 16
@@ -691,29 +597,7 @@ _N_JPEG_422 = 6  # images k=0..5: w = 16*(1 + k%2), h = 16
         JOIN pal ON pi = (mx + media_id * 5) % 12
         WHERE mx * 16 < w
     ),
-    yc AS (
-        SELECT media_id, w, h,
-               CAST(floor(0.299e0 * r + 0.587e0 * g + 0.114e0 * b + 0.5e0) AS BIGINT) AS y,
-               CAST(floor(128.0e0 - 0.168736e0 * r - 0.331264e0 * g + 0.5e0 * b + 0.5e0) AS BIGINT) AS cb,
-               CAST(floor(128.0e0 + 0.5e0 * r - 0.418688e0 * g - 0.081312e0 * b + 0.5e0) AS BIGINT) AS cr
-        FROM mcus
-    ),
-    rgb2 AS (
-        SELECT media_id, w, h,
-               CAST(floor(y + 1.402e0 * (cr - 128) + 0.5e0) AS BIGINT) AS r2,
-               CAST(floor(y - 0.344136e0 * (cb - 128) - 0.714136e0 * (cr - 128) + 0.5e0) AS BIGINT) AS g2,
-               CAST(floor(y + 1.772e0 * (cb - 128) + 0.5e0) AS BIGINT) AS b2
-        FROM yc
-    )
-    SELECT CAST(media_id AS INT) AS media_id,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(w * h * 3 AS BIGINT) AS n_bytes,
-           CAST(sum(r2) * 256 AS BIGINT) AS r_sum,
-           CAST(sum(g2) * 256 AS BIGINT) AS g_sum,
-           CAST(sum(b2) * 256 AS BIGINT) AS b_sum
-    FROM rgb2 GROUP BY media_id, w, h
-    ORDER BY media_id
-    """,
+    {_rgb_image_sums_sql("mcus", 256)}""",
 )
 def multimodal_jpeg_422_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4:2:2 baseline-JPEG decode under the oracle gate — the (2,1)
@@ -728,47 +612,18 @@ def multimodal_jpeg_422_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the other media queries — payloads
     never shuffle, one narrow Arrow-batched mapInPandas stage."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_jpeg_422(
-                16 * (1 + k % 2),
-                16,
-                bytes(
-                    b
-                    for y in range(16)
-                    for x in range(16 * (1 + k % 2))
-                    for b in _JPEG_PALETTE[(x // 16 + k * 5) % 12]
-                ),
-            ),
-            ("jpeg", 16 * (1 + k % 2), 16, None, None),
-        )
-        for k in range(_N_JPEG_422)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 3), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_JPEG_422,
+        lambda k: (16 * (1 + k % 2), 16),
+        lambda w, h, k: bytes(
+            b
+            for y in range(h)
+            for x in range(w)
+            for b in _JPEG_PALETTE[(x // 16 + k * 5) % 12]
+        ),
+        M.encode_jpeg_422,
     )
-
-    def _ch_sum(off: int):
-        return F.pandas_udf(
-            lambda s, _o=off: s.map(lambda b: int(sum(bytes(b)[_o::3]))), "long"
-        )
-
-    r_sum, g_sum, b_sum = _ch_sum(0), _ch_sum(1), _ch_sum(2)
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            r_sum("decoded").alias("r_sum"),
-            g_sum("decoded").alias("g_sum"),
-            b_sum("decoded").alias("b_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows, channels=3, slices=3)
 
 
 _N_MJPEG = 5  # videos k=0..4: w = 8*(1 + k%2), h = 8, frames = 2 + k%3
@@ -793,20 +648,7 @@ _N_MJPEG = 5  # videos k=0..4: w = 8*(1 + k%2), h = 8, frames = 2 + k%3
         JOIN pal ON pi = (bx + (video_id * 3 + frame_idx) * 5) % 12
         WHERE bx * 8 < w
     ),
-    yc AS (
-        SELECT video_id, frame_idx, w,
-               CAST(floor(0.299e0 * r + 0.587e0 * g + 0.114e0 * b + 0.5e0) AS BIGINT) AS y,
-               CAST(floor(128.0e0 - 0.168736e0 * r - 0.331264e0 * g + 0.5e0 * b + 0.5e0) AS BIGINT) AS cb,
-               CAST(floor(128.0e0 + 0.5e0 * r - 0.418688e0 * g - 0.081312e0 * b + 0.5e0) AS BIGINT) AS cr
-        FROM blocks
-    ),
-    rgb2 AS (
-        SELECT video_id, frame_idx, w,
-               CAST(floor(y + 1.402e0 * (cr - 128) + 0.5e0) AS BIGINT) AS r2,
-               CAST(floor(y - 0.344136e0 * (cb - 128) - 0.714136e0 * (cr - 128) + 0.5e0) AS BIGINT) AS g2,
-               CAST(floor(y + 1.772e0 * (cb - 128) + 0.5e0) AS BIGINT) AS b2
-        FROM yc
-    )
+    {_jfif_roundtrip_sql("video_id, frame_idx, w", "blocks")}
     SELECT CAST(video_id AS INT) AS video_id, frame_idx,
            CAST(w AS INT) AS width, CAST(8 AS INT) AS height,
            CAST(w * 8 * 3 AS BIGINT) AS n_bytes,
@@ -850,27 +692,15 @@ def multimodal_mjpeg_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame
         rows.append(
             (k, "video", M.encode_mjpeg(frames), ("mjpeg", w, 8, None, nf))
         )
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 2), M.MEDIA_SCHEMA
-    )
-
-    def _ch_sum(off: int):
-        return F.pandas_udf(
-            lambda s, _o=off: s.map(lambda b: int(sum(bytes(b)[_o::3]))), "long"
-        )
-
-    r_sum, g_sum, b_sum = _ch_sum(0), _ch_sum(1), _ch_sum(2)
     return (
-        M.split_mjpeg_frames(df)
+        M.split_mjpeg_frames(_fixture_frame(spark, rows, 2))
         .select(
             F.col("media_id").cast("int").alias("video_id"),
             "frame_idx",
             (F.length("decoded") / 24).cast("int").alias("width"),
             F.lit(8).cast("int").alias("height"),
             F.length("decoded").cast("long").alias("n_bytes"),
-            r_sum("decoded").alias("r_sum"),
-            g_sum("decoded").alias("g_sum"),
-            b_sum("decoded").alias("b_sum"),
+            *[udf("decoded").alias(name) for name, udf in _byte_sums(3)],
         )
         .orderBy("video_id", "frame_idx")
     )
@@ -945,58 +775,22 @@ def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
                 ("jpeg-lossless", w, h, None, None),
             )
         )
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
-
-    byte_sum = F.pandas_udf(
-        lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"
-    )
     odd_count = F.pandas_udf(
         lambda s: s.map(lambda b: int(sum(1 for v in bytes(b) if v % 2))), "long"
     )
-
     preds = F.lit(1) + (F.col("media_id") % 7).cast("int")
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            preds.alias("predictor"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            byte_sum("decoded").alias("pixel_sum"),
-            odd_count("decoded").alias("odd_pixels"),
-        )
-        .orderBy("media_id")
+    return _decoded_stats(
+        spark,
+        rows,
+        lead=(preds.alias("predictor"),),
+        extra=(("odd_pixels", odd_count),),
     )
 
 
 _N_JPEG_ARITH = 8  # k=0..7: w = 8*(1 + k%3), h = 8*(1 + k%2)
 
 
-@query(
-    "multimodal_jpeg_arith_decode",
-    oracle=f"""
-    WITH imgs(media_id, w, h) AS (
-        SELECT i, 8 * (1 + i % 3), 8 * (1 + i % 2)
-        FROM (SELECT unnest(range({_N_JPEG_ARITH})) AS i)
-    ),
-    bxs(bx) AS (SELECT unnest(range(3))),
-    bys(by) AS (SELECT unnest(range(2))),
-    blocks AS (
-        SELECT media_id, w, h,
-               ((bx * 14 + by * 26 + media_id * 6) % 128) * 2 AS v
-        FROM imgs, bxs, bys WHERE bx * 8 < w AND by * 8 < h
-    )
-    SELECT CAST(media_id AS INT) AS media_id,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(w * h AS BIGINT) AS n_bytes,
-           CAST(sum(v) * 64 AS BIGINT) AS pixel_sum
-    FROM blocks GROUP BY media_id, w, h
-    ORDER BY media_id
-    """,
-)
+@query("multimodal_jpeg_arith_decode", oracle=_even_gray_oracle(_N_JPEG_ARITH))
 def multimodal_jpeg_arith_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic-coded JPEG (SOF9) decode through the production
     plumbing: the same even-gray block-constant fixtures as
@@ -1015,38 +809,11 @@ def multimodal_jpeg_arith_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: payloads never shuffle — one Arrow-batched
     mapInPandas decode stage, fixed-width stats downstream."""
-    rows = [
-        (
-            k,
-            "image",
-            M.encode_jpeg_arith_gray(
-                8 * (1 + k % 3),
-                8 * (1 + k % 2),
-                _jpeg_pattern(8 * (1 + k % 3), 8 * (1 + k % 2), k),
-            ),
-            ("jpeg-arith", 8 * (1 + k % 3), 8 * (1 + k % 2), None, None),
-        )
-        for k in range(_N_JPEG_ARITH)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
+    rows = _image_rows(
+        _N_JPEG_ARITH, _block_dims, _jpeg_pattern, M.encode_jpeg_arith_gray,
+        "jpeg-arith",
     )
-
-    byte_sum = F.pandas_udf(
-        lambda s: s.map(lambda b: int(sum(bytes(b)))), "long"
-    )
-
-    return (
-        M.decode(df)
-        .select(
-            F.col("media_id").cast("int").alias("media_id"),
-            F.col("meta.width").alias("width"),
-            F.col("meta.height").alias("height"),
-            F.length("decoded").cast("long").alias("n_bytes"),
-            byte_sum("decoded").alias("pixel_sum"),
-        )
-        .orderBy("media_id")
-    )
+    return _decoded_stats(spark, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1064,6 +831,20 @@ def _wav_samples(k: int) -> list[int]:
     step = 2 * k + 3
     amp = 1000 * (1 + k % 4)
     return [((i * step) % (2 * amp)) - amp for i in range(n)]
+
+
+def _wav_frame(spark: SparkSession) -> DataFrame:
+    """Clips k = 0..9 of :func:`_wav_samples` as PCM16 WAV media rows."""
+    rows = [
+        (
+            k,
+            "audio",
+            M.encode_wav_pcm16(_wav_samples(k)),
+            ("wav", None, None, 8000, (400 + 100 * (k % 3)) * 1000 // 8000),
+        )
+        for k in range(_N_WAV)
+    ]
+    return _fixture_frame(spark, rows)
 
 
 @query(
@@ -1120,18 +901,7 @@ def multimodal_wav_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     only fixed-width BIGINT features flow downstream."""
     import pandas as pd
 
-    rows = [
-        (
-            k,
-            "audio",
-            M.encode_wav_pcm16(_wav_samples(k)),
-            ("wav", None, None, 8000, (400 + 100 * (k % 3)) * 1000 // 8000),
-        )
-        for k in range(_N_WAV)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
+    df = _wav_frame(spark)
 
     feat_schema = (
         "n_samples bigint, peak bigint, sum_abs bigint, "
@@ -1140,8 +910,7 @@ def multimodal_wav_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # lambda-style registration (module uses `from __future__ import
     # annotations`, which stringifies type hints and breaks
-    # pandas_udf's hint introspection — same pattern as the JPEG
-    # queries' byte_sum)
+    # pandas_udf's hint introspection — same reason as _byte_sums)
     def _wav_feature_frame(payloads):
         import numpy as np
 
@@ -1236,18 +1005,7 @@ def multimodal_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame
     by media_id."""
     import pandas as pd
 
-    rows = [
-        (
-            k,
-            "audio",
-            M.encode_wav_pcm16(_wav_samples(k)),
-            ("wav", None, None, 8000, (400 + 100 * (k % 3)) * 1000 // 8000),
-        )
-        for k in range(_N_WAV)
-    ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
+    df = _wav_frame(spark)
 
     frame_schema = (
         "array<struct<frame_idx: bigint, energy: bigint, zero_cross: bigint>>"
@@ -1337,14 +1095,55 @@ def _phash_pixel(b: int, j: int, x: int, y: int) -> int:
     return min(p + n, 255)
 
 
-def _phash_oracle() -> str:
-    cos_vals = ", ".join(
-        f"({k}, {n}, {c})"
-        for k, row in enumerate(_PHASH_COS)
-        for n, c in enumerate(row)
+def _cos_values_sql(table: list[list[int]]) -> str:
+    """(k, n, c) VALUES rows of an integer cosine table."""
+    return ", ".join(
+        f"({k}, {n}, {c})" for k, row in enumerate(table) for n, c in enumerate(row)
     )
+
+
+def _phash_bits(p) -> int:
+    """63-bit pHash of a 32x32 int64 luma array p[y, x]: integer DCT
+    (fm[u, w] = sum p[y,x] C[u,x] C[w,y]) over the shared cosine
+    table, top-left 8x8 block without DC, bit set where a coefficient
+    exceeds the rank-32 threshold."""
+    import numpy as np
+
+    cosm = np.array(_PHASH_COS, dtype=np.int64)
+    fm = cosm @ p.T @ cosm.T
+    flat = [
+        (int(fm[u, w]), u * 8 + w)
+        for u in range(8)
+        for w in range(8)
+        if (u, w) != (0, 0)
+    ]
+    thr = sorted(flat)[31][0]
+    h = 0
+    for f, idx in flat:
+        if f > thr:
+            h |= 1 << (idx - 1)
+    return h
+
+
+def _hash_bands() -> Column:
+    """Explode of a 63-bit hash column ``h`` into its 8x8-bit
+    Hamming-LSH bands, struct ``bd`` = (k, bv)."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(k).alias("k"),
+                    F.shiftright("h", k * 8).bitwiseAND(F.lit(255)).alias("bv"),
+                )
+                for k in range(_PHASH_BANDS)
+            ]
+        )
+    ).alias("bd")
+
+
+def _phash_oracle() -> str:
     return f"""
-    WITH ct(k, n, c) AS (SELECT * FROM (VALUES {cos_vals}) t(k, n, c)),
+    WITH ct(k, n, c) AS (SELECT * FROM (VALUES {_cos_values_sql(_PHASH_COS)}) t(k, n, c)),
     imgs AS (
         SELECT b, j, b * {_PHASH_N_VARIANT} + j AS media_id
         FROM range({_PHASH_N_BASE}) rb(b), range({_PHASH_N_VARIANT}) rj(j)
@@ -1436,9 +1235,7 @@ def image_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ("png", 32, 32, None, None),
                 )
             )
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
+    df = _fixture_frame(spark, rows)
 
     # r14: the plan consumes the hash
     # relation four times (two band-join sides + two verify sides),
@@ -1509,17 +1306,9 @@ def _vph_pixel(b: int, j: int, f: int, x: int, y: int) -> int:
     return min(v, 255)
 
 
-def _phash_cos_sql() -> str:
-    return ", ".join(
-        f"({k}, {n}, {c})"
-        for k, row in enumerate(_PHASH_COS)
-        for n, c in enumerate(row)
-    )
-
-
 def _vph_oracle() -> str:
     return f"""
-    WITH ct(k, n, c) AS (SELECT * FROM (VALUES {_phash_cos_sql()}) t(k, n, c)),
+    WITH ct(k, n, c) AS (SELECT * FROM (VALUES {_cos_values_sql(_PHASH_COS)}) t(k, n, c)),
     vids AS (
         SELECT b, j, b * {_VPH_VAR} + j AS video_id
         FROM range({_VPH_BASE}) rb(b), range({_VPH_VAR}) rj(j)
@@ -1628,36 +1417,22 @@ def video_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ("mjpeg", 32, 32, None, _VPH_FRAMES),
                 )
             )
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
+    df = _fixture_frame(spark, rows)
 
     def _phash_gray(col):
         import numpy as np
         import pandas as pd
 
-        cosm = np.array(_PHASH_COS, dtype=np.int64)
-        out = []
-        for buf in col:
-            p = (
-                np.frombuffer(bytes(buf), dtype=np.uint8)
-                .astype(np.int64)
-                .reshape(32, 32)
-            )
-            fm = cosm @ p.T @ cosm.T
-            flat = [
-                (int(fm[u, w]), u * 8 + w)
-                for u in range(8)
-                for w in range(8)
-                if (u, w) != (0, 0)
+        return pd.Series(
+            [
+                _phash_bits(
+                    np.frombuffer(bytes(buf), dtype=np.uint8)
+                    .astype(np.int64)
+                    .reshape(32, 32)
+                )
+                for buf in col
             ]
-            thr = sorted(flat)[31][0]
-            h = 0
-            for fc, idx in flat:
-                if fc > thr:
-                    h |= 1 << (idx - 1)
-            out.append(h)
-        return pd.Series(out)
+        )
 
     udf = F.pandas_udf(_phash_gray, "long")
     hashes = M.split_mjpeg_frames(df).select(
@@ -1665,22 +1440,9 @@ def video_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("frame_idx").alias("f"),
         udf("decoded").alias("h"),
     )
-    bands = hashes.select(
-        "video_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"),
-                        F.shiftright("h", k * 8)
-                        .bitwiseAND(F.lit(255))
-                        .alias("bv"),
-                    )
-                    for k in range(_PHASH_BANDS)
-                ]
-            )
-        ).alias("bd"),
-    ).select("video_id", "bd.k", "bd.bv")
+    bands = hashes.select("video_id", _hash_bands()).select(
+        "video_id", "bd.k", "bd.bv"
+    )
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
         a.join(
@@ -1760,17 +1522,9 @@ def _afp_sample(b: int, j: int, t: int) -> int:
     return _afp_mean(b, j, t // 32, (t % 32) // 4)
 
 
-def _afp_cos8_sql() -> str:
-    return ", ".join(
-        f"({k}, {n}, {c})"
-        for k, row in enumerate(_AFP_COS8)
-        for n, c in enumerate(row)
-    )
-
-
 def _afp_oracle() -> str:
     return f"""
-    WITH c8(k, n, c) AS (SELECT * FROM (VALUES {_afp_cos8_sql()}) t(k, n, c)),
+    WITH c8(k, n, c) AS (SELECT * FROM (VALUES {_cos_values_sql(_AFP_COS8)}) t(k, n, c)),
     clips AS (
         SELECT b, j, b * {_AFP_VAR} + j AS clip_id
         FROM range({_AFP_BASE}) rb(b), range({_AFP_VAR}) rj(j)
@@ -1865,9 +1619,7 @@ def audio_fingerprint_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(_AFP_BASE)
         for j in range(_AFP_VAR)
     ]
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), M.MEDIA_SCHEMA
-    )
+    df = _fixture_frame(spark, rows)
 
     def _codes(col):
         import numpy as np
@@ -1957,21 +1709,17 @@ def phash_hashes(media_df: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        cosm = np.array(_PHASH_COS, dtype=np.int64)
-        out = []
-        for buf in col:
-            a = np.frombuffer(bytes(buf), dtype=np.uint8).astype(np.int64)
-            p = a.reshape(32, 32, 3)[:, :, 0]  # [y, x] luma plane
-            fm = cosm @ p.T @ cosm.T  # fm[u, w] = sum p[y,x] C[u,x] C[w,y]
-            flat = [(int(fm[u, w]), u * 8 + w) for u in range(8)
-                    for w in range(8) if (u, w) != (0, 0)]
-            thr = sorted(flat)[31][0]
-            h = 0
-            for f, idx in flat:
-                if f > thr:
-                    h |= 1 << (idx - 1)
-            out.append(h)
-        return pd.Series(out)
+        return pd.Series(
+            [
+                # [y, x] luma plane: the R channel of the gray RGB PNG
+                _phash_bits(
+                    np.frombuffer(bytes(buf), dtype=np.uint8)
+                    .astype(np.int64)
+                    .reshape(32, 32, 3)[:, :, 0]
+                )
+                for buf in col
+            ]
+        )
 
     phash_udf = F.pandas_udf(_phash, "long")
     return M.decode(media_df).select(
@@ -1983,20 +1731,6 @@ def phash_hashes(media_df: DataFrame) -> DataFrame:
 def phash_bands(hashes: DataFrame) -> DataFrame:
     """Explode 63-bit pHashes into the 8x8-bit Hamming-LSH band rows
     (media_id, h, k, bv) — pigeonhole-exact at Hamming <= 7."""
-    return hashes.select(
-        "media_id",
-        "h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("k"),
-                        F.shiftright("h", k * 8)
-                        .bitwiseAND(F.lit(255))
-                        .alias("bv"),
-                    )
-                    for k in range(_PHASH_BANDS)
-                ]
-            )
-        ).alias("bd"),
-    ).select("media_id", "h", "bd.k", "bd.bv")
+    return hashes.select("media_id", "h", _hash_bands()).select(
+        "media_id", "h", "bd.k", "bd.bv"
+    )

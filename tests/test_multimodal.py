@@ -301,6 +301,10 @@ def test_jpeg_color_component_routing():
         M.decode_jpeg_gray(jc)
     with pytest.raises(ValueError):
         M.decode_jpeg_color(jg)
+    # lossless and arithmetic frames are grayscale-only: same routing error
+    for gray_only in (M.encode_jpeg_lossless(8, 8, gray), M.encode_jpeg_arith_gray(8, 8, gray)):
+        with pytest.raises(ValueError, match="decode_jpeg_gray"):
+            M.decode_jpeg_color(gray_only)
     assert M._builtin_decoder(jg) == gray
     assert M._builtin_decoder(jc) == color  # (120,120,120) is even-YCbCr flat
 
@@ -659,3 +663,34 @@ def test_wav_rejects_unsupported():
         M.decode_wav(b"RIFFxxxxWAVE")  # no chunks
     with pytest.raises(ValueError):
         M.decode_wav(b"not a wav")
+
+
+def test_truncated_payloads_raise_value_error():
+    """Every proper prefix of a payload in each built-in format —
+    PNG, WAV, and every JPEG variant — either decodes to the full
+    payload's bytes or raises ValueError: a cut payload never decodes
+    to wrong bytes and never surfaces as IndexError/struct.error/
+    zlib.error/NotImplementedError."""
+    gray = bytes((x * 37 + y * 11) % 256 for y in range(8) for x in range(8))
+    rgb16 = _pattern_rgb(16, 16, 2)
+    payloads = {
+        "png": M.encode_png(3, 2, _pattern_rgb(3, 2, 1)),
+        "wav": M.encode_wav_pcm16([0, 1, -1, 32767, -32768, 7]),
+        "gray": M.encode_jpeg_gray(8, 8, gray),
+        "444": M.encode_jpeg_color(8, 8, _pattern_rgb(8, 8, 3)),
+        "422": M.encode_jpeg_422(16, 16, rgb16),
+        "420": M.encode_jpeg_420(16, 16, rgb16),
+        "restart": M.encode_jpeg_gray(16, 8, gray + gray[::-1], restart_interval=1),
+        "progressive": M.encode_jpeg_progressive_gray(8, 8, gray),
+        "progressive_color": M.encode_jpeg_progressive_color(8, 8, _pattern_rgb(8, 8, 5)),
+        "lossless": M.encode_jpeg_lossless(5, 3, gray[:15]),
+        "arith": M.encode_jpeg_arith_gray(8, 8, gray),
+    }
+    for name, payload in payloads.items():
+        full = M._builtin_decoder(payload)
+        for cut in range(len(payload)):
+            try:
+                got = M._builtin_decoder(payload[:cut])
+            except ValueError:
+                continue
+            assert got == full, f"{name}: prefix of {cut}/{len(payload)} bytes decoded to wrong bytes"

@@ -59,44 +59,7 @@ def _assert_equal(name: str, got: pd.DataFrame, want: pd.DataFrame) -> None:
 NAMES = sorted(hds.QUERIES)
 
 
-@pytest.mark.parametrize("name", NAMES)
-def test_parity(name, spark, oracle_con):
-    fn = hds.QUERIES[name]
-    sdf = fn(spark, SF_DIR).toPandas()
-    if name not in hds.ORACLE_SQL:
-        assert len(sdf) >= 0  # rows-only check
-        return
-    odf = oracle_con.execute(hds.ORACLE_SQL[name]).fetchdf()
-    _assert_equal(name, _canon(sdf), _canon(odf))
-
-
-def test_all_queries_nonvacuous(spark, oracle_con):
-    """Queries should return at least one row at sf0.01 (a vacuous
-    oracle match proves nothing), and none may plan a CartesianProduct
-    (an all-pairs join whose cost grows with the square of its input)."""
-    empty, cartesian = [], []
-    for name, fn in hds.QUERIES.items():
-        df = fn(spark, SF_DIR)
-        if df.limit(1).count() == 0:
-            empty.append(name)
-        if "CartesianProduct" in df._jdf.queryExecution().executedPlan().toString():
-            cartesian.append(name)
-    assert not empty, f"empty result sets: {empty}"
-    assert not cartesian, f"plans with a CartesianProduct: {cartesian}"
-
-
-def test_oracle_output_type_guard(spark, oracle_con):
-    """No oracle may emit HUGEINT/UHUGEINT/DECIMAL, and every Spark
-    output column's type category must match its oracle twin.
-
-    Why this exists (r7): DuckDB `sum(BIGINT)` returns
-    HUGEINT. The local fetchall path normalizes HUGEINT to Python int
-    (parity looks exact), but the driver's pandas/Arrow fetch renders
-    it float64/decimal128 — `150.0` vs Spark's BIGINT `150` — which
-    flips the value hash while rows and schema stay green. That
-    burned three driver rounds on the survival family before the r7
-    judge found it. This guard makes the bug class fail locally.
-    """
+def _verify_contract():
     import importlib.util
     import pathlib
 
@@ -104,15 +67,44 @@ def test_oracle_output_type_guard(spark, oracle_con):
     spec = importlib.util.spec_from_file_location("verify_contract", vc_path)
     vc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(vc)
+    return vc
 
-    bad = {}
-    for name, sql in hds.ORACLE_SQL.items():
-        rel = oracle_con.sql(sql)
-        sdf = hds.QUERIES[name](spark, SF_DIR)  # lazy — schema only
-        errs = vc.type_guard_errors(sdf.dtypes, rel.columns, rel.types)
-        if errs:
-            bad[name] = errs
-    assert not bad, f"oracle type-guard violations: {bad}"
+
+_VC = _verify_contract()
+
+
+@pytest.mark.parametrize("name", NAMES)
+def test_parity(name, spark, oracle_con):
+    """Each registered query, built once, gets every check:
+
+    - its plan holds no CartesianProduct (an all-pairs join whose cost
+      grows with the square of its input). The plan string is taken
+      before the result is collected, so AQE's final plan cannot hide
+      one;
+    - it returns at least one row at sf0.01 (a vacuous oracle match
+      proves nothing);
+    - its oracle emits no HUGEINT/UHUGEINT/DECIMAL, and every Spark
+      output column's type category matches its oracle twin. DuckDB
+      `sum(BIGINT)` returns HUGEINT: the local fetch normalizes it to
+      a Python int (parity looks exact), but the driver's pandas/Arrow
+      fetch renders it float64/decimal128 — `150.0` vs Spark's BIGINT
+      `150` — which flips the value hash while rows and schema stay
+      green. That burned three driver rounds on the survival family
+      (r7); this guard makes the bug class fail locally;
+    - its rows equal the oracle's.
+    """
+    df = hds.QUERIES[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    sdf = df.toPandas()
+    assert "CartesianProduct" not in plan, f"{name}: plan has a CartesianProduct"
+    assert len(sdf) > 0, f"{name}: empty result set"
+    if name not in hds.ORACLE_SQL:
+        return  # rows-only check
+    rel = oracle_con.sql(hds.ORACLE_SQL[name])
+    errs = _VC.type_guard_errors(df.dtypes, rel.columns, rel.types)
+    assert not errs, f"{name}: oracle type-guard violations: {errs}"
+    odf = oracle_con.execute(hds.ORACLE_SQL[name]).fetchdf()
+    _assert_equal(name, _canon(sdf), _canon(odf))
 
 
 def test_approx_distinct_sketch_within_tolerance(spark):

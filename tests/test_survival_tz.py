@@ -15,7 +15,7 @@ local fetchall path, but rendered float64/decimal128 on the driver's
 pandas/Arrow fetch, flipping the value hash. Fixed in r8 by
 CAST(... AS BIGINT) in `_KM_ORACLE_CTES`; the class is now rejected
 locally by the oracle output-type guard (scripts/verify_contract.py,
-tests/test_oracle_parity.py::test_oracle_output_type_guard). The TZ
+tests/test_oracle_parity.py::test_parity). The TZ
 tests below remain as standing protection for the day-cast logic."""
 
 from __future__ import annotations
