@@ -490,7 +490,7 @@ def upsert_table(
     - **Full-rewrite** (unpartitioned table): merge everything and
       swap the directory in (`swap_in`, as `compact_table` does). Correct at any size, but O(table); the
       docstring-level advice at scale is: partition (or bucket by
-      key — `bucketing.py` — to make the anti-join shuffle-free) any
+      key — `DataFrameWriter.bucketBy` — to make the anti-join shuffle-free) any
       table that expects upserts.
 
     Single-writer contract, like `compact_table`. Returns

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
 
@@ -34,6 +34,16 @@ def round_col(col: Column, n: int = 2) -> Column:
     pos = F.floor(col * p + F.lit(0.5)) / F.lit(p)
     neg = -(F.floor(-col * p + F.lit(0.5)) / F.lit(p))
     return F.when(col >= 0, pos).otherwise(neg) + F.lit(0.0)
+
+
+def total_rows() -> Column:
+    """The relation's row count on every row: count(1) over one
+    unpartitioned, unbounded window frame."""
+    return F.count(F.lit(1)).over(
+        Window.partitionBy().rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+    )
 
 
 def lit_vec(xs) -> Column:

@@ -12,7 +12,9 @@ arithmetic-coded (SOF9) grayscale — plus the MJPEG container. What
 remains injected (``decode(decoder=...)``) is compressed audio,
 inter-frame video and exotic JPEG variants (hierarchical, sampling
 factors > 2); an unsupported payload raises ``NotImplementedError``
-loudly, and a truncated one raises ``ValueError``. ``extract_features`` uses a
+loudly, and a truncated or corrupt one (a declared length that does
+not match its contents, a scan that runs out of bytes) raises
+``ValueError``. ``extract_features`` uses a
 clearly-marked deterministic fake (bytes → hash → unit vector) where
 a real model would plug in. The surrounding plan is exactly what
 production would run.
@@ -121,8 +123,9 @@ def decode_png(payload: bytes) -> bytes:
     8-bit non-interlaced truecolor (the fixture/export format). All
     five PNG filter types are reconstructed per the spec; anything
     fancier (palette, 16-bit, interlace) still needs an injected
-    codec. A chunk that runs past the payload end, a missing IEND or
-    corrupt image data raises ``ValueError``."""
+    codec. A chunk that runs past the payload end, an IHDR that is not
+    13 bytes, a missing IEND or corrupt image data raises
+    ``ValueError``."""
     data = bytes(payload)
     if data[:8] != _PNG_MAGIC:
         raise ValueError("not a PNG payload")
@@ -133,6 +136,8 @@ def decode_png(payload: bytes) -> bytes:
             raise ValueError("PNG chunk runs past the payload end")
         tag, body, pos = data[pos + 4:pos + 8], data[pos + 8:end - 4], end
         if tag == b"IHDR":
+            if len(body) != 13:
+                raise ValueError(f"PNG IHDR declares {len(body)} bytes, not 13")
             w, h, depth, ctype, _comp, _filt, inter = struct.unpack(
                 ">IIBBBBB", body
             )
@@ -210,8 +215,8 @@ def decode_wav(payload: bytes) -> bytes:
     chunks before data), validates 16-bit mono integer PCM, and
     returns the data chunk bytes (little-endian int16 samples).
     Compressed formats (ADPCM, float, mp3-in-wav) still need an
-    injected codec; a chunk that runs past the payload end raises
-    ``ValueError``."""
+    injected codec; a chunk that runs past the payload end or a ``fmt ``
+    chunk under 16 bytes raises ``ValueError``."""
     data = bytes(payload)
     if data[:4] != _WAV_MAGIC or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -224,6 +229,8 @@ def decode_wav(payload: bytes) -> bytes:
         body = data[pos + 8:pos + 8 + ln]
         pos += 8 + ln + (ln & 1)  # chunks are word-aligned
         if tag == b"fmt ":
+            if len(body) < 16:
+                raise ValueError(f"WAV fmt chunk declares {len(body)} bytes, under 16")
             fmt = struct.unpack("<HHIIHH", body[:16])
         elif tag == b"data":
             pcm = body
@@ -266,8 +273,8 @@ def decode(df: DataFrame, decoder: Callable | None = None) -> DataFrame:
     *decoder* (production would supply PIL/libav — those libraries
     don't ship in this environment). Executor-side, a payload outside
     the built-in surface raises ``NotImplementedError`` and a
-    truncated one (any proper prefix of a supported payload) raises
-    ``ValueError`` — never wrong bytes."""
+    truncated one (any proper prefix of a supported payload) or a
+    corrupt one raises ``ValueError`` — never wrong bytes."""
     if decoder is None:
         decoder = _builtin_decoder
 
@@ -1084,13 +1091,20 @@ def _jpeg_scans(data: bytes) -> Iterator[tuple[_JpegFrame, bytes, bytes]]:
     :class:`_JpegFrame` and yield ``(frame, sos_body, scan)`` per
     scan. A frame beyond the built-in surface (not 8-bit, not 1 or 3
     components, a sampling factor above 2) raises
-    ``NotImplementedError``."""
+    ``NotImplementedError``; a segment whose declared length does not
+    match the tables or fields it carries raises ``ValueError``."""
+
+    def need(ok: bool, what: str) -> None:
+        if not ok:
+            raise ValueError(f"JPEG {what} segment length does not match its contents")
+
     f = _JpegFrame()
     for marker, body, scan in _jpeg_segments(data):
         if marker == 0xFFDB:
             o = 0
             while o < len(body):
                 pq, tq = body[o] >> 4, body[o] & 0xF
+                need(o + (129 if pq else 65) <= len(body), "DQT")
                 if pq == 0:  # 8-bit entries
                     zz = body[o + 1:o + 65]
                 else:  # Pq=1: 16-bit big-endian entries (extended seq.)
@@ -1103,14 +1117,18 @@ def _jpeg_scans(data: bytes) -> Iterator[tuple[_JpegFrame, bytes, bytes]]:
         elif marker == 0xFFC4:
             o = 0
             while o < len(body):
+                need(o + 17 <= len(body), "DHT")
                 bits = list(body[o + 1:o + 17])
                 n = sum(bits)
+                need(o + 17 + n <= len(body), "DHT")
                 vals = list(body[o + 17:o + 17 + n])
                 f.huff[(body[o] >> 4, body[o] & 0xF)] = _huff_decoder(bits, vals)
                 o += 17 + n
         elif marker == 0xFFDD:
-            (f.restart,) = struct.unpack(">H", body[:2])
+            need(len(body) == 2, "DRI")
+            (f.restart,) = struct.unpack(">H", body)
         elif marker in _SOF_MARKERS:
+            need(len(body) >= 6 and len(body) == 6 + 3 * body[5], "SOF")
             prec, f.h, f.w, ncomp = struct.unpack(">BHHB", body[:6])
             if prec != 8 or ncomp not in (1, 3):
                 raise NotImplementedError(
@@ -1128,6 +1146,7 @@ def _jpeg_scans(data: bytes) -> Iterator[tuple[_JpegFrame, bytes, bytes]]:
         elif marker == 0xFFDA:
             if f.sof is None:
                 raise ValueError("JPEG scan before its SOF")
+            need(len(body) >= 1 and len(body) == 4 + 2 * body[0], "SOS")
             yield f, body, scan
 
 
@@ -1165,9 +1184,9 @@ class _BitReader:
             if b == 0xFF and self.data[self.pos:self.pos + 1] == b"\x00":
                 self.pos += 1  # stuffed byte
             elif b is None or b == 0xFF:
-                raise NotImplementedError(
-                    "unexpected marker inside entropy-coded data "
-                    "(progressive JPEG / desynced restart) — inject a codec"
+                raise ValueError(
+                    "JPEG scan ends or hits a marker before its last "
+                    "block: corrupt or desynced entropy-coded data"
                 )
             self.acc = b
             self.nbits = 8

@@ -18,12 +18,22 @@ via an inline explode, so the join itself moves each key once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..exprs import round_col, round_sql
 from ..registry import query
+
+
+def key_changes(events: DataFrame, key: Column) -> DataFrame:
+    """Roll events up to one change per *key*: (key, new_bal, update_us)
+    with the rounded summed value and the latest event time in epoch
+    micros."""
+    return events.groupBy(key.alias("key")).agg(
+        round_col(F.sum("value")).alias("new_bal"),
+        F.max(F.unix_micros("ts")).alias("update_us"),
+    )
 
 
 def apply_scd2(state: DataFrame, upd: DataFrame) -> DataFrame:
@@ -141,26 +151,7 @@ def scd2_merge_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     no key crosses the wire twice. Validity bounds travel as epoch
     micros (`unix_micros` ↔ DuckDB `epoch_us`), the engine-portable
     timestamp rendering used throughout the event queries."""
-    e = load_table(spark, sf_dir, "events")
-    upd = (
-        e.groupBy((F.col("user_id") + F.lit(1450)).alias("key"))
-        .agg(
-            round_col(F.sum("value")).alias("new_bal"),
-            F.max(F.unix_micros("ts")).alias("update_us"),
-        )
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("key"),
-        round_col(F.col("c_acctbal")).alias("bal"),
-    )
-    state0 = dim.select(
-        "key",
-        "bal",
-        F.lit(0).cast("long").alias("valid_from_us"),
-        F.lit(None).cast("long").alias("valid_to_us"),
-        F.lit(True).alias("is_current"),
-    )
-    return apply_scd2(state0, upd).orderBy("key", "valid_from_us")
+    return _scd2_chain(spark, sf_dir).orderBy("key", "valid_from_us")
 
 
 @query(
@@ -331,10 +322,7 @@ def _scd2_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The merged SCD2 chain `scd2_merge_batch` emits, as a reusable
     relation (Spark twin of the `_SCD2_CHAIN_CTES` oracle text)."""
     e = load_table(spark, sf_dir, "events")
-    upd = e.groupBy((F.col("user_id") + F.lit(1450)).alias("key")).agg(
-        round_col(F.sum("value")).alias("new_bal"),
-        F.max(F.unix_micros("ts")).alias("update_us"),
-    )
+    upd = key_changes(e, F.col("user_id") + F.lit(1450))
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("key"),
         round_col(F.col("c_acctbal")).alias("bal"),

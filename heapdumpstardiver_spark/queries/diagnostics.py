@@ -15,16 +15,126 @@ per-row data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..exprs import round_col, round_sql, stable_render, stable_render_sql
+from ..exprs import round_col, round_sql, stable_render, stable_render_sql, total_rows
 from ..registry import query
+from .windows import DAILY_REV_CENTS_SQL
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+
+# Shared cores of the paired and two-sample tests below, each with its
+# oracle CTE twin.
+# click vs purchase value stats: (n, mean, var_samp) as n1/m1/v1 and
+# n2/m2/v2 in one row.
+_AB_STATS_SQL = """g AS (
+        SELECT event_type,
+               CAST(count(*) AS BIGINT) AS n,
+               avg(value) AS m,
+               var_samp(value) AS v
+        FROM events WHERE event_type IN ('click', 'purchase')
+        GROUP BY event_type
+    ),
+    ab AS (
+        SELECT
+            max(CASE WHEN event_type = 'click' THEN n END) AS n1,
+            max(CASE WHEN event_type = 'click' THEN m END) AS m1,
+            max(CASE WHEN event_type = 'click' THEN v END) AS v1,
+            max(CASE WHEN event_type = 'purchase' THEN n END) AS n2,
+            max(CASE WHEN event_type = 'purchase' THEN m END) AS m2,
+            max(CASE WHEN event_type = 'purchase' THEN v END) AS v2
+        FROM g
+    )"""
+# Per-user value in cents before and after the 2024-01-16 cut.
+_PRE_POST_SQL = """per_user AS (
+        SELECT user_id,
+               CAST(floor(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
+                                   THEN value ELSE 0 END) * 100 + 0.5)
+                    AS BIGINT) AS pre_c,
+               CAST(floor(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
+                                   THEN value ELSE 0 END) * 100 + 0.5)
+                    AS BIGINT) AS post_c
+        FROM events GROUP BY user_id
+    )"""
+
+
+def _ab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row: click (n1, m1, v1) and purchase (n2, m2, v2) count,
+    mean and var_samp of `value` — one grouped aggregate, then a
+    pivot of the two triples."""
+    e = load_table(spark, sf_dir, "events")
+    g = (
+        e.filter(F.col("event_type").isin("click", "purchase"))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.avg("value").alias("m"),
+            F.var_samp("value").alias("v"),
+        )
+    )
+    pick = lambda t, c: F.max(F.when(F.col("event_type") == t, F.col(c)))  # noqa: E731
+    return g.agg(
+        pick("click", "n").alias("n1"),
+        pick("click", "m").alias("m1"),
+        pick("click", "v").alias("v1"),
+        pick("purchase", "n").alias("n2"),
+        pick("purchase", "m").alias("m2"),
+        pick("purchase", "v").alias("v2"),
+    )
+
+
+def _pre_post_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, pre_c, post_c): each user's value in exact cents
+    before and at/after the 2024-01-16 cut."""
+    e = load_table(spark, sf_dir, "events")
+    cut = F.lit("2024-01-16").cast("timestamp_ntz")
+    return e.groupBy("user_id").agg(
+        F.floor(
+            F.sum(F.when(F.col("ts") < cut, F.col("value")).otherwise(0.0))
+            * 100
+            + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("pre_c"),
+        F.floor(
+            F.sum(F.when(F.col("ts") >= cut, F.col("value")).otherwise(0.0))
+            * 100
+            + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("post_c"),
+    )
+
+
+def _order_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(w): each order's week number since 1970-01-01."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.select(
+        F.floor(
+            F.datediff(
+                F.col("o_orderdate").cast("date"),
+                F.lit("1970-01-01").cast("date"),
+            )
+            / 7
+        ).alias("w")
+    )
+
+
+def _chi2_crit_95(dof: Column) -> Column:
+    """χ² critical value at 5% for *dof* 1–6. dof > 6 yields NULL (the
+    ladder ends at 6) rather than silently reusing the dof=6 value: a
+    too-lenient reject bit is statistically wrong and parity would not
+    flag it. Current fixtures have ≤5 event types."""
+    return (
+        F.when(dof == 1, 3.841)
+        .when(dof == 2, 5.991)
+        .when(dof == 3, 7.815)
+        .when(dof == 4, 9.488)
+        .when(dof == 5, 11.07)
+        .when(dof == 6, 12.592)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -96,7 +206,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct sketches (service.profile_table's
     max_distinct_cols knob); exact is kept here because the oracle
     must hash-match."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
 
     slots = []
     for col, kind in _PROFILE_COLS:
@@ -202,7 +312,7 @@ def join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the (already tiny) per-key table and broadcasts back
     over it (1-row crossJoin); top-5 via TakeOrdered — no global
     sort, no driver-side data."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_key = li.groupBy(F.col("l_suppkey").alias("key")).agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -279,10 +389,10 @@ def constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       pruned to (key, date) columns.
     All branches union into one 9-row result, so the audit is one
     action and the scheduler interleaves the scans."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e = _t(spark, sf_dir, "events")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    e = load_table(spark, sf_dir, "events")
 
     def flag(cond) -> F.Column:
         # coalesce: sum over an EMPTY table is NULL, the oracle's
@@ -398,7 +508,7 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     One conditional scan, a 9-row
     aggregate, a 1-row total broadcast: nothing here scales with
     anything but the scan."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1.0)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") >= 1.0)
     counts = (
         o.select(
             F.substring(
@@ -426,6 +536,22 @@ def benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("digit")
     )
+
+
+def decile_fractions() -> Column:
+    """The nine decile fractions 0.1 .. 0.9 as an array literal."""
+    return F.array(*[F.lit(x / 10.0) for x in range(1, 10)])
+
+
+def psi_share(n: Column, total: Column) -> Column:
+    """A bin's Laplace-smoothed share (+0.5 per bin over 10 bins), which
+    keeps the PSI log finite when a bin empties."""
+    return (n + F.lit(0.5)) / (total + F.lit(5.0))
+
+
+def psi_term(p_cur: Column, p_ref: Column) -> Column:
+    """One bin's PSI contribution (p_cur − p_ref)·ln(p_cur / p_ref)."""
+    return (p_cur - p_ref) * F.log(p_cur / p_ref)
 
 
 @query(
@@ -488,8 +614,7 @@ def psi_drift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut_ts = F.lit("2024-01-16").cast("timestamp_ntz")
     a = e.filter(F.col("ts") < cut_ts).select("value")
     b = e.filter(F.col("ts") >= cut_ts).select("value")
-    fracs = F.array(*[F.lit(x / 10.0) for x in range(1, 10)])
-    cuts = a.agg(F.percentile("value", fracs).alias("cs"))
+    cuts = a.agg(F.percentile("value", decile_fractions()).alias("cs"))
     bin_of = (
         F.lit(1)
         + F.size(F.filter(F.col("cs"), lambda x: x < F.col("value")))
@@ -505,8 +630,8 @@ def psi_drift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("src") == "b", 1).otherwise(0)).alias("n_b"),
     )
     tot = counts.agg(F.sum("n_a").alias("ta"), F.sum("n_b").alias("tb"))
-    p_ref = (F.col("n_a") + F.lit(0.5)) / (F.col("ta") + F.lit(5.0))
-    p_cur = (F.col("n_b") + F.lit(0.5)) / (F.col("tb") + F.lit(5.0))
+    p_ref = psi_share(F.col("n_a"), F.col("ta"))
+    p_cur = psi_share(F.col("n_b"), F.col("tb"))
     return (
         counts.crossJoin(F.broadcast(tot))
         .select(
@@ -515,7 +640,7 @@ def psi_drift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_b").cast("long").alias("n_cur"),
             round_col(p_ref, 6).alias("p_ref"),
             round_col(p_cur, 6).alias("p_cur"),
-            stable_render((p_cur - p_ref) * F.log(p_cur / p_ref), 6).alias(
+            stable_render(psi_term(p_cur, p_ref), 6).alias(
                 "psi_term"
             ),
         )
@@ -661,7 +786,7 @@ def partition_key_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each candidate costs one groupBy over its key expression rolled
     into a 1-row summary; candidates union into one action, so the
     scheduler interleaves the scans like `constraint_audit`."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     exprs = {
         "o_orderstatus": F.col("o_orderstatus"),
         "o_orderpriority": F.col("o_orderpriority"),
@@ -755,7 +880,7 @@ def mann_whitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     over distinct integer counts (dozens of rows), never the corpus.
     Per-user counts are exact integers, so ranks carry no float
     nondeterminism into the U statistic."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     samples = (
         e.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy("user_id", "event_type")
@@ -842,7 +967,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~100-row cell table. The expected-count math happens on exact
     integer products cast to double once, so the only float work is
     the final bounded reduction."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("obs"))
     rt = cells.groupBy("lang").agg(F.sum("obs").alias("row_tot"))
     ct = cells.groupBy("source").agg(F.sum("obs").alias("col_tot"))
@@ -930,17 +1055,8 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile-interpolation arithmetic agreeing across engines.
     Weekly y is an exact integer count, so each slope is a single
     float division — deterministic on both sides."""
-    o = _t(spark, sf_dir, "orders")
     weekly = (
-        o.select(
-            F.floor(
-                F.datediff(
-                    F.col("o_orderdate").cast("date"),
-                    F.lit("1970-01-01").cast("date"),
-                )
-                / 7
-            ).alias("w")
-        )
+        _order_weeks(spark, sf_dir)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("y"))
     )
@@ -1038,7 +1154,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation; rank windows run over that reduced relation (the
     adjudicated pattern — `decile_binning_broadcast_cuts` documents
     the broadcast-cuts swap for unbounded group counts)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.max("o_totalprice").alias("max_price"),
@@ -1070,24 +1186,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "welch_t_test",
     oracle=f"""
-    WITH g AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               avg(value) AS m,
-               var_samp(value) AS v
-        FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY event_type
-    ),
-    ab AS (
-        SELECT
-            max(CASE WHEN event_type = 'click' THEN n END) AS n1,
-            max(CASE WHEN event_type = 'click' THEN m END) AS m1,
-            max(CASE WHEN event_type = 'click' THEN v END) AS v1,
-            max(CASE WHEN event_type = 'purchase' THEN n END) AS n2,
-            max(CASE WHEN event_type = 'purchase' THEN m END) AS m2,
-            max(CASE WHEN event_type = 'purchase' THEN v END) AS v2
-        FROM g
-    )
+    WITH {_AB_STATS_SQL}
     SELECT n1, n2,
            {round_sql("m1 - m2", 4)} AS mean_diff,
            {round_sql("(m1 - m2) / sqrt(v1 / n1 + v2 / n2)", 4)} AS t_stat,
@@ -1115,25 +1214,7 @@ def welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on a 1-row relation. The t statistic is
     sufficient-statistics arithmetic, so no second pass and no
     per-row work beyond the single scan."""
-    e = _t(spark, sf_dir, "events")
-    g = (
-        e.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.avg("value").alias("m"),
-            F.var_samp("value").alias("v"),
-        )
-    )
-    pick = lambda t, c: F.max(F.when(F.col("event_type") == t, F.col(c)))  # noqa: E731
-    ab = g.agg(
-        pick("click", "n").alias("n1"),
-        pick("click", "m").alias("m1"),
-        pick("click", "v").alias("v1"),
-        pick("purchase", "n").alias("n2"),
-        pick("purchase", "m").alias("m2"),
-        pick("purchase", "v").alias("v2"),
-    )
+    ab = _ab_stats(spark, sf_dir)
     se2 = F.col("v1") / F.col("n1") + F.col("v2") / F.col("n2")
     t_stat = round_col((F.col("m1") - F.col("m2")) / F.sqrt(se2), 4)
     df_w = round_col(
@@ -1201,7 +1282,7 @@ def anova_oneway_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios rounded at 4-6dp. Scale shape: ONE grouped aggregate
     collapses the corpus to k=5 sufficient-statistic rows; everything
     after is arithmetic on a broadcast scalar."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.avg("o_totalprice").alias("m"),
@@ -1294,7 +1375,7 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus. The O(n log n) merge-sort tau exists for unbounded
     keys; on a calendar-bounded axis the simple pair join is the
     faster plan (no sort, no driver state)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # materialize the calendar-bounded daily rollup before the pair
     # self-join — without this the self-join's two branches each
     # replay the full orders scan+aggregate lineage
@@ -1389,7 +1470,7 @@ def tukey_hsd_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient-statistic rows (materialized before pairing so the
     k² self-join can't replay the corpus scan); the pair set is
     k(k−1)/2 = 10 rows of scalar arithmetic."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     g = (
         o.groupBy(F.col("o_orderpriority").alias("grp"))
         .agg(
@@ -1466,7 +1547,7 @@ def fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines do exact integer arithmetic until the final divisions,
     rounded 4dp. Scale shape: one (type, day) aggregate bounded by
     types × calendar days, then a k-row rollup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1492,16 +1573,7 @@ def fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "wilcoxon_signed_rank",
     oracle=f"""
-    WITH per_user AS (
-        SELECT user_id,
-               CAST(floor(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                                   THEN value ELSE 0 END) * 100 + 0.5)
-                    AS BIGINT) AS pre_c,
-               CAST(floor(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                                   THEN value ELSE 0 END) * 100 + 0.5)
-                    AS BIGINT) AS post_c
-        FROM events GROUP BY user_id
-    ),
+    WITH {_PRE_POST_SQL},
     diffs AS (
         SELECT post_c - pre_c AS d, abs(post_c - pre_c) AS ad
         FROM per_user WHERE post_c <> pre_c
@@ -1559,24 +1631,7 @@ def wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the final z, rounded 4dp with the reject taken on the rounded
     value. Scale shape: one user-keyed aggregate, one value-keyed
     aggregate, then scalar arithmetic."""
-    e = _t(spark, sf_dir, "events")
-    cut = F.lit("2024-01-16").cast("timestamp_ntz")
-    per_user = e.groupBy("user_id").agg(
-        F.floor(
-            F.sum(F.when(F.col("ts") < cut, F.col("value")).otherwise(0.0))
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("pre_c"),
-        F.floor(
-            F.sum(F.when(F.col("ts") >= cut, F.col("value")).otherwise(0.0))
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("post_c"),
-    )
+    per_user = _pre_post_cents(spark, sf_dir)
     diffs = per_user.filter(F.col("post_c") != F.col("pre_c")).select(
         (F.col("post_c") - F.col("pre_c")).alias("d"),
         F.abs(F.col("post_c") - F.col("pre_c")).alias("ad"),
@@ -1697,7 +1752,7 @@ def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     type) counts (one shuffle) → per-VALUE rank table (distinct
     integer counts, dozens of rows, broadcast back) → k-row group
     table; no corpus-sized window anywhere."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     samples = e.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("x")
     ).select(F.col("event_type").alias("g"), "x")
@@ -1755,19 +1810,7 @@ def kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("corr"),
         )
     )
-    crit = (
-        F.when(F.col("k") - 1 == 1, 3.841)
-        .when(F.col("k") - 1 == 2, 5.991)
-        .when(F.col("k") - 1 == 3, 7.815)
-        .when(F.col("k") - 1 == 4, 9.488)
-        .when(F.col("k") - 1 == 5, 11.07)
-        # dof>6 yields NULL (χ² ladder ends at 6) rather than silently
-        # reusing the dof=6 critical value — r8 ADVICE: a too-lenient
-        # reject bit is statistically wrong and parity would not flag
-        # it. Current fixtures have ≤5 event types; NULL is the honest
-        # answer past the table.
-        .when(F.col("k") - 1 == 6, 12.592)
-    )
+    crit = _chi2_crit_95(F.col("k") - 1)
     h_tied = round_col(F.col("h_raw") / F.col("corr"), 4)
     return h.select(
         F.col("k").alias("k_groups"),
@@ -1835,7 +1878,7 @@ def mcnemar_paired_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     taken on the rounded value; b+c=0 degenerates to 0/false rather
     than NULL. Scale shape: one user-keyed aggregate collapses the
     corpus; everything after is a 1-row scalar frame."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16").cast("timestamp_ntz")
     is_p = F.col("event_type") == "purchase"
     per_user = e.groupBy("user_id").agg(
@@ -1946,7 +1989,7 @@ def brown_forsythe_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus → (group, value)-count cells in one shuffle; the median
     window partitions BY GROUP over the bounded distinct-value
     relation; everything after is k rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cells = e.groupBy(
         F.col("event_type").alias("g"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
@@ -2090,7 +2133,7 @@ def jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's HUGEINT→BIGINT cast errors; for such corpora winsorize
     the counts first or move the S3/S4 accumulation to DOUBLE on
     BOTH sides (the 4dp rounding absorbs the float error)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     x = F.col("x")
     pows = (
         e.groupBy("user_id")
@@ -2131,12 +2174,7 @@ def jarque_bera_normality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "durbin_watson_autocorr",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT)
-                   AS rev_cents
-        FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    WITH daily AS ({DAILY_REV_CENTS_SQL}),
     seq AS (
         SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
                rev_cents AS y
@@ -2202,7 +2240,7 @@ def durbin_watson_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the first breach point; a century of $100M/day is safe).
     Past that, Spark wraps silently while the oracle's HUGEINT→
     BIGINT cast errors; move Sxy to DOUBLE on both sides then."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -2307,7 +2345,7 @@ def two_proportion_z_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero accumulation-order surface. Scale shape: one per-user
     shuffle then a 4-integer global reduce; the test itself is
     driver-free arithmetic on one row."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cohorts = e.groupBy("user_id").agg(
         F.max(
             F.when(
@@ -2440,7 +2478,7 @@ def benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     window) exactly as the rule states. Scale shape: corpus → k-row
     test family (one shuffle); ranking/threshold logic runs on k
     rows. Ties on p break by event_type for a total order."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     overall = e.agg(F.avg("value").alias("mu"))
     grp = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
@@ -2563,7 +2601,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: corpus → per-(user,type) counts (one shuffle) →
     value histogram (dozens of rows) + k-row table; the median cut
     broadcasts back — no corpus-sized sort anywhere."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     samples = e.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("long").alias("x")
     )
@@ -2606,19 +2644,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pow(F.col("above") - ea, 2) / ea + F.pow(F.col("below") - eb, 2) / eb
     )
     chi = joined.groupBy("k", "ta", "tb").agg(F.sum(term).alias("chi2"))
-    crit = (
-        F.when(F.col("k") - 1 == 1, 3.841)
-        .when(F.col("k") - 1 == 2, 5.991)
-        .when(F.col("k") - 1 == 3, 7.815)
-        .when(F.col("k") - 1 == 4, 9.488)
-        .when(F.col("k") - 1 == 5, 11.07)
-        # dof>6 yields NULL (χ² ladder ends at 6) rather than silently
-        # reusing the dof=6 critical value — r8 ADVICE: a too-lenient
-        # reject bit is statistically wrong and parity would not flag
-        # it. Current fixtures have ≤5 event types; NULL is the honest
-        # answer past the table.
-        .when(F.col("k") - 1 == 6, 12.592)
-    )
+    crit = _chi2_crit_95(F.col("k") - 1)
     return chi.select(
         F.col("k").alias("k_groups"),
         (F.col("ta") + F.col("tb")).alias("n_used"),
@@ -2697,17 +2723,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: the corpus collapses to one row per week
     (calendar-bounded), the pair join is weeks²/2 — constant as data
     grows, the `theil_sen_trend` discipline."""
-    o = _t(spark, sf_dir, "orders")
     weekly = (
-        o.select(
-            F.floor(
-                F.datediff(
-                    F.col("o_orderdate").cast("date"),
-                    F.lit("1970-01-01").cast("date"),
-                )
-                / 7
-            ).alias("w")
-        )
+        _order_weeks(spark, sf_dir)
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("y"))
     )
@@ -2833,7 +2850,7 @@ def runs_test_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-ordered series. One sqrt at the end, 4dp, reject on the
     rounded z. Scale shape: corpus → calendar-bounded daily
     aggregate; every window runs over that bounded series."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -2843,12 +2860,7 @@ def runs_test_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "c",
         F.row_number().over(Window.orderBy("c", "day")).alias("rn"),
-        F.count(F.lit(1))
-        .over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
+        total_rows()
         .alias("n"),
     )
     lo = F.floor((F.col("n") + 1) / 2)
@@ -2914,16 +2926,7 @@ def runs_test_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sign_test_paired",
     oracle=f"""
-    WITH per_user AS (
-        SELECT user_id,
-               CAST(floor(sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
-                                   THEN value ELSE 0 END) * 100 + 0.5)
-                    AS BIGINT) AS pre_c,
-               CAST(floor(sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
-                                   THEN value ELSE 0 END) * 100 + 0.5)
-                    AS BIGINT) AS post_c
-        FROM events GROUP BY user_id
-    ),
+    WITH {_PRE_POST_SQL},
     agg AS (
         SELECT CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CASE WHEN post_c > pre_c THEN 1 ELSE 0 END)
@@ -2960,24 +2963,7 @@ def sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the reject bit on the rounded value. Scale shape: one
     user-keyed aggregate then a 1-row closed form — nothing after
     the shuffle is bigger than two integers."""
-    e = _t(spark, sf_dir, "events")
-    cut = F.lit("2024-01-16").cast("timestamp_ntz")
-    per_user = e.groupBy("user_id").agg(
-        F.floor(
-            F.sum(F.when(F.col("ts") < cut, F.col("value")).otherwise(0.0))
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("pre_c"),
-        F.floor(
-            F.sum(F.when(F.col("ts") >= cut, F.col("value")).otherwise(0.0))
-            * 100
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("post_c"),
-    )
+    per_user = _pre_post_cents(spark, sf_dir)
     agg = per_user.filter(F.col("post_c") != F.col("pre_c")).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(F.col("post_c") > F.col("pre_c"), 1).otherwise(0))
@@ -3007,24 +2993,7 @@ def sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cohens_d_effect",
     oracle=f"""
-    WITH g AS (
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               avg(value) AS m,
-               var_samp(value) AS v
-        FROM events WHERE event_type IN ('click', 'purchase')
-        GROUP BY event_type
-    ),
-    ab AS (
-        SELECT
-            max(CASE WHEN event_type = 'click' THEN n END) AS n1,
-            max(CASE WHEN event_type = 'click' THEN m END) AS m1,
-            max(CASE WHEN event_type = 'click' THEN v END) AS v1,
-            max(CASE WHEN event_type = 'purchase' THEN n END) AS n2,
-            max(CASE WHEN event_type = 'purchase' THEN m END) AS m2,
-            max(CASE WHEN event_type = 'purchase' THEN v END) AS v2
-        FROM g
-    ),
+    WITH {_AB_STATS_SQL},
     d AS (
         SELECT n1, n2,
                (m1 - m2) / sqrt(((n1 - 1) * v1 + (n2 - 1) * v2)
@@ -3058,30 +3027,7 @@ def cohens_d_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     4dp); everything after is scalar closed-form arithmetic on a
     1-row relation, with the magnitude label read from the ROUNDED
     d. Scale shape: one shuffle, then constants."""
-    e = _t(spark, sf_dir, "events")
-    g = (
-        e.filter(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.avg("value").alias("m"),
-            F.var_samp("value").alias("v"),
-        )
-    )
-    ab = g.agg(
-        F.max(F.when(F.col("event_type") == "click", F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("event_type") == "click", F.col("m"))).alias("m1"),
-        F.max(F.when(F.col("event_type") == "click", F.col("v"))).alias("v1"),
-        F.max(F.when(F.col("event_type") == "purchase", F.col("n"))).alias(
-            "n2"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", F.col("m"))).alias(
-            "m2"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", F.col("v"))).alias(
-            "v2"
-        ),
-    )
+    ab = _ab_stats(spark, sf_dir)
     n1, n2 = F.col("n1"), F.col("n2")
     cd = (F.col("m1") - F.col("m2")) / F.sqrt(
         ((n1 - 1) * F.col("v1") + (n2 - 1) * F.col("v2")) / (n1 + n2 - 2)
@@ -3155,7 +3101,7 @@ def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound: Σs²n ≤ 2500·|lineitem| and N·Σsr ≤ N²·50 — safe through
     ~600M rows, far past any oracle scale. Scale shape: one grouped
     aggregate (≤50 groups), then a 1-row closed form."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     g = li.groupBy(F.col("l_quantity").cast("long").alias("s")).agg(
         F.count(F.lit(1)).cast("long").alias("n_j"),
         F.sum(F.when(F.col("l_returnflag") == "R", 1).otherwise(0))
@@ -3239,7 +3185,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline for transcendental chains. Scale shape: a global
     top-101 (TakeOrdered — no full sort materialization), then 100
     rows of scalar arithmetic."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     ranked = o.select(
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
         .cast("long")
@@ -3324,7 +3270,7 @@ def cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, then a single pass computing all six variances in
     the same grouped aggregate; nothing after the shuffle exceeds
     scalar state."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     items = ["click", "view", "purchase", "signup", "error"]
     per_user = e.groupBy("user_id").agg(
         *[
@@ -3447,7 +3393,7 @@ def friedman_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     one closed-form 1-row expression, 4dp, reject on the rounded
     value against the dof=4 ladder. Scale shape: one user-keyed
     aggregate, per-row scalar rank arithmetic, one scalar rollup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     items = ["click", "view", "purchase", "signup", "error"]
     k = len(items)
     per_user = e.groupBy("user_id").agg(
@@ -3563,8 +3509,8 @@ def theil_inequality_decomposition(spark: SparkSession, sf_dir: str) -> DataFram
     — the `importance_resample_dsir` discipline for corpus-wide
     log-sums. Scale shape: one join + customer-keyed aggregate, one
     segment aggregate, two scalar rollups; nothing pairwise."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     cust = (
         o.join(c, c["c_custkey"] == o["o_custkey"])
         .groupBy("o_custkey", "c_mktsegment")
@@ -3688,7 +3634,7 @@ def auc_rank_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one value-keyed aggregate (never a corpus-wide
     rank window), one value-ordered window over the DISTINCT-value
     relation, one scalar rollup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     scored = e.filter(
         F.col("event_type").isin("click", "purchase")
     ).select(
@@ -3777,7 +3723,7 @@ def g_test_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4dp decimal string). Scale shape: one (lang, source) aggregate,
     marginals off the cell table, one scalar rollup — cell-bounded
     after a single shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("obs")
     )
@@ -3872,7 +3818,7 @@ def mcc_confusion_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     of four ~N-sized factors would overflow LONG at corpus scale),
     6dp. Scale shape: one scan, one 4-counter aggregate, scalar
     arithmetic — the cheapest possible evaluation plan."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     labeled = e.filter(
         F.col("event_type").isin("click", "purchase")
     ).select(

@@ -37,9 +37,6 @@ from ..exprs import (
 from ..registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
 
 def _spread(df: DataFrame, spark: SparkSession, *keys: str) -> DataFrame:
     """Scale-adaptive parallelism floor for map-heavy stages (r13):
@@ -146,6 +143,13 @@ def _fp_materialize(df: DataFrame, sf_dir: str) -> DataFrame:
     return df.localCheckpoint()
 
 
+def _minhash_sig_sql(k: int) -> str:
+    """`sig` CTE body: k salted min-hashes h0..h{k-1} per doc over `sh`
+    (lexicographic min over md5 hex, the order Spark's array_min sees)."""
+    hs = ", ".join(f"min(md5(shingle || ':{j}')) AS h{j}" for j in range(k))
+    return f"\n        SELECT doc_id, {hs} FROM sh GROUP BY doc_id\n    "
+
+
 # Document-frequency cap for exact shingle-bucket pipelines
 # (ngram_shingle_overlap, jaccard_pairs): a shingle shared by more
 # documents than this is a stop phrase — pairing inside such a bucket is
@@ -164,6 +168,148 @@ SHINGLE_DF_CAP = 64
 # connected-components pass downstream. Mirrored verbatim in the
 # oracle SQL; change BOTH together.
 BAND_BUCKET_CAP = 64
+
+
+# DuckDB twins of the shingle and MinHash cores, one CTE body each
+# (padded like a hand-written `name AS (\n    body\n)` CTE):
+# `toks` (whitespace tokens per doc), the distinct 3-token shingles
+# (`_SHINGLES_SQL` as text, `_MD5_SHINGLES_SQL` as md5 hex), the `sig`
+# min-hashes over `sh`, the band unions over `sig`, and the band
+# self-join pairs over `bands`.
+_TOKS_SQL = """
+        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
+    """
+_SHINGLE_RANGE_SQL = "FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)"
+_SHINGLES_SQL = f"""
+        SELECT DISTINCT doc_id, array_to_string(tokens[i:i+2], ' ') AS shingle
+        {_SHINGLE_RANGE_SQL}
+    """
+_MD5_SHINGLES_SQL = f"""
+        SELECT DISTINCT doc_id,
+               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
+        {_SHINGLE_RANGE_SQL}
+    """
+# 4 min-hashes in 2 bands (the candidate-pair form) ...
+_SIG4_BANDS2_SQL = f"""sig AS ({_minhash_sig_sql(4)}),
+    bands AS (
+        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
+        UNION ALL
+        SELECT doc_id, 1 AS band, md5(h2 || h3) AS bucket FROM sig
+    )"""
+# ... and 8 min-hashes in 4 bands (the capped-index form).
+_BANDS4_SQL = """
+        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
+        UNION ALL SELECT doc_id, 1, md5(h2 || h3) FROM sig
+        UNION ALL SELECT doc_id, 2, md5(h4 || h5) FROM sig
+        UNION ALL SELECT doc_id, 3, md5(h6 || h7) FROM sig
+    """
+# Exact shared-shingle counts of `jaccard_pairs`/`containment_pairs`.
+_SHARED_SHINGLES_SQL = """
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+        FROM shingles a JOIN shingles b
+          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        JOIN bounded c ON c.shingle = a.shingle
+        GROUP BY 1, 2 HAVING count(*) >= 3
+    """
+_BAND_PAIRS_SQL = """
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+    """
+
+
+def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, tokens) of every document with at least 3 whitespace
+    tokens (one trigram shingle), spread over the session's cores
+    (`_spread`)."""
+    d = load_table(spark, sf_dir, "documents")
+    return _spread(
+        d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
+            F.size("tokens") >= 3
+        ),
+        spark,
+        "doc_id",
+    )
+
+
+def shingle_set(tokens: str) -> Column:
+    """The distinct 3-token shingles (space-joined text) of the token
+    array column *tokens* — the `_SHINGLES_SQL` set, row-local."""
+    return F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.size(tokens) - 2),
+            lambda i: F.concat_ws(" ", F.slice(tokens, i, 3)),
+        )
+    )
+
+
+def minhash_band_rows(sets: DataFrame, arr: str, k: int, n_bands: int) -> DataFrame:
+    """(doc_id, band, bucket) rows from per-doc shingle arrays in
+    column *arr*: k salted min-hashes (`exprs.minhash_bands`) cut into
+    *n_bands* bands, exploded in one pass over the signature."""
+    sig, bb = minhash_bands(lambda h: F.array_min(F.transform(arr, h)), k, n_bands)
+    return (
+        sets.select("doc_id", *sig)
+        .select("doc_id", bb)
+        .select("doc_id", "bb.band", "bb.bucket")
+    )
+
+
+def cap_bands(bands: DataFrame) -> DataFrame:
+    """Keep the BAND_BUCKET_CAP smallest doc_ids per (band, bucket).
+    row_number (a sort-based pass-through) rather than collect_list,
+    so no aggregate state holds a hot bucket."""
+    wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
+    return (
+        bands.withColumn("rnb", F.row_number().over(wcap))
+        .filter(F.col("rnb") <= BAND_BUCKET_CAP)
+        .drop("rnb")
+    )
+
+
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (doc_a < doc_b) sharing a bucket in some
+    band: the LSH band self-join."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def band_probe(batch_bands: DataFrame, index: DataFrame) -> DataFrame:
+    """Distinct (b_doc, c_doc) candidates: batch band rows probing a
+    corpus band index by (band, bucket)."""
+    b, c = batch_bands.alias("b"), index.alias("c")
+    return (
+        b.join(
+            c,
+            (F.col("b.band") == F.col("c.band"))
+            & (F.col("b.bucket") == F.col("c.bucket")),
+        )
+        .select(F.col("b.doc_id").alias("b_doc"), F.col("c.doc_id").alias("c_doc"))
+        .distinct()
+    )
+
+
+def _sorted_pairs(docs: str) -> Column:
+    """Every ordered pair (doc_a < doc_b) of the sorted id array *docs*:
+    the i-th id pairs with every later one."""
+    return F.flatten(
+        F.transform(
+            docs,
+            lambda x, i: F.transform(
+                F.slice(docs, i + 2, F.size(docs)),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -194,7 +340,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups, dropped == multiplicity minus one per group — so the
     row_number window's sort and the separate countDistinct branch
     collapse into one partial-aggregating groupBy.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = d.groupBy(F.md5("text").alias("h")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -273,7 +419,7 @@ def saturation_dedup_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 8-row bucket aggregate."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     hashed = d.select("doc_id", F.md5("text").alias("h"))
     mx = d.agg(F.max("doc_id").alias("mx"))
     is_dup = F.when(
@@ -394,7 +540,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = " + ".join(
         f"element_at(cps, i - {j}) * {w}" for j, w in enumerate(_CDC_WEIGHTS)
     )
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     c = d.filter(F.length("text") >= 1).select(
         "doc_id",
         "text",
@@ -480,7 +626,7 @@ def fragment_reassembly_candidates(spark: SparkSession, sf_dir: str) -> DataFram
     Shape: the corpus reduces to two fixed-width edge hashes per doc
     (one scan, JVM slicing); the candidate join keys on those hashes
     only — text never enters the shuffle; output id-ordered top-50."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     t = F.filter(F.split("text", " "), lambda x: x != "")
     edges = d.select(
         "doc_id",
@@ -567,7 +713,7 @@ def cross_source_ngram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the gram's sorted source set, so one |sources|²-bounded
     count aggregate replaces the old distinct + df-join + self-join +
     rollup chain; per-source totals broadcast back."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source", F.expr("filter(split(text, ' '), t -> t != '')").alias("t")
     ).filter(F.size("t") >= 8)
@@ -687,7 +833,7 @@ def ngram_repetition_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     order over fixed-width gram hashes — four independent reduced
     aggregations unioned into the 4-point curve; nothing but hashes
     shuffles. Exact integer counts; one rounded division."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         F.expr("filter(split(text, ' '), t -> t != '')").alias("t")
     )
@@ -737,7 +883,7 @@ def dedup_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate grouping by 2-token prefix fingerprint, with the
     reference's two-level waste rollup (`SUM((dup_count-1)*str_len)`,
     analyze_heap_parquet.py:276-294,721-737)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = F.md5(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 2)))
     groups = (
         d.groupBy(h.alias("h"))
@@ -759,10 +905,8 @@ def dedup_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ngram_shingle_overlap",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
+    oracle=f"""
+    WITH toks AS ({_TOKS_SQL}),
     shingles AS (
         -- DuckDB list slicing is end-inclusive: [i : i+3] = 4 tokens,
         -- matching Spark's slice(tokens, i, 4).
@@ -803,7 +947,7 @@ def ngram_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyze_heap_parquet.py:724,901), mirrored in the oracle SQL so the
     operator is defined identically in both engines. A shingle shared
     by >cap documents is a stop phrase, not a dedup signal."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = _spread(
         d.select("doc_id", F.split("text", " ").alias("tokens")), spark, "doc_id"
     )
@@ -824,17 +968,7 @@ def ngram_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.size("docs") > 1) & (F.size("docs") <= SHINGLE_DF_CAP)
         )
     )
-    # all ordered pairs (a < b) within a bucket: for the i-th doc, pair
-    # it with every later doc in the sorted array
-    pairs = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice("docs", i + 2, F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = _sorted_pairs("docs")
     return (
         buckets.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
@@ -1016,7 +1150,7 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is broadcast; similarity is a sequential-fold dot product
     (exprs.dot) entirely in JVM expressions; top-k is TakeOrdered. At
     scale, the corpus side stays partition-parallel with no shuffle."""
-    rows, sim = _query_scan(_t(spark, sf_dir, "embeddings"))
+    rows, sim = _query_scan(load_table(spark, sf_dir, "embeddings"))
     return (
         rows.select("vec_id", "label", sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
@@ -1047,7 +1181,7 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits (here: the first 3 components' signs) partition the corpus, and
     search touches only the query's bucket. At 100 TB the bucket becomes
     the partitioning key, turning ANN into partition-pruned scans."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     bucket = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
@@ -1088,7 +1222,7 @@ def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding statistics — list functions (B30) over
     array<float> vectors."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -1117,7 +1251,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality scoring: token count, chars/token, stopword
     ratio, length gate — all JVM-side higher-order array functions, no
     Python in the hot path."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tok = F.size(toks)
     stop = F.size(F.filter(toks, lambda t: (t == "the") | (t == "a")))
@@ -1143,7 +1277,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split and a BPE-ish regex
     (word/number runs) — per-source corpus accounting."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     ws = F.size(F.split("text", " "))
     re_toks = F.size(F.expr("regexp_extract_all(text, '[a-z]+|[0-9]+', 0)"))
     return d.groupBy("source").agg(
@@ -1169,7 +1303,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword-frequency classifier crossed against the labeled `lang`
     column. (The fixture vocabulary is shared across langs, so the
     classifier is mechanical — the pipeline shape is the point.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     cnt_the = F.size(F.filter(toks, lambda t: t == "the"))
     cnt_a = F.size(F.filter(toks, lambda t: t == "a"))
@@ -1190,7 +1324,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization fingerprint: collapse non-alphanumerics, lowercase,
     hash — the canonical-form hashing step of document dedup
     (generalizing the md5(CAST(list AS VARCHAR)) idiom, B29)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.filter(F.col("doc_id") < 50).select(
         "doc_id",
         F.md5(F.lower(F.regexp_replace("text", "[^a-z0-9]+", " "))).alias("fingerprint"),
@@ -1205,29 +1339,13 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "minhash_lsh_candidates",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
+    oracle=f"""
+    WITH toks AS ({_TOKS_SQL}),
     sh AS (
         -- 3-token shingles (DuckDB slice is end-inclusive: [i : i+2])
-        SELECT DISTINCT doc_id, array_to_string(tokens[i:i+2], ' ') AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band, md5(h2 || h3) AS bucket FROM sig
-    )
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+        {_SHINGLES_SQL}),
+    {_SIG4_BANDS2_SQL}
+    {_BAND_PAIRS_SQL}
     """,
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1244,14 +1362,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     selects would duplicate the whole shingle+minhash subtree —
     Catalyst does not share subplans across union branches), so the
     corpus is scanned once per self-join side, the minimum."""
-    d = _t(spark, sf_dir, "documents")
-    toks = _spread(
-        d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
-            F.size("tokens") >= 3
-        ),
-        spark,
-        "doc_id",
-    )
+    toks = _doc_tokens(spark, sf_dir)
     # r13 optimization (remove shuffles outright): the
     # per-doc distinct-shingle set and the per-doc min-hashes are
     # row-local (every shingle of a doc lives in its own tokens row),
@@ -1260,19 +1371,8 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature Exchange — the whole signature pipeline is now a
     # projection; the band self-join's (band, bucket) exchanges are
     # the only shuffles left in the plan.
-    sh_arr = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size("tokens") - 2),
-            lambda i: F.concat_ws(" ", F.slice("tokens", i, 3)),
-        )
-    )
-    sets = toks.select("doc_id", sh_arr.alias("shs"))
-    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("shs", h)), 4, 2)
-    bands = (
-        sets.select("doc_id", *sig)
-        .select("doc_id", bb)
-        .select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    )
+    sh_arr = shingle_set("tokens")
+    bands = minhash_band_rows(toks.select("doc_id", sh_arr.alias("shs")), "shs", 4, 2)
     # r13 optimization, second pass: left to the
     # planner this self-join goes BROADCAST, and a broadcast build has
     # no exchange to share — the whole shingle+minhash md5 pipeline
@@ -1285,18 +1385,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap broadcast build. Pair set unchanged — materialization
     # never affects results. (perfbench/workloads.py::ITERATIVE lists
     # this operator, so perfbench times the checkpoint job with it.)
-    bands = _fp_materialize(bands, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return band_pairs(_fp_materialize(bands, sf_dir))
 
 
 @query(
@@ -1342,7 +1431,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import table_rows
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     n = table_rows(sf_dir, "embeddings")
     planes = max(6, math.ceil(math.log2(max(n, 2) / 32)))
     bucket = sum(
@@ -1409,7 +1498,15 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Hamming ball lookup). Pure JVM expressions — explode + conv +
     bitwise — no UDF. The oracle replays the identical integer bit
     votes (hex-prefix cast ≙ conv base 16), so the check is exact."""
-    d = _t(spark, sf_dir, "documents")
+    sig, fingerprint = _simhash16(spark, sf_dir)
+    return sig.select("doc_id", fingerprint.cast("int").alias("simhash16"))
+
+
+def _simhash16(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """The 16-bit SimHash core: per-doc bit votes b0..b15 over the
+    distinct tokens' md5 prefixes, and the fingerprint Column packing
+    the positive votes."""
+    d = load_table(spark, sf_dir, "documents")
     tok = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -1425,12 +1522,11 @@ def simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias(f"b{j}")
         for j in range(16)
     ]
-    sig = tok.groupBy("doc_id").agg(*votes)
     fingerprint = sum(
         (F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(0) for j in range(16)),
         start=F.lit(0),
     )
-    return sig.select("doc_id", fingerprint.cast("int").alias("simhash16"))
+    return tok.groupBy("doc_id").agg(*votes), fingerprint
 
 
 @query(
@@ -1474,7 +1570,7 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruning IVF gives at 100-TB corpus scale. All dot
     products are sequential folds (exprs.dot ≙ list_dot_product) so
     cell ranks and scores are bit-identical to the oracle."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     vcol = F.col("embedding").cast("array<double>")
 
     cents = [
@@ -1539,7 +1635,7 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     not group on. Group sets are unchanged: n_sh is functionally
     dependent on the doc id, so grouping with or without it yields the
     same groups, and both join sides are exactly the old rows."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = _spread(
         d.select("doc_id", F.split("text", " ").alias("tokens")), spark, "doc_id"
     )
@@ -1556,15 +1652,7 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
         .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
         .filter((F.size("docs") > 1) & (F.size("docs") <= SHINGLE_DF_CAP))
     )
-    pairs = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice("docs", i + 2, F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = _sorted_pairs("docs")
     shared = (
         buckets.select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
@@ -1595,27 +1683,15 @@ def _shingle_pair_counts(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
 @query(
     "jaccard_pairs",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    shingles AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
+    WITH toks AS ({_TOKS_SQL}),
+    shingles AS ({_MD5_SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
     bounded AS (
         -- document-frequency cap, mirror of the Spark-side hot-bucket
         -- guard (size(docs) <= 64)
         SELECT shingle FROM shingles GROUP BY shingle HAVING count(*) <= 64
     ),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        JOIN bounded c ON c.shingle = a.shingle
-        GROUP BY 1, 2 HAVING count(*) >= 3
-    )
+    shared AS ({_SHARED_SHINGLES_SQL})
     SELECT doc_a, doc_b, inter,
            {round_sql("CAST(inter AS DOUBLE) / (sa.n_sh + sb.n_sh - inter)", 4)} AS jaccard
     FROM shared
@@ -1659,7 +1735,7 @@ def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary statistics: term frequency + document
     frequency, top-50 — the counting backbone of tokenizer training and
     tf-idf. One explode, one shuffle on the token; TakeOrdered top-k."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -1694,7 +1770,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the map side — only one best-struct + count per (partition, hash)
     reaches the exchange, where the row_number window shuffled and
     SORTED every row of every duplicate group.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     best = F.max(
         F.struct(
             F.col("n_chars"),
@@ -1785,7 +1861,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the sort key so the LIMIT boundary agrees."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tf = _inrow_tf(d)
     dfreq = F.count(F.lit(1)).over(Window.partitionBy("term"))
     n = d.agg(F.count(F.lit(1)).alias("n"))
@@ -1833,7 +1909,7 @@ def token_entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled twice (token counts, then source)."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "source", F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
@@ -1880,7 +1956,7 @@ def approx_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim at 100 TB would reintroduce the exact expansion it is
     designed to avoid.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_type = (
         e.groupBy("event_type")
         .agg(
@@ -1932,7 +2008,7 @@ def incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-first is one window over the already-deduped remainder."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < 400).select(F.md5("text").alias("h"))
     batch = d.filter(F.col("doc_id") >= 400).select(
         "doc_id", F.md5("text").alias("h"), "source"
@@ -1956,31 +2032,13 @@ def incremental_dedup_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incremental_dedup_lsh_batch",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
+    oracle=f"""
+    WITH toks AS ({_TOKS_SQL}),
+    sh AS ({_MD5_SHINGLES_SQL}),
     corpus_sh AS (SELECT * FROM sh WHERE doc_id < 400),
     batch_sh  AS (SELECT * FROM sh WHERE doc_id >= 400),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3,
-               min(md5(shingle || ':4')) AS h4, min(md5(shingle || ':5')) AS h5,
-               min(md5(shingle || ':6')) AS h6, min(md5(shingle || ':7')) AS h7
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL SELECT doc_id, 1, md5(h2 || h3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(h4 || h5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(h6 || h7) FROM sig
-    ),
+    sig AS ({_minhash_sig_sql(8)}),
+    bands_all AS ({_BANDS4_SQL}),
     corpus_index AS (
         SELECT doc_id, band, bucket FROM (
             SELECT doc_id, band, bucket,
@@ -2051,16 +2109,8 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     index and shingle tables are bucketed parquet keyed by
     (band, bucket) and doc_id, and each daily batch is a few GB
     probing them."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    toks = _spread(
-        d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
-            F.size("tokens") >= 3
-        ),
-        spark,
-        "doc_id",
-    )
+    d = load_table(spark, sf_dir, "documents")
+    toks = _doc_tokens(spark, sf_dir)
     hashes = shingle_hashes("tokens", 3)
     # r13 optimization: per-doc distinct set, size and
     # 8 salted min-hashes are row-local — array_distinct / size /
@@ -2077,12 +2127,7 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = _fp_materialize(
         toks.select("doc_id", F.array_distinct(hashes).alias("hs")), sf_dir
     )
-    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("hs", h)), 8, 4)
-    bands_all = (
-        sets.select("doc_id", *sig)
-        .select("doc_id", bb)
-        .select("doc_id", "bb.band", "bb.bucket")
-    )
+    bands_all = minhash_band_rows(sets, "hs", 8, 4)
     # r13 optimization, second pass: the corpus-index
     # side and the batch side are filters of the SAME band relation,
     # but as separate lineages each re-ran the 8-salt minhash pass
@@ -2093,24 +2138,8 @@ def incremental_dedup_lsh_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReusedExchange), so the salt pass runs once. The exchange moves
     # 4 fixed-width band rows per doc — metadata, not payloads.
     bands_all = bands_all.repartition("band", "bucket")
-    wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    corpus_index = (
-        bands_all.filter(F.col("doc_id") < 400)
-        .withColumn("rnb", F.row_number().over(wcap))
-        .filter(F.col("rnb") <= BAND_BUCKET_CAP)
-        .drop("rnb")
-    )
-    batch_bands = bands_all.filter(F.col("doc_id") >= 400)
-    b, c = batch_bands.alias("b"), corpus_index.alias("c")
-    cand = (
-        b.join(
-            c,
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.bucket") == F.col("c.bucket")),
-        )
-        .select(F.col("b.doc_id").alias("b_doc"), F.col("c.doc_id").alias("c_doc"))
-        .distinct()
-    )
+    corpus_index = cap_bands(bands_all.filter(F.col("doc_id") < 400))
+    cand = band_probe(bands_all.filter(F.col("doc_id") >= 400), corpus_index)
     # r13 optimization, second pass: the exact
     # verify used to explode EVERY doc's shingle set and equi-join two
     # copies of that corpus-sized relation to score a handful of
@@ -2208,7 +2237,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     One scan, one aggregation shuffle; no UDF (sigmoid is exp(), a
     JVM intrinsic). The oracle replays the identical feature formulas
     and weights in SQL."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     n_tokens = F.size(toks)
     cpt = F.col("n_chars").cast("double") / n_tokens
@@ -2334,7 +2363,7 @@ def _qc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, x0..x3, y) — the Spark twin of _QC_FEAT_SQL
     (same expression order so every feature double is bit-identical
     across engines)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     n_tokens = F.size(toks)
     sw_hits = F.size(F.filter(toks, lambda t: (t == "the") | (t == "a")))
@@ -2505,7 +2534,7 @@ def vocab_oov_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded) broadcast back against the token stream — the corpus
     never shuffles for the membership test, and the final rollup is
     one aggregation on source. Exact integer counts only."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tk = d.select(
         "source", F.explode(F.split("text", " ")).alias("token")
     ).filter(F.col("token") != "")
@@ -2588,7 +2617,7 @@ def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridges, not dedup signal (same trade as ngram_shingle_overlap)."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n = 8
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
     hashed = shingle_hashes("tokens", n)
@@ -2644,23 +2673,17 @@ def exact_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_oracle() -> str:
-    """Product-quantization oracle: per 16-dim subspace, one exact
-    Lloyd update from deterministic init (vec_id < 4), then encode
-    every vector as its argmin centroid id and score queries against
-    RECONSTRUCTED vectors (asymmetric distance). Mirrors the Spark
-    path CTE-for-stage; all dot products are sequential list folds,
-    centroid components rounded to 6 dp (the _KMEANS_ASG_CTE
-    conventions), and the four subspace contributions are added in
-    one explicit left-to-right chain so IEEE order matches."""
+def _pq_codebook_sql(s: int) -> str:
+    """PQ codebook CTEs of 16-dim subspace *s* over `v`: the slice
+    vs{s}, one exact Lloyd update from init vec_id < 4 (centroid
+    components rounded to 6 dp) into cs{s}, and every vector's argmin
+    code in enc{s} (rn = 1)."""
+    a, b = 16 * s + 1, 16 * s + 16
     dist = (
         "(list_dot_product(a.v, a.v) - 2 * list_dot_product(a.v, c.cv)"
         " + list_dot_product(c.cv, c.cv))"
     )
-    subs = []
-    for s in range(4):
-        a, b = 16 * s + 1, 16 * s + 16
-        subs.append(f"""
+    return f"""
     vs{s} AS (SELECT vec_id, v[{a}:{b}] AS v FROM v),
     c0s{s} AS (SELECT vec_id AS cid, v AS cv FROM vs{s} WHERE vec_id < 4),
     a1s{s} AS (SELECT a.vec_id, a.v, c.cid,
@@ -2675,7 +2698,21 @@ def _pq_oracle() -> str:
     enc{s} AS (SELECT a.vec_id, c.cid, c.cv,
                row_number() OVER (PARTITION BY a.vec_id
                                   ORDER BY {dist} ASC, c.cid) AS rn
-        FROM vs{s} a CROSS JOIN cs{s} c),
+        FROM vs{s} a CROSS JOIN cs{s} c)"""
+
+
+def _pq_oracle() -> str:
+    """Product-quantization oracle: per 16-dim subspace, one exact
+    Lloyd update from deterministic init (vec_id < 4), then encode
+    every vector as its argmin centroid id and score queries against
+    RECONSTRUCTED vectors (asymmetric distance). Mirrors the Spark
+    path CTE-for-stage; all dot products are sequential list folds,
+    centroid components rounded to 6 dp (the _KMEANS_ASG_CTE
+    conventions), and the four subspace contributions are added in
+    one explicit left-to-right chain so IEEE order matches."""
+    subs = []
+    for s in range(4):
+        subs.append(f"""{_pq_codebook_sql(s)},
     d{s} AS (SELECT q.vec_id AS query_id, t.vec_id AS vec_id,
                 (list_dot_product(q.v, q.v) - 2 * list_dot_product(q.v, t.cv)
                  + list_dot_product(t.cv, t.cv)) AS d
@@ -2722,7 +2759,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring over a 1000x-compressed index, re-ranking only the top-k
     against raw vectors (which would be one id-semi-join per query)."""
     v = (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, sf_dir, "embeddings")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         .localCheckpoint()
     )
@@ -2844,7 +2881,7 @@ def zipf_alpha_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — no iterative fitting."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     vf = (
         d.select(F.explode(F.split("text", " ")).alias("t"))
         .filter(F.col("t") != "")
@@ -2943,7 +2980,7 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf⋈dlen join all disappear — one corpus scan feeds one scalar
     aggregate (N, avgdl, per-term df) and one scored projection,
     ending in the same TakeOrdered(20).)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
         F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
@@ -3022,7 +3059,7 @@ def embedding_covariance_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-bounded AGGREGATE STATE, which is the right side of the
     trade at 100 TB. Full-matrix variant = dimension-blocked passes of
     this same query (8 dims per block bounds aggregate width)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def dim(i: int):
         return F.element_at("embedding", i).cast("double")
@@ -3053,6 +3090,34 @@ _PERCOLATE_RULES = [
     (4, ("window", "agg")),
     (5, ("spark", "table", "row")),
 ]
+
+
+def doc_terms(docs: DataFrame) -> DataFrame:
+    """Distinct non-empty (doc_id, token) pairs of a (doc_id, text)
+    relation."""
+    return (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
+        .filter(F.col("token") != "")
+        .distinct()
+    )
+
+
+def percolate_matches(docs: DataFrame, rules: DataFrame) -> DataFrame:
+    """(doc_id, rule_id) pairs where the doc contains ALL the terms of
+    the (rule_id, term) rule — the counting formulation of the
+    conjunctive match: a doc's per-rule hit count equals the rule's
+    term count. Both rule relations are broadcast, so the token stream
+    is pruned before any shuffle."""
+    rule_size = rules.groupBy("rule_id").agg(F.count(F.lit(1)).alias("k"))
+    return (
+        doc_terms(docs)
+        .join(F.broadcast(rules), F.col("token") == F.col("term"))
+        .groupBy("doc_id", "rule_id")
+        .agg(F.count(F.lit(1)).alias("matched"))
+        .join(F.broadcast(rule_size), "rule_id")
+        .filter(F.col("matched") == F.col("k"))
+        .select("doc_id", "rule_id")
+    )
 
 
 @query(
@@ -3098,25 +3163,13 @@ def reverse_search_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the rule's term count. Work is proportional to docs x
     matching TERMS (the token stream is pruned by the broadcast join
     before any shuffle), never docs x rules."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     rules = spark.createDataFrame(
         [(rid, t) for rid, terms in _PERCOLATE_RULES for t in terms],
         ["rule_id", "term"],
     )
-    rule_size = rules.groupBy("rule_id").agg(F.count(F.lit(1)).alias("k"))
-    doc_terms = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .distinct()
-    )
-    hits = (
-        doc_terms.join(F.broadcast(rules), F.col("token") == F.col("term"))
-        .groupBy("doc_id", "rule_id")
-        .agg(F.count(F.lit(1)).alias("matched"))
-    )
     return (
-        hits.join(F.broadcast(rule_size), "rule_id")
-        .filter(F.col("matched") == F.col("k"))
+        percolate_matches(d, rules)
         .groupBy("rule_id")
         .agg(
             F.count(F.lit(1)).alias("n_matching_docs"),
@@ -3129,25 +3182,13 @@ def reverse_search_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "containment_pairs",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    shingles AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
+    WITH toks AS ({_TOKS_SQL}),
+    shingles AS ({_MD5_SHINGLES_SQL}),
     bounded AS (
         SELECT shingle FROM shingles GROUP BY shingle HAVING count(*) <= 64
     ),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM shingles GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        JOIN bounded c ON c.shingle = a.shingle
-        GROUP BY 1, 2 HAVING count(*) >= 3
-    )
+    shared AS ({_SHARED_SHINGLES_SQL})
     SELECT doc_a, doc_b, inter,
            CAST(least(sa.n_sh, sb.n_sh) AS BIGINT) AS smaller_set,
            {round_sql(
@@ -3241,7 +3282,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus (the growth curve is fit at its jump points,
     where all its information lives). n comes from the doc ordinal
     (dense ids here; the ingest sequence number at scale)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     toks = d.select(
@@ -3311,7 +3352,7 @@ def good_turing_vocab_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: corpus → token-frequency relation (one shuffle) →
     frequency-of-frequencies (second, tiny) → one scalar row;
     everything integer until the two final rounded divisions."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tf = (
         d.select(F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -3388,7 +3429,7 @@ def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical IEEE ops both engines), dot products are sequential
     folds (exprs.dot ≙ list_dot_product), and the four float outputs
     ship via stable_render."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     base = e.select("vec_id", v.alias("v")).filter(
         F.array_max(F.transform(F.col("v"), F.abs)) > 0
@@ -3491,7 +3532,7 @@ def random_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances/ratios identical IEEE trees, outputs via
     stable_render."""
     signs = _rp_signs()
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("vec_id") < 50).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -3606,7 +3647,7 @@ def lsh_plane_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer aggregate unioned into the 4-point curve — the audit cost
     is O(sample²), independent of corpus size. Exact: integer counts,
     two rounded divisions, identical cosine folds both engines."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     base = e.filter(F.col("vec_id") < 200).select("vec_id", v.alias("v"))
 
@@ -3728,7 +3769,7 @@ def label_coherence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     them). Scoring is a |labels|-bounded broadcast crossJoin with the
     sequential-fold dot product (`exprs.dot` ↔ `list_dot_product`) —
     per-vector work is k cosines, no vector pair ever joins."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     from ..exprs import dot
 
     cent = emb.groupBy("label").agg(
@@ -3824,7 +3865,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..exprs import dot
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     anchors = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("aid"),
         F.col("label").alias("alabel"),
@@ -3892,7 +3933,7 @@ def cohens_kappa_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     One conditional scan builds the 2x2 contingency moments; po, pe,
     and kappa are closed-form ratios of exact integer counts — no
     float enters before the final rounded division."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     pred = F.when(
         F.size(F.filter(toks, lambda t: t == "the"))
@@ -3977,7 +4018,7 @@ def cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by source count, so no DF cap is needed), and per-source
     distinct counts attach for scale context. Fixed-width hashes move
     through every exchange, never text."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     hashed = d.select(
         "source",
         F.md5(F.concat_ws(" ", F.slice(F.split("text", " "), 1, 16))).alias(
@@ -4096,7 +4137,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth for the 10 queries, not the corpus."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     bucket = (
         F.when(F.element_at("embedding", 1) > 0, 4).otherwise(0)
         + F.when(F.element_at("embedding", 2) > 0, 2).otherwise(0)
@@ -4229,29 +4270,11 @@ def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "minhash_prefilter_jaccard",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
+    WITH toks AS ({_TOKS_SQL}),
+    sh AS ({_MD5_SHINGLES_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3,
-               min(md5(shingle || ':4')) AS h4, min(md5(shingle || ':5')) AS h5,
-               min(md5(shingle || ':6')) AS h6, min(md5(shingle || ':7')) AS h7
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL SELECT doc_id, 1, md5(h2 || h3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(h4 || h5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(h6 || h7) FROM sig
-    ),
+    sig AS ({_minhash_sig_sql(8)}),
+    bands_all AS ({_BANDS4_SQL}),
     bands AS (
         -- per-(band,bucket) membership cap = BAND_BUCKET_CAP (64),
         -- mirroring the Spark row_number guard
@@ -4310,14 +4333,7 @@ def minhash_prefilter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     The min-hash uses lexicographic min over salted md5 hex
     (engine-portable), so the oracle reproduces the candidate set
     exactly."""
-    d = _t(spark, sf_dir, "documents")
-    toks = _spread(
-        d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
-            F.size("tokens") >= 3
-        ),
-        spark,
-        "doc_id",
-    )
+    toks = _doc_tokens(spark, sf_dir)
     hashes = shingle_hashes("tokens", 3)
     # r13 optimization: per-doc distinct set, size and
     # 8 salted min-hashes are row-local — array_distinct / size /
@@ -4336,40 +4352,13 @@ def minhash_prefilter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = _fp_materialize(
         toks.select("doc_id", F.array_distinct(hashes).alias("hs")), sf_dir
     )
-    sig, bb = minhash_bands(lambda h: F.array_min(F.transform("hs", h)), 8, 4)
-    bands = (
-        sets.select("doc_id", *sig)
-        .select("doc_id", bb)
-        .select("doc_id", "bb.band", "bb.bucket")
-    )
-    # Hot-bucket cap: keep the deterministic first
-    # BAND_BUCKET_CAP members per (band, bucket) so m near-identical
-    # docs — same bucket in EVERY band — cost K²/2 candidate pairs,
-    # not m²/2. row_number (sort-based, O(m log m) pass-through)
-    # rather than collect_list so no aggregate state holds the bucket.
-    from pyspark.sql import Window
-
-    wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    bands = (
-        bands.withColumn("rnb", F.row_number().over(wcap))
-        .filter(F.col("rnb") <= BAND_BUCKET_CAP)
-        .drop("rnb")
-    )
-    # 3 fixed-width columns per doc — materializing the capped band
-    # relation lets the self-join's broadcast build read flat rows
-    # instead of re-running the 8-salt minhash pass.
-    bands = _fp_materialize(bands, sf_dir)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    bands = minhash_band_rows(sets, "hs", 8, 4)
+    # Hot-bucket cap: m near-identical docs — same bucket in EVERY
+    # band — cost K²/2 candidate pairs, not m²/2. 3 fixed-width
+    # columns per doc — materializing the capped band relation lets
+    # the self-join's broadcast build read flat rows instead of
+    # re-running the 8-salt minhash pass.
+    cand = band_pairs(_fp_materialize(cap_bands(bands), sf_dir))
     # r13 optimization, second pass (shuffle keys and metadata,
     # not payloads): the exact-verify stage used to explode EVERY
     # document's shingle set into (doc, shingle) rows and equi-join
@@ -4475,7 +4464,7 @@ def jsd_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: ONE token explode + (source, token) shuffle; the vocab
     top-200 is a TakeOrdered; everything after runs on the bounded
     grid with the vocab broadcast."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     tf = (
         d.select("source", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -4600,7 +4589,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     `jaccard_pairs`, so one boilerplate fingerprint shared by a
     million docs is excluded as a stop-fingerprint instead of
     exploding quadratically; TakeOrdered bounds the output."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # r13 optimization (remove shuffles outright): the
     # w=4 sliding-window minimum runs over ONE document's ordered
     # gram-hash sequence, which lives entirely in that document's own
@@ -4724,28 +4713,10 @@ def _multiday_oracle(n_days: int = 3) -> str:
     restores; Spark compacts after each append so both sides probe
     the identical canonical index)."""
     cap = BAND_BUCKET_CAP
-    parts = [f"""toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(tokens[i:i+2], ' ')) AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3,
-               min(md5(shingle || ':4')) AS h4, min(md5(shingle || ':5')) AS h5,
-               min(md5(shingle || ':6')) AS h6, min(md5(shingle || ':7')) AS h7
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS MATERIALIZED (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL SELECT doc_id, 1, md5(h2 || h3) FROM sig
-        UNION ALL SELECT doc_id, 2, md5(h4 || h5) FROM sig
-        UNION ALL SELECT doc_id, 3, md5(h6 || h7) FROM sig
-    ),
+    parts = [f"""toks AS ({_TOKS_SQL}),
+    sh AS MATERIALIZED ({_MD5_SHINGLES_SQL}),
+    sig AS ({_minhash_sig_sql(8)}),
+    bands_all AS MATERIALIZED ({_BANDS4_SQL}),
     sizes AS MATERIALIZED (
         SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     corpus1 AS MATERIALIZED (
@@ -4835,7 +4806,7 @@ def incremental_dedup_lsh_multiday(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     n_days = 3
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     index_dir = tempfile.mkdtemp(prefix="hds_lsh_multiday_")
     try:
         build_corpus_index(
@@ -4925,8 +4896,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-side cost is exactly the two legs' (term-pruned lexical
     scan; ANN-replaceable dense scan). Ranks tie-break on doc_id over
     ROUNDED scores in both engines, so ranking is deterministic."""
-    lex = _lex_leg(_t(spark, sf_dir, "documents"), _RRF_DEPTH, "lex_rk")
-    dense = _dense_leg(_t(spark, sf_dir, "embeddings"), _RRF_DEPTH, "dense_rk")
+    lex = _lex_leg(load_table(spark, sf_dir, "documents"), _RRF_DEPTH, "lex_rk")
+    dense = _dense_leg(load_table(spark, sf_dir, "embeddings"), _RRF_DEPTH, "dense_rk")
 
     lex_term = F.when(
         F.col("lex_rk").isNull(), F.lit(0.0)
@@ -5015,7 +4986,7 @@ def mutual_knn_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..catalog import table_rows
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     n = table_rows(sf_dir, "embeddings")
     planes = max(6, math.ceil(math.log2(max(n, 2) / 32)))
     bucket = sum(
@@ -5132,8 +5103,8 @@ def rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of exactly-representable doubles (p^(d-1) carried as the
     rational 9^(d-1)/10^(d-1), no libm pow) — bit-identical in both
     engines with no SUM-order dependence."""
-    lex = _lex_leg(_t(spark, sf_dir, "documents"), _RBO_DEPTH, "pa")
-    dense = _dense_leg(_t(spark, sf_dir, "embeddings"), _RBO_DEPTH, "pb")
+    lex = _lex_leg(load_table(spark, sf_dir, "documents"), _RBO_DEPTH, "pa")
+    dense = _dense_leg(load_table(spark, sf_dir, "embeddings"), _RBO_DEPTH, "pb")
     absent = _RBO_DEPTH + 1
     joined = lex.join(dense, "doc_id", "full_outer").select(
         F.coalesce("pa", F.lit(absent)).alias("pa"),
@@ -5210,7 +5181,7 @@ def filtered_ann_pre_vs_post(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning a partition and scanning the corpus. Rankings are over
     ROUNDED cosines with vec_id tie-break — deterministic in both
     engines."""
-    rows, cos = _query_scan(_t(spark, sf_dir, "embeddings"))
+    rows, cos = _query_scan(load_table(spark, sf_dir, "embeddings"))
     scored = rows.select("vec_id", "label", cos.alias("cos"))
 
     def ranked_topk(sdf: DataFrame, k: int, rk_name: str) -> DataFrame:
@@ -5249,6 +5220,33 @@ def filtered_ann_pre_vs_post(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Embedding drift, n-gram coverage, multi-probe LSH (r11 batch 4)
 # ---------------------------------------------------------------------------
+
+
+def mean_shift_fold(diffs: DataFrame, *extra: Column) -> tuple[DataFrame, DataFrame]:
+    """The mean-shift core over per-dimension mean differences (i, d):
+    one row with mmd_sq, the Σd² fold in dimension order (plus any
+    *extra* aggregates), and one row with the most-shifted dimension
+    (top_dim, top_shift) by |d|, ties to the smaller dimension."""
+    folded = diffs.agg(
+        F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("i", "d"))),
+                lambda s: s["d"] * s["d"],
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ).alias("mmd_sq"),
+        *extra,
+    )
+    top = (
+        diffs.orderBy(F.abs(F.col("d")).desc(), "i")
+        .limit(1)
+        .select(
+            F.col("i").cast("int").alias("top_dim"),
+            F.col("d").alias("top_shift"),
+        )
+    )
+    return folded, top
 
 
 @query(
@@ -5303,7 +5301,7 @@ def embedding_mean_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected per-dim diffs (deterministic summation order in both
     engines, the RBO discipline). Per-dim means are portably rounded
     before differencing so the fold inputs are bit-identical."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     base = e.filter(F.col("label").isin(0, 1)).select(
         "label", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -5315,24 +5313,7 @@ def embedding_mean_shift_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = dims.filter(F.col("label") == 0).select("i", F.col("m").alias("ma"))
     b = dims.filter(F.col("label") == 1).select("i", F.col("m").alias("mb"))
     diffs = a.join(b, "i").select("i", (F.col("ma") - F.col("mb")).alias("d"))
-    folded = diffs.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "d"))),
-                lambda s: s["d"] * s["d"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("mmd_sq")
-    )
-    top = (
-        diffs.orderBy(F.abs(F.col("d")).desc(), "i")
-        .limit(1)
-        .select(
-            F.col("i").cast("int").alias("top_dim"),
-            F.col("d").alias("top_shift"),
-        )
-    )
+    folded, top = mean_shift_fold(diffs)
     counts = base.agg(
         F.sum(F.when(F.col("label") == 0, 1).otherwise(0)).cast("long").alias("n_a"),
         F.sum(F.when(F.col("label") == 1, 1).otherwise(0)).cast("long").alias("n_b"),
@@ -5411,7 +5392,7 @@ def ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash equi-join — the decontaminate/cross-source join geometry —
     with a 3-row output. Split = doc_id parity (deterministic, no
     RNG)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.filter(F.split("text", " "), lambda x: x != "").alias("toks"),
@@ -5505,7 +5486,7 @@ def lsh_multiprobe_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer tests. The production probe path stays an equi-join (each
     query explodes into 9 probe bucket keys — fan-out 9, never a
     pair scan); this is its measured recall/cost basis."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     bucket = sum(
         (
             F.when(
@@ -5566,6 +5547,21 @@ def _ivfl_update(src: str, dst: str) -> str:
                  FROM m{dst} GROUP BY cid, pos) GROUP BY cid)"""
 
 
+# Two Lloyd rounds over `v` from init vec_id < 4: centroids c2.
+_IVFL_TRAIN_SQL = f"""
+    c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS cv FROM v WHERE vec_id < 4),
+    a1 AS (SELECT a.vec_id, a.v, c.cid,
+                  row_number() OVER (PARTITION BY a.vec_id
+                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
+           FROM v a CROSS JOIN c0 c),
+    {_ivfl_update("a1", "1")},
+    a2 AS (SELECT a.vec_id, a.v, c.cid,
+                  row_number() OVER (PARTITION BY a.vec_id
+                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
+           FROM v a CROSS JOIN c1 c),
+    {_ivfl_update("a2", "2")}"""
+
+
 def _ivfl_oracle() -> str:
     """Replays the full lifecycle: 2 Lloyd rounds on the day-1 slice
     (deterministic init = 4 smallest vec_ids), frozen-centroid
@@ -5577,17 +5573,7 @@ def _ivfl_oracle() -> str:
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
         WHERE vec_id % 5 <> 4
     ),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS cv FROM v WHERE vec_id < 4),
-    a1 AS (SELECT a.vec_id, a.v, c.cid,
-                  row_number() OVER (PARTITION BY a.vec_id
-                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
-           FROM v a CROSS JOIN c0 c),
-    {_ivfl_update("a1", "1")},
-    a2 AS (SELECT a.vec_id, a.v, c.cid,
-                  row_number() OVER (PARTITION BY a.vec_id
-                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
-           FROM v a CROSS JOIN c1 c),
-    {_ivfl_update("a2", "2")},
+    {_IVFL_TRAIN_SQL},
     vu AS MATERIALIZED (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
@@ -5640,7 +5626,7 @@ def ivf_index_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_ivf_index,
     )
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     qv = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
@@ -5673,29 +5659,9 @@ def _ivfpq_oracle() -> str:
     lookup terms for candidates IN the chosen lists only, a
     shortlist-20 cut on (adist, vec_id), and the exact cosine top-10
     re-rank of the shortlist."""
-    dist = (
-        "(list_dot_product(a.v, a.v) - 2 * list_dot_product(a.v, c.cv)"
-        " + list_dot_product(c.cv, c.cv))"
-    )
     pq = []
     for s in range(4):
-        a, b = 16 * s + 1, 16 * s + 16
-        pq.append(f"""
-    vs{s} AS (SELECT vec_id, v[{a}:{b}] AS v FROM v),
-    c0s{s} AS (SELECT vec_id AS cid, v AS cv FROM vs{s} WHERE vec_id < 4),
-    a1s{s} AS (SELECT a.vec_id, a.v, c.cid,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {dist} ASC, c.cid) AS rn
-        FROM vs{s} a CROSS JOIN c0s{s} c),
-    ms{s} AS (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS val
-              FROM a1s{s} WHERE rn = 1),
-    cs{s} AS (SELECT cid, list(val ORDER BY pos) AS cv FROM (
-                SELECT cid, pos, {round_sql("avg(val)", 6)} AS val
-                FROM ms{s} GROUP BY cid, pos) GROUP BY cid),
-    enc{s} AS (SELECT a.vec_id, c.cid, c.cv,
-               row_number() OVER (PARTITION BY a.vec_id
-                                  ORDER BY {dist} ASC, c.cid) AS rn
-        FROM vs{s} a CROSS JOIN cs{s} c),
+        pq.append(f"""{_pq_codebook_sql(s)},
     ds{s} AS (SELECT e.vec_id,
                 (list_dot_product(qs.v, qs.v)
                  - 2 * list_dot_product(qs.v, e.cv)
@@ -5707,17 +5673,7 @@ def _ivfpq_oracle() -> str:
     WITH v AS MATERIALIZED (
         SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
-    c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS cv FROM v WHERE vec_id < 4),
-    a1 AS (SELECT a.vec_id, a.v, c.cid,
-                  row_number() OVER (PARTITION BY a.vec_id
-                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
-           FROM v a CROSS JOIN c0 c),
-    {_ivfl_update("a1", "1")},
-    a2 AS (SELECT a.vec_id, a.v, c.cid,
-                  row_number() OVER (PARTITION BY a.vec_id
-                                     ORDER BY {_IVFL_DIST} ASC, c.cid) rn
-           FROM v a CROSS JOIN c1 c),
-    {_ivfl_update("a2", "2")},
+    {_IVFL_TRAIN_SQL},
     af AS MATERIALIZED (
         SELECT a.vec_id, c.cid,
                row_number() OVER (PARTITION BY a.vec_id
@@ -5793,7 +5749,7 @@ def ivfpq_adc_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ann_index import build_ivfpq_index, probe_ivfpq_index
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     qv = [
         float(x)
         for x in e.filter(F.col("vec_id") == 0)
@@ -5880,36 +5836,8 @@ def simhash_hamming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     where bands are 16-bit and buckets stay sparse; the cap makes the
     16-bit demo scale-safe regardless). popcount(xor) evaluates
     identically in both engines on the same packed integers."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    tok = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .distinct()
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("token"), 1, 4), 16, 10)
-            .cast("long")
-            .alias("h16"),
-        )
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h16"), j).bitwiseAND(1) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(16)
-    ]
-    fingerprint = sum(
-        (F.when(F.col(f"b{j}") > 0, F.lit(1 << j)).otherwise(0) for j in range(16)),
-        start=F.lit(0),
-    )
-    fp = (
-        tok.groupBy("doc_id")
-        .agg(*votes)
-        .select("doc_id", fingerprint.cast("long").alias("sh"))
-        .localCheckpoint()
-    )
+    sig, fingerprint = _simhash16(spark, sf_dir)
+    fp = sig.select("doc_id", fingerprint.cast("long").alias("sh")).localCheckpoint()
     bands = fp.select(
         "doc_id",
         "sh",
@@ -5920,23 +5848,7 @@ def simhash_hamming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.expr("shiftright(sh, 4 * band) & 15"),
     )
-    wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    capped = (
-        bands.withColumn("rnb", F.row_number().over(wcap))
-        .filter(F.col("rnb") <= BAND_BUCKET_CAP)
-        .select("doc_id", "band", "bucket")
-    )
-    a, b = capped.alias("a"), capped.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = band_pairs(cap_bands(bands).select("doc_id", "band", "bucket"))
     fa = fp.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha"))
     fb = fp.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb"))
     ham = F.bit_count(F.col("sha").bitwiseXOR(F.col("shb")))
@@ -6017,8 +5929,8 @@ def ndcg_lexical_vs_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivoted rank columns (the RBO convention) — no SUM-order
     dependence anywhere. Both rankings bound to k rows before any
     window runs."""
-    lex = _lex_leg(_t(spark, sf_dir, "documents"), _NDCG_K, "rk")
-    rows, cos = _query_scan(_t(spark, sf_dir, "embeddings"))
+    lex = _lex_leg(load_table(spark, sf_dir, "documents"), _NDCG_K, "rk")
+    rows, cos = _query_scan(load_table(spark, sf_dir, "embeddings"))
     gains = rows.select(
         F.col("vec_id").alias("doc_id"), F.greatest(cos, F.lit(0.0)).alias("g")
     )
@@ -6131,28 +6043,14 @@ def percolate_with_exclusions(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ["rule_id", "term"],
     )
-    d = _t(spark, sf_dir, "documents")
-    pos_size = pos.groupBy("rule_id").agg(F.count(F.lit(1)).alias("k"))
-    doc_terms = (
-        d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .distinct()
-    )
-    pos_hits = (
-        doc_terms.join(F.broadcast(pos), F.col("token") == F.col("term"))
-        .groupBy("doc_id", "rule_id")
-        .agg(F.count(F.lit(1)).alias("matched"))
-    )
+    d = load_table(spark, sf_dir, "documents")
     neg_hits = (
-        doc_terms.join(F.broadcast(neg), F.col("token") == F.col("term"))
+        doc_terms(d)
+        .join(F.broadcast(neg), F.col("token") == F.col("term"))
         .select("doc_id", "rule_id")
         .distinct()
     )
-    sat = (
-        pos_hits.join(F.broadcast(pos_size), "rule_id")
-        .filter(F.col("matched") == F.col("k"))
-        .join(neg_hits, ["doc_id", "rule_id"], "left_anti")
-    )
+    sat = percolate_matches(d, pos).join(neg_hits, ["doc_id", "rule_id"], "left_anti")
     return (
         sat.groupBy("rule_id")
         .agg(
@@ -6232,7 +6130,7 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus."""
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     c = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q = c.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
@@ -6374,7 +6272,7 @@ def loo_source_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-reduced scalars (never K corpus rescans); the vocabulary
     leg is one distinct (token, source) projection with a
     single-owner filter. All doubles 6-dp portably rounded."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     nt = F.size(toks)
     sw_hits = F.size(F.filter(toks, lambda t: (t == "the") | (t == "a")))
@@ -6492,7 +6390,7 @@ def semantic_decontaminate_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows to the full eval registry (thousands of vectors), still
     broadcastable; docs flagged here are dropped or routed to the
     n-gram verifier before training."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     c = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     # r13 second pass (per-task work): cosine(v, pv)
     # re-evaluated sqrt(dot(v, v)) once per (vector, panel) pair —

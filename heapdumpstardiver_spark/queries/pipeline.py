@@ -13,7 +13,7 @@ collected corpus state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -27,11 +27,16 @@ from ..exprs import (
     stable_render_sql,
 )
 from ..registry import query
-from .llm import _spread, minhash_lsh_candidates
+from .llm import (
+    _BAND_PAIRS_SQL,
+    _SHINGLES_SQL,
+    _SIG4_BANDS2_SQL,
+    _TOKS_SQL,
+    _spread,
+    minhash_lsh_candidates,
+    shingle_set,
+)
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # Shared hex-threshold constants for deterministic hash sampling: a
@@ -44,32 +49,14 @@ _HEX_20 = "33333333"
 _HEX_90 = "e6666666"
 
 # The minhash edge set used for duplicate clustering (see
-# dedup_connected_components) — kept verbatim in sync with the
-# minhash_lsh_candidates oracle in .llm.
-_MINHASH_EDGES_SQL = """
-    toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, array_to_string(tokens[i:i+2], ' ') AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band, md5(h2 || h3) AS bucket FROM sig
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+# dedup_connected_components): the minhash_lsh_candidates oracle's
+# CTEs from .llm.
+_MINHASH_BANDS_SQL = f"""toks AS ({_TOKS_SQL}),
+    sh AS ({_SHINGLES_SQL}),
+    {_SIG4_BANDS2_SQL}"""
+_MINHASH_EDGES_SQL = f"""
+    {_MINHASH_BANDS_SQL},
+    pairs AS ({_BAND_PAIRS_SQL}),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs
         UNION ALL
@@ -230,7 +217,7 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     (small) labeled subset."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     labels = _cc_labels(spark, sf_dir)
     w = Window.partitionBy("comp").orderBy(F.desc("n_chars"), "doc_id")
     wc = Window.partitionBy("comp")
@@ -281,7 +268,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     join over the corpus scan. Production tuning: longer grams (8+)
     and a document-frequency cap on stop phrases.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n = 5
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
     hashes = shingle_hashes("tokens", n)
@@ -334,7 +321,7 @@ def data_mix_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the final tiny aggregate) — the standard way to dial a
     data mixture at 100 TB without materializing an intermediate
     sample."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     src_n = F.substring("source", 4, 8).cast("int")
     tier = (
         F.when(src_n <= 5, "head").when(src_n <= 12, "mid").otherwise("tail")
@@ -386,7 +373,7 @@ def train_test_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary. One linear chain, one scan: per-content-hash train/test
     counts, then a single global rollup carrying totals and the
     leakage count in the same aggregate."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     h = F.md5("text")
     split = F.when(F.substring(h, 1, 8) < _HEX_90, "train").otherwise("test")
     per_h = (
@@ -450,7 +437,7 @@ def temperature_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     |sources| groups), then a 1-row total broadcast; pow/ratios at
     6 dp portable rounding (the proven corr/var discipline for
     order-dependent float sums)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.sum(F.size(F.filter(F.split("text", " "), lambda t: t != "")))
         .cast("long")
@@ -512,7 +499,7 @@ def stratified_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup joined back — all shuffle keys low-cardinality; the fold
     hash is the first 8 md5 hex chars parsed as an integer (fits
     2^32, exact in both engines)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fold = (
         F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long") % 5
     ).cast("int")
@@ -580,7 +567,7 @@ def quality_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto a derived aggregate would duplicate the scan subtree. The
     rule cascade is a JVM CASE projection; output is a tiny
     per-reason rollup."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     stats = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .groupBy("doc_id", "token")
@@ -636,7 +623,7 @@ def stratified_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     an unbalanced corpus. One window shuffle on the stratum key; at
     scale prefer rank-within-partition after repartitioning on source
     (identical plan here) and raise k per stratum weight."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     w = Window.partitionBy("source").orderBy(
@@ -686,7 +673,7 @@ def passage_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     passage resolution). Two shuffles on fixed-width passage hashes
     (document frequency, then per-doc rollup); fan-out per document is
     length/stride, i.e. bounded and linear in corpus size."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n, stride = 8, 4
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
     hashes = shingle_hashes("tokens", n, stride)
@@ -713,16 +700,49 @@ def passage_dup_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "unigram_logprob_score",
-    oracle=f"""
-    WITH toks AS (
+# The corpus-unigram NLL core of `unigram_logprob_score` and
+# `ccnet_perplexity_buckets`: non-empty tokens and the corpus token
+# total (oracle CTEs `toks` and `n`) ...
+_UNIGRAM_TOKS_SQL = """toks AS (
         SELECT doc_id, t AS token
         FROM (SELECT doc_id, string_split(text, ' ') AS tokens FROM documents),
              unnest(tokens) AS u(t)
         WHERE t <> ''
     ),
-    n AS (SELECT count(*) AS total FROM toks),
+    n AS (SELECT count(*) AS total FROM toks)"""
+
+
+def _unigram_nll() -> Column:
+    """... and a doc's mean -ln(c / total), rounded to 6 dp."""
+    return round_col(-F.avg(F.log(F.col("c").cast("double") / F.col("total"))), 6)
+
+
+def _unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, token, c, total): every non-empty token with its corpus
+    count c (a window over the exploded tokens, no aggregate-then-join
+    branch) and the corpus token total. The total comes from a
+    count-only scan of documents (aggregate of token-array sizes), not
+    from the exploded subtree, which would re-scan and re-explode the
+    corpus; it joins as a one-row broadcast."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("token")
+    ).filter(F.col("token") != "")
+    freq = toks.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy("token"))
+    )
+    total = d.agg(
+        F.sum(
+            F.size(F.filter(F.split("text", " "), lambda t: t != ""))
+        ).alias("total")
+    )
+    return freq.crossJoin(F.broadcast(total))
+
+
+@query(
+    "unigram_logprob_score",
+    oracle=f"""
+    WITH {_UNIGRAM_TOKS_SQL},
     freq AS (
         SELECT doc_id, token,
                count(*) OVER (PARTITION BY token) AS c
@@ -751,28 +771,11 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     token total is a count-only side joined by broadcast, and the
     per-doc rollup is one further shuffle. Top-50 most atypical docs.
     """
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "")
-    freq = toks.withColumn(
-        "c", F.count(F.lit(1)).over(Window.partitionBy("token"))
-    )
-    # corpus token total: derive from a count-only scan of documents
-    # (aggregate of token-array sizes), not from the exploded subtree —
-    # that branch would re-scan and re-explode the corpus.
-    total = d.agg(
-        F.sum(
-            F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-        ).alias("total")
-    )
     return (
-        freq.crossJoin(F.broadcast(total))
+        _unigram_token_counts(spark, sf_dir)
         .groupBy("doc_id", "total")
         .agg(
-            round_col(-F.avg(F.log(F.col("c").cast("double") / F.col("total"))), 6).alias("nll_r"),
+            _unigram_nll().alias("nll_r"),
             F.count(F.lit(1)).alias("n_tokens"),
         )
         .orderBy(F.desc("nll_r"), "doc_id")
@@ -834,7 +837,7 @@ def bigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical ln ratio."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
     ).filter(F.col("token") != "")
@@ -947,7 +950,7 @@ def kneser_ney_trigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln/avg at 6 dp follows the proven logprob-family discipline."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "w3")
     ).filter(F.col("w3") != "")
@@ -1044,7 +1047,7 @@ def repetition_filter_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     `quality_filter_chain`, but frequency-distribution-based rather
     than length/charset-based.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
     ).filter(F.col("token") != "")
@@ -1095,7 +1098,7 @@ def minhash_verify_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins shuffle candidates + touched docs only. This is the
     standard verify step layered on :func:`.llm.minhash_lsh_candidates`.
     """
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cand = minhash_lsh_candidates(spark, sf_dir)
     toks = d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
         F.size("tokens") >= 3
@@ -1160,7 +1163,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task)."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = (
         Window.partitionBy("source")
         .orderBy("doc_id")
@@ -1209,7 +1212,7 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a predicate on the running sum, not a driver-side loop."""
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = (
         Window.partitionBy("source")
         .orderBy(F.desc("n_chars"), "doc_id")
@@ -1287,7 +1290,7 @@ def _lloyd_assignments(spark: SparkSession, sf_dir: str, k: int = 4,
     re-scanning the embeddings parquet per iteration (at 100 TB you
     persist the assignment input, not re-read the corpus per round —
     the same posture as _cc_labels' edge-list checkpoint)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     v = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).localCheckpoint()
@@ -1553,7 +1556,7 @@ def mmr_diverse_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     every round — ties break on vec_id in both."""
     from ..exprs import dot
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     cent_rows = (
         base.select(F.posexplode("v").alias("i", "x"))
@@ -1631,7 +1634,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
     r = d.select(
         "doc_id", "source", "lang", F.percent_rank().over(w).alias("pr")
@@ -1685,7 +1688,7 @@ def pii_redaction_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-cardinality aggregation — linear scan, one kilobyte-sized
     shuffle, no Python. Swapping the denylist for real PII patterns
     changes only the regex literal."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     hits = F.regexp_count(F.col("text"), F.lit(_SCRUB_PATTERN))
     removed = F.length("text") - F.length(
         F.regexp_replace("text", _SCRUB_PATTERN, "")
@@ -1785,7 +1788,7 @@ def importance_resample_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, which shuffled and sorted every corpus token, and the
     two-branch union that recomputed it; doc metadata rides the
     bucket groupBy instead of a join back onto the scan.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     arr = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
     base = _spread(
         d.select("doc_id", "lang", "source", arr.alias("toks")), spark, "doc_id"
@@ -1881,7 +1884,7 @@ def bpe_pair_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches |vocab| rows regardless of corpus size. Pair explosion is
     a JVM-side transform over character positions (no Python), the
     rollup is one shuffle on the pair, and top-20 is TakeOrdered."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -1907,6 +1910,17 @@ def bpe_pair_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("total_cnt"), "pair")
         .limit(20)
     )
+
+
+# Per-source word counts `per` over the non-empty words `tok` — the
+# corpus side of the tokenizer-apply oracles.
+_WORD_COUNTS_SQL = """tok AS (
+        SELECT source, token AS word
+        FROM (SELECT source, unnest(string_split(text, ' ')) AS token
+              FROM documents)
+        WHERE token <> ''
+    ),
+    per AS (SELECT source, word, count(*) AS c FROM tok GROUP BY 1, 2)"""
 
 
 def _bpe_cte_chain(n_merges: int) -> str:
@@ -2017,7 +2031,7 @@ def _bpe_trained_segmentation(
     `tokenizer_apply_bpe` (tokenize with the trained model)."""
     from ..iterate import checkpoint_flat
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .filter(F.col("word") != "")
@@ -2070,13 +2084,7 @@ def _bpe_trained_segmentation(
     oracle=f"""
     WITH {_bpe_cte_chain(BPE_N_MERGES)},
     seg AS (SELECT word, len(syms) AS n_seg FROM words{BPE_N_MERGES}),
-    tok AS (
-        SELECT source, token AS word
-        FROM (SELECT source, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-        WHERE token <> ''
-    ),
-    per AS (SELECT source, word, count(*) AS c FROM tok GROUP BY 1, 2)
+    {_WORD_COUNTS_SQL}
     SELECT source,
            CAST(sum(c) AS BIGINT) AS n_words,
            CAST(sum(c * n_seg) AS BIGINT) AS n_bpe_tokens,
@@ -2102,7 +2110,7 @@ def tokenizer_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the join, so the join and final rollup are both
     reduced-relation shuffles (at 100 TB, broadcast the segmentation:
     it is model metadata, a few MB)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words, _ = _bpe_trained_segmentation(spark, sf_dir)
     seg = words.select("word", F.size("syms").alias("n_seg"))
     per = (
@@ -2168,7 +2176,7 @@ def context_window_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     window table cross-joins against THAT reduced relation (never the
     text), and the rollup is one tiny aggregation. All counts exact
     integers; the two rates are the only divisions."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     per = d.select(
         F.size(F.filter(F.split("text", " "), lambda t: t != "")).alias("n_tok")
     )
@@ -2238,7 +2246,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk_hash. Chunk count ~= corpus_tokens/stride regardless of
     document skew; a 1 M-token document explodes into rows, never into
     one executor-killing string."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
         F.expr("filter(split(text, ' '), x -> x != '')").alias("t"),
@@ -2268,10 +2276,9 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "bigram_pmi_topk",
-    oracle=f"""
-    WITH toks AS (
+# Each non-empty token with its predecessor `prev` in the doc (oracle
+# CTEs `toks` and `seq`).
+_BIGRAM_SEQ_SQL = """toks AS (
         SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS token
         FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
     ),
@@ -2279,7 +2286,25 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, pos, token,
                lag(token) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
         FROM toks WHERE token <> ''
-    ),
+    )"""
+
+
+def _bigram_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, token, prev): each non-empty token with the
+    previous non-empty token of its doc (null for the first)."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
+    ).filter(F.col("token") != "")
+    return toks.withColumn(
+        "prev", F.lag("token").over(Window.partitionBy("doc_id").orderBy("pos"))
+    )
+
+
+@query(
+    "bigram_pmi_topk",
+    oracle=f"""
+    WITH {_BIGRAM_SEQ_SQL},
     c2 AS (
         SELECT prev, token, count(*) AS n2
         FROM seq WHERE prev IS NOT NULL GROUP BY prev, token
@@ -2317,15 +2342,7 @@ def bigram_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-partition global window, which would funnel every distinct
     bigram through one task); the grand total N is a 1-row aggregate
     broadcast back as a scalar; top-20 is TakeOrdered."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    ).filter(F.col("token") != "")
-    seq = toks.withColumn(
-        "prev", F.lag("token").over(Window.partitionBy("doc_id").orderBy("pos"))
-    )
+    seq = _bigram_seq(spark, sf_dir)
     c2 = (
         seq.filter(F.col("prev").isNotNull())
         .groupBy("prev", "token")
@@ -2396,7 +2413,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     quasi-identifier tuple, then a scalar rollup of the (already
     group-count-sized) class table — the audit costs one
     aggregation regardless of table size."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     eq = c.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("class_size")
     )
@@ -2513,7 +2530,7 @@ def curation_funnel_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast gram set first, and only then shuffles the surviving
     doc_ids. The benchmark gram set stays the only broadcast of data
     size."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.split("text", " ").alias("tokens")
     )
 
@@ -2646,15 +2663,7 @@ def _textrank_iter_sql(prev: str, out: str) -> str:
 @query(
     "textrank_keywords",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, generate_subscripts(t, 1) AS pos, unnest(t) AS token
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-    ),
-    seq AS (
-        SELECT doc_id, pos, token,
-               lag(token) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-        FROM toks WHERE token <> ''
-    ),
+    WITH {_BIGRAM_SEQ_SQL},
     pairs AS (
         SELECT prev AS src, token AS dst
         FROM seq WHERE prev IS NOT NULL AND prev <> token
@@ -2699,15 +2708,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once and each iteration is one join + one groupBy over the
     compact edge relation, the `_cc_labels` pattern. Ranks stay a
     vocab-sized table throughout."""
-    from pyspark.sql import Window
-
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
-    ).filter(F.col("token") != "")
-    seq = toks.withColumn(
-        "prev", F.lag("token").over(Window.partitionBy("doc_id").orderBy("pos"))
-    )
+    seq = _bigram_seq(spark, sf_dir)
     pairs = seq.filter(
         F.col("prev").isNotNull() & (F.col("prev") != F.col("token"))
     ).select(F.col("prev").alias("src"), F.col("token").alias("dst"))
@@ -2776,7 +2777,7 @@ def weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE scan computing a key column + TakeOrdered(k) —
     per-partition heaps, a k-row driver merge, no shuffle of the
     corpus at all. Weights change = one expression edit."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long")
         + F.lit(0.5)
@@ -2831,7 +2832,7 @@ def quantile_normalize_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no per-source sort of the corpus. Sources × 101 doubles is
     index metadata at any corpus size; the per-doc work is a pure
     projection."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fracs = F.array(*[F.lit(x / 100.0) for x in range(101)])
     grids = d.groupBy("source").agg(
         F.percentile("n_chars", fracs).alias("sgrid")
@@ -2908,7 +2909,7 @@ def raking_ipf_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc application (`per_doc_factor`) is a broadcast join
     back. Uniform targets are derived from the data (big_n/ns,
     big_n/nl), so the query needs no external config."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("double").alias("n")
     )
@@ -2991,7 +2992,7 @@ def l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-class diversity via a partitioned window + groupBy (both
     k-bounded), then a scalar rollup. Sensitive bands derive from the
     data; swapping the real sensitive column is one expression."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     banded = c.select(
         "c_mktsegment",
         "c_nationkey",
@@ -3101,7 +3102,7 @@ def greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the growing anti-join lineage. Rounds are the algorithm's
     inherent sequential dimension; everything inside a round is one
     shuffle."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("source", F.split("text", " ").alias("tokens"))
     hashes = shingle_hashes("tokens", 3)
     st = (
@@ -3239,7 +3240,7 @@ def _lsh_tuning_curve_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     `lsh_tuning_recommend`: returns the unordered per-configuration
     table (config, n_bands, rows_per_band, n_candidates, n_true_dups,
     precision_at_cfg, recall_at_cfg)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
         F.size("tokens") >= 3
     )
@@ -3469,7 +3470,7 @@ def boilerplate_passage_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 AND sf1 measured the token-array repartition costing more
     than the split-starved map stage it fixes — the md5 work per row
     is light enough that the scan's own splits win.)"""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n, stride = 2, 2
     toks = d.select(
         "doc_id", "source", F.split("text", " ").alias("t")
@@ -3558,7 +3559,7 @@ def label_balance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no driver data. Label skew is bounded by class cardinality;
     salting the rank window is the 100 TB escape hatch if one class
     dwarfs the rest."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     counts = e.groupBy("label").agg(F.count(F.lit(1)).alias("n_orig"))
     quota = counts.agg(F.min("n_orig").alias("m"))
     w = Window.partitionBy("label").orderBy(
@@ -3652,7 +3653,7 @@ def pareto_frontier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly-better quality via a value-RANGE frame, min cost within
     the quality tie group — so the global-order window never carries
     doc lists; surviving cells join back broadcast and explode."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.filter(F.split("text", " "), lambda t: t != "")
     scored = d.select(
         "doc_id",
@@ -3747,7 +3748,7 @@ def geo_grid_neighbor_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_cell_points, the signal for when to split hot cells), and a
     scalar rollup. The same plan serves real lat/lon after a
     deg→grid quantization."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     pts = e.select("user_id").distinct().select(
         "user_id",
         ((F.col("user_id") * F.lit(2654435761)) % F.lit(100000)).alias("px"),
@@ -3844,7 +3845,7 @@ def compressibility_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame
     rollup of fixed-width integers."""
     import pandas as pd
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
 
     def run(batches):
         import zlib
@@ -3944,7 +3945,7 @@ def topic_balance_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells; everything after runs on that bounded cell table. The
     entropy sum spans ≤K≈5 terms per source, so float-order effects
     sit far below the 6-decimal rendering."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     cells = d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
     tot = cells.groupBy("source").agg(
         F.sum("c").alias("t"), F.count(F.lit(1)).alias("n_langs")
@@ -4016,7 +4017,7 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     one groupBy rolls up — every shuffle keys on gram or doc, no
     pairwise comparisons anywhere (contrast jaccard_pairs: novelty is
     the linear-cost screen you run BEFORE pairwise verification)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = _spread(
         d.select(
             "doc_id", "source", F.split("text", " ").alias("tokens")
@@ -4145,7 +4146,7 @@ def url_canonicalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(source) with a distinct-count on the canonical key;
     at 100 TB the distinct-count shuffles on (source, canonical_url)
     — exactly the hash-dedup shuffle `dedup_exact` uses."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n = (F.col("doc_id") / 4).cast("long")
     base = F.concat(
         F.lit("https://www."), F.col("source"),
@@ -4286,7 +4287,7 @@ def bloom_filter_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CAST('0x'||... ) ≙ conv(...,16,10)), words are 60-bit so every
     mask stays positive in signed 64-bit on both engines, and all
     arithmetic is integer — the oracle is exact."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     fp = d.select(
         "doc_id",
         F.md5(
@@ -4442,7 +4443,7 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DP-valid variant. Scale shape: ONE grouped aggregate collapses
     the corpus; the noise CASE chain is constant-folded per group
     row. Only the noisy BIGINTs leave the engine."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     counts = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -4505,7 +4506,7 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partitionless window, ulp-level), and the floor allocation sits
     ~1e13 away from its rounding boundary. Scale shape: one grouped
     scan to k strata rows; everything after is scalar arithmetic."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     g = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("n_chars").cast("long").alias("s1"),
@@ -4601,7 +4602,7 @@ def horvitz_thompson_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT in both engines; the only double is the final
     relative error. Scale shape: one scan, one aggregate — the
     sample never materializes."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     inc_sql, yop_sql = _ht_case_sql("u")
     marked = d.select(
         "n_chars",
@@ -4682,7 +4683,7 @@ def madow_systematic_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     test pins that no corpus-sized unpartitioned window exists. The
     selection fingerprints (count, char sum, id sum) make any
     off-by-one in the crossing rule break the value hash."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     sized = d.select(
         "doc_id",
         F.col("n_chars").cast("long").alias("y"),
@@ -4824,7 +4825,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile sort, whose production form is broadcast percentile cuts
     (`decile_binning_broadcast_cuts`) — noted, not needed, at audit
     cadence."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     binned = c.select(
         "c_mktsegment",
         "c_nationkey",
@@ -4971,7 +4972,7 @@ def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows in one shuffle; the j≤i≤k triple relation is 24³/6 ≈ 2.3k
     rows of scalar arithmetic — constant as data grows, the
     `theil_sen_trend` bounded-pairs discipline."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
     hourly = e.groupBy(F.hour("ts").cast("long").alias("h")).agg(
@@ -5094,7 +5095,7 @@ def moran_i_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     with 400 cells). Scale shape: corpus → one row per CELL (≤400);
     the adjacency join and every sum run on that bounded relation —
     the aggregate-first discipline, spatial edition."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     pts = e.select("user_id").distinct().select(
         ((F.col("user_id") * F.lit(2654435761)) % F.lit(100000)).alias("px"),
         ((F.col("user_id") * F.lit(40503) + F.lit(12345)) % F.lit(100000)).alias(
@@ -5220,7 +5221,7 @@ def span_corruption_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide) → one doc-keyed ordered aggregation; TakeOrdered
     bounds the checked output while the plan itself maps the whole
     corpus."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     toks = d.select("doc_id", F.split("text", " ").alias("tokens"))
@@ -5411,7 +5412,7 @@ def _unigram_trained(spark: SparkSession, sf_dir: str):
     `tokenizer_apply_unigram`."""
     from ..iterate import checkpoint_flat
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = checkpoint_flat(
         d.select(F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -5651,13 +5652,7 @@ def unigram_train_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tokenizer_apply_unigram",
     oracle=f"""
     WITH {_uni_cte_chain()},
-    tok AS (
-        SELECT source, token AS word
-        FROM (SELECT source, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-        WHERE token <> ''
-    ),
-    per AS (SELECT source, word, count(*) AS c FROM tok GROUP BY 1, 2)
+    {_WORD_COUNTS_SQL}
     SELECT source,
            CAST(sum(c) AS BIGINT) AS n_words,
            CAST(sum(c * n_seg) AS BIGINT) AS n_pieces,
@@ -5682,7 +5677,7 @@ def tokenizer_apply_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurrence counts reduce to (source x word type) before the join.
     Training truncates word types to {UNI_MAXW} chars, so apply joins
     on the truncated form — deterministic in both engines."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     seg, _, _ = _unigram_trained(spark, sf_dir)
     per = (
         d.select("source", F.explode(F.split("text", " ")).alias("word"))
@@ -5714,13 +5709,7 @@ def tokenizer_apply_unigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_bpe_cte_chain(BPE_N_MERGES)},
     {_uni_cte_chain()},
     bseg AS (SELECT word, len(syms) AS bpe_seg FROM words{BPE_N_MERGES}),
-    tok AS (
-        SELECT source, token AS word
-        FROM (SELECT source, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-        WHERE token <> ''
-    ),
-    per AS (SELECT source, word, count(*) AS c FROM tok GROUP BY 1, 2)
+    {_WORD_COUNTS_SQL}
     SELECT source,
            CAST(sum(c) AS BIGINT) AS n_words,
            {round_sql("CAST(sum(c * b.bpe_seg) AS DOUBLE) / sum(c)", 6)}
@@ -5754,7 +5743,7 @@ def tokenizer_fertility_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the reduced (source x word type) relation — one corpus
     scan total. Parity: integer segment counts from both engines'
     identical trainings; three rounded divisions."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     bwords, _ = _bpe_trained_segmentation(spark, sf_dir)
     bseg = bwords.select("word", F.size("syms").alias("bpe_seg"))
     useg, _, _ = _unigram_trained(spark, sf_dir)
@@ -5786,29 +5775,8 @@ def tokenizer_fertility_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "cross_modal_consistency_audit",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, array_to_string(tokens[i:i+2], ' ') AS shingle
-        FROM toks, unnest(range(1, len(tokens) - 3 + 2)) AS t(i)
-    ),
-    sig AS (
-        SELECT doc_id,
-               min(md5(shingle || ':0')) AS h0, min(md5(shingle || ':1')) AS h1,
-               min(md5(shingle || ':2')) AS h2, min(md5(shingle || ':3')) AS h3
-        FROM sh GROUP BY doc_id
-    ),
-    bands AS (
-        SELECT doc_id, 0 AS band, md5(h0 || h1) AS bucket FROM sig
-        UNION ALL
-        SELECT doc_id, 1 AS band, md5(h2 || h3) AS bucket FROM sig
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
+    WITH {_MINHASH_BANDS_SQL},
+    cand AS ({_BAND_PAIRS_SQL}),
     sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     dup AS (
         SELECT i.doc_a, i.doc_b, i.inter, za.n_sh + zb.n_sh - i.inter AS un
@@ -5861,7 +5829,7 @@ def cross_modal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..exprs import dot
     from .llm import minhash_lsh_candidates
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # r13 second pass: the old verify exploded EVERY
     # document's distinct shingles and consumed that corpus-sized
     # relation three times (both pair sides + the sizes rollup). The
@@ -5876,15 +5844,7 @@ def cross_modal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     cand = minhash_lsh_candidates(spark, sf_dir).localCheckpoint()
     sets = d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
         F.size("tokens") >= 3
-    ).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("tokens") - 2),
-                lambda i: F.concat_ws(" ", F.slice("tokens", i, 3)),
-            )
-        ).alias("s"),
-    )
+    ).select("doc_id", shingle_set("tokens").alias("s"))
     cd = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
@@ -5902,7 +5862,7 @@ def cross_modal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("un", F.col("szsum") - F.col("inter"))
         .filter(2 * F.col("inter") >= F.col("un"))
     )
-    e = _t(spark, sf_dir, "embeddings").select(
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     ea = e.select(F.col("vec_id").alias("doc_a"), F.col("v").alias("va"))
@@ -5936,13 +5896,7 @@ def cross_modal_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "ccnet_perplexity_buckets",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, t AS token
-        FROM (SELECT doc_id, string_split(text, ' ') AS tokens FROM documents),
-             unnest(tokens) AS u(t)
-        WHERE t <> ''
-    ),
-    n AS (SELECT count(*) AS total FROM toks),
+    WITH {_UNIGRAM_TOKS_SQL},
     freq AS (
         SELECT doc_id, count(*) OVER (PARTITION BY token) AS c
         FROM toks
@@ -5993,26 +5947,11 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the global row_number over doc scores swaps to an
     approx_percentile sketch for the two cutoffs — the bucketing and
     rollup stages are unchanged."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "")
-    freq = toks.withColumn(
-        "c", F.count(F.lit(1)).over(Window.partitionBy("token"))
-    )
-    total = d.agg(
-        F.sum(
-            F.size(F.filter(F.split("text", " "), lambda t: t != ""))
-        ).alias("total")
-    )
+    d = load_table(spark, sf_dir, "documents")
     scored = (
-        freq.crossJoin(F.broadcast(total))
+        _unigram_token_counts(spark, sf_dir)
         .groupBy("doc_id", "total")
-        .agg(
-            round_col(
-                -F.avg(F.log(F.col("c").cast("double") / F.col("total"))), 6
-            ).alias("nll")
-        )
+        .agg(_unigram_nll().alias("nll"))
         .select("doc_id", "nll")
     )
     ranked = scored.withColumn(
@@ -6067,7 +6006,7 @@ def _wp_vocab(spark: SparkSession, sf_dir: str) -> tuple:
     corpus-frequency-weighted count. Returns (vocab keys set,
     word-type DataFrame). Vocabulary is bounded driver metadata
     (~100 keys), like the unigram/kmeans models."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     words = (
         d.select(F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
@@ -6334,7 +6273,7 @@ def kcenter_coreset_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     make the same greedy pick every round (ties on vec_id)."""
     from ..exprs import dot
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     base = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     seed = base.filter(F.col("vec_id") == 0).collect()[0]
     picks = [(1, int(seed["vec_id"]), 0.0)]
@@ -6447,7 +6386,7 @@ def packing_strategy_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin state, no window, no fold: one scan, one 9-row aggregate,
     3 output rows at any corpus size. Docs longer than W are clipped
     to W (they fill a bin exactly)."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     n = F.least(
         F.size(F.filter(F.split("text", " "), lambda x: x != "")),
         F.lit(_PACK_W),
@@ -6586,7 +6525,7 @@ def embedding_power_iteration_pca(spark: SparkSession, sf_dir: str) -> DataFrame
     it term-for-term. Corpus cost is independent of the step count."""
     import math
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = load_table(spark, sf_dir, "embeddings")
     cols = [
         F.covar_samp(
             F.element_at("embedding", i).cast("double"),
@@ -6677,7 +6616,7 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break so the cut agrees across engines; at 100 TB, k-heap
     merge traffic is k * n_partitions rows — independent of corpus
     size."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     u = (
         F.conv(F.substring(F.md5(F.concat(F.lit("res:"), F.col("doc_id"))), 1, 8), 16, 10)
         .cast("long")
@@ -6766,7 +6705,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches candidate pairs only — never all pairs. The exact leg
     exists BECAUSE this is an audit; the production path keeps only
     the estimate. At 100 TB the audit runs on a candidate sample."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     # r13 second pass: per-doc shingle set and the
     # _MEE_H estimator min-hashes are row-local (array_distinct +
     # array_min over the same set yield exactly the old
@@ -6779,15 +6718,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select("doc_id", F.split("text", " ").alias("tokens")).filter(
         F.size("tokens") >= 3
     )
-    sets = toks.select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size("tokens") - 2),
-                lambda i: F.concat_ws(" ", F.slice("tokens", i, 3)),
-            )
-        ).alias("s"),
-    )
+    sets = toks.select("doc_id", shingle_set("tokens").alias("s"))
     cd = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()

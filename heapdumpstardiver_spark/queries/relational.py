@@ -29,9 +29,6 @@ from ..exprs import round_col, round_sql, stable_render, stable_render_sql
 from ..registry import query
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
 
 _FIXTURE: tuple[str, dict] | None = None
 
@@ -150,7 +147,7 @@ def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     (analyze_heap_parquet.py:244,357,666) and `!= 0` null-sentinel tests
     (analyze_heap_parquet.py:283,658).
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         F.col("l_shipdate").between(
             F.lit("1995-01-01").cast("timestamp"), F.lit("1996-12-31").cast("timestamp")
@@ -171,7 +168,7 @@ def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def like_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE-pattern predicates — the category-routing / thread-class-hunt
     idiom (analyze_heap_parquet.py:195-201,1062-1065)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return p.filter(
         F.col("p_name").like("red%")
         | (F.col("p_type").like("%ECONOMY%") & ~F.col("p_name").like("%bolt%"))
@@ -188,7 +185,7 @@ def like_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic pagination — `query_heap`'s LIMIT n+1 OFFSET m page
     probe (server.py:508-517)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.orderBy("o_orderkey")
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -216,8 +213,8 @@ def join_fact_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-to-fact equi hash join + aggregate — the signature
     String ⋈ byte[] duplicate-content join (analyze_heap_parquet.py:276-294).
     Both sides large ⇒ shuffle join on the key; AQE handles skew."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderstatus")
@@ -245,8 +242,8 @@ def enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     robo-mode id → type_name enrichment against `_object_index`
     (server.py:179-184, resolve_ref_type_str dump_to_parquet.rs:150-170).
     The dimension is broadcast: the 100-TB fact side never shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left")
         .groupBy(F.coalesce(F.col("p_brand"), F.lit("(unresolved)")).alias("brand"))
@@ -275,8 +272,8 @@ def join_ratio_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join through an aggregated CTE with a post-join ratio predicate —
     the collection-utilization check (HashMap size/len(table) < 0.33,
     analyze_heap_parquet.py:654-697)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
     sums = li.groupBy("l_orderkey").agg(F.sum("l_extendedprice").alias("line_total"))
     ratio = F.col("line_total") / F.col("o_totalprice")
     return (
@@ -306,9 +303,9 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join (EXISTS). Absent from the reference (SURVEY §2B B15)
     but part of a complete join surface; Spark plans it without
     materializing the probe side."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 300000))
     )
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
@@ -326,8 +323,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join (NOT EXISTS) — customers with no urgent order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
 
 
@@ -342,8 +339,8 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hierarchy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchy lookup — the subclasses-of-X query over
     `_class_hierarchy` (server.py:168-171)."""
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
     return n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
         "r_name", "n_nationkey", "n_name"
     )
@@ -383,7 +380,7 @@ def hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same bounded-iteration pattern as dedup_connected_components.
     Hierarchy tables are class-registry-sized (thousands of rows), so
     every round's join is broadcast-able at any corpus scale."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     edges = c.select(
         F.col("c_custkey").alias("child"),
         F.expr("c_custkey DIV 10").alias("parent"),
@@ -436,7 +433,7 @@ def hierarchy_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lateral UNNEST + aggregate — the stack-trace frame_ids explode-join
     idiom (server.py:140-144). explode() is Spark's generator-node UNNEST."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return (
         d.select("lang", F.explode(F.split("text", " ")).alias("token"))
         .filter(F.col("token") != "")
@@ -474,7 +471,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     with arithmetic inside the aggregates — the reference's group-by
     surface (analyze_heap_parquet.py:181-185,284-294). Partial (map-side)
     aggregation makes this shuffle only |groups| rows per partition."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -506,7 +503,7 @@ def count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global COUNT(*) / COUNT(DISTINCT) — the class-count check
     (analyze_heap_parquet.py:764-799). Exact distinct is required by the
     oracle; at 100 TB swap to approx_count_distinct where tolerable."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_partkey").alias("n_parts"),
@@ -526,7 +523,7 @@ def count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def having_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING count>1 — the duplicate-group idiom used by every
     dedup check (analyze_heap_parquet.py:287,319,730,906)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_partkey", "l_suppkey")
         .agg(F.count(F.lit(1)).alias("dup_count"))
@@ -547,7 +544,7 @@ def having_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation — the DirectByteBuffer waste query
     (SUM(CASE WHEN pos=0 AND "limit"=capacity ...), analyze_heap_parquet.py:846-854)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.count(F.when(F.col("o_totalprice") == 0, 1)).alias("n_zero"),
@@ -585,8 +582,8 @@ def two_level_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (analyze_heap_parquet.py:276-294,721-737). The second
     aggregate keys on a broadcast-joined dimension column, so only the
     small per-customer intermediate shuffles again."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders"), F.sum("o_totalprice").alias("total")
     )
@@ -621,7 +618,7 @@ def weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted top-k of groups — `ORDER BY dup_count * str_len DESC
     LIMIT 10` (analyze_heap_parquet.py:308-321). TakeOrdered: no global
     sort."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     per_order = li.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
@@ -650,7 +647,7 @@ def weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP grouping sets — absent from the reference (SURVEY §2B B22),
     provided for surface completeness."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("cnt"), round_col(F.sum("l_quantity")).alias("qty")
     )
@@ -677,7 +674,7 @@ def bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size-bucket histogram with scaled sums — the byte-array size
     distribution (CASE len(values) buckets + MB sums,
     analyze_heap_parquet.py:217-229)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     bucket = (
         F.when(F.col("o_totalprice") < 50000, "lt_50k")
         .when(F.col("o_totalprice") < 150000, "50k_150k")
@@ -708,7 +705,7 @@ def bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pattern_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE pattern classifier — empty/single/sparse array patterns
     (analyze_heap_parquet.py:352-457,466-483)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     pattern = (
         F.when(F.col("p_size") == 0, "zero")
         .when(F.col("p_size") == 1, "single")
@@ -735,7 +732,7 @@ def pattern_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def category_like_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE-chain namespace categorizer (kafka/netty/JDK/... routing,
     analyze_heap_parquet.py:193-207)."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     category = (
         F.when(F.col("p_type").like("ECONOMY%") | F.col("p_type").like("PROMO%"), "value")
         .when(F.col("p_type").like("SMALL%") | F.col("p_type").like("MEDIUM%"), "mid")
@@ -761,7 +758,7 @@ def category_like_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
 def global_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global sort-desc + LIMIT — top types / top large arrays
     (analyze_heap_parquet.py:181-185,240-246). Executes as TakeOrdered."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.orderBy(F.desc("l_extendedprice"), "l_orderkey", "l_linenumber")
         .select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -785,8 +782,8 @@ def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Union of heterogeneous sources into one tagged table — the 9-way
     GC-root union (dump_to_parquet.rs:336-371) / 8-type primitive-array
     loop (analyze_heap_parquet.py:537-576)."""
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
     cu = c.groupBy(
         F.lit("customer").alias("kind"), F.col("c_nationkey").alias("nationkey")
     ).agg(F.count(F.lit(1)).alias("cnt"), round_col(F.sum("c_acctbal")).alias("balance"))
@@ -815,7 +812,7 @@ def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar surface — CAST/concat/substr idioms
     (analyze_heap_parquet.py:312)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return c.filter(F.col("c_custkey") < 100).select(
         "c_custkey",
         F.upper("c_mktsegment").alias("seg_upper"),
@@ -837,7 +834,7 @@ def string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def arithmetic_charge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row arithmetic + deterministic rounding — the
     ROUND(x/1048576.0, 2) MB-scaling idiom (analyze_heap_parquet.py:226)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(F.col("l_orderkey") < 1000).select(
         "l_orderkey",
         "l_linenumber",
@@ -864,7 +861,7 @@ def bitmask_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitmask flag decode — the threadStatus bitmask table
     (analyze_heap_parquet.py:993-1024), done engine-side with bitwiseAND
     instead of the reference's Python post-processing."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     ln = F.col("l_linenumber")
     states = F.concat_ws(
         "|",
@@ -890,7 +887,7 @@ def systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bernoulli sampling + 100/pct scaling heuristic
     (analyze_heap_parquet.py:264-305). Key-mod sampling keeps the oracle
     deterministic; production code would use df.sample(fraction=...)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_orderkey") % 10 == 0)
         .agg(
@@ -950,7 +947,7 @@ def struct_field_access(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Struct reference columns and dotted field access — the non-robo
     Struct{id,type} reference encoding and the dual-mode `ref_field`
     accessor (B6, analyze_heap_parquet.py:129-134, util.rs:139-142)."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     ref = F.struct(F.col("n_regionkey").alias("id"), F.col("n_name").alias("type"))
     return (
         n.filter(F.col("n_nationkey") < 10)
@@ -981,7 +978,7 @@ def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets (the B22 gap — absent in the reference,
     available in Spark): all 4 grouping combinations in ONE shuffle
     with partial aggregation, instead of 4 scans + a union."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         round_col(F.sum("o_totalprice")).alias("total_price"),
@@ -1007,8 +1004,8 @@ def set_ops_except_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT / INTERSECT (distinct set ops — the B28 gap; the
     reference only unions). Spark plans both as aggregated joins
     (left-anti / left-semi after distinct) on the key."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
     never = c.exceptAll(o).distinct().agg(F.count(F.lit(1)).alias("n")).select(
         F.lit("never_ordered").alias("side"), "n"
     )
@@ -1034,7 +1031,7 @@ def pivot_status_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     year. An explicit pivot value list keeps it one pass — no extra
     distinct-values job, and the output schema is static, which is
     what a 100-TB pipeline needs for a stable sink schema."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
     agg = (
         o.select("o_orderstatus", yr.alias("yr"), "o_totalprice")
@@ -1069,7 +1066,7 @@ def salted_heavy_hitter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     handling can't apply (aggregations, not joins); counts merge by
     sum, sums by sum, and the final round happens after the merge so
     salting never changes a value."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     salt = (F.col("l_orderkey") % 16).alias("salt")
     partial = (
         li.select("l_suppkey", salt, "l_quantity")
@@ -1108,7 +1105,7 @@ def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     with partial aggregation — the single-pass alternative to three
     scans unioned. GROUPING() flags disambiguate "NULL because not
     grouped" from a NULL key, exactly as both engines define them."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return o.groupingSets(
         [["o_orderstatus"], ["o_orderpriority"], []],
         "o_orderstatus",
@@ -1178,7 +1175,7 @@ def unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's native `unpivot` — one Expand node over the aggregate, not
     a 3-way self-union re-scanning the source. The oracle spells out
     the UNION ALL the operator replaces."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     s = li.groupBy("l_returnflag").agg(
         round_col(F.sum("l_quantity")).alias("sum_qty"),
         round_col(F.sum("l_extendedprice")).alias("sum_price"),
@@ -1870,12 +1867,12 @@ def star_join_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-way join planner to compare against (mcp_server/server.py
     passthrough executes whatever single-statement SQL DuckDB gets);
     this query demonstrates the capability its users gain."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     joined = (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -1933,7 +1930,7 @@ def fuzzy_join_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks; a skewed block would show up in `join_key_skew_profile`
     on the block key, and the fix (longer block keys: last token +
     length band) changes only the key expression."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     names = p.select("p_name").distinct()
     keyed = names.select(
         "p_name", F.element_at(F.split("p_name", " "), -1).alias("blk")
@@ -2047,11 +2044,11 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     already filtered. The reference's single-statement DuckDB
     passthrough (mcp_server/server.py:343) runs this shape
     single-node; here Catalyst distributes it."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp_ntz")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp_ntz")
     )
     return (
@@ -2101,13 +2098,13 @@ def returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on the order key, then ONE partial-aggregated exchange on
     custkey and a TakeOrdered(20) on the rounded revenue (ties broken
     by custkey — both engines pick identical rows)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1999-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1999-04-01").cast("timestamp_ntz"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
@@ -2159,10 +2156,10 @@ def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles customer once on custkey (or bloom-prunes first —
     the runtime filter the planner injects for selective anti joins),
     and orders contributes only its join key column (pruned scan)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    n = load_table(spark, sf_dir, "nation")
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp_ntz"))
         .select("o_custkey")
     )
@@ -2183,10 +2180,12 @@ def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "copurchase_triangle_count",
-    oracle="""
-    WITH pairs AS (
+# The 1997 part co-purchase graph behind the graph queries below
+# (triangles, PageRank, k-core, label propagation, assortativity): an
+# undirected edge (a, b), a < b, joins two parts bought in one order
+# within the ship year. The oracles name the pairs and symmetric edges
+# as `pairs`/`edges` CTEs.
+_COPURCHASE_PAIRS_SQL = """
         SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
         FROM lineitem l1
         JOIN lineitem l2
@@ -2195,7 +2194,53 @@ def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
           AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
           AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
+    """
+_COPURCHASE_EDGES_SQL = """
+        SELECT a AS src, b AS dst FROM pairs
+        UNION ALL SELECT b, a FROM pairs
+    """
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct co-purchase pairs (a, b): one self-join
+    co-partitioned on l_orderkey (one exchange, reused for both sides)
+    plus DISTINCT. localCheckpoint truncates lineage: every caller
+    iterates or fans out over the pairs, and without it each round's
+    plan nests the full prior-round tree (the 6-way k-core union's
+    logical plan grew combinatorially — a Catalyst OOM before a
+    single task ran)."""
+    li = (
+        load_table(spark, sf_dir, "lineitem")
+        .filter(
+            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
+            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
+        )
+        .select("l_orderkey", "l_partkey")
+    )
+    x, y = li.alias("x"), li.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
+        )
+        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _copurchase_edges(pairs: DataFrame) -> DataFrame:
+    """Both directions of every pair as (src, dst)."""
+    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+
+
+@query(
+    "copurchase_triangle_count",
+    oracle=f"""
+    WITH pairs AS ({_COPURCHASE_PAIRS_SQL}),
     deg AS (
         SELECT v, count(*) AS d FROM (
             SELECT a AS v FROM pairs UNION ALL SELECT b AS v FROM pairs
@@ -2237,25 +2282,7 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy; the oriented edge list is localCheckpoint'ed ONCE and
     feeds all three legs of the triangle join — without it the whole
     pairs pipeline would re-execute per leg."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-        )
-        .select("l_orderkey", "l_partkey")
-    )
-    x, y = li.alias("x"), li.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
     deg = (
         pairs.select(F.col("a").alias("v"))
         .unionAll(pairs.select(F.col("b").alias("v")))
@@ -2322,7 +2349,7 @@ def relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain grows. One shuffle on the group key; the global distinct is
     a 5-row scalar scan. No join against the divisor SET is needed at
     all — the count identity replaces it."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     k = o.agg(F.countDistinct("o_orderpriority").alias("k"))
     per = o.groupBy("o_custkey").agg(
         F.countDistinct("o_orderpriority").alias("np"),
@@ -2385,7 +2412,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-scale shuffle; everything after is k-bounded. The anchor
     date is fixed (max order date + 1 month) so results are
     reproducible, not wall-clock-dependent."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.datediff(
             F.lit("2001-09-01").cast("date"),
@@ -2474,10 +2501,10 @@ def late_supplier_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The 60-day lateness predicate stands in for the reference
     schema's receipt/commit dates (not present in this data model)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_orderdate")
     per = (
@@ -2550,9 +2577,9 @@ def large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     selective — runtime stats, not a hint, since selectivity depends
     on the cutoff), and customer attaches last. TakeOrdered(25) on the
     rounded price, orderkey tiebreak."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
@@ -2613,8 +2640,8 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     points (the `decile_binning_broadcast_cuts` pattern, no rank
     window); the exact form is kept here because the oracle
     hash-matches it."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     per_cust = (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"), "o_custkey")
@@ -2832,20 +2859,8 @@ def _pagerank_oracle(iters: int = 6) -> str:
         ) c ON c.v = d0.v
     )""")
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-        WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
-    edges AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL SELECT b, a FROM pairs
-    ),
+    WITH pairs AS ({_COPURCHASE_PAIRS_SQL}),
+    edges AS ({_COPURCHASE_EDGES_SQL}),
     deg AS (SELECT src AS v, count(*) AS d FROM edges GROUP BY src),
     nv AS (SELECT count(*) AS n FROM deg),
     pr0 AS (SELECT v, 1000000000000 // n AS s FROM deg, nv),
@@ -2879,28 +2894,8 @@ def pagerank_copurchase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern); the driver sees one scalar (the vertex count), never
     data. Dangling-mass handling is moot on an undirected graph
     (every vertex has out-edges)."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-        )
-        .select("l_orderkey", "l_partkey")
-    )
-    x, y = li.alias("x"), li.alias("y")
-    pairs = (
-        x.join(
-            y,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_partkey") < F.col("y.l_partkey")),
-        )
-        .select(F.col("x.l_partkey").alias("a"), F.col("y.l_partkey").alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
+    edges = _copurchase_edges(pairs)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d")).select(
         F.col("src").alias("v"), "d"
     ).localCheckpoint()
@@ -2999,7 +2994,7 @@ def item_item_cofilter_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     item cap upstream, the standard guard in production CF)."""
     from pyspark.sql import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     basket = (
         li.filter(
             (F.col("l_shipdate") >= "1997-01-01")
@@ -3088,20 +3083,8 @@ def _kcore_oracle(k: int = 3, rounds: int = 6) -> str:
         f"SELECT * FROM stat{r}" for r in range(1, rounds + 1)
     )
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-        WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
-    edges AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL SELECT b, a FROM pairs
-    ),
+    WITH pairs AS ({_COPURCHASE_PAIRS_SQL}),
+    edges AS ({_COPURCHASE_EDGES_SQL}),
     alive0 AS (SELECT src AS v FROM edges GROUP BY src),
     {",".join(cte)},
     {rows}
@@ -3139,34 +3122,8 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertices instead of replaying (and combinatorially nesting) the
     lineage, and the round count is a fixed budget — the standard
     bounded-iteration discipline for distributed graph fixpoints."""
-    li = _t(spark, sf_dir, "lineitem")
-    year = li.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    ).select("l_orderkey", "l_partkey")
-    a, b = year.alias("a"), year.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .distinct()
-        # localCheckpoint truncates lineage: without it each of the 6
-        # rounds' plans nests the full prior-round tree and the final
-        # 6-way union's logical plan grows combinatorially (observed
-        # as a catalyst OOM before a single task ran) — the same
-        # discipline as dedup_connected_components' label loop
-        .localCheckpoint()
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
+    edges = _copurchase_edges(pairs)
     alive = edges.select(F.col("src").alias("v")).distinct().localCheckpoint()
     out = None
     for r in range(1, 7):
@@ -3183,8 +3140,8 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         surv = alive.agg(F.count(F.lit(1)).cast("long").alias("survivors"))
         live = (
-            pairs.join(alive.select(F.col("v").alias("pa")), "pa")
-            .join(alive.select(F.col("v").alias("pb")), "pb")
+            pairs.join(alive.select(F.col("v").alias("a")), "a")
+            .join(alive.select(F.col("v").alias("b")), "b")
             .agg(F.count(F.lit(1)).cast("long").alias("live_edges"))
         )
         row = (
@@ -3218,20 +3175,8 @@ def _lpa_oracle(rounds: int = 4) -> str:
         GROUP BY c.v
     )""")
     return f"""
-    WITH pairs AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-        WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
-    edges AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL SELECT b, a FROM pairs
-    ),
+    WITH pairs AS ({_COPURCHASE_PAIRS_SQL}),
+    edges AS ({_COPURCHASE_EDGES_SQL}),
     lab0 AS (SELECT src AS v, src AS label FROM edges GROUP BY src),
     {",".join(cte)}
     SELECT CAST(label AS BIGINT) AS community,
@@ -3261,29 +3206,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     grouped aggregates, NOT a window over the corpus); rounds
     localCheckpoint so lineage stays flat. The fixed round budget is
     the same bounded-iteration contract as `kcore_decomposition`."""
-    li = _t(spark, sf_dir, "lineitem")
-    year = li.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    ).select("l_orderkey", "l_partkey")
-    a, b = year.alias("a"), year.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
+    edges = _copurchase_edges(pairs)
     labels = (
         edges.select(F.col("src").alias("v"))
         .distinct()
@@ -3368,7 +3292,7 @@ def mutual_information_categorical(spark: SparkSession, sf_dir: str) -> DataFram
     cell table; margins are windows over it, never a rescan."""
     from pyspark.sql import Window
 
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cells = o.groupBy(
         F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
     ).agg(F.count(F.lit(1)).cast("long").alias("nxy"))
@@ -3407,20 +3331,8 @@ def mutual_information_categorical(spark: SparkSession, sf_dir: str) -> DataFram
 @query(
     "assortativity_degree",
     oracle=f"""
-    WITH pairs AS (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-        WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
-    edges AS (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL SELECT b, a FROM pairs
-    ),
+    WITH pairs AS ({_COPURCHASE_PAIRS_SQL}),
+    edges AS ({_COPURCHASE_EDGES_SQL}),
     deg AS (
         SELECT src AS v, CAST(count(*) AS BIGINT) AS d
         FROM edges GROUP BY src
@@ -3459,29 +3371,8 @@ def assortativity_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair build, one degree aggregate, two degree lookups joined back
     on edge endpoints (vertex-keyed shuffles), one corr — no window,
     no collect, no pairwise blow-up beyond the edge list itself."""
-    li = _t(spark, sf_dir, "lineitem")
-    year = li.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    ).select("l_orderkey", "l_partkey")
-    a, b = year.alias("a"), year.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
+    edges = _copurchase_edges(pairs)
     deg = edges.groupBy(F.col("src").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -3540,20 +3431,8 @@ def _kcore_fixpoint_oracle(k: int = 3, budget: int = 40) -> str:
         for r in range(1, budget + 1)
     )
     return f"""
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1
-        JOIN lineitem l2
-          ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey
-        WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l1.l_shipdate <  TIMESTAMP '1998-01-01'
-          AND l2.l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l2.l_shipdate <  TIMESTAMP '1998-01-01'
-    ),
-    edges AS MATERIALIZED (
-        SELECT a AS src, b AS dst FROM pairs
-        UNION ALL SELECT b, a FROM pairs
-    ),
+    WITH pairs AS MATERIALIZED ({_COPURCHASE_PAIRS_SQL}),
+    edges AS MATERIALIZED ({_COPURCHASE_EDGES_SQL}),
     alive0 AS MATERIALIZED (SELECT src AS v FROM edges GROUP BY src),
     {",".join(cte)},
     counts AS ({counts}),
@@ -3609,24 +3488,7 @@ def kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     a safety cap (100) bounds the loop against pathological inputs."""
     from ..iterate import checkpoint_flat
 
-    li = _t(spark, sf_dir, "lineitem")
-    year = li.filter(
-        (F.col("l_shipdate") >= "1997-01-01")
-        & (F.col("l_shipdate") < "1998-01-01")
-    ).select("l_orderkey", "l_partkey")
-    a, b = year.alias("a"), year.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
     # r14 (the dedup_cc treatment): the symmetric
     # edge list is STATIC across all ~27 peel rounds but was re-derived
     # from the pairs checkpoint (two scans + a union) every round;
@@ -3634,10 +3496,7 @@ def kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE sizes the checkpoint partitions by data (1-2 locally, many at
     # scale) instead of inheriting the union's layout.
     edges = (
-        pairs.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-        )
+        _copurchase_edges(pairs)
         .repartition("src")
         .localCheckpoint()
     )
@@ -3663,8 +3522,8 @@ def kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         rounds += 1
     surv = alive.agg(F.count(F.lit(1)).cast("long").alias("survivors"))
     live = (
-        pairs.join(alive.select(F.col("v").alias("pa")), "pa")
-        .join(alive.select(F.col("v").alias("pb")), "pb")
+        pairs.join(alive.select(F.col("v").alias("a")), "a")
+        .join(alive.select(F.col("v").alias("b")), "b")
         .agg(F.count(F.lit(1)).cast("long").alias("live_edges"))
     )
     return (
@@ -3766,7 +3625,7 @@ def zorder_clustering_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; real file stats would add only residual skew inside
     a quantization cell."""
     x0, x1, y0, y1 = _Z_RECT
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     dom = li.agg(
         F.max("l_partkey").alias("mx"), F.max("l_suppkey").alias("my")
     )
@@ -3856,13 +3715,35 @@ _WARC_FIXTURE_SPEC = [
 ]
 
 
-def warc_fixture_dir() -> str:
-    """Build (once per content hash) the deterministic WARC fixture
-    directory — the staging + atomic-rename caching discipline of the
-    HPROF fixtures."""
-    import gzip as _gzip
+def _cached_fixture_dir(prefix: str, spec, build) -> str:
+    """Build (once per content hash of *spec*) a deterministic fixture
+    directory: *build(staging)* writes its files into a staging
+    directory that is renamed into place, so concurrent callers see
+    either nothing or the complete directory — the caching discipline
+    of the HPROF fixtures."""
     import hashlib
     import tempfile
+
+    digest = hashlib.md5(repr(spec).encode()).hexdigest()[:10]
+    out = os.path.join(tempfile.gettempdir(), f"{prefix}.{digest}")
+    if not os.path.exists(os.path.join(out, "_DONE")):
+        staging = f"{out}.build.{os.getpid()}"
+        os.makedirs(staging, exist_ok=True)
+        build(staging)
+        with open(os.path.join(staging, "_DONE"), "w") as f:
+            f.write("ok")
+        try:
+            os.rename(staging, out)
+        except OSError:
+            import shutil
+
+            shutil.rmtree(staging, ignore_errors=True)
+    return out
+
+
+def warc_fixture_dir() -> str:
+    """The deterministic WARC fixture directory (`_WARC_FIXTURE_SPEC`)."""
+    import gzip as _gzip
 
     def record(wtype: str, uri: str, payload: bytes, rid: int) -> bytes:
         head = (
@@ -3876,11 +3757,7 @@ def warc_fixture_dir() -> str:
         ).encode()
         return head + payload + b"\r\n\r\n"
 
-    digest = hashlib.md5(repr(_WARC_FIXTURE_SPEC).encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"hds_warc_fixture.{digest}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        staging = f"{out}.build.{os.getpid()}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
         rid = 0
         for fname, gzipped, records in _WARC_FIXTURE_SPEC:
             blobs = []
@@ -3892,15 +3769,8 @@ def warc_fixture_dir() -> str:
                 )
             with open(os.path.join(staging, fname), "wb") as f:
                 f.write(b"".join(blobs))
-        with open(os.path.join(staging, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(staging, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    return out
+    return _cached_fixture_dir("hds_warc_fixture", _WARC_FIXTURE_SPEC, build)
 
 
 def _warc_tally_oracle() -> str:
@@ -3981,20 +3851,12 @@ _ARROW_FIXTURE_SPEC = (
 
 
 def arrow_fixture_dir() -> str:
-    """Build (once per content hash) the deterministic Arrow IPC
-    fixture directory — staging + atomic rename, the WARC/HPROF
-    fixture discipline."""
-    import hashlib
-    import tempfile
-
+    """The deterministic Arrow IPC fixture directory
+    (`_ARROW_FIXTURE_SPEC`)."""
     import pyarrow as pa
     import pyarrow.ipc as ipc
 
-    digest = hashlib.md5(repr(_ARROW_FIXTURE_SPEC).encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"hds_arrow_fixture.{digest}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        staging = f"{out}.build.{os.getpid()}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
         schema = pa.schema(
             [pa.field("category", pa.string()), pa.field("v", pa.int64())]
         )
@@ -4012,15 +3874,8 @@ def arrow_fixture_dir() -> str:
                             schema=schema,
                         )
                     )
-        with open(os.path.join(staging, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(staging, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    return out
+    return _cached_fixture_dir("hds_arrow_fixture", _ARROW_FIXTURE_SPEC, build)
 
 
 def _arrow_tally_oracle() -> str:
@@ -4137,7 +3992,7 @@ def arrow_ipc_roundtrip_tally(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_arrow_ipc
 
     register_arrow_ipc(spark)
-    d = _t(spark, sf_dir, "documents").select("lang", "n_chars")
+    d = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
     out = _pid_keyed_export_dir("hds_arrow_roundtrip.", sf_dir)
     d.write.format("arrowipc").mode("overwrite").save(out)
     back = spark.read.format("arrowipc").load(out)
@@ -4186,20 +4041,13 @@ def _tfr_payload(cat: str, body_len: int) -> bytes:
 
 
 def tfrecord_fixture_dir() -> str:
-    """Build (once per content hash) the deterministic TFRecord
-    fixture directory — staging + atomic rename, the WARC/Arrow
-    fixture discipline."""
-    import hashlib
+    """The deterministic TFRecord fixture directory
+    (`_TFR_FIXTURE_SPEC`; a record marked bad gets a corrupt data CRC)."""
     import struct
-    import tempfile
 
     from ..sources.tfrecord_source import masked_crc, write_record
 
-    digest = hashlib.md5(repr(_TFR_FIXTURE_SPEC).encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"hds_tfr_fixture.{digest}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        staging = f"{out}.build.{os.getpid()}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
         for fname, records in _TFR_FIXTURE_SPEC:
             with open(os.path.join(staging, fname), "wb") as f:
                 for cat, body_len, good in records:
@@ -4216,15 +4064,8 @@ def tfrecord_fixture_dir() -> str:
                                 "<I", masked_crc(payload) ^ 0x1
                             )
                         )
-        with open(os.path.join(staging, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(staging, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    return out
+    return _cached_fixture_dir("hds_tfr_fixture", _TFR_FIXTURE_SPEC, build)
 
 
 def _tfr_tally_oracle() -> str:
@@ -4308,7 +4149,7 @@ def tfrecord_roundtrip_tally(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_tfrecord
 
     register_tfrecord(spark)
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     payload = F.encode(
         F.concat(F.col("lang"), F.lit("\t"), F.col("text")), "utf-8"
     )
@@ -4422,31 +4263,17 @@ def _tfex_payload(cat: str, ids, scores, encoding: str) -> bytes:
 
 
 def tfexample_fixture_dir() -> str:
-    """Build (once per content hash) the Example-payload TFRecord
-    fixture — staging + atomic rename."""
-    import hashlib
-    import tempfile
-
+    """The Example-payload TFRecord fixture directory
+    (`_TFEX_FIXTURE_SPEC`)."""
     from ..sources.tfrecord_source import write_record
 
-    digest = hashlib.md5(repr(_TFEX_FIXTURE_SPEC).encode()).hexdigest()[:10]
-    out = os.path.join(tempfile.gettempdir(), f"hds_tfex_fixture.{digest}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        staging = f"{out}.build.{os.getpid()}"
-        os.makedirs(staging, exist_ok=True)
+    def build(staging: str) -> None:
         for fname, records in _TFEX_FIXTURE_SPEC:
             with open(os.path.join(staging, fname), "wb") as f:
                 for cat, ids, scores, encoding in records:
                     write_record(f, _tfex_payload(cat, ids, scores, encoding))
-        with open(os.path.join(staging, "_DONE"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(staging, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    return out
+    return _cached_fixture_dir("hds_tfex_fixture", _TFEX_FIXTURE_SPEC, build)
 
 
 def _tfex_oracle() -> str:

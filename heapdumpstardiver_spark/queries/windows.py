@@ -15,12 +15,96 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..exprs import round_col, round_sql, stable_render, stable_render_sql
+from ..exprs import round_col, round_sql, stable_render, stable_render_sql, total_rows
 from ..registry import query
 
+# Shared oracle CTEs. Each body is padded like a hand-written
+# `name AS (\n    body\n)` CTE, so the rendered SQL reads the same.
+# Per-type value ranks (ties broken by event_id) and group sizes.
+_RANKED_SQL = """ranked AS (
+        SELECT event_type, value,
+               row_number() OVER (
+                   PARTITION BY event_type ORDER BY value, event_id) AS rn,
+               count(*) OVER (PARTITION BY event_type) AS n
+        FROM events
+    )"""
+_RANKED_G_SQL = f"""{_RANKED_SQL},
+    g AS (
+        SELECT event_type, value, rn,
+               max(n) OVER (PARTITION BY event_type) AS mx
+        FROM ranked
+    )"""
+# Daily order revenue in exact integer cents.
+_DAILY_CENTS_SQL = """daily AS (
+        SELECT CAST(o_orderdate AS DATE) AS day,
+               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
+        FROM orders GROUP BY 1
+    )"""
+# Daily order revenue in cents, as `rev_cents` (shared with the
+# diagnostics module's time-series tests).
+DAILY_REV_CENTS_SQL = """
+        SELECT CAST(o_orderdate AS DATE) AS day,
+               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT)
+                   AS rev_cents
+        FROM orders GROUP BY CAST(o_orderdate AS DATE)
+    """
+# Daily event-value series.
+_DAILY_VALUE_SQL = """daily AS (
+        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+               sum(value) AS y
+        FROM events GROUP BY 1
+    )"""
+# Per-user event-type transitions in (ts, event_id) order.
+_TRANSITIONS_SQL = """seq AS (
+        SELECT event_type AS src,
+               lead(event_type) OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+               ) AS dst
+        FROM events
+    )"""
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+
+def _cohort_years(o: DataFrame) -> DataFrame:
+    """(o_custkey, cohort_year): the year of each customer's first order."""
+    return o.groupBy("o_custkey").agg(
+        F.min(F.date_trunc("year", "o_orderdate")).alias("cohort_year")
+    )
+
+
+def _daily_cents(
+    spark: SparkSession, sf_dir: str, name: str = "c", dtype: str = "long"
+) -> DataFrame:
+    """(day, *name*): daily order revenue in exact integer cents."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
+        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
+        .cast(dtype)
+        .alias(name)
+    )
+
+
+def _daily_lags(spark: SparkSession, sf_dir: str, lags: tuple[int, ...]) -> DataFrame:
+    """(y, y<k> for k in *lags*) over the daily event-value series."""
+    e = load_table(spark, sf_dir, "events")
+    daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
+        F.sum("value").alias("y")
+    )
+    w = Window.orderBy("day")
+    return daily.select("y", *(F.lag("y", k).over(w).alias(f"y{k}") for k in lags))
+
+
+def _event_letter_seq() -> Column:
+    """Per-user aggregate: the first letters of the user's event types
+    in (ts, event_id) order, as one string."""
+    return F.array_join(
+        F.transform(
+            F.array_sort(
+                F.collect_list(F.struct("ts", "event_id", "event_type"))
+            ),
+            lambda x: F.substring(x["event_type"], 1, 1),
+        ),
+        "",
+    )
 
 
 @query(
@@ -41,8 +125,8 @@ def window_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k per group via row_number — the per-category top-k the
     reference can only do globally (analyze_heap_parquet.py:308-321).
     One shuffle on the partition key; no global sort."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -62,7 +146,7 @@ def window_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running total per customer — analytic frame aggregation."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -97,7 +181,7 @@ def sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity) via lag — the batch
     twin of a session window. Microsecond epoch arithmetic keeps both
     engines exact."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     prev = F.lag(us).over(w)
@@ -124,7 +208,7 @@ def sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def date_trunc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-truncated event-time aggregation (B34 gap: the reference
     has no date/timestamp functions; `events.ts` provides them)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
         .agg(
@@ -148,7 +232,7 @@ def window_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window — batch twin of the Structured
     Streaming windowed aggregation (see streaming/windowed.py); F.window
     is the same operator Spark uses under watermarks."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -188,7 +272,7 @@ def window_sliding_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming.sliding_counts; at 100 TB the fan-out multiplies shuffle
     rows by the overlap factor, which is why slide granularity is a
     capacity knob, not a free parameter."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(
@@ -216,12 +300,38 @@ def window_sliding_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def json_extract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured JSON extraction (B34 gap) — `events.props` is a
     JSON-ish VARCHAR; get_json_object stays JVM-side."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return e.groupBy("event_type").agg(
         round_col(F.avg(k), 4).alias("avg_k"),
         F.max(k).cast("int").alias("max_k"),
         F.count(F.lit(1)).alias("cnt"),
+    )
+
+
+def _clicks_last_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Clicks of users < 50, each with `last_error_ts`: the user's
+    newest error at or before the click (null if none), from a tagged
+    click/error union and one per-user window pass."""
+    e = load_table(spark, sf_dir, "events")
+    tagged = e.filter(F.col("event_type").isin("click", "error")).select(
+        "event_id",
+        "user_id",
+        "ts",
+        "event_type",
+        # error rows sort before click rows at the same timestamp
+        F.when(F.col("event_type") == "error", F.lit(0)).otherwise(1).alias("tag"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "tag")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    last_err = F.last(
+        F.when(F.col("event_type") == "error", F.col("ts")), ignorenulls=True
+    ).over(w)
+    return tagged.withColumn("last_error_ts", last_err).filter(
+        (F.col("event_type") == "click") & (F.col("user_id") < 50)
     )
 
 
@@ -252,26 +362,8 @@ def asof_join_last_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     join condition would produce. (user_id, ts) is unique in the
     fixture, so at equal timestamps ordering error-rows first matches
     DuckDB ASOF's inclusive `<=`."""
-    e = _t(spark, sf_dir, "events")
-    tagged = e.filter(F.col("event_type").isin("click", "error")).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        # error rows sort before click rows at the same timestamp
-        F.when(F.col("event_type") == "error", F.lit(0)).otherwise(1).alias("tag"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    last_err = F.last(
-        F.when(F.col("event_type") == "error", F.col("ts")), ignorenulls=True
-    ).over(w)
     return (
-        tagged.withColumn("last_error_ts", last_err)
-        .filter((F.col("event_type") == "click") & (F.col("user_id") < 50))
+        _clicks_last_error(spark, sf_dir)
         .select(
             "event_id",
             "user_id",
@@ -314,7 +406,7 @@ def asof_join_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(clicks × purchases) inequality join. At equal timestamps the
     purchase sorts after the click (tag order), matching DuckDB ASOF's
     inclusive `>=`."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     tagged = e.filter(F.col("event_type").isin("click", "purchase")).select(
         "event_id",
         "user_id",
@@ -366,7 +458,7 @@ def range_join_nearby(spark: SparkSession, sf_dir: str) -> DataFrame:
     join with the time band as a residual predicate, so it scales with
     events-per-user, not |events|²; without an equi-key Spark would fall
     back to a broadcast-nested-loop, the thing to avoid at 100 TB."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     p = (
         e.filter((F.col("event_type") == "purchase") & (F.col("user_id") < 30))
         .select(
@@ -424,7 +516,7 @@ def percentile_disc_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the selected values are raw data (no interpolation arithmetic
     to diverge). One shuffle on the group key; at scale swap in
     approx_percentile for fixed-memory sketches."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     wn = Window.partitionBy("o_orderstatus")
     ranked = o.select("o_orderstatus", "o_totalprice", "o_orderkey").withColumn(
@@ -491,7 +583,7 @@ def rollup_hypertable_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     `union(minute, hour(minute), day(hour))` DAG compiles to THREE
     scans of the raw table because Catalyst does not share common
     subplans across union branches."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     minute = e.groupBy(F.date_trunc("minute", "ts").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
     )
@@ -543,13 +635,7 @@ def _cont_quantile_sql(q: float, n: int = 4) -> str:
 @query(
     "approx_quantile_sketch",
     oracle=f"""
-    WITH ranked AS (
-        SELECT event_type, value,
-               row_number() OVER (
-                   PARTITION BY event_type ORDER BY value, event_id) AS rn,
-               count(*) OVER (PARTITION BY event_type) AS n
-        FROM events
-    ),
+    WITH {_RANKED_SQL},
     g AS (SELECT event_type, value, rn,
                  max(n) OVER (PARTITION BY event_type) AS mx FROM ranked)
     SELECT event_type,
@@ -578,7 +664,7 @@ def approx_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim at 100 TB would reintroduce the exact expansion it is
     designed to avoid.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     acc = 10_000  # 1/acc relative rank error
     per_type = e.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("exact_p50"),
@@ -641,7 +727,7 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     last event + gap, end-exclusive, so two events exactly one gap
     apart are separate sessions — the oracle's islands encode the same
     >= boundary. Top-50 largest sessions, deterministically ordered."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sw = F.session_window("ts", "30 minutes")
     return (
         e.groupBy("user_id", sw)
@@ -692,7 +778,7 @@ def freq_items_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     support = 0.15
     # Lazy 1-row DataFrame: KPS candidate array. No driver action here —
     # the whole check is a single DataFrame plan (one job when the
@@ -747,7 +833,7 @@ def ema_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
+    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
 
     def ema(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(["ts", "event_id"])
@@ -803,7 +889,7 @@ def time_weighted_avg_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     (microsecond integers, exact in both engines); the rollup is one
     aggregation. Same single-shuffle cost profile as any per-user
     window."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     o = e.select(
         "user_id",
@@ -885,7 +971,7 @@ def gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last non-null before, first non-null after) — no self-join, no
     per-gap scan. The interpolation arithmetic runs on epoch-second
     integers, identical in both engines."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     hourly = (
         e.groupBy("user_id", F.date_trunc("hour", "ts").alias("hour_ts"))
         .agg(F.avg("value").alias("v"))
@@ -969,7 +1055,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local CASE logic — a single shuffle on user_id, no joins, no
     window. Timestamps compare exactly in both engines (microsecond
     values from the same parquet)."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     firsts = e.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -1026,10 +1112,8 @@ def retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Integer year arithmetic only (no timezone or day-boundary
     subtleties survive date_trunc to year)."""
-    o = _t(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.min(F.date_trunc("year", "o_orderdate")).alias("cohort_year")
-    )
+    o = load_table(spark, sf_dir, "orders")
+    cust = _cohort_years(o)
     activity = (
         o.join(cust, "o_custkey")
         .select(
@@ -1089,7 +1173,7 @@ def anomaly_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps per-row state O(8) regardless of history length — the shape
     a years-long hypertable needs. stddev_samp over the same doubles
     matches across engines at 4 dp."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "user_id", F.date_trunc("day", "ts").alias("day")
     ).agg(F.sum("value").alias("v"))
@@ -1150,26 +1234,9 @@ def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass as `asof_join_last_event`; the tolerance is one
     row-local predicate on the carried timestamp, so the staleness
     policy costs nothing at any scale."""
-    e = _t(spark, sf_dir, "events")
-    tagged = e.filter(F.col("event_type").isin("click", "error")).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        F.when(F.col("event_type") == "error", F.lit(0)).otherwise(1).alias("tag"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "tag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    last_err = F.last(
-        F.when(F.col("event_type") == "error", F.col("ts")), ignorenulls=True
-    ).over(w)
     gap = F.unix_micros("ts") - F.unix_micros(F.col("last_error_ts"))
     matched = (
-        tagged.withColumn("last_error_ts", last_err)
-        .filter((F.col("event_type") == "click") & (F.col("user_id") < 50))
+        _clicks_last_error(spark, sf_dir)
         .withColumn(
             "gap_us",
             F.when(
@@ -1217,7 +1284,7 @@ def sketch_union_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim at 100 TB would reintroduce the exact expansion it is
     designed to avoid.
     """
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.hll_sketch_agg("user_id").alias("sk"))
@@ -1282,7 +1349,7 @@ def seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row), one small rollup. Note the lag is positional over
     OBSERVED hours — production data with gaps composes this with
     `gap_fill_interpolate` first so position 24 means 24 HOURS."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     hourly = e.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.sum("value").alias("v"))
@@ -1328,7 +1395,7 @@ def decile_feature_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     one legitimate global sort — NTILE is order-defined; at 100 TB
     swap to approx_percentile cut points and a range join, trading
     exactness for no global sort), then a 10-group rollup."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     binned = o.select(
         "o_totalprice", F.ntile(10).over(w).cast("int").alias("decile")
@@ -1377,7 +1444,7 @@ def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the compaction shape of a CDC/state table: group by key,
     max_by every tracked column on the event-time tuple."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 50)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 50)
     key = F.struct(F.col("ts"), F.col("event_id"))
     return (
         e.groupBy("user_id")
@@ -1419,7 +1486,7 @@ def rolling_1h_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row state, no self-join against the trailing hour (the
     range-join spelling of the same question materializes every
     event-pair within an hour)."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 30)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 30)
     us = F.unix_micros(F.col("ts"))
     w = (
         Window.partitionBy("user_id")
@@ -1469,7 +1536,7 @@ def locf_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row carried state — contrast `gap_fill_interpolate`, which
     densifies onto a generated grid; LOCF fills on the existing event
     spine."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id") < 20)
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id") < 20)
     reading = F.when(F.col("event_type") == "purchase", F.col("value"))
     w = (
         Window.partitionBy("user_id")
@@ -1490,13 +1557,7 @@ def locf_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "percentile_cont_groups",
     oracle=f"""
-    WITH ranked AS (
-        SELECT event_type, value,
-               row_number() OVER (
-                   PARTITION BY event_type ORDER BY value, event_id) AS rn,
-               count(*) OVER (PARTITION BY event_type) AS n
-        FROM events
-    ),
+    WITH {_RANKED_SQL},
     g AS (SELECT event_type, value, rn, max(n) OVER (PARTITION BY event_type) AS mx FROM ranked)
     SELECT event_type,
            {_cont_quantile_sql(0.25)} AS q25,
@@ -1519,7 +1580,7 @@ def percentile_cont_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the group's values, so at 100 TB per-group cardinality bounds
     memory — swap to approx_percentile (GK sketch, fixed memory) when
     groups stop fitting, as `approx_quantile_sketch` demonstrates."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(
@@ -1848,13 +1909,7 @@ def pareto_frontier_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "markov_transition_matrix",
     oracle=f"""
-    WITH seq AS (
-        SELECT event_type AS src,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) AS dst
-        FROM events
-    ),
+    WITH {_TRANSITIONS_SQL},
     trans AS (
         SELECT src, dst, count(*) AS n FROM seq
         WHERE dst IS NOT NULL GROUP BY src, dst
@@ -2072,6 +2127,32 @@ _KM_ORACLE_CTES = """
 """
 
 
+def _signup_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, start, last_seen, converted) per signed-up user:
+    signup time, last event and the first purchase at or after signup
+    (null if none). The ts >= start predicate lives IN the left join:
+    a user whose purchases all precede signup keeps a null row
+    (censored), which a post-join filter would drop."""
+    e = load_table(spark, sf_dir, "events")
+    per_user = e.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("start"),
+        F.max("ts").alias("last_seen"),
+    ).filter(F.col("start").isNotNull())
+    purch = e.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_uid"), F.col("ts").alias("pts")
+    )
+    return (
+        per_user.join(
+            purch,
+            (F.col("user_id") == F.col("p_uid"))
+            & (F.col("pts") >= F.col("start")),
+            "left",
+        )
+        .groupBy("user_id", "start", "last_seen")
+        .agg(F.min("pts").alias("converted"))
+    )
+
+
 def _km_risk_table(
     spark: SparkSession, sf_dir: str, tz_free_days: bool = False
 ) -> DataFrame:
@@ -2092,27 +2173,7 @@ def _km_risk_table(
     exists to make that exclusion OBSERVABLE in the driver's truth
     table, not because the spellings can differ in a single
     session."""
-    e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("start"),
-        F.max("ts").alias("last_seen"),
-    ).filter(F.col("start").isNotNull())
-    purch = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_uid"), F.col("ts").alias("pts")
-    )
-    # the ts >= start predicate must live IN the join: a user whose
-    # purchases all precede signup still keeps their null row
-    # (censored), which a post-join filter would drop
-    conv = (
-        per_user.join(
-            purch,
-            (F.col("user_id") == F.col("p_uid"))
-            & (F.col("pts") >= F.col("start")),
-            "left",
-        )
-        .groupBy("user_id", "start", "last_seen")
-        .agg(F.min("pts").alias("converted"))
-    )
+    conv = _signup_conversions(spark, sf_dir)
     def day(col):
         c = F.coalesce(*col) if isinstance(col, tuple) else F.col(col)
         if tz_free_days:
@@ -2180,16 +2241,7 @@ def survival_km_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact, the divergence is in the date/count logic (session-TZ
     day shift); if green, the integer pipeline is cleared and the
     divergence lives in the survival column's rendering."""
-    return (
-        _km_risk_table(spark, sf_dir)
-        .select(
-            "d",
-            "at_risk",
-            "n_events",
-            (F.col("n_total") - F.col("n_events")).cast("long").alias("n_censored"),
-        )
-        .orderBy("d")
-    )
+    return _km_counts(_km_risk_table(spark, sf_dir))
 
 
 @query(
@@ -2216,8 +2268,13 @@ def survival_km_day_ntz(spark: SparkSession, sf_dir: str) -> DataFrame:
     indicted — NOT time zones; all-integer green + original red ⇒
     the double/string rendering remains the only suspect, and
     `survival_km_micro`'s BIGINT contract is the shipped fix."""
+    return _km_counts(_km_risk_table(spark, sf_dir, tz_free_days=True))
+
+
+def _km_counts(risk: DataFrame) -> DataFrame:
+    """The integer-only rows of a KM risk table, by day."""
     return (
-        _km_risk_table(spark, sf_dir, tz_free_days=True)
+        risk
         .select(
             "d",
             "at_risk",
@@ -2438,24 +2495,7 @@ def survival_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the boolean can't flip on a last ulp. Scale shape: one
     user-keyed shuffle to durations, one (d,g) aggregate, then
     everything runs on the tiny grid."""
-    e = _t(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("start"),
-        F.max("ts").alias("last_seen"),
-    ).filter(F.col("start").isNotNull())
-    purch = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_uid"), F.col("ts").alias("pts")
-    )
-    conv = (
-        per_user.join(
-            purch,
-            (F.col("user_id") == F.col("p_uid"))
-            & (F.col("pts") >= F.col("start")),
-            "left",
-        )
-        .groupBy("user_id", "start", "last_seen")
-        .agg(F.min("pts").alias("converted"))
-    )
+    conv = _signup_conversions(spark, sf_dir)
     dur_g = conv.select(
         (F.col("user_id") % 2).alias("g"),
         F.datediff(
@@ -2763,11 +2803,7 @@ def trimmed_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "daily_acf",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               sum(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH {_DAILY_VALUE_SQL},
     lagged AS (
         SELECT y,
                lag(y, 1) OVER (ORDER BY day) AS y1,
@@ -2796,18 +2832,7 @@ def daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     series — the unpartitioned window never sees the fact stream.
     Pairwise corr over single-pass co-moments keeps both engines
     bit-comparable at 6dp."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum("value").alias("y")
-    )
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "y",
-        F.lag("y", 1).over(w).alias("y1"),
-        F.lag("y", 2).over(w).alias("y2"),
-        F.lag("y", 3).over(w).alias("y3"),
-        F.lag("y", 7).over(w).alias("y7"),
-    )
+    lagged = _daily_lags(spark, sf_dir, (1, 2, 3, 7))
     return lagged.agg(
         F.count(F.lit(1)).alias("n_days"),
         round_col(F.corr("y", "y1"), 6).alias("acf_1"),
@@ -3592,9 +3617,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`price_trend_regression` convention) — the age-0 base enters as
     a 1-row broadcast."""
     o = load_table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.min(F.date_trunc("year", "o_orderdate")).alias("cohort_year")
-    )
+    cust = _cohort_years(o)
     activity = (
         o.join(cust, "o_custkey")
         .select(
@@ -3630,18 +3653,7 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "winsorized_robust_stats",
     oracle=f"""
-    WITH ranked AS (
-        SELECT event_type, value,
-               row_number() OVER (
-                   PARTITION BY event_type ORDER BY value, event_id) AS rn,
-               count(*) OVER (PARTITION BY event_type) AS n
-        FROM events
-    ),
-    g AS (
-        SELECT event_type, value, rn,
-               max(n) OVER (PARTITION BY event_type) AS mx
-        FROM ranked
-    ),
+    WITH {_RANKED_G_SQL},
     cuts AS (
         SELECT event_type,
                {_cont_quantile_sql(0.05, 6)} AS p05,
@@ -3681,7 +3693,7 @@ def winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap to approx_percentile sketches at 100 TB exactly as
     `percentile_cont_groups` documents), cut table broadcast back,
     then a plain partial-aggregated rollup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cuts = e.groupBy("event_type").agg(
         round_col(F.percentile("value", F.lit(0.05)), 6).alias("p05"),
         round_col(F.percentile("value", F.lit(0.95)), 6).alias("p95"),
@@ -3708,18 +3720,7 @@ def winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "anomaly_mad_robust",
     oracle=f"""
-    WITH ranked AS (
-        SELECT event_type, value,
-               row_number() OVER (
-                   PARTITION BY event_type ORDER BY value, event_id) AS rn,
-               count(*) OVER (PARTITION BY event_type) AS n
-        FROM events
-    ),
-    g AS (
-        SELECT event_type, value, rn,
-               max(n) OVER (PARTITION BY event_type) AS mx
-        FROM ranked
-    ),
+    WITH {_RANKED_G_SQL},
     med AS (
         SELECT event_type, {_cont_quantile_sql(0.5, 6)} AS med
         FROM g GROUP BY event_type
@@ -3772,7 +3773,7 @@ def anomaly_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation column) with the group-cardinality cut tables broadcast
     back — same sketch-swap escape hatch at 100 TB as the other exact
     percentile queries document."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     med = e.groupBy("event_type").agg(
         round_col(F.percentile("value", F.lit(0.5)), 6).alias("med")
     )
@@ -3846,7 +3847,7 @@ def rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus reduces to (type, day) totals in one
     shuffle; both forecasters are O(1)-state window frames over that
     bounded daily spine; final rollup is type-cardinality rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(F.sum("value").alias("total"))
@@ -3915,7 +3916,7 @@ def did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one partial-aggregated groupBy on a 4-value key,
     then a 1-row pivot — the cheapest possible plan at any scale."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16").cast("timestamp_ntz")
     cells = e.groupBy(
         (F.col("user_id") % 2).cast("int").alias("treat"),
@@ -4006,7 +4007,7 @@ def uplift_decile_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     `decile_binning_broadcast_cuts`'s broadcast-cut-points pattern if
     even the user table outgrows one partition); the curve itself is
     10 rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cut = F.lit("2024-01-16").cast("timestamp_ntz")
     users = e.groupBy("user_id").agg(
         F.count(F.when(F.col("ts") < cut, 1)).alias("pre_score"),
@@ -4062,13 +4063,8 @@ def uplift_decile_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "holt_linear_forecast",
-    oracle="""
-    WITH RECURSIVE daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT)
-                   AS rev_cents
-        FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    oracle=f"""
+    WITH RECURSIVE daily AS ({DAILY_REV_CENTS_SQL}),
     seq AS (
         SELECT row_number() OVER (ORDER BY day) AS rn,
                CAST(rev_cents AS DOUBLE) AS y
@@ -4112,12 +4108,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded daily series (one shuffle); the fold runs over
     ≤ a few thousand doubles in one task, the same bounded-window
     discipline as the KM family."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("double")
-        .alias("y")
-    )
+    daily = _daily_cents(spark, sf_dir, "y", "double")
     series = daily.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("day", "y"))),
@@ -4230,7 +4221,7 @@ def binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, and outputs floor to integers. Scale shape: the corpus
     collapses to the calendar-bounded daily series; the candidate
     sweep is one windowed pass over it plus a TOP-1."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
         F.floor(F.sum("o_totalprice") / 1000 + F.lit(0.5))
         .cast("long")
@@ -4375,7 +4366,7 @@ def ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent). Scale shape: corpus → daily counts (one shuffle);
     the seven lag windows and the quadratic sums all run over that
     calendar-bounded series."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
     )
@@ -4418,12 +4409,7 @@ def ljung_box_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stl_ma_decompose",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT)
-                   AS rev_cents
-        FROM orders GROUP BY CAST(o_orderdate AS DATE)
-    ),
+    WITH daily AS ({DAILY_REV_CENTS_SQL}),
     seq AS (
         SELECT day,
                CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
@@ -4476,12 +4462,7 @@ def stl_ma_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines agree on the valid range via row_number. Scale shape:
     corpus → calendar-bounded daily aggregate (one shuffle); window
     + dow pivot run on that series; output is 7 rows."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("rev_cents")
-    )
+    daily = _daily_cents(spark, sf_dir, "rev_cents")
     seq = daily.select(
         "day",
         F.row_number().over(Window.orderBy("day")).cast("long").alias("rn"),
@@ -4533,11 +4514,7 @@ def stl_ma_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pacf_yule_walker",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-               sum(value) AS y
-        FROM events GROUP BY 1
-    ),
+    WITH {_DAILY_VALUE_SQL},
     lagged AS (
         SELECT y,
                lag(y, 1) OVER (ORDER BY day) AS y1,
@@ -4583,17 +4560,7 @@ def pacf_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the recursion is scalar closed-form arithmetic on a 1-row
     relation with an IDENTICAL expression tree in both engines.
     Scale shape: one shuffle, then constants."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.sum("value").alias("y")
-    )
-    w = Window.orderBy("day")
-    lagged = daily.select(
-        "y",
-        F.lag("y", 1).over(w).alias("y1"),
-        F.lag("y", 2).over(w).alias("y2"),
-        F.lag("y", 3).over(w).alias("y3"),
-    )
+    lagged = _daily_lags(spark, sf_dir, (1, 2, 3))
     acf = lagged.agg(
         F.count(F.lit(1)).alias("n_days"),
         F.corr("y", "y1").alias("r1"),
@@ -4719,11 +4686,7 @@ def page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ewma_control_chart",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     seq AS (
         SELECT day, c, row_number() OVER (ORDER BY day) AS t
         FROM daily
@@ -4776,12 +4739,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison in both engines. Scale shape: corpus → calendar-
     bounded daily aggregate (one shuffle), then an O(days²) scalar
     relation — the `theil_sen_trend` pair-join discipline."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     seq = daily.select(
         "day", "c", F.row_number().over(Window.orderBy("day")).alias("t")
     )
@@ -4849,11 +4807,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "conformal_interval_naive",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     resid AS (
         SELECT day, c - lag(c, 7) OVER (ORDER BY day) AS e
         FROM daily
@@ -4914,12 +4868,7 @@ def conformal_interval_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage is a ratio of exact counts rounded 4dp. Scale shape:
     corpus → calendar-bounded daily aggregate (one shuffle); lag,
     ranking, and both splits run over that bounded series."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     wd = Window.orderBy("day")
     resid = daily.select(
         "day", (F.col("c") - F.lag("c", 7).over(wd)).alias("e")
@@ -4928,12 +4877,7 @@ def conformal_interval_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e",
         F.abs("e").alias("ae"),
         F.row_number().over(wd).cast("long").alias("i"),
-        F.count(F.lit(1))
-        .over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
+        total_rows()
         .cast("long")
         .alias("m"),
     )
@@ -4984,11 +4928,7 @@ def conformal_interval_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "hurst_rs_exponent",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     seq AS (
         SELECT c, row_number() OVER (ORDER BY day) - 1 AS t,
                count(*) OVER () AS n
@@ -5056,21 +4996,11 @@ def hurst_rs_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     `jsd_source_drift` transcendental discipline. Scale shape:
     corpus → calendar-bounded daily series; all windows partition by
     (m, block) over that bounded series; three rows out."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     seq = daily.select(
         "c",
         (F.row_number().over(Window.orderBy("day")) - 1).alias("t"),
-        F.count(F.lit(1))
-        .over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
+        total_rows()
         .alias("n"),
     )
     ms = spark.createDataFrame([(8,), (16,), (32,)], "m int")
@@ -5141,11 +5071,7 @@ def hurst_rs_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "periodogram_seasonal_power",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     seq AS (
         SELECT c, row_number() OVER (ORDER BY day) - 1 AS t,
                count(*) OVER () AS n,
@@ -5188,12 +5114,7 @@ def periodogram_seasonal_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcendental-chain discipline. Scale shape: corpus →
     calendar-bounded daily aggregate; the 3-period grid is a
     broadcast cross join over that bounded series; three rows out."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     wall = Window.partitionBy().rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
@@ -5343,11 +5264,7 @@ def cross_correlation_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "gumbel_block_maxima",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     weekly_max AS (
         SELECT date_diff('day', DATE '1970-01-01', day) // 7 AS w,
                CAST(max(c) AS BIGINT) AS mx
@@ -5392,12 +5309,7 @@ def gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     stable_render (4dp decimal string). Scale shape: corpus → daily
     → weekly-max (two bounded aggregates), then a 1-row closed
     form."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     weekly_max = (
         daily.select(
             F.floor(
@@ -5436,11 +5348,7 @@ def gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "pinball_loss_quantile_eval",
     oracle=f"""
-    WITH daily AS (
-        SELECT CAST(o_orderdate AS DATE) AS day,
-               CAST(floor(sum(o_totalprice) * 100 + 0.5) AS BIGINT) AS c
-        FROM orders GROUP BY 1
-    ),
+    WITH {_DAILY_CENTS_SQL},
     paired AS (
         SELECT c AS y, lag(c, 7) OVER (ORDER BY day) AS yhat
         FROM daily
@@ -5480,12 +5388,7 @@ def pinball_loss_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression trees, 4dp. Scale shape: corpus → daily aggregate
     (one shuffle); the τ grid is a 3-row broadcast cross join over
     the bounded series."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("day")).agg(
-        F.floor(F.sum("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c")
-    )
+    daily = _daily_cents(spark, sf_dir)
     wd = Window.orderBy("day")
     paired = daily.select(
         F.col("c").alias("y"), F.lag("c", 7).over(wd).alias("yhat")
@@ -5520,13 +5423,7 @@ def pinball_loss_quantile_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "markov_entropy_rate",
     oracle=f"""
-    WITH seq AS (
-        SELECT event_type AS src,
-               lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-               ) AS dst
-        FROM events
-    ),
+    WITH {_TRANSITIONS_SQL},
     trans AS (
         SELECT src, dst, CAST(count(*) AS BIGINT) AS n FROM seq
         WHERE dst IS NOT NULL GROUP BY src, dst
@@ -5575,7 +5472,7 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship via stable_render. Scale shape: one per-user window, one
     (src,dst) shuffle, then k²-bounded arithmetic — the
     `markov_transition_matrix` discipline with a two-level rollup."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     seq = e.select(
         F.col("event_type").alias("src"),
         F.lead("event_type")
@@ -5659,16 +5556,8 @@ def event_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the final TakeOrdered(20) bounds the driver. At 100 TB the
     group-by would be windowed by (user, day) first to bound worst-case
     string length — the pattern and plan are unchanged."""
-    ev = _t(spark, sf_dir, "events")
-    seq = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ),
-            lambda x: F.substring(x["event_type"], 1, 1),
-        ),
-        "",
-    )
+    ev = load_table(spark, sf_dir, "events")
+    seq = _event_letter_seq()
     seqs = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"), seq.alias("seq")
     )
@@ -5723,16 +5612,8 @@ def event_trigram_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode fans out |seq|-2 fixed-width 3-char rows (never raw
     events), and the support aggregate is one hash shuffle on the
     pattern. Top-15 via TakeOrdered."""
-    ev = _t(spark, sf_dir, "events")
-    seq = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct("ts", "event_id", "event_type"))
-            ),
-            lambda x: F.substring(x["event_type"], 1, 1),
-        ),
-        "",
-    )
+    ev = load_table(spark, sf_dir, "events")
+    seq = _event_letter_seq()
     seqs = ev.groupBy("user_id").agg(seq.alias("seq"))
     idx = F.sequence(F.lit(1), F.length("seq") - 2)
     grams = (
@@ -5805,7 +5686,7 @@ def leakage_free_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     events each branch reads only its partitions), one groupBy per
     branch on user_id, one left join. Extending the feature set is
     adding aggregate columns, never new scans."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cutoff = F.lit(_FM_CUTOFF).cast("timestamp")
     label_end = F.lit(_FM_LABEL_END).cast("timestamp")
     feats = (

@@ -33,23 +33,17 @@ import glob as _glob
 import os
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from heapdumpstardiver_spark.sources.dir_tail import DirectoryTailStreamReader
-from heapdumpstardiver_spark.sources.stream_sink import BatchReplayStreamWriter
+from heapdumpstardiver_spark.sources.stream_sink import (
+    BatchReplayStreamWriter,
+    StagedCommitWriter,
+    prepare_sink_dir,
+)
 
 _EXTS = (".arrow", ".feather", ".arrows", ".ipc")
 
-#: staging files older than this are presumed orphans of a hard-crashed
-#: job and swept by the next writer; younger ones may belong to a
-#: concurrent job mid-write on the same target and are left alone
-_STAGING_TTL_S = 3600.0
 
 
 @dataclass
@@ -135,102 +129,34 @@ class ArrowIpcStreamReader(DirectoryTailStreamReader):
         yield from _iter_batches(partition.path)
 
 
-@dataclass
-class _ArrowCommit(WriterCommitMessage):
-    staged: str | None = None
-    rows: int = 0
+def _write_ipc_shard(staged_path: str, batches) -> int:
+    """Stream RecordBatches into one IPC FILE container; return rows."""
+    import pyarrow.ipc as ipc
+
+    rows = 0
+    writer = None
+    try:
+        for batch in batches:
+            if writer is None:
+                writer = ipc.new_file(staged_path, batch.schema)
+            writer.write_batch(batch)
+            rows += batch.num_rows
+    finally:
+        if writer is not None:
+            writer.close()
+    return rows
 
 
-class ArrowIpcWriter(DataSourceArrowWriter):
-    """Executor-side Arrow IPC sink with a staged-commit protocol:
-    each task streams its RecordBatches into a
-    ``.staging-<job>-*`` file (job id assigned once, driver-side, and
-    carried to every task and the commit worker by pickling; the
-    per-task uuid keeps retries collision-free), the driver's
-    ``commit`` promotes every staged file to
-    ``part-NNNNN-<job>.arrow`` with one rename each (and, for
-    overwrite mode, deletes the files that predated the job only
-    AFTER all stages landed), and ``abort`` removes every staging
-    file bearing its own job id — readers of the directory never
-    observe a torn write (the `test_commit_protocol` discipline of
-    the parquet pointer swaps).
+class ArrowIpcWriter(StagedCommitWriter):
+    """Executor-side Arrow IPC sink: each task streams its
+    RecordBatches into one staged IPC FILE container, promoted to
+    ``part-NNNNN-<job>.arrow`` by the driver's commit (the protocol
+    and its incident notes live on :class:`StagedCommitWriter`)."""
 
-    The job-scoped abort glob is load-bearing: on job failure Spark
-    hands ``abort`` a None message for EVERY task — including tasks
-    that completed before the stage was cancelled — so the staged
-    paths cannot be recovered from the messages; and an unscoped
-    sweep would delete a concurrent job's in-flight staging on the
-    same target, breaking its commit renames."""
+    ext = ".arrow"
 
-    def __init__(self, path: str, overwrite: bool, preexisting: list[str]):
-        import uuid
-
-        self.path = path
-        self.overwrite = overwrite
-        self.preexisting = preexisting
-        self.job_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator):
-        import uuid
-
-        import pyarrow.ipc as ipc
-
-        it = iter(iterator)
-        first = next(it, None)
-        if first is None:
-            return _ArrowCommit()  # empty partition: no file
-        staged = os.path.join(
-            self.path,
-            f".staging-{self.job_id}-{uuid.uuid4().hex}.arrow",
-        )
-        rows = 0
-        # a task that fails mid-stream removes its own staging file
-        # eagerly (cheaper than waiting for the job-level abort glob,
-        # and also covers retried attempts of a task whose job
-        # ultimately succeeds)
-        try:
-            with ipc.new_file(staged, first.schema) as w:
-                w.write_batch(first)
-                rows += first.num_rows
-                for batch in it:
-                    w.write_batch(batch)
-                    rows += batch.num_rows
-        except BaseException:
-            try:
-                os.remove(staged)
-            except OSError:
-                pass
-            raise
-        return _ArrowCommit(staged=staged, rows=rows)
-
-    def commit(self, messages):
-        # job-unique part names: an overwrite's new files can never
-        # collide with the preexisting set it is about to delete
-        # (same-name collision would delete the fresh data)
-        staged = [m.staged for m in messages if m and m.staged]
-        for i, s in enumerate(sorted(staged)):
-            os.rename(
-                s,
-                os.path.join(self.path, f"part-{i:05d}-{self.job_id}.arrow"),
-            )
-        if self.overwrite:
-            for old in self.preexisting:
-                try:
-                    os.remove(old)
-                except OSError:
-                    pass
-
-    def abort(self, messages):
-        # messages are all None on job failure (even for completed
-        # tasks) — sweep by job id instead, touching nothing staged
-        # by a concurrent job on the same target
-        for staged in _glob.glob(
-            os.path.join(self.path, f".staging-{self.job_id}-*")
-        ):
-            try:
-                os.remove(staged)
-            except OSError:
-                pass
+    def write_shard(self, staged_path: str, batches) -> int:
+        return _write_ipc_shard(staged_path, batches)
 
 
 class ArrowIpcStreamWriter(BatchReplayStreamWriter):
@@ -246,20 +172,7 @@ class ArrowIpcStreamWriter(BatchReplayStreamWriter):
     ext = ".arrow"
 
     def write_shard(self, staged_path: str, batches) -> int:
-        import pyarrow.ipc as ipc
-
-        rows = 0
-        writer = None
-        try:
-            for batch in batches:
-                if writer is None:
-                    writer = ipc.new_file(staged_path, batch.schema)
-                writer.write_batch(batch)
-                rows += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        return rows
+        return _write_ipc_shard(staged_path, batches)
 
 
 class ArrowIpcDataSource(DataSource):
@@ -313,39 +226,15 @@ class ArrowIpcDataSource(DataSource):
             self.options["path"], int(self.options.get("offset_keep", 0))
         )
 
-    def _prep_write_target(self) -> str:
-        """Shared batch/stream sink preamble: resolve the target and
-        sweep staging leftovers from a previously crashed job. Their
-        leading dot keeps them invisible to readers (glob's '*' skips
-        dot-files), but they'd otherwise accumulate forever. Age-
-        scoped: a CONCURRENT job writing the same directory has
-        seconds-old staging files, and removing those would break
-        its commit renames — only leftovers past the TTL can belong
-        to a job that is truly gone (normal failures are cleaned by
-        abort() immediately; this is the hard-crash backstop)."""
-        import time
-
-        path = os.path.abspath(self.options.get("path") or "")
-        if not path:
-            raise ValueError("format('arrowipc') write requires .save(path)")
-        os.makedirs(path, exist_ok=True)
-        now = time.time()
-        for stale in _glob.glob(os.path.join(path, ".staging-*")):
-            try:
-                if now - os.path.getmtime(stale) > _STAGING_TTL_S:
-                    os.remove(stale)
-            except OSError:
-                pass
-        return path
-
     def streamWriter(self, schema, overwrite: bool):
         # appending one shard set per micro-batch IS the streaming
         # semantics — the immutable-snapshot refusal below is a
         # batch-sink posture only
-        return ArrowIpcStreamWriter(self._prep_write_target())
+        path = prepare_sink_dir(self.options.get("path"), "arrowipc")
+        return ArrowIpcStreamWriter(path)
 
     def writer(self, schema, overwrite: bool):
-        path = self._prep_write_target()
+        path = prepare_sink_dir(self.options.get("path"), "arrowipc")
         preexisting = [
             f
             for ext in _EXTS

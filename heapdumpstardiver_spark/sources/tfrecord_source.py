@@ -47,19 +47,16 @@ import os
 import struct
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from heapdumpstardiver_spark.sources.dir_tail import DirectoryTailStreamReader
-from heapdumpstardiver_spark.sources.stream_sink import BatchReplayStreamWriter
+from heapdumpstardiver_spark.sources.stream_sink import (
+    BatchReplayStreamWriter,
+    StagedCommitWriter,
+    prepare_sink_dir,
+)
 
 _EXTS = (".tfrecord", ".tfrecords")
-_STAGING_TTL_S = 3600.0  # same orphan-sweep policy as the Arrow sink
 _BATCH_ROWS = 1024
 
 # ---------------------------------------------------------------------------
@@ -411,82 +408,32 @@ class TfRecordStreamReader(DirectoryTailStreamReader):
 # ---------------------------------------------------------------------------
 
 
-@dataclass
-class _TfrCommit(WriterCommitMessage):
-    staged: str | None = None
-    rows: int = 0
+def _write_tfr_shard(staged_path: str, batches) -> int:
+    """Frame the single binary column of every batch into one shard;
+    return rows."""
+    rows = 0
+    with open(staged_path, "wb") as f:
+        for batch in batches:
+            if batch.num_columns != 1:
+                raise ValueError(
+                    "format('tfrecord') writes exactly one binary "
+                    f"column, got {batch.num_columns}"
+                )
+            payloads = [p.as_py() for p in batch.column(0)]
+            write_records(f, payloads)
+            rows += len(payloads)
+    return rows
 
 
-class TfRecordWriter(DataSourceArrowWriter):
-    """One ``.tfrecord`` shard per non-empty partition, staged as
-    ``.staging-<job>-<uuid>`` and promoted to
-    ``part-NNNNN-<job>.tfrecord`` by the driver's commit. The abort
-    sweep is job-scoped by glob because Spark hands ``abort`` all-None
-    messages on job failure (see ArrowIpcWriter for the incident
-    notes this protocol encodes)."""
+class TfRecordWriter(StagedCommitWriter):
+    """One ``.tfrecord`` shard per non-empty partition, promoted to
+    ``part-NNNNN-<job>.tfrecord`` by the driver's commit (the protocol
+    lives on :class:`StagedCommitWriter`)."""
 
-    def __init__(self, path: str, overwrite: bool, preexisting: list[str]):
-        import uuid
+    ext = ".tfrecord"
 
-        self.path = path
-        self.overwrite = overwrite
-        self.preexisting = preexisting
-        self.job_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator):
-        import uuid
-
-        it = iter(iterator)
-        first = next(it, None)
-        if first is None:
-            return _TfrCommit()
-        staged = os.path.join(
-            self.path, f".staging-{self.job_id}-{uuid.uuid4().hex}"
-        )
-        rows = 0
-        try:
-            with open(staged, "wb") as f:
-                for batch in [first, *it]:
-                    if batch.num_columns != 1:
-                        raise ValueError(
-                            "format('tfrecord') writes exactly one binary "
-                            f"column, got {batch.num_columns}"
-                        )
-                    payloads = [p.as_py() for p in batch.column(0)]
-                    write_records(f, payloads)
-                    rows += len(payloads)
-        except BaseException:
-            try:
-                os.remove(staged)  # failing tasks self-clean eagerly
-            except OSError:
-                pass
-            raise
-        return _TfrCommit(staged=staged, rows=rows)
-
-    def commit(self, messages):
-        staged = [m.staged for m in messages if m and m.staged]
-        for i, s in enumerate(sorted(staged)):
-            os.rename(
-                s,
-                os.path.join(
-                    self.path, f"part-{i:05d}-{self.job_id}.tfrecord"
-                ),
-            )
-        if self.overwrite:
-            for old in self.preexisting:
-                try:
-                    os.remove(old)
-                except OSError:
-                    pass
-
-    def abort(self, messages):
-        for staged in _glob.glob(
-            os.path.join(self.path, f".staging-{self.job_id}-*")
-        ):
-            try:
-                os.remove(staged)
-            except OSError:
-                pass
+    def write_shard(self, staged_path: str, batches) -> int:
+        return _write_tfr_shard(staged_path, batches)
 
 
 class TfRecordStreamWriter(BatchReplayStreamWriter):
@@ -498,18 +445,7 @@ class TfRecordStreamWriter(BatchReplayStreamWriter):
     ext = ".tfrecord"
 
     def write_shard(self, staged_path: str, batches) -> int:
-        rows = 0
-        with open(staged_path, "wb") as f:
-            for batch in batches:
-                if batch.num_columns != 1:
-                    raise ValueError(
-                        "format('tfrecord') writes exactly one binary "
-                        f"column, got {batch.num_columns}"
-                    )
-                payloads = [p.as_py() for p in batch.column(0)]
-                write_records(f, payloads)
-                rows += len(payloads)
-        return rows
+        return _write_tfr_shard(staged_path, batches)
 
 
 class TfRecordDataSource(DataSource):
@@ -548,14 +484,8 @@ class TfRecordDataSource(DataSource):
         )
 
     def _prep_write_target(self, schema) -> str:
-        """Shared batch/stream sink preamble: resolve the target,
-        enforce the single-binary-column contract, sweep TTL-expired
-        staging orphans of hard-crashed jobs."""
-        import time
-
-        path = os.path.abspath(self.options.get("path") or "")
-        if not path:
-            raise ValueError("format('tfrecord') write requires .save(path)")
+        """Shared batch/stream sink preamble: enforce the
+        single-binary-column contract, then `prepare_sink_dir`."""
         if (
             len(schema.fields) != 1
             or schema.fields[0].dataType.simpleString() != "binary"
@@ -564,15 +494,7 @@ class TfRecordDataSource(DataSource):
                 "format('tfrecord') writes a single binary column; got "
                 f"schema {schema.simpleString()}"
             )
-        os.makedirs(path, exist_ok=True)
-        now = time.time()
-        for stale in _glob.glob(os.path.join(path, ".staging-*")):
-            try:
-                if now - os.path.getmtime(stale) > _STAGING_TTL_S:
-                    os.remove(stale)
-            except OSError:
-                pass
-        return path
+        return prepare_sink_dir(self.options.get("path"), "tfrecord")
 
     def streamWriter(self, schema, overwrite: bool):
         # appending one shard set per micro-batch IS the streaming

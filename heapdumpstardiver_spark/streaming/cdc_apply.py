@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..exprs import round_col
-from ..queries.cdc import apply_scd2
+from ..queries.cdc import apply_scd2, key_changes
 
 STATE_SCHEMA = T.StructType(
     [
@@ -66,10 +65,7 @@ def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
 def batch_changes(batch: DataFrame) -> DataFrame:
     """Roll an event micro-batch up to one change per key (the same
     rollup as the batch query: summed value, latest event time)."""
-    return batch.groupBy(F.col("user_id").alias("key")).agg(
-        round_col(F.sum("value")).alias("new_bal"),
-        F.max(F.unix_micros("ts")).alias("update_us"),
-    )
+    return key_changes(batch, F.col("user_id"))
 
 
 def apply_batch(batch: DataFrame, batch_id: int, state_dir: str) -> None:

@@ -20,12 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..queries.diagnostics import decile_fractions, psi_share, psi_term
+
 
 def reference_cuts(batch_events: DataFrame, col: str = "value") -> list[float]:
     """Decile cut points of the reference period (9 floats — index
     metadata, safe to close over / broadcast)."""
-    fracs = F.array(*[F.lit(x / 10.0) for x in range(1, 10)])
-    row = batch_events.agg(F.percentile(col, fracs).alias("cs")).collect()[0]
+    cuts = F.percentile(col, decile_fractions()).alias("cs")
+    row = batch_events.agg(cuts).collect()[0]
     return [float(x) for x in row["cs"]]
 
 
@@ -75,9 +77,9 @@ def psi_from_counts(window_counts: DataFrame, ref_counts: DataFrame) -> DataFram
     j = cur.join(F.broadcast(ref), "bin", "full_outer").fillna(
         0, subset=["n", "n_ref"]
     )
-    p_ref = (F.col("n_ref") + F.lit(0.5)) / (F.col("ta") + F.lit(5.0))
-    p_cur = (F.col("n") + F.lit(0.5)) / (F.col("tb") + F.lit(5.0))
-    term = (p_cur - p_ref) * F.log(p_cur / p_ref)
+    p_ref = psi_share(F.col("n_ref"), F.col("ta"))
+    p_cur = psi_share(F.col("n"), F.col("tb"))
+    term = psi_term(p_cur, p_ref)
     return (
         j.filter(F.col("window_start").isNotNull())
         .groupBy("window_start")

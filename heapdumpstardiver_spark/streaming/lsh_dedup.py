@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import swap_in
 from ..exprs import minhash_bands, shingle_hashes
-from ..queries.llm import BAND_BUCKET_CAP
+from ..queries.llm import band_probe, cap_bands
 
 N_HASHES = 8
 N_BANDS = 4
@@ -75,7 +75,7 @@ def build_corpus_index(spark: SparkSession, corpus: DataFrame, index_dir: str) -
         os.path.join(index_dir, "shingles")
     )
     sh = spark.read.parquet(os.path.join(index_dir, "shingles"))
-    _capped_bands(bands_from_shingles(sh)).write.mode("overwrite").parquet(
+    cap_bands(bands_from_shingles(sh)).write.mode("overwrite").parquet(
         os.path.join(index_dir, "bands")
     )
     sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")).write.mode(
@@ -106,16 +106,7 @@ def flag_batch(
         sh = doc_shingles(batch_docs).localCheckpoint()
         bands = bands_from_shingles(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    b, c = bands.alias("b"), idx.alias("c")
-    cand = (
-        b.join(
-            c,
-            (F.col("b.band") == F.col("c.band"))
-            & (F.col("b.bucket") == F.col("c.bucket")),
-        )
-        .select(F.col("b.doc_id").alias("b_doc"), F.col("c.doc_id").alias("c_doc"))
-        .distinct()
-    )
+    cand = band_probe(bands, idx)
     sb, sc = sh.alias("sb"), corpus_sh.alias("sc")
     inter = (
         cand.join(sb, F.col("b_doc") == F.col("sb.doc_id"))
@@ -180,19 +171,6 @@ def streaming_lsh_dedup(
     )
 
 
-def _capped_bands(bands: DataFrame) -> DataFrame:
-    """Enforce the BAND_BUCKET_CAP membership rule (keep the CAP
-    smallest doc_ids per (band, bucket)) over a band-row relation."""
-    from pyspark.sql import Window
-
-    wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    return (
-        bands.withColumn("rnb", F.row_number().over(wcap))
-        .filter(F.col("rnb") <= BAND_BUCKET_CAP)
-        .drop("rnb")
-    )
-
-
 def append_to_corpus_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -223,7 +201,7 @@ def append_to_corpus_index(
     else:
         sh = doc_shingles(docs).localCheckpoint()
         bands = bands_from_shingles(sh)
-    _capped_bands(bands).write.mode("append").parquet(
+    cap_bands(bands).write.mode("append").parquet(
         os.path.join(index_dir, "bands")
     )
     sh.write.mode("append").parquet(os.path.join(index_dir, "shingles"))
@@ -247,7 +225,7 @@ def compact_corpus_index(
     through a staging directory and an atomic rename, so a probe
     racing the compaction reads either the old or the new layout,
     never a partial one."""
-    tables = [("bands", _capped_bands)]
+    tables = [("bands", cap_bands)]
     if full:
         tables += [("shingles", None), ("sizes", None)]
     for name, transform in tables:

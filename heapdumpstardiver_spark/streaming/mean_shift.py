@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..exprs import round_col, stable_render
+from ..queries.llm import mean_shift_fold
 
 EMB_SCHEMA = "vec_id long, embedding array<float>, label int"
 
@@ -80,22 +81,7 @@ def mean_shift_from_sums(
         (F.element_at(base, F.col("i").cast("int")) - F.col("m")).alias("d"),
         "n",
     )
-    folded = diffs.agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "d"))),
-                lambda s: s["d"] * s["d"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("mmd_sq"),
-        F.max("n").cast("long").alias("n_b"),
-    )
-    top = (
-        diffs.orderBy(F.abs(F.col("d")).desc(), "i")
-        .limit(1)
-        .select(F.col("i").cast("int").alias("top_dim"), F.col("d").alias("top_shift"))
-    )
+    folded, top = mean_shift_fold(diffs, F.max("n").cast("long").alias("n_b"))
     return (
         folded.crossJoin(F.broadcast(top))
         .select(

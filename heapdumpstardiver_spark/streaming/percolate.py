@@ -20,7 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..queries.llm import percolate_matches
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
@@ -28,26 +29,6 @@ DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long
 def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream of document parquet files (schema pinned)."""
     return spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-
-
-def percolate_matches(docs: DataFrame, rules: DataFrame) -> DataFrame:
-    """(doc_id, rule_id) pairs where the doc contains ALL the rule's
-    terms — the counting formulation of the conjunctive match (hit
-    count equals rule size), identical to the batch operator."""
-    rule_size = rules.groupBy("rule_id").agg(F.count(F.lit(1)).alias("k"))
-    doc_terms = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .distinct()
-    )
-    return (
-        doc_terms.join(F.broadcast(rules), F.col("token") == F.col("term"))
-        .groupBy("doc_id", "rule_id")
-        .agg(F.count(F.lit(1)).alias("matched"))
-        .join(F.broadcast(rule_size), "rule_id")
-        .filter(F.col("matched") == F.col("k"))
-        .select("doc_id", "rule_id")
-    )
 
 
 def streaming_percolate(

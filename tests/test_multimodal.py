@@ -230,8 +230,11 @@ def test_jpeg_decoder_rejects_unsupported_variants():
     whose SOF marker is flipped to SOF2 routes to the progressive
     decoder and fails its scan-header validation (a baseline
     Ss=0/Se=63 scan is illegal in a progressive stream — ValueError,
-    never silent garbage), lossless SOF3 raises NotImplementedError,
-    garbage raises ValueError, and the builtin dispatcher routes JPEG
+    never silent garbage); flipped to SOF3 it routes to the lossless
+    decoder, whose scan runs out of bytes on Huffman-coded DCT data
+    (ValueError: a corrupt stream, not an unsupported format);
+    garbage raises ValueError, a format outside the built-in surface
+    raises NotImplementedError, and the builtin dispatcher routes JPEG
     magic to the JPEG path."""
     import struct
 
@@ -241,9 +244,9 @@ def test_jpeg_decoder_rejects_unsupported_variants():
     progressive = good.replace(struct.pack(">H", 0xFFC0), struct.pack(">H", 0xFFC2), 1)
     with pytest.raises(ValueError):
         M.decode_jpeg_gray(progressive)
-    # flip SOF0 -> SOF3 (lossless): genuinely outside the surface
+    # flip SOF0 -> SOF3: a lossless container around baseline data
     lossless = good.replace(struct.pack(">H", 0xFFC0), struct.pack(">H", 0xFFC3), 1)
-    with pytest.raises(NotImplementedError):
+    with pytest.raises(ValueError):
         M.decode_jpeg_gray(lossless)
     with pytest.raises(ValueError):
         M.decode_jpeg_gray(b"\xff\xd8garbage-not-a-jpeg")
@@ -670,7 +673,9 @@ def test_truncated_payloads_raise_value_error():
     PNG, WAV, and every JPEG variant — either decodes to the full
     payload's bytes or raises ValueError: a cut payload never decodes
     to wrong bytes and never surfaces as IndexError/struct.error/
-    zlib.error/NotImplementedError."""
+    zlib.error/NotImplementedError. So does a PNG whose IHDR declares
+    12 bytes, a WAV with a 14-byte ``fmt `` chunk and a JPEG whose DHT
+    length is 10 bytes short."""
     gray = bytes((x * 37 + y * 11) % 256 for y in range(8) for x in range(8))
     rgb16 = _pattern_rgb(16, 16, 2)
     payloads = {
@@ -694,3 +699,22 @@ def test_truncated_payloads_raise_value_error():
             except ValueError:
                 continue
             assert got == full, f"{name}: prefix of {cut}/{len(payload)} bytes decoded to wrong bytes"
+    # Corrupt, not cut: a declared length that does not match what the
+    # segment holds raises ValueError too.
+    import struct
+
+    png = payloads["png"]
+    ihdr = png.index(b"IHDR") - 4
+    bad_ihdr = png[:ihdr] + struct.pack(">I", 12) + png[ihdr + 4:]
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)[:14]
+    pcm = b"\x00\x01\x02\x03"
+    body = b"WAVE" + b"fmt " + struct.pack("<I", 14) + fmt
+    body += b"data" + struct.pack("<I", len(pcm)) + pcm
+    short_fmt = b"RIFF" + struct.pack("<I", len(body)) + body
+    jpg = payloads["gray"]
+    dht = jpg.index(b"\xff\xc4")
+    (ln,) = struct.unpack(">H", jpg[dht + 2:dht + 4])
+    short_dht = jpg[:dht + 2] + struct.pack(">H", ln - 10) + jpg[dht + 4:]
+    for name, payload in (("ihdr", bad_ihdr), ("fmt", short_fmt), ("dht", short_dht)):
+        with pytest.raises(ValueError):
+            M._builtin_decoder(payload)

@@ -461,7 +461,7 @@ def test_stream_writer_commit_is_batch_replayable(tmp_path):
                 write_record(f, pl)
         return _TfrCommit(staged=p, rows=len(payloads))
 
-    from heapdumpstardiver_spark.sources.tfrecord_source import _TfrCommit
+    from heapdumpstardiver_spark.sources.stream_sink import StagedCommit as _TfrCommit
 
     # attempt 1 of batch 7: two shards
     w.commit([stage([b"a"]), stage([b"b"])], batchId=7)
